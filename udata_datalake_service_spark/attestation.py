@@ -30,21 +30,12 @@ CURRENT_ROUND - 2) so staleness can never silently regrow.
 from __future__ import annotations
 
 # Round currently being built (the driver will write CORRECTNESS_r{CURRENT_ROUND}).
-CURRENT_ROUND = 14
+CURRENT_ROUND = 15
 
 # Queries that are new this round or whose source/oracle changed this
 # round; forced to the head of the attestation window.
 NEW_OR_CHANGED: frozenset[str] = frozenset({
-    # round-14 changes (populated as queries are added/edited this round)
-    "dd_lsh_eval",  # shared shingle pass for both scorecard sides
-    "tx_text_metrics",  # STOPWORDS ≡ LANG_MARKERS['en'] guard assert
-    # entry source unchanged but EXECUTED plans changed via library
-    # edits (llm/dedup.py loop pairing, llm/tfidf.py single-tokenize) —
-    # flagged per ADVICE r13: a library edit must not bypass driver
-    # re-attestation just because the pin gate hashes only entry source
-    "dd_dup_clusters",
-    "dd_star_clusters",
-    "tx_bigram_surprisal",
+    # round-15 changes (populated as queries are added/edited this round)
 })
 
 # Rounds whose driver window did NOT advance the rotation: the round-12
@@ -71,76 +62,76 @@ def effective_gap(last_round: int, current_round: int) -> int:
 # query name -> last round with a green driver row (regenerate with
 # tools/attest_map.py after each round's CORRECTNESS artifact lands).
 LAST_DRIVER_ROUND: dict[str, int] = {
-    "a1_group_topk": 10,
-    "a234_dashboard_aggs": 10,
-    "a5_st2_backoff_table": 10,
-    "a6_max_booland": 10,
-    "a7_count_over_all": 10,
-    "a8_purge_returning_count": 10,
-    "a9_profile": 10,
-    "a9_quantiles": 12,
-    "ann_centroid_assign": 12,
-    "ann_ivfpq_topk": 10,
+    "a1_group_topk": 14,
+    "a234_dashboard_aggs": 14,
+    "a5_st2_backoff_table": 14,
+    "a6_max_booland": 14,
+    "a7_count_over_all": 14,
+    "a8_purge_returning_count": 14,
+    "a9_profile": 14,
+    "a9_quantiles": 14,
+    "ann_centroid_assign": 14,
+    "ann_ivfpq_topk": 14,
     "ann_ivfpq_trained": 13,
-    "ann_near_dups_exact": 10,
+    "ann_near_dups_exact": 14,
     "ann_pq_topk": 13,
     "ann_recall": 12,
-    "ann_topk": 10,
+    "ann_topk": 14,
     "asof_join": 12,
     "cohort": 12,
     "contamination": 12,
-    "corpus_datasheet": 10,
+    "corpus_datasheet": 14,
     "corpus_ingest": 13,
     "corpus_warc_ingest": 12,
-    "cube_rollup": 10,
+    "cube_rollup": 14,
     "curate_zipf": 13,
     "curriculum": 12,
-    "dd_dup_clusters": 13,
-    "dd_exact_prefix_groups": 10,
+    "dd_dup_clusters": 14,
+    "dd_exact_prefix_groups": 14,
     "dd_jaccard_prefix": 12,
     "dd_lsh_capped": 12,
-    "dd_lsh_eval": 10,
+    "dd_lsh_eval": 14,
     "dd_lsh_incremental": 13,
     "dd_lsh_pairs": 13,
-    "dd_minhash_signature": 10,
+    "dd_minhash_signature": 14,
     "dd_minhash_xxh": 13,
     "dd_ngram_jaccard": 13,
     "dd_paragraph_dedup": 13,
-    "dd_simhash": 10,
+    "dd_simhash": 14,
     "dd_span_coverage": 13,
-    "dd_star_clusters": 13,
+    "dd_star_clusters": 14,
     "dense_ids": 13,
-    "dist_match_sample": 10,
+    "dist_match_sample": 14,
     "domain_mix": 13,
-    "domain_split": 10,
-    "dq_expectations": 10,
-    "dsir_select": 10,
+    "domain_split": 14,
+    "dq_expectations": 14,
+    "dsir_select": 14,
     "dsir_weights": 13,
-    "embed_standardize": 10,
-    "event_transitions": 10,
+    "embed_standardize": 14,
+    "event_transitions": 14,
     "f3_smart_cast": 12,
     "f4_date_parse_multi": 12,
     "f_scalar_surface": 12,
-    "flagship_pricing_summary": 10,
-    "funnel": 10,
-    "fuzzy_linkage": 10,
-    "gopher_quality": 10,
-    "html_extract": 10,
-    "interval_join": 10,
+    "flagship_pricing_summary": 14,
+    "funnel": 14,
+    "fuzzy_linkage": 14,
+    "gopher_quality": 14,
+    "html_extract": 14,
+    "interval_join": 14,
     "j1_current_state_join": 12,
     "j2_history_join": 12,
     "j3_u7_batch_select_claim": 12,
     "j4_orphan_left_join": 13,
     "j5_latest_per_key": 13,
     "j6_status_dashboard": 13,
-    "k10_time_travel": 10,
+    "k10_time_travel": 14,
     "k8_drop_table": 13,
-    "k9_webhook_payload": 10,
+    "k9_webhook_payload": 14,
     "k_lake_roundtrip": 13,
-    "mix_shards": 10,
+    "mix_shards": 14,
     "mixture_plan": 12,
     "mm_embed_vq": 13,
-    "mm_exif_meta": 10,
+    "mm_exif_meta": 14,
     "mm_frame_sample": 13,
     "mm_jpeg_meta": 13,
     "mm_media_meta": 12,
@@ -155,60 +146,60 @@ LAST_DRIVER_ROUND: dict[str, int] = {
     "p4_date_cast_filter": 13,
     "p5_json_extract": 13,
     "p6_range_predicate": 13,
-    "p78_predicate_surface": 10,
+    "p78_predicate_surface": 14,
     "p9_time_window": 13,
     "pack_stream": 12,
     "pack_waste": 12,
     "pii_redact": 12,
     "pivot_activity": 12,
-    "reduced_antijoin": 10,
+    "reduced_antijoin": 14,
     "rt_bm25_topk": 12,
     "rt_decontam": 13,
     "rt_hard_negatives": 12,
     "rt_hybrid_rrf": 12,
     "rt_lake_bm25": 13,
-    "s1_live_fetch": 10,
+    "s1_live_fetch": 14,
     "s4_excel_load": 13,
     "s5_catalog_load": 13,
     "s6_csv_ingest_inference": 13,
-    "s7_mime_sniff": 10,
-    "s9_f10_http_surface": 10,
+    "s7_mime_sniff": 14,
+    "s9_f10_http_surface": 14,
     "scd2_merge": 12,
     "semantic_dedup": 12,
     "sessionize": 12,
     "sk_bloom_probe": 13,
     "sk_countmin_hh": 12,
     "sk_kmv_ndv": 13,
-    "sk_lake_rollup": 10,
-    "skew_salted_count": 10,
+    "sk_lake_rollup": 14,
+    "skew_salted_count": 14,
     "sla_streaks": 12,
     "st1_microbatch_rates": 13,
     "st3_next_check_ladder": 13,
-    "st45_change_trigger": 10,
+    "st45_change_trigger": 14,
     "temporal_split": 13,
     "tfidf_vocab": 12,
     "tok_bpe_encode": 13,
-    "tx_bigram_surprisal": 12,
+    "tx_bigram_surprisal": 14,
     "tx_blocklist": 12,
     "tx_chunks": 12,
     "tx_clean": 12,
     "tx_curate_pipeline": 13,
-    "tx_fingerprint": 10,
+    "tx_fingerprint": 14,
     "tx_hashed_features": 12,
     "tx_lang_id": 12,
     "tx_novelty": 12,
     "tx_surprisal": 12,
-    "tx_text_metrics": 13,
+    "tx_text_metrics": 14,
     "tx_vocab_coverage": 12,
     "u1_union_tiers": 13,
     "u2_upsert_merge": 13,
     "u3_snapshot_diff": 13,
-    "u456_point_dml": 10,
+    "u456_point_dml": 14,
     "url_canonical": 12,
     "url_quality": 12,
     "variant_props": 12,
-    "weighted_group_sample": 10,
-    "window_surface": 10,
+    "weighted_group_sample": 14,
+    "window_surface": 14,
 }
 
 
