@@ -35,6 +35,7 @@ measure the query, not residue.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import statistics
@@ -58,6 +59,24 @@ def _wait_for_idle(limit: float, timeout_sec: float = 180.0) -> tuple[float, boo
         time.sleep(10)
         load = os.getloadavg()[0]
     return load, load > limit
+
+
+@contextlib.contextmanager
+def _job_group_scope(sc, group: str | None, description: str):
+    """Tag the Spark jobs run inside with ``group`` (no-op when None).
+
+    Both local properties are cleared in ``finally``: a rep that raises
+    must not leave its group on the thread and mislabel later jobs.
+    """
+    if group is None:
+        yield
+        return
+    sc.setJobGroup(group, description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def main() -> int:
@@ -108,18 +127,15 @@ def main() -> int:
     names = sorted(qs)
 
     def run_once(name: str, job_group: str | None = None) -> float:
-        if job_group is not None:
-            # a unique job group per counted execution so the status
-            # tracker can attribute every Spark job this query ran
-            # (deterministic counters — VERDICT r13 item 2: the wall-clock
-            # noise floor is ±16-29% on the cluster/retrieval family, so
-            # sub-20% claims need a drift-free signal).
-            spark.sparkContext.setJobGroup(job_group, name)
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        if job_group is not None:
-            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        # a unique job group per counted execution so the status
+        # tracker can attribute every Spark job this query ran
+        # (deterministic counters — VERDICT r13 item 2: the wall-clock
+        # noise floor is ±16-29% on the cluster/retrieval family, so
+        # sub-20% claims need a drift-free signal).
+        with _job_group_scope(spark.sparkContext, job_group, name):
+            t0 = time.time()
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dt = time.time() - t0
         # settling wrappers release their own adopted caches (caching.py),
         # but localCheckpoint blocks and any un-settled persist would
         # still linger; clearing between executions keeps sequential

@@ -93,3 +93,17 @@ def test_idle_gate_threshold_flags_loaded_machine(monkeypatch):
     monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.11, 0.0, 0.0))
     load, noisy = bench._wait_for_idle(0.5, timeout_sec=0.0)
     assert noisy is False and load == 0.11
+
+
+def test_job_group_is_cleared_when_a_rep_raises(spark):
+    """A timed rep that raises must not leave its job group (or its
+    description) on the thread, or every later job is mislabelled."""
+    import pytest
+
+    sc = spark.sparkContext
+    with pytest.raises(RuntimeError):
+        with bench._job_group_scope(sc, "bench:boom:0", "boom"):
+            assert sc.getLocalProperty("spark.jobGroup.id") == "bench:boom:0"
+            raise RuntimeError("rep failed")
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert sc.getLocalProperty("spark.job.description") is None

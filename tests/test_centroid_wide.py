@@ -35,22 +35,6 @@ def test_label_centroids_wide_matches_exploded(vecs):
     assert _rows(exploded) == _rows(wide)
 
 
-def test_label_centroids_chunked_matches_exploded(vecs, spark):
-    """r14 chunked form (dim/chunk struct rows, chunk-sized aggregate
-    buffers): identical values to both prior forms, incl. null
-    components, null VECTORS, and a chunk that divides dim evenly."""
-    rows_plus_null = vecs.union(
-        spark.createDataFrame(
-            [("a", None)], "label string, embedding array<double>"
-        )
-    )
-    exploded = label_centroids(rows_plus_null)
-    chunked = label_centroids(rows_plus_null, dim=4, chunk=2)
-    assert _rows(exploded) == _rows(chunked)
-    with pytest.raises(ValueError, match="must divide"):
-        label_centroids(vecs, dim=4, chunk=3)
-
-
 def test_cell_means_wide_matches_exploded(vecs, spark):
     cells = vecs.selectExpr(
         "1 as sub", "label as code", "embedding as sv"

@@ -6,12 +6,37 @@ from udata_datalake_service_spark.config import Config, load_config
 
 
 def test_defaults_match_reference_shipped_values():
+    from udata_datalake_service_spark.plans.backoff import (
+        BACKOFF_NB_REQ,
+        BACKOFF_PERIOD_S,
+        COOL_OFF_PERIOD_S,
+    )
+    from udata_datalake_service_spark.plans.select_batch import (
+        BATCH_SIZE,
+        EXCLUDED_PATTERNS,
+    )
+
     c = Config()
     assert c.backoff_nb_req == 180 and c.backoff_period == 360
     assert c.cool_off_period == 86_400 and c.batch_size == 40
-    assert c.check_delays == (12, 24, 168, 720)
-    assert c.max_filesize_allowed["xlsx"] == 13_107_200
     assert "static.data.gouv.fr" in c.no_backoff_domains
+    # one definition per crawl default: the service (Config) and the
+    # plans' own defaults select and back off identically
+    assert c.excluded_patterns == EXCLUDED_PATTERNS
+    assert c.batch_size == BATCH_SIZE
+    assert c.backoff_nb_req == BACKOFF_NB_REQ
+    assert c.backoff_period == BACKOFF_PERIOD_S
+    assert c.cool_off_period == COOL_OFF_PERIOD_S
+
+
+def test_unconfigurable_reference_values():
+    """CHECK_DELAYS and MAX_FILESIZE_ALLOWED are not Config knobs: the
+    code reads these constants, so the reference values are pinned here."""
+    from udata_datalake_service_spark.operators.exceptions import MAX_FILESIZE_ALLOWED
+    from udata_datalake_service_spark.plans.next_check import CHECK_DELAYS_HOURS
+
+    assert CHECK_DELAYS_HOURS == (12, 24, 168, 720)
+    assert MAX_FILESIZE_ALLOWED["xlsx"] == 13_107_200
 
 
 def test_toml_then_env_precedence(tmp_path):
@@ -19,25 +44,25 @@ def test_toml_then_env_precedence(tmp_path):
     p.write_text(
         'BACKOFF_NB_REQ = 99\n'
         'EXCLUDED_PATTERNS = ["%nope%"]\n'
-        'WEBHOOK_ENABLED = false\n'
+        'NO_BACKOFF_DOMAINS = ["a.org"]\n'
         'DATABASE_URL = "postgres://ignored"\n'  # dead reference key: no-op
     )
     c = load_config(toml_path=str(p), env={})
     assert c.backoff_nb_req == 99
     assert c.excluded_patterns == ("%nope%",)
-    assert c.webhook_enabled is False
+    assert c.no_backoff_domains == ("a.org",)
 
     c2 = load_config(
         toml_path=str(p),
         env={
             "SPARK_HYDRA_BACKOFF_NB_REQ": "7",
-            "SPARK_HYDRA_CHECK_DELAYS": "1, 2, 3",
-            "SPARK_HYDRA_WEBHOOK_ENABLED": "true",
+            "SPARK_HYDRA_NO_BACKOFF_DOMAINS": "b.org, c.org",
+            "SPARK_HYDRA_EXCLUDED_PATTERNS": "%x%, 42",
         },
     )
     assert c2.backoff_nb_req == 7  # env beats toml
-    assert c2.check_delays == (1, 2, 3)
-    assert c2.webhook_enabled is True
+    assert c2.no_backoff_domains == ("b.org", "c.org")
+    assert c2.excluded_patterns == ("%x%", "42")  # a numeric entry stays a str
 
 
 def test_config_path_from_environment(tmp_path):

@@ -175,7 +175,7 @@ prior AS (SELECT * FROM '{tmp}/prior/*.parquet'),
 live AS (
   SELECT * FROM catalog
   WHERE NOT deleted AND (status IS NULL OR status = 'BACKOFF')
-    AND url NOT LIKE '%format=shp%'
+    AND url NOT LIKE 'http%geo.data.gouv.fr%' AND url NOT LIKE '%?format=shp%'
 ),
 t1 AS (SELECT resource_id, url, 'priority' AS tier, 0 AS tr FROM
   (SELECT * FROM live WHERE priority

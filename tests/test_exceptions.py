@@ -85,27 +85,32 @@ def test_index_request_flows_into_lake_write(spark, lake_with_catalog, tmp_path)
     assert [r["id"] for r in back.collect()] == [1, 2, 3]
 
 
-def test_service_curation_plane_delegates(spark, tmp_path):
-    from udata_datalake_service_spark.service import HydraService
-    from udata_datalake_service_spark.sinks.lake import Lake
+def test_curation_plane_functions(spark):
+    from udata_datalake_service_spark.llm.gopher import gopher_quality
+    from udata_datalake_service_spark.llm.mixing import curriculum_buckets
+    from udata_datalake_service_spark.llm.report import corpus_datasheet
+    from udata_datalake_service_spark.llm.similarity import (
+        recall_at_k,
+        semantic_dedup,
+    )
+    from udata_datalake_service_spark.llm.tfidf import dsir_log_weights
 
-    svc = HydraService(spark, Lake(spark, str(tmp_path / "lake")))
     docs = spark.createDataFrame(
         [(1, "one two three", "en")], "doc_id long, text string, lang string"
     )
-    ds = {(r["section"], r["metric"]) for r in svc.corpus_datasheet(docs).collect()}
+    ds = {(r["section"], r["metric"]) for r in corpus_datasheet(docs).collect()}
     assert ("volume", "n_docs") in ds and ("language", "n_docs:en") in ds
-    gq = svc.quality_gate(docs).collect()
+    gq = gopher_quality(docs).collect()
     assert len(gq) == 1 and "gopher_pass" in gq[0].asDict()
-    iw = svc.importance_weights(docs, F.col("lang") == "en").collect()
+    iw = dsir_log_weights(docs, F.col("lang") == "en").collect()
     assert iw[0]["n_feats"] == 5  # 3 unigrams + 2 bigrams
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0)],
         "vec_id long, embedding array<double>, label int",
     )
-    sd = {r["vec_id"]: r["is_dup"] for r in svc.semantic_dedup(emb).collect()}
+    sd = {r["vec_id"]: r["is_dup"] for r in semantic_dedup(emb).collect()}
     assert sd == {1: False, 2: True}
-    cb = svc.curriculum(
+    cb = curriculum_buckets(
         docs.select("doc_id", F.length("text").cast("double").alias("s")),
         "s", n_buckets=2,
     ).collect()
@@ -113,5 +118,5 @@ def test_service_curation_plane_delegates(spark, tmp_path):
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3)], "query_id long, neighbor_id long"
     )
-    rc = svc.ann_recall(pairs, pairs.limit(1)).collect()
+    rc = recall_at_k(pairs, pairs.limit(1)).collect()
     assert {r["recall"] for r in rc} == {0.5}

@@ -24,7 +24,7 @@ from udata_datalake_service_spark.plans.select_batch import (
 def test_excluded_clause(spark, catalog_df):
     live = catalog_df.filter(excluded_clause())
     ids = sorted(r["resource_id"] for r in live.collect())
-    # r3 deleted, r5 matches %format=shp% exclusion pattern
+    # r3 deleted, r5 matches the %?format=shp% exclusion pattern
     assert ids == ["r1", "r2", "r4"]
 
 

@@ -171,3 +171,15 @@ def test_pinned_conditions_reference_only_staged_columns():
             )
             checked += 1
     assert checked >= 4, "expected the known pinned_filter call sites"
+
+
+def test_text_metrics_refuses_diverged_stopwords(spark, sf_dir, monkeypatch):
+    """q_tx_text_metrics counts stopwords with the 'en' marker hits; if
+    the two constants diverge it must raise (not assert: ``python -O``
+    strips asserts) before building a silently wrong plan."""
+    import udata_datalake_service_spark.llm.text as text_mod
+    from udata_datalake_service_spark.entry_queries import QUERIES
+
+    monkeypatch.setattr(text_mod, "STOPWORDS", frozenset({"diverged"}))
+    with pytest.raises(RuntimeError, match="diverged"):
+        QUERIES["tx_text_metrics"](spark, sf_dir)

@@ -36,6 +36,10 @@ CURRENT_ROUND = 15
 # round; forced to the head of the attestation window.
 NEW_OR_CHANGED: frozenset[str] = frozenset({
     # round-15 changes (populated as queries are added/edited this round)
+    "tx_text_metrics",  # STOPWORDS guard raises instead of asserting
+    # select_batch.EXCLUDED_PATTERNS now holds the reference pair the
+    # service already used: one more NOT LIKE in the executed plan
+    "j3_u7_batch_select_claim",
 })
 
 # Rounds whose driver window did NOT advance the rotation: the round-12

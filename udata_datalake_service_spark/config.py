@@ -8,60 +8,49 @@ file ports by deleting the dead sections.
 
 Precedence: dataclass defaults < TOML file (explicit path or
 ``$SPARK_HYDRA_CONFIG``) < environment (``SPARK_HYDRA_<KEY>``, parsed by
-field type — ints as ints, bools as true/false/1/0, tuples as
-comma-separated).
+field type — ints as ints, tuples as comma-separated strings).
+
+The crawl defaults are the constants the plans themselves default to
+(``select_batch``, ``backoff``), so the two paths cannot drift apart.
 """
 
 from __future__ import annotations
 
 import dataclasses
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+
+from udata_datalake_service_spark.plans.backoff import (
+    BACKOFF_NB_REQ,
+    BACKOFF_PERIOD_S,
+    COOL_OFF_PERIOD_S,
+)
+from udata_datalake_service_spark.plans.select_batch import (
+    BATCH_SIZE,
+    EXCLUDED_PATTERNS,
+)
 
 
 @dataclass(frozen=True)
 class Config:
     # crawler (config_default.toml:20-49)
-    user_agent: str = "udata-hydra/1.0"
-    catalog_url: str = ""
-    excluded_patterns: tuple[str, ...] = ("http%geo.data.gouv.fr%", "%?format=shp%")
+    excluded_patterns: tuple[str, ...] = EXCLUDED_PATTERNS
     no_backoff_domains: tuple[str, ...] = (
         "static.data.gouv.fr",
         "www.data.gouv.fr",
         "inspire.data.gouv.fr",
     )
-    backoff_nb_req: int = 180
-    backoff_period: int = 360  # seconds
-    cool_off_period: int = 86_400  # seconds
-    batch_size: int = 40
-    check_delays: tuple[int, ...] = (12, 24, 168, 720)  # hours
-    sleep_between_batches: int = 60  # seconds
-    # ingest guards (config_default.toml:51-56)
-    max_filesize_allowed: dict = field(
-        default_factory=lambda: {
-            "csv": 104_857_600,
-            "csvgz": 104_857_600,
-            "xls": 52_428_800,
-            "xlsx": 13_107_200,
-            "ods": 10_485_760,
-        }
-    )
-    # analysis toggles (config_default.toml:59-63)
-    csv_analysis: bool = True
-    csv_to_db: bool = True
-    # webhook (config_default.toml:66-68)
-    webhook_enabled: bool = True
-    udata_uri: str = ""
+    backoff_nb_req: int = BACKOFF_NB_REQ
+    backoff_period: int = BACKOFF_PERIOD_S  # seconds
+    cool_off_period: int = COOL_OFF_PERIOD_S  # seconds
+    batch_size: int = BATCH_SIZE
 
 
 def _coerce(current, raw: str):
-    if isinstance(current, bool):
-        return raw.strip().lower() in ("1", "true", "yes", "on")
     if isinstance(current, int):
         return int(raw)
     if isinstance(current, tuple):
-        parts = [p.strip() for p in raw.split(",") if p.strip()]
-        return tuple(int(p) if p.lstrip("-").isdigit() else p for p in parts)
+        return tuple(p.strip() for p in raw.split(",") if p.strip())
     return raw
 
 
@@ -88,9 +77,6 @@ def load_config(
     for f_ in dataclasses.fields(Config):
         raw = env.get(f"SPARK_HYDRA_{f_.name.upper()}")
         if raw is not None:
-            current = values.get(f_.name, f_.default)
-            if current is dataclasses.MISSING:
-                current = f_.default_factory()  # type: ignore[misc]
-            values[f_.name] = _coerce(current, raw)
+            values[f_.name] = _coerce(values.get(f_.name, f_.default), raw)
 
     return Config(**values)

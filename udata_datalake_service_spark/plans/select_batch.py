@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from udata_datalake_service_spark.operators.core import deterministic_sample, union_tiers
 
 BATCH_SIZE = 40
-EXCLUDED_PATTERNS = ("%format=shp%",)  # config_default.toml:24-28 shape
+EXCLUDED_PATTERNS = ("http%geo.data.gouv.fr%", "%?format=shp%")  # config_default.toml:24-28
 
 
 def excluded_clause(patterns: tuple[str, ...] = EXCLUDED_PATTERNS) -> Column:

@@ -195,10 +195,8 @@ class HydraService:
             return {"ok": False, "error": str(e)}
 
     # ---------------------------------------------- beyond-ref analytics ----
-    # The serving-plane face of the analytics operators this engine adds on
-    # top of the reference's route table: availability SLAs over the checks
-    # series, and funnel/cohort over any keyed event frame (the reference
-    # has no events plane; these take the frame explicitly).
+    # Not in the reference's route table: availability SLAs over the
+    # checks series.
 
     def availability_report(self) -> DataFrame:
         """Per-resource availability + longest consecutive-failure streak
@@ -243,126 +241,3 @@ class HydraService:
                 ),
             )
         )
-
-    def funnel(self, events: DataFrame, steps: list[str], horizon_s: int, **kw) -> DataFrame:
-        """Window-funnel depth per key (operators/funnel.funnel_levels)."""
-        from udata_datalake_service_spark.operators.funnel import funnel_levels
-
-        return funnel_levels(events, steps, horizon_s, **kw)
-
-    def cohort_retention(self, events: DataFrame, **kw) -> DataFrame:
-        """Cohort retention matrix (operators/funnel.cohort_retention)."""
-        from udata_datalake_service_spark.operators.funnel import cohort_retention
-
-        return cohort_retention(events, **kw)
-
-    # ------------------------------------------------- curation plane ----
-    def corpus_datasheet(self, docs: DataFrame, **kw) -> DataFrame:
-        """The corpus audit report (llm/report.corpus_datasheet)."""
-        from udata_datalake_service_spark.llm.report import corpus_datasheet
-
-        return corpus_datasheet(docs, **kw)
-
-    def quality_gate(self, docs: DataFrame, **kw) -> DataFrame:
-        """Gopher rule table per document (llm/gopher.gopher_quality)."""
-        from udata_datalake_service_spark.llm.gopher import gopher_quality
-
-        return gopher_quality(docs, **kw)
-
-    def importance_weights(self, docs: DataFrame, is_target, **kw) -> DataFrame:
-        """DSIR log importance weights (llm/tfidf.dsir_log_weights)."""
-        from udata_datalake_service_spark.llm.tfidf import dsir_log_weights
-
-        return dsir_log_weights(docs, is_target, **kw)
-
-    def semantic_dedup(self, embeddings: DataFrame, **kw) -> DataFrame:
-        """SemDeDup verdicts per vector (llm/similarity.semantic_dedup)."""
-        from udata_datalake_service_spark.llm.similarity import semantic_dedup
-
-        return semantic_dedup(embeddings, **kw)
-
-    def curriculum(self, docs: DataFrame, score: str, **kw) -> DataFrame:
-        """Score-quantile curriculum buckets (llm/mixing.curriculum_buckets)."""
-        from udata_datalake_service_spark.llm.mixing import curriculum_buckets
-
-        return curriculum_buckets(docs, score, **kw)
-
-    def ann_recall(self, exact: DataFrame, approx: DataFrame) -> DataFrame:
-        """Recall@k of an ANN path vs the exact top-k (llm/similarity
-        .recall_at_k) — the index-quality gate."""
-        from udata_datalake_service_spark.llm.similarity import recall_at_k
-
-        return recall_at_k(exact, approx)
-
-    def novelty(self, docs: DataFrame, **kw) -> DataFrame:
-        """First-occurrence n-gram novelty per doc under stream order
-        (llm/corpus.ngram_novelty) — the marginal-data-value curve."""
-        from udata_datalake_service_spark.llm.corpus import ngram_novelty
-
-        return ngram_novelty(docs, **kw)
-
-    def paragraph_dedup(self, docs: DataFrame, **kw) -> DataFrame:
-        """C4-style global paragraph dedup with text reconstruction
-        (llm/corpus.paragraph_dedup)."""
-        from udata_datalake_service_spark.llm.corpus import paragraph_dedup
-
-        return paragraph_dedup(docs, **kw)
-
-    def padding_waste(self, docs: DataFrame, len_col: str, **kw) -> DataFrame:
-        """Pad-token overhead, arrival vs length-sorted batching
-        (llm/corpus.padding_waste_report)."""
-        from udata_datalake_service_spark.llm.corpus import padding_waste_report
-
-        return padding_waste_report(docs, len_col, **kw)
-
-    def url_filter(self, df: DataFrame, **kw) -> DataFrame:
-        """URL-level quality gate + signals (functions/urls
-        .url_quality_filter) — the pre-fetch crawl filter."""
-        from udata_datalake_service_spark.functions.urls import url_quality_filter
-
-        return url_quality_filter(df, **kw)
-
-    def html_text(self, df: DataFrame, html_col: str = "html") -> DataFrame:
-        """Visible-text extraction + boilerplate signals over an HTML
-        column (llm/html.py) — the raw-crawl-to-corpus boundary."""
-        from udata_datalake_service_spark.llm.html import html_signals, html_to_text
-
-        sig = html_signals(F.col(html_col))
-        out = df.withColumn("text", html_to_text(F.col(html_col)))
-        for name, col in sig.items():
-            out = out.withColumn(name, col)
-        return out
-
-    def expectations_report(self, df: DataFrame, rules: dict) -> DataFrame:
-        """Per-rule data-quality violation scorecard
-        (operators/expectations.report)."""
-        from udata_datalake_service_spark.operators.expectations import report
-
-        return report(df, rules)
-
-    def expectations_split(self, df: DataFrame, rules: dict):
-        """(valid, quarantined) halves under a rule set
-        (operators/expectations.split)."""
-        from udata_datalake_service_spark.operators.expectations import split
-
-        return split(df, rules)
-
-    def scd2_merge(self, current: DataFrame, updates: DataFrame, keys, tracked, **kw) -> DataFrame:
-        """History-preserving dimension merge (operators/scd.scd2_merge)."""
-        from udata_datalake_service_spark.operators.scd import scd2_merge
-
-        return scd2_merge(current, updates, keys, tracked, **kw)
-
-    def pagerank(self, edges: DataFrame, **kw) -> DataFrame:
-        """Rank-by-reference over an edge list (operators/graph.pagerank)
-        — crawl-prioritization authority scores."""
-        from udata_datalake_service_spark.operators.graph import pagerank
-
-        return pagerank(edges, **kw)
-
-    def ingest_corpus(self, docs: DataFrame, batch_id: str, **kw) -> dict:
-        """Idempotent dedup-on-arrival corpus ingestion
-        (llm/ingest.ingest_documents) into this service's lake."""
-        from udata_datalake_service_spark.llm.ingest import ingest_documents
-
-        return ingest_documents(self.lake, docs, batch_id, **kw)
