@@ -11,6 +11,8 @@ long names — the registry cap the driver enforces.
 
 import json
 
+import pytest
+
 import bench
 
 
@@ -98,8 +100,6 @@ def test_idle_gate_threshold_flags_loaded_machine(monkeypatch):
 def test_job_group_is_cleared_when_a_rep_raises(spark):
     """A timed rep that raises must not leave its job group (or its
     description) on the thread, or every later job is mislabelled."""
-    import pytest
-
     sc = spark.sparkContext
     with pytest.raises(RuntimeError):
         with bench._job_group_scope(sc, "bench:boom:0", "boom"):

@@ -11,6 +11,7 @@ def test_defaults_match_reference_shipped_values():
         BACKOFF_PERIOD_S,
         COOL_OFF_PERIOD_S,
     )
+    from udata_datalake_service_spark.plans.next_check import CHECK_DELAYS_HOURS
     from udata_datalake_service_spark.plans.select_batch import (
         BATCH_SIZE,
         EXCLUDED_PATTERNS,
@@ -27,16 +28,8 @@ def test_defaults_match_reference_shipped_values():
     assert c.backoff_nb_req == BACKOFF_NB_REQ
     assert c.backoff_period == BACKOFF_PERIOD_S
     assert c.cool_off_period == COOL_OFF_PERIOD_S
-
-
-def test_unconfigurable_reference_values():
-    """CHECK_DELAYS and MAX_FILESIZE_ALLOWED are not Config knobs: the
-    code reads these constants, so the reference values are pinned here."""
-    from udata_datalake_service_spark.operators.exceptions import MAX_FILESIZE_ALLOWED
-    from udata_datalake_service_spark.plans.next_check import CHECK_DELAYS_HOURS
-
+    # not a Config knob: the re-check ladder is the constant the code reads
     assert CHECK_DELAYS_HOURS == (12, 24, 168, 720)
-    assert MAX_FILESIZE_ALLOWED["xlsx"] == 13_107_200
 
 
 def test_toml_then_env_precedence(tmp_path):
