@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,28 @@ def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` in a fresh job group and returns
+    (its result, the number of Spark jobs it ran), read from the
+    StatusTracker once the listener bus has drained. The group is
+    cleared in ``finally``, so a raising ``fn`` tags no later job."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from udata_datalake_service_spark.config import Config, load_config
 
 
@@ -10,6 +12,7 @@ def test_defaults_match_reference_shipped_values():
         BACKOFF_NB_REQ,
         BACKOFF_PERIOD_S,
         COOL_OFF_PERIOD_S,
+        NO_BACKOFF_DOMAINS,
     )
     from udata_datalake_service_spark.plans.next_check import CHECK_DELAYS_HOURS
     from udata_datalake_service_spark.plans.select_batch import (
@@ -28,6 +31,7 @@ def test_defaults_match_reference_shipped_values():
     assert c.backoff_nb_req == BACKOFF_NB_REQ
     assert c.backoff_period == BACKOFF_PERIOD_S
     assert c.cool_off_period == COOL_OFF_PERIOD_S
+    assert c.no_backoff_domains == NO_BACKOFF_DOMAINS
     # not a Config knob: the re-check ladder is the constant the code reads
     assert CHECK_DELAYS_HOURS == (12, 24, 168, 720)
 
@@ -56,6 +60,26 @@ def test_toml_then_env_precedence(tmp_path):
     assert c2.backoff_nb_req == 7  # env beats toml
     assert c2.no_backoff_domains == ("b.org", "c.org")
     assert c2.excluded_patterns == ("%x%", "42")  # a numeric entry stays a str
+
+
+@pytest.mark.parametrize(
+    "line, key",
+    [
+        ('EXCLUDED_PATTERNS = "%x%"', "EXCLUDED_PATTERNS"),  # str, not list
+        ('NO_BACKOFF_DOMAINS = ["a.org", 3]', "NO_BACKOFF_DOMAINS"),
+        ('BATCH_SIZE = "5"', "BATCH_SIZE"),
+        ("BACKOFF_NB_REQ = true", "BACKOFF_NB_REQ"),  # a bool is not an int
+        ("COOL_OFF_PERIOD = 1.5", "COOL_OFF_PERIOD"),
+    ],
+)
+def test_toml_value_of_wrong_type_is_refused(tmp_path, line, key):
+    """A mistyped TOML value used to load as is: a bare string of
+    patterns iterated into one-letter patterns (NOT LIKE '%' selects
+    nothing), a quoted batch size stayed a str."""
+    p = tmp_path / "cfg.toml"
+    p.write_text(line + "\n")
+    with pytest.raises(ValueError, match=key):
+        load_config(toml_path=str(p), env={})
 
 
 def test_config_path_from_environment(tmp_path):

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import datetime
 import hashlib
+import os
 
 from pyspark.sql import functions as F
 
@@ -1705,3 +1707,138 @@ def test_recover_log_table_after_sweep_crash(spark, tmp_path, proto_store):
     assert lake.append_log_table_exactly_once(
         spark.createDataFrame([(99,)], "id long"), "t", "ep-strag"
     ) is False
+
+
+# ------------------------------------------------------- schema memo ----
+@pytest.fixture(params=["posix", "s3-semantics"])
+def memo_store(request):
+    return _make_store(request.param, request)
+
+
+class TestSchemaMemo:
+    """Repeated reads of an unchanged table reuse the schema Spark
+    inferred, with no inference job; any change to the table's data files
+    re-infers, so a read never returns a stale schema."""
+
+    def _fresh_merge_read(self, spark, lake, name):
+        from pathlib import Path
+
+        cur = lake._current_dir(Path(lake.app_table_path(name)))
+        return spark.read.option("mergeSchema", "true").parquet(str(cur))
+
+    def test_repeat_read_of_unchanged_table_runs_no_job(
+        self, spark, tmp_path, memo_store, count_jobs
+    ):
+        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+        df = spark.createDataFrame(
+            [(i, f"v{i}", datetime.date(2024, 1, 1 + i % 3)) for i in range(9)],
+            "id long, v string, check_date date",
+        )
+        lake.write_app_table(df, "t", partition_by=["check_date"])
+        first, n_first = count_jobs(lambda: lake.read_app_table("t"))
+        again, n_again = count_jobs(lambda: lake.read_app_table("t"))
+        assert n_first >= 1  # the inference job the memo saves
+        assert n_again == 0
+        fresh = self._fresh_merge_read(spark, lake, "t")
+        assert again.schema == fresh.schema == first.schema
+        assert sorted(again.collect()) == sorted(fresh.collect())
+
+    def test_relative_lake_root_is_memoized(
+        self, spark, tmp_path, memo_store, count_jobs
+    ):
+        """Spark lists absolute paths; the walk must compare equal to
+        them when the lake root is given relative to the cwd (as a
+        ``--lake-root`` argument may be)."""
+        lake = Lake(spark, os.path.relpath(tmp_path / "lake"), store=memo_store)
+        lake.write_app_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
+        lake.read_app_table("t")
+        again, n = count_jobs(lambda: lake.read_app_table("t"))
+        assert n == 0 and again.collect()[0]["v"] == "a"
+
+    def test_widening_append_after_memoized_read(self, spark, tmp_path, memo_store):
+        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+        lake.write_app_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
+        lake.read_app_table("t")
+        lake.read_app_table("t")  # served from the memo
+        wider = spark.createDataFrame([(2, "b", 9.5)], "id long, v string, score double")
+        lake.append_app_table(wider, "t", allow_schema_evolution=True)
+        back = lake.read_app_table("t")
+        assert back.columns == ["id", "v", "score"]
+        assert back.schema == self._fresh_merge_read(spark, lake, "t").schema
+        got = {r["id"]: (r["v"], r["score"]) for r in back.collect()}
+        assert got == {1: ("a", None), 2: ("b", 9.5)}
+
+    def test_rewrite_removed_file_and_resized_file_each_re_infer(
+        self, spark, tmp_path, memo_store, count_jobs
+    ):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pathlib import Path
+
+        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+        base = Path(lake.app_table_path("t"))
+        two_files = spark.createDataFrame(
+            [(i, f"v{i}") for i in range(6)], "id long, v string"
+        ).repartition(2)
+        lake.write_app_table(two_files, "t")
+        lake.read_app_table("t")
+
+        # a rewrite commits a new version dir
+        lake.rewrite_app_table(
+            spark.createDataFrame([(7, "w", 1.0)], "id long, v string, w double")
+            .union(spark.createDataFrame([(8, "x", 2.0)], "id long, v string, w double"))
+            .repartition(2),
+            "t",
+        )
+        back, n = count_jobs(lambda: lake.read_app_table("t"))
+        assert n >= 1 and back.columns == ["id", "v", "w"]
+        lake.read_app_table("t")  # memoize the new version
+
+        # a removed data file
+        cur = lake._current_dir(base)
+        parts = sorted(cur.glob("part-*.parquet"))
+        assert len(parts) == 2
+        parts[0].unlink()
+        back, n = count_jobs(lambda: lake.read_app_table("t"))
+        assert n >= 1 and back.count() == 1
+        lake.read_app_table("t")
+
+        # a same-name file of a different size (and schema); its Hadoop
+        # checksum sidecar no longer matches and goes with the old bytes
+        parts[1].with_name(f".{parts[1].name}.crc").unlink(missing_ok=True)
+        pq.write_table(
+            pa.table({"id": [9, 10], "v": ["y", "z"], "w": [3.0, 4.0], "extra": ["e", "f"]}),
+            parts[1],
+        )
+        back, n = count_jobs(lambda: lake.read_app_table("t"))
+        assert n >= 1 and back.columns == ["id", "v", "w", "extra"]
+        assert sorted(r["id"] for r in back.collect()) == [9, 10]
+
+    def test_stale_walk_is_caught_by_the_input_files_check(
+        self, spark, tmp_path, memo_store, monkeypatch
+    ):
+        """An append that lands between the memo's walk and Spark's own
+        listing: the walk still matches the memo, but the DataFrame lists
+        one more file, so the read re-infers instead of using the old
+        schema."""
+        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+        lake.write_app_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
+        lake.read_app_table("t")
+        (_, walked), _ = next(iter(lake._schema_memo.values()))
+        wider = spark.createDataFrame([(2, "b", 9.5)], "id long, v string, score double")
+        lake.append_app_table(wider, "t", allow_schema_evolution=True)
+        monkeypatch.setattr(lake, "_data_files", lambda cur: walked)
+        back = lake.read_app_table("t")
+        assert back.columns == ["id", "v", "score"]
+        assert sorted(back.collect()) == sorted(
+            self._fresh_merge_read(spark, lake, "t").collect()
+        )
+
+    def test_memo_holds_one_entry_per_table(self, spark, tmp_path, memo_store):
+        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+        lake.write_app_table(spark.createDataFrame([(0,)], "n long"), "other")
+        lake.read_app_table("other")
+        for i in range(20):
+            lake.rewrite_app_table(spark.createDataFrame([(i,)], "n long"), "t")
+            assert lake.read_app_table("t").collect()[0]["n"] == i
+        assert sorted(p.name for p in lake._schema_memo) == ["other", "t"]

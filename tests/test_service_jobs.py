@@ -1,0 +1,60 @@
+"""Spark job budget of the serving routes on a warm lake.
+
+Each route is one API request: the route call plus ``collect()``. The
+counts are exact, so a change that adds a job per request (for example a
+schema inference per lake read) fails here, not only in a benchmark.
+"""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from udata_datalake_service_spark.service import HydraService
+from udata_datalake_service_spark.sinks.lake import Lake
+
+# route -> Spark jobs of one warm request (call + collect). Each lake
+# read used to add one schema-inference job: 4, 6, 2, 5, 6, 3.
+ROUTE_JOBS = {
+    "latest_check": 2,
+    "all_checks": 4,
+    "resource_status": 1,
+    "crawler_status": 3,
+    "stats": 4,
+    "checks_aggregate": 2,
+}
+
+
+def _request(svc: HydraService, route: str):
+    if route == "resource_status":
+        return svc.resource_status("r1").collect()
+    if route in ("latest_check", "all_checks"):
+        return getattr(svc, route)(resource_id="r1").collect()
+    if route == "checks_aggregate":
+        return svc.checks_aggregate("headers['content-type']", "2024-01-02").collect()
+    return getattr(svc, route)().collect()
+
+
+@pytest.fixture()
+def warm_service(spark, tmp_path, catalog_df, checks_df):
+    """catalog and checks (partitioned by check_date, as the crawl
+    writes it), with every route called once."""
+    lake = Lake(spark, str(tmp_path / "lake"))
+    lake.write_app_table(catalog_df, "catalog")
+    lake.write_app_table(
+        checks_df.withColumn("check_date", F.to_date("created_at")),
+        "checks",
+        partition_by=["check_date"],
+    )
+    svc = HydraService(spark, lake)
+    for route in ROUTE_JOBS:
+        _request(svc, route)
+    return svc
+
+
+def test_warm_route_job_budget(warm_service, count_jobs):
+    got = {
+        route: count_jobs(lambda: _request(warm_service, route))[1]
+        for route in ROUTE_JOBS
+    }
+    assert got == ROUTE_JOBS

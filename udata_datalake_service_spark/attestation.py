@@ -40,6 +40,9 @@ NEW_OR_CHANGED: frozenset[str] = frozenset({
     # select_batch.EXCLUDED_PATTERNS now holds the reference pair the
     # service already used: one more NOT LIKE in the executed plan
     "j3_u7_batch_select_claim",
+    # the persisted shingle frame carries the xxhash64 index key, so the
+    # exact side's three index reads scan the cache instead of re-hashing
+    "dd_lsh_eval",
 })
 
 # Rounds whose driver window did NOT advance the rotation: the round-12

@@ -24,6 +24,7 @@ from udata_datalake_service_spark.plans.backoff import (
     BACKOFF_NB_REQ,
     BACKOFF_PERIOD_S,
     COOL_OFF_PERIOD_S,
+    NO_BACKOFF_DOMAINS,
 )
 from udata_datalake_service_spark.plans.select_batch import (
     BATCH_SIZE,
@@ -35,11 +36,7 @@ from udata_datalake_service_spark.plans.select_batch import (
 class Config:
     # crawler (config_default.toml:20-49)
     excluded_patterns: tuple[str, ...] = EXCLUDED_PATTERNS
-    no_backoff_domains: tuple[str, ...] = (
-        "static.data.gouv.fr",
-        "www.data.gouv.fr",
-        "inspire.data.gouv.fr",
-    )
+    no_backoff_domains: tuple[str, ...] = NO_BACKOFF_DOMAINS
     backoff_nb_req: int = BACKOFF_NB_REQ
     backoff_period: int = BACKOFF_PERIOD_S  # seconds
     cool_off_period: int = COOL_OFF_PERIOD_S  # seconds
@@ -54,11 +51,26 @@ def _coerce(current, raw: str):
     return raw
 
 
+def _check_toml(key: str, current, v):
+    """A TOML value must have its field's type: a list of strings for
+    the tuple fields, an integer (not a bool) for the int fields. A bare
+    string where a list belongs would otherwise iterate into one-letter
+    patterns."""
+    if isinstance(current, tuple):
+        if not (isinstance(v, list) and all(isinstance(x, str) for x in v)):
+            raise ValueError(f"{key} must be a list of strings, got {v!r}")
+        return tuple(v)
+    if isinstance(current, int) and (isinstance(v, bool) or not isinstance(v, int)):
+        raise ValueError(f"{key} must be an integer, got {v!r}")
+    return v
+
+
 def load_config(
     toml_path: str | None = None, env: dict | None = None
 ) -> Config:
     """defaults < TOML < environment. Unknown TOML keys are ignored (the
-    reference's Postgres/Redis keys port over silently as no-ops)."""
+    reference's Postgres/Redis keys port over silently as no-ops); a known
+    key whose value has the wrong type raises ``ValueError``."""
     env = os.environ if env is None else env
     values: dict = {}
 
@@ -71,8 +83,7 @@ def load_config(
         for f_ in dataclasses.fields(Config):
             key = f_.name.upper()
             if key in doc:
-                v = doc[key]
-                values[f_.name] = tuple(v) if isinstance(v, list) else v
+                values[f_.name] = _check_toml(key, f_.default, doc[key])
 
     for f_ in dataclasses.fields(Config):
         raw = env.get(f"SPARK_HYDRA_{f_.name.upper()}")

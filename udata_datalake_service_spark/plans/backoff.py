@@ -21,6 +21,12 @@ from pyspark.sql import functions as F
 BACKOFF_NB_REQ = 180
 BACKOFF_PERIOD_S = 360
 COOL_OFF_PERIOD_S = 86_400
+# the reference's shipped allowlist (config_default.toml)
+NO_BACKOFF_DOMAINS = (
+    "static.data.gouv.fr",
+    "www.data.gouv.fr",
+    "inspire.data.gouv.fr",
+)
 
 
 def domain_backoff_table(
@@ -29,7 +35,7 @@ def domain_backoff_table(
     nb_req: int = BACKOFF_NB_REQ,
     period_s: int = BACKOFF_PERIOD_S,
     cool_off_s: int = COOL_OFF_PERIOD_S,
-    no_backoff_domains: tuple[str, ...] = (),
+    no_backoff_domains: tuple[str, ...] = NO_BACKOFF_DOMAINS,
 ) -> DataFrame:
     """Per-domain decision frame: ``domain, recent_checks, saw_429,
     ratelimit_low, backoff(bool)``.

@@ -27,6 +27,7 @@ import uuid
 from contextlib import contextmanager
 from datetime import datetime, timezone
 from pathlib import Path
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,7 +63,20 @@ class Lake:
     rename into place inside the lock; read-modify-writes can pass the
     `table_version` snapshot for compare-and-swap semantics (losers get
     `ConcurrentWriteError` and retry) — the optimistic-concurrency
-    protocol Delta/Iceberg implement on their commit logs."""
+    protocol Delta/Iceberg implement on their commit logs.
+
+    Read path: a parquet read without a schema makes Spark infer one, and
+    inference is an eager, footer-reading Spark job. Every
+    single-directory read (`read_app_table`, `read_table`, `registry`, the
+    append schema check, compaction, exactly-once appends) goes through
+    `_read_parquet_dir`, which remembers, per table base path, the schema
+    Spark inferred and the data files it was inferred from, each as
+    (path, size, mtime_ns). When a later read walks the same files it
+    passes that schema to the reader, and keeps the result only if the
+    DataFrame's ``inputFiles()`` is exactly that file set, so an append
+    landing between the walk and Spark's own listing cannot be read
+    under a stale schema. Any other read infers as before and replaces
+    the entry: one entry per table, however many versions it has had."""
 
     def __init__(self, spark: SparkSession, root: str, store=None):
         self.spark = spark
@@ -72,6 +86,8 @@ class Lake:
         # default; S3SemanticsStore exercises the protocol against
         # object-store rename/visibility semantics (tests/test_lake.py)
         self.store = store if store is not None else PosixStore()
+        # table base path -> ((merge_schema, data files), inferred schema)
+        self._schema_memo: dict[Path, tuple] = {}
 
     # ------------------------------------------------- versioned commits ----
     @staticmethod
@@ -371,14 +387,59 @@ class Lake:
             if schema is not None:
                 return self.spark.createDataFrame([], schema)
             raise FileNotFoundError(f"lake table has no data: {base}")
+        # app tables accept widening appends (allow_schema_evolution):
+        # merge footers so evolved files contribute their columns and
+        # older files read NULLs — instead of whichever single file's
+        # schema Spark happens to pick
+        return self._read_parquet_dir(cur, merge_schema)
+
+    @staticmethod
+    def _data_files(cur: Path) -> frozenset:
+        """(path, size, mtime_ns) of every data file under ``cur``,
+        skipping ``_``/``.`` names as Spark's file listing does. An entry
+        that vanishes mid-walk is left out: the set then differs from
+        Spark's listing, which only costs a schema inference."""
+        out, todo = [], [os.path.abspath(cur)]
+        while todo:
+            try:
+                with os.scandir(todo.pop()) as it:
+                    for e in it:
+                        if e.name.startswith(("_", ".")):
+                            continue
+                        if e.is_dir():
+                            todo.append(e.path)
+                        else:
+                            st = e.stat()
+                            out.append((e.path, st.st_size, st.st_mtime_ns))
+            except FileNotFoundError:
+                continue
+        return frozenset(out)
+
+    def _read_parquet_dir(self, cur: Path, merge_schema: bool = False) -> DataFrame:
+        """``spark.read.parquet(cur)``, with the schema inference job
+        skipped while the table's data files are the ones the memoized
+        schema was inferred from (see the class docstring)."""
+        base = cur.parent if cur.name.startswith("v-") else cur
+        files = self._data_files(cur)
+        paths = {p for p, _, _ in files}
+
+        def input_paths(df: DataFrame) -> set[str]:
+            return {unquote(urlsplit(u).path) for u in df.inputFiles()}
+
+        memo = self._schema_memo.get(base)
+        if memo is not None and memo[0] == (merge_schema, files):
+            df = self.spark.read.schema(memo[1]).parquet(str(cur))
+            if input_paths(df) == paths:
+                return df
         reader = self.spark.read
         if merge_schema:
-            # app tables accept widening appends (allow_schema_evolution):
-            # merge footers so evolved files contribute their columns and
-            # older files read NULLs — instead of whichever single file's
-            # schema Spark happens to pick
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(str(cur))
+        df = reader.parquet(str(cur))
+        if input_paths(df) == paths:
+            self._schema_memo[base] = ((merge_schema, files), df.schema)
+        else:
+            self._schema_memo.pop(base, None)
+        return df
 
     # ---------------------------------------------------------- tables ----
     def table_path(self, name: str) -> str:
@@ -513,6 +574,7 @@ class Lake:
         never a registry row pointing at deleted data."""
         self._delete_registry_rows(name)
         p = Path(self.table_path(name))
+        self._schema_memo.pop(p, None)
         # existence through the backend: a fresh process has no local
         # footprint for a bucket-resident table, and a local-only check
         # would strand its keys (and MANIFEST) forever
@@ -664,9 +726,7 @@ class Lake:
             # mergeSchema: after a prior widening append the dir's files
             # disagree; the check must compare against the UNION schema,
             # not whichever single footer Spark happens to pick
-            for f in self.spark.read.option("mergeSchema", "true")
-            .parquet(str(cur))
-            .schema
+            for f in self._read_parquet_dir(cur, merge_schema=True).schema
         }
         incoming = {f.name: f.dataType for f in df.schema}
         # partition columns are excluded from the type-equality check
@@ -939,7 +999,7 @@ class Lake:
         # data (same bug class as the ADVICE-r8 exactly-once-append fix;
         # reproduced: wide write + narrow evolved append + compact lost
         # the wide column entirely)
-        df = self.spark.read.option("mergeSchema", "true").parquet(str(cur))
+        df = self._read_parquet_dir(cur, merge_schema=True)
         # carry the exactly-once ledger: compaction preserves the data, so
         # committed epoch ids must stay committed (replays keep no-opping)
         ledger = None
@@ -1010,7 +1070,7 @@ class Lake:
         if cur is None:
             new = df
         else:
-            existing = self.spark.read.option("mergeSchema", "true").parquet(str(cur))
+            existing = self._read_parquet_dir(cur, merge_schema=True)
             self._check_append_schema(df, cur, allow_schema_evolution=True)
             new = existing.unionByName(df, allowMissingColumns=True)
         ver = self._new_version()
