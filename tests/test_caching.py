@@ -80,3 +80,22 @@ def test_surprisal_and_dsir_adopt(spark):
         assert caches
         settle(out)
         assert all(not _is_cached(c) for c in caches)
+
+
+def test_settle_releases_caches_when_materialization_raises(spark):
+    """A query that fails inside settle's checkpoint (here a UDF that
+    raises) must not leave its adopted caches persisted for the rest of
+    the session: settle re-raises and the caches are released."""
+    import pytest
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("udf failure")
+
+    cache = spark.range(10).persist()
+    result = adopt(cache.select(boom(F.col("id")).alias("y")), cache)
+    with pytest.raises(Exception, match="udf failure"):
+        settle(result)
+    assert cache.is_cached is False
+    assert not _is_cached(cache)
+    assert adopted(result) == []

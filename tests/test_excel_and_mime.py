@@ -93,6 +93,24 @@ def test_read_excel_to_dataframe(spark, xlsx_path):
     assert df.count() == 3
 
 
+def test_read_excel_without_header_row_fails_typed(spark, xlsx_path, tmp_path):
+    """No row at or after header_row_idx means no header: a ValueError
+    naming the file and sheet, not a bare StopIteration (which PEP 479
+    turns into RuntimeError inside a calling generator)."""
+    empty = tmp_path / "empty.xlsx"
+    with zipfile.ZipFile(empty, "w") as z:
+        z.writestr("xl/workbook.xml", _WB_XML)
+        z.writestr("xl/_rels/workbook.xml.rels", _RELS_XML)
+        z.writestr(
+            "xl/worksheets/sheet1.xml",
+            _SHEET2_XML.split("<sheetData>")[0] + "<sheetData/></worksheet>",
+        )
+    with pytest.raises(ValueError, match=r"empty\.xlsx.*sheet None"):
+        read_excel(spark, str(empty))
+    with pytest.raises(ValueError, match=r"fixture\.xlsx.*sheet 'Autre'.*header_row_idx=1"):
+        read_excel(spark, xlsx_path, sheet_name="Autre", header_row_idx=1)
+
+
 MAGIC_CASES = [
     (b"\x1f\x8b\x08rest", "application/gzip"),
     (b"PK\x03\x04rest", "application/zip"),
@@ -158,7 +176,7 @@ def test_excel_flows_through_inference_pipeline(spark, xlsx_path):
     from udata_datalake_service_spark.sources.inference import inspect_tabular
 
     typed, insp = inspect_tabular(spark, xlsx_path)
-    assert insp.engine in ("openpyxl", "stdlib-xlsx")
+    assert insp.engine == "stdlib-xlsx"
     assert insp.total_lines == 3
     assert insp.columns["nom"]["python_type"] == "string"
     assert insp.columns["montant"]["python_type"] == "float"
@@ -374,7 +392,7 @@ def test_xls_flows_through_inference_pipeline(spark, xls_path):
     from udata_datalake_service_spark.sources.inference import inspect_tabular
 
     typed, insp = inspect_tabular(spark, str(xls_path))
-    assert insp.engine in ("xlrd", "stdlib-biff")
+    assert insp.engine == "stdlib-biff"
     assert insp.columns["montant"]["python_type"] == "float"
     rows = {r["nom"]: r for r in typed.collect()}
     assert rows["Aurélie"]["montant"] == 1020.5
@@ -469,13 +487,13 @@ def test_magic_routing_beats_lying_extension(spark, tmp_path, xls_path, xlsx_pat
     lying_csv = str(tmp_path / "really_xls.csv")
     shutil.copy(xls_path, lying_csv)
     typed, insp = inspect_tabular(spark, lying_csv)
-    assert insp.engine in ("xlrd", "stdlib-biff")
+    assert insp.engine == "stdlib-biff"
     assert insp.columns["montant"]["python_type"] == "float"
 
     lying_bin = str(tmp_path / "really_xlsx.bin")
     shutil.copy(xlsx_path, lying_bin)
     _, insp2 = inspect_tabular(spark, lying_bin)
-    assert insp2.engine in ("openpyxl", "stdlib-xlsx")
+    assert insp2.engine == "stdlib-xlsx"
 
 
 # ---------------------------------------------------------------- .ods ----
@@ -562,6 +580,7 @@ def test_excel_reader_fails_typed_on_corrupt_downloads(tmp_path):
     as OSError."""
     import io
     import random
+    import re
     import zipfile as _zf
 
     import pytest as _pytest
@@ -586,5 +605,18 @@ def test_excel_reader_fails_typed_on_corrupt_downloads(tmp_path):
                 list(iter_excel_rows(str(p)))
             except (ValueError, NotImplementedError):
                 pass
+    # well-formed zip, malformed cell reference: lowercase / absolute refs
+    # are not the r= form the reader indexes by
+    for ref in ("a1", "$A$1"):
+        p = tmp_path / "badref.xlsx"
+        with _zf.ZipFile(p, "w") as z:
+            z.writestr("xl/workbook.xml", _WB_XML)
+            z.writestr("xl/_rels/workbook.xml.rels", _RELS_XML)
+            z.writestr(
+                "xl/worksheets/sheet1.xml",
+                _SHEET2_XML.replace('r="A1"', f'r="{ref}"'),
+            )
+        with _pytest.raises(ValueError, match=f"malformed cell reference '{re.escape(ref)}'"):
+            list(iter_excel_rows(str(p)))
     with _pytest.raises(FileNotFoundError):
         list(iter_excel_rows(str(tmp_path / "missing.xlsx")))

@@ -532,7 +532,7 @@ def test_multimodal_plumbing(spark, sf_dir):
 def test_audio_features_and_resize(spark, sf_dir):
     from udata_datalake_service_spark.llm.multimodal import (
         extract_audio_features,
-        resize_image_stub,
+        resize_image,
     )
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20)
@@ -545,7 +545,7 @@ def test_audio_features_and_resize(spark, sf_dir):
         assert r["duration_ms"] == r["n_samples"] * 1000 // 16000
         assert r["sample_rate"] == 16000
 
-    resized = resize_image_stub(media, 224, 224)
+    resized = resize_image(media, 224, 224)
     rows = resized.collect()
     assert len(rows) == 20
     for r in rows:
@@ -574,65 +574,7 @@ def test_frame_sample_plan(spark):
     assert ts == [0, 5, 10]
 
 
-# ------------------------------------------------ import-gated kernels ----
-def test_image_kernel_gating_real_and_fallback(monkeypatch):
-    """With a decoder installed, decodable payloads decode for real and
-    everything else falls back per-item to the deterministic stub — the
-    synthetic text-bytes corpus must produce stub values in BOTH modes."""
-    from udata_datalake_service_spark.llm import multimodal as mm
-
-    class _Im:
-        size = (10, 20)
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-        def convert(self, mode):
-            return self
-
-        def histogram(self):
-            return [1] * 256
-
-    class _FakePIL:
-        @staticmethod
-        def open(buf):
-            if not buf.read().startswith(b"IMG"):
-                raise ValueError("not an image")
-            return _Im()
-
-    monkeypatch.setattr(mm, "HAS_PIL", True)
-    monkeypatch.setattr(mm, "_PILImage", _FakePIL)
-    w, h, hist, src = mm._decode_image(b"IMG....")
-    assert (w, h) == (10, 20) and abs(sum(hist) - 1.0) < 1e-9
-    assert src == "pillow"
-    w2, h2, hist2, src2 = mm._decode_image(b"plain text")
-    assert (w2, h2, hist2) == mm._decode_image_stub(b"plain text")
-    assert src2 == "stub"
-
-
-def test_audio_kernel_gating_real_and_fallback(monkeypatch):
-    from udata_datalake_service_spark.llm import multimodal as mm
-
-    class _FakeSF:
-        @staticmethod
-        def read(buf):
-            if not buf.read().startswith(b"WAV"):
-                raise ValueError("not audio")
-            return list(range(32000)), 32000  # 1 s at 32 kHz
-
-    monkeypatch.setattr(mm, "HAS_SOUNDFILE", True)
-    monkeypatch.setattr(mm, "_soundfile", _FakeSF)
-    assert mm._decode_audio(b"WAV....", 16000) == (16000, 16000, 1000, "soundfile")
-    raw = b"some text payload"
-    assert mm._decode_audio(raw, 16000) == (
-        *mm._decode_audio_stub(raw, 16000),
-        "stub",
-    )
-
-
+# ------------------------------------------------ decode ladder rungs ----
 def test_audio_wave_rung_is_tagged(spark):
     """A real RIFF/WAVE payload decodes through the stdlib wave rung and
     reports decode_source='wave' (audio twin of the image ladder tag)."""
@@ -651,11 +593,21 @@ def test_audio_wave_rung_is_tagged(spark):
     assert (n, rate, ms, src) == (8000, 16000, 500, "wave")
 
 
-def test_resize_kernel_gating(monkeypatch):
+def test_resize_kernel_gating():
+    """Payloads no stdlib codec decodes fall per item to the
+    deterministic stub on every kernel: resize, image and audio."""
     from udata_datalake_service_spark.llm import multimodal as mm
 
     out = mm._resize_image_one(b"whatever", 224, 224)
-    assert out.startswith(b"RESIZED:224x224:")  # no decoder → stub payload
+    assert out.startswith(b"RESIZED:224x224:")  # not PNG/BMP → stub payload
+    w, h, hist, src = mm._decode_image(b"plain text")
+    assert (w, h, hist) == mm._decode_image_stub(b"plain text")
+    assert src == "stub"
+    raw = b"some text payload"
+    assert mm._decode_audio(raw, 16000) == (
+        *mm._decode_audio_stub(raw, 16000),
+        "stub",
+    )
 
 
 def test_exact_near_dup_pairs_block_invariance(spark, sf_dir):

@@ -43,6 +43,9 @@ NEW_OR_CHANGED: frozenset[str] = frozenset({
     # the persisted shingle frame carries the xxhash64 index key, so the
     # exact side's three index reads scan the cache instead of re-hashing
     "dd_lsh_eval",
+    # the decode ladder lost its Pillow rung: 'decoded' is the vendored
+    # rung alone instead of isin('pillow', 'vendored')
+    "mm_jpeg_meta",
 })
 
 # Rounds whose driver window did NOT advance the rotation: the round-12

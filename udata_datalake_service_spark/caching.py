@@ -90,12 +90,14 @@ def settle(result: DataFrame, *extra: DataFrame) -> DataFrame:
     on the executors (result-sized, freed when the returned frame is
     garbage-collected by the ContextCleaner), and downstream consumers —
     the driver's collect, a sink write — read them without recomputing
-    the released subtree."""
-    out = result.localCheckpoint(eager=True)
-    seen: dict[int, DataFrame] = {}
-    for c in [*adopted(result), *extra]:
-        seen.setdefault(id(c), c)
-    for c in seen.values():
-        c.unpersist()
-    result.__dict__.pop(_ATTR, None)
-    return out
+    the released subtree. The caches are released even when the
+    materialization raises; the error then propagates."""
+    try:
+        return result.localCheckpoint(eager=True)
+    finally:
+        seen: dict[int, DataFrame] = {}
+        for c in [*adopted(result), *extra]:
+            seen.setdefault(id(c), c)
+        for c in seen.values():
+            c.unpersist()
+        result.__dict__.pop(_ATTR, None)

@@ -3043,12 +3043,7 @@ def q_mm_jpeg_meta(spark, sf_dir):
     # ladder rung per file; histogram-derived stats are only trusted on
     # fully-decoded rows (the arithmetic-coded files report REAL header
     # dims but a stub byte histogram, which no SQL oracle can replay).
-    # pillow/vendored NORMALIZE to one 'decoded' value here (ADVICE r8):
-    # the ladder prefers Pillow when installed, and which real rung ran
-    # is an environment fact, not a property of the data — pinning
-    # 'vendored' made oracle parity depend on the container shipping no
-    # Pillow. The raw rung stays observable via extract_image_features.
-    decoded = F.col("decode_source").isin("pillow", "vendored")
+    decoded = F.col("decode_source") == "vendored"
     return feats.select(
         "media_id",
         "width",

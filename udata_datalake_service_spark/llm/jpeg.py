@@ -3,7 +3,7 @@ ITU T.81 spec.
 
 The dominant web image format in any real multimodal corpus is JPEG;
 without this module the decode ladder (``multimodal._decode_image``)
-fell from Pillow straight to the labeled stub for it. Entry points,
+would fall straight to the labeled stub for it. Entry points,
 mirroring the vendored PNG/BMP codecs:
 
 * ``parse_jpeg_dimensions`` — header-only marker scan: true
@@ -27,9 +27,8 @@ mirroring the vendored PNG/BMP codecs:
   cross-coding identity tests/test_jpeg.py pins.
 
 Like the PNG codec this is a correctness-first reference implementation:
-the per-block numpy IDCT is vectorized, but a production pipeline with
-Pillow/libjpeg available takes the ladder's faster first rung
-automatically.
+the per-block numpy IDCT is vectorized; the entropy decode is pure
+Python.
 """
 
 from __future__ import annotations

@@ -1,17 +1,18 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + metadata.
 
-The decode kernels are a LADDER: Pillow / soundfile when installed
-(neither ships in this container) → a vendored stdlib codec leg (the
-from-scratch PNG decoder in ``llm/png.py``; Python's ``wave`` module for
-PCM WAV) so REAL pixels/samples are exercised even in CI → a
-clearly-marked deterministic fake with the same signature for payloads
+Each decode kernel has two rungs. The first is a stdlib codec: the
+from-scratch PNG, BMP and JPEG decoders in ``llm/png.py``, ``llm/bmp.py``
+and ``llm/jpeg.py`` for images, Python's ``wave`` module for PCM WAV
+audio. It produces REAL pixels and samples. The second is a
+clearly-marked deterministic stub with the same signature, for payloads
 that are not decodable media at all (the synthetic text-bytes corpus the
-fixtures use — a text payload can never carry the PNG signature or RIFF
-header, so the oracle-replayed stub arithmetic is unreachable by
-accident). The pipeline stays green in ALL modes and the DuckDB oracles
-(which replay the fake's byte arithmetic) hold on the synthetic corpus. The Spark-side plumbing is
-real and tested in both modes: typed schemas, ``mapInPandas`` batch
-iteration (Arrow), partition sizing, and the metadata projection.
+fixtures use: a text payload can never carry a PNG/BMP/JPEG signature or
+a RIFF header, so the oracle-replayed stub arithmetic is unreachable by
+accident). The DuckDB oracles replay the stub's byte arithmetic on the
+synthetic corpus and the codecs' exact output on the generated media.
+The Spark-side plumbing is the same on both rungs: typed schemas,
+``mapInPandas`` batch iteration (Arrow), partition sizing, and the
+metadata projection.
 
 At 100 TB the pattern is: binaries live in parquet/lance files with a
 ``content binary`` column; decode runs as ``mapInPandas`` so one Python
@@ -27,22 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - exercised only where Pillow is installed
-    from PIL import Image as _PILImage
-
-    HAS_PIL = True
-except ImportError:
-    _PILImage = None
-    HAS_PIL = False
-
-try:  # pragma: no cover - exercised only where soundfile is installed
-    import soundfile as _soundfile
-
-    HAS_SOUNDFILE = True
-except ImportError:
-    _soundfile = None
-    HAS_SOUNDFILE = False
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -62,9 +47,8 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("n_bytes", T.LongType()),
         T.StructField("sha", T.StringType()),
         T.StructField("histogram", T.ArrayType(T.DoubleType())),
-        # which rung of the decode ladder produced the row (r7 task:
-        # make the stub rate a MEASURED number, not a docstring claim):
-        #   pillow     — real decode via Pillow
+        # which rung of the decode ladder produced the row, so the stub
+        # rate is a measured number:
         #   vendored   — real decode via the from-scratch codecs
         #   stub-dims  — REAL dimensions from the headers, stub histogram
         #                (arithmetic/lossless/12-bit JPEG)
@@ -91,26 +75,13 @@ def _decode_image_stub(content: bytes) -> tuple[int, int, list[float]]:
     return width, height, [h / total for h in hist]
 
 
-def _decode_image_real(content: bytes) -> tuple[int, int, list[float]]:
-    """Pillow decode: true dimensions + 8-bin luminance histogram."""
-    import io
-
-    with _PILImage.open(io.BytesIO(content)) as im:
-        w, h = im.size
-        lum = im.convert("L").histogram()  # 256 bins
-    hist = [float(sum(lum[i * 32 : (i + 1) * 32])) for i in range(8)]
-    total = sum(hist) or 1.0
-    return w, h, [b / total for b in hist]
-
-
 def _decode_image_vendored(content: bytes) -> tuple[int, int, list[float], str]:
     """From-scratch decode (PNG via llm/png.py, BMP via llm/bmp.py,
-    baseline JPEG via llm/jpeg.py) — same feature contract as the Pillow
-    leg (dims + 8-bin ITU-R 601-2 luminance histogram), so the REAL-pixel
-    path executes even where Pillow is not installed (this CI container).
-    Raises for payloads outside the three formats. The 4th element is the
-    rung tag: "vendored" for a full pixel decode, "stub-dims" when only
-    the header dimensions are real (arithmetic/lossless/12-bit JPEG)."""
+    baseline/progressive JPEG via llm/jpeg.py): true dimensions + 8-bin
+    ITU-R 601-2 luminance histogram. Raises for payloads outside the
+    three formats. The 4th element is the rung tag: "vendored" for a
+    full pixel decode, "stub-dims" when only the header dimensions are
+    real (arithmetic/lossless/12-bit JPEG)."""
     from udata_datalake_service_spark.llm import png as _png
 
     if content[:2] == b"BM":
@@ -139,17 +110,11 @@ def _decode_image_vendored(content: bytes) -> tuple[int, int, list[float], str]:
 
 
 def _decode_image(content: bytes) -> tuple[int, int, list[float], str]:
-    """Decode ladder: Pillow (any format) → vendored stdlib PNG codec →
-    deterministic stub (library absent AND payload not a PNG, e.g. the
+    """Decode ladder: vendored stdlib codecs (PNG/BMP/JPEG) →
+    deterministic stub (payload not one of those formats, e.g. the
     synthetic text-bytes fixture corpus). The 4th element names the rung
-    that produced the result (pillow | vendored | stub-dims | stub) so
-    downstream queries can MEASURE the stub rate."""
-    if HAS_PIL and content is not None:
-        try:
-            w, h, hist = _decode_image_real(content)
-            return w, h, hist, "pillow"
-        except Exception:
-            pass
+    that produced the result (vendored | stub-dims | stub) so downstream
+    queries can MEASURE the stub rate."""
     if content is not None:
         try:
             return _decode_image_vendored(content)
@@ -200,7 +165,7 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
         # integer ms: float rounding differs across engines (Python bankers
         # vs DuckDB half-away) — integer math keeps the oracle exact
         T.StructField("duration_ms", T.LongType()),
-        # ladder rung (soundfile | wave | stub) — the audio twin of the
+        # ladder rung (wave | stub) — the audio twin of the
         # image path's decode_source, so audio stub rates are measurable
         T.StructField("decode_source", T.StringType()),
     ]
@@ -217,20 +182,9 @@ def _decode_audio_stub(content: bytes, target_rate: int) -> tuple[int, int, int]
     return n_samples, target_rate, n_samples * 1000 // target_rate
 
 
-def _decode_audio_real(content: bytes, target_rate: int) -> tuple[int, int, int]:
-    """soundfile decode + sample-count resample to ``target_rate``."""
-    import io
-
-    data, rate = _soundfile.read(io.BytesIO(content))
-    n = len(data)
-    n_out = n * target_rate // rate
-    return n_out, target_rate, n_out * 1000 // target_rate
-
-
 def _decode_audio_wave(content: bytes, target_rate: int) -> tuple[int, int, int]:
     """Stdlib ``wave`` leg: parses RIFF/WAVE PCM headers (frame count +
-    rate are all the features need), so the real-audio path executes
-    where soundfile is absent. Raises for non-WAV payloads."""
+    rate are all the features need). Raises for non-WAV payloads."""
     import io
     import wave
 
@@ -242,13 +196,8 @@ def _decode_audio_wave(content: bytes, target_rate: int) -> tuple[int, int, int]
 
 
 def _decode_audio(content: bytes, target_rate: int) -> tuple[int, int, int, str]:
-    """Decode ladder: soundfile (any format) → stdlib ``wave`` (PCM WAV)
-    → deterministic stub. The 4th element names the rung."""
-    if HAS_SOUNDFILE and content is not None:
-        try:
-            return (*_decode_audio_real(content, target_rate), "soundfile")
-        except Exception:
-            pass
+    """Decode ladder: stdlib ``wave`` (PCM WAV) → deterministic stub.
+    The 4th element names the rung."""
     if content is not None:
         try:
             return (*_decode_audio_wave(content, target_rate), "wave")
@@ -285,23 +234,12 @@ def extract_audio_features(media: DataFrame, target_rate: int = 16000) -> DataFr
 
 
 def _resize_image_one(content: bytes, width: int, height: int) -> bytes:
-    """Pillow path: decode → resize → re-encode PNG. Second leg: the
-    vendored stdlib PNG codec (nearest-neighbor resample → filter-0
-    encode) so PNG payloads resize for real in CI. Last resort: a
-    deterministic payload (target dims + content sha1) so batch shape,
+    """Vendored stdlib codecs: decode a PNG or BMP → nearest-neighbour
+    resample → filter-0 PNG encode. Any other payload gets a
+    deterministic stand-in (target dims + content sha1) so batch shape,
     binary output schema, and downstream writes are exercised for real."""
     import hashlib
 
-    if HAS_PIL and content is not None:
-        try:
-            import io
-
-            with _PILImage.open(io.BytesIO(content)) as im:
-                out = io.BytesIO()
-                im.resize((width, height)).save(out, format="PNG")
-                return out.getvalue()
-        except Exception:
-            pass
     if content is not None:
         try:
             from udata_datalake_service_spark.llm import png as _png
@@ -323,8 +261,8 @@ def _resize_image_one(content: bytes, width: int, height: int) -> bytes:
 
 def resize_image(media: DataFrame, width: int, height: int) -> DataFrame:
     """``mapInPandas`` binary→binary transform (resize kernel): real
-    Pillow resize when installed and decodable, deterministic fake
-    otherwise."""
+    nearest-neighbour resize of PNG/BMP payloads, deterministic stand-in
+    payload otherwise."""
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
@@ -351,11 +289,6 @@ def resize_image(media: DataFrame, width: int, height: int) -> DataFrame:
     return media.filter(F.col("kind") == "image").select("media_id", "content").mapInPandas(
         batches, out_schema
     )
-
-
-# kept name: the kernel falls back to the deterministic stub payload when
-# Pillow is absent, which is what earlier callers relied on
-resize_image_stub = resize_image
 
 
 def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:

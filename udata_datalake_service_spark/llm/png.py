@@ -1,19 +1,16 @@
 """Minimal from-scratch PNG codec (stdlib only: zlib + struct).
 
-Purpose: the multimodal kernels (``llm/multimodal.py``) import-gate
-Pillow, which does not ship in the CI container — so the "real decode"
-leg was dead code until deployment. This module implements enough of the
-PNG spec (RFC 2083 / W3C PNG) that the real leg executes in CI: IHDR
-parsing, IDAT inflate, all five scanline filters (None/Sub/Up/Average/
+Purpose: the real-decode rung of the multimodal kernels
+(``llm/multimodal.py``). This module implements enough of the PNG spec
+(RFC 2083 / W3C PNG) for that rung: IHDR parsing, IDAT inflate, all five scanline filters (None/Sub/Up/Average/
 Paeth), color types 0/2/3/4/6 at bit depth 8, PLTE palettes, and a
 filter-0 encoder for the resize path. Interlaced (Adam7) images and
 non-8-bit depths are rejected — callers fall back to the deterministic
 stub exactly as they do for undecodable payloads.
 
-This is a verifier-grade decoder, not a performance path: production
-deployments install Pillow and never reach it. It exists so schema,
-batching, and feature arithmetic are exercised against REAL pixels in
-CI, not only the stub's byte arithmetic.
+This is a verifier-grade decoder, not a performance path. It exists so
+schema, batching, and feature arithmetic run against REAL pixels, not
+only the stub's byte arithmetic.
 """
 
 from __future__ import annotations
@@ -186,9 +183,8 @@ def encode_png(width: int, height: int, channels: int, pixels: bytes) -> bytes:
 def resize_nearest(
     pixels: bytes, width: int, height: int, channels: int, new_w: int, new_h: int
 ) -> bytes:
-    """Nearest-neighbor resample (the verifier-grade stand-in for
-    Pillow's default bicubic — dimensions and schema are what the
-    pipeline contract checks)."""
+    """Nearest-neighbor resample (verifier-grade: dimensions and schema
+    are what the pipeline contract checks)."""
     out = bytearray(new_w * new_h * channels)
     for y in range(new_h):
         sy = y * height // new_h

@@ -1,4 +1,4 @@
-"""S4 — Excel readers (xlsx and xls, each with a stdlib fallback).
+"""S4 — Excel readers (xlsx, xls and ods), all on the stdlib.
 
 Reference: utils/reader.py:31-41,60-66 iterates ``openpyxl`` /
 ``xlrd`` rows on ``sheet_name``, skipping ``header_row_idx`` rows; the
@@ -7,12 +7,13 @@ driver-side read → ``spark.createDataFrame`` is the honest mapping — the
 parallel path at scale is converting the workbook to CSV/parquet once and
 scanning that.
 
-Both libraries are optional. For ``.xlsx`` there is a dependency-free
-fallback: the format is a zip of XML parts, and the subset the open-data
-pipeline needs (shared strings, inline strings, numbers, booleans, sheet
-selection by name) parses fine with stdlib ``zipfile`` + ElementTree.
-``.xls`` (binary BIFF8) prefers xlrd when installed and otherwise uses the
-stdlib OLE2+BIFF parser in ``sources/biff.py``.
+Each format has one reader. ``.xlsx`` is a zip of XML parts, and the
+subset the open-data pipeline needs (shared strings, inline strings,
+numbers, booleans, sheet selection by name) parses with stdlib
+``zipfile`` + ElementTree here. ``.xls`` (binary BIFF8) goes to the OLE2+
+BIFF parser in ``sources/biff.py`` and ``.ods`` to
+``sources/ods_reader.py``. An xlsx/xls date cell comes back as its
+serial number, the same on every machine.
 """
 
 from __future__ import annotations
@@ -23,22 +24,6 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 
-try:  # pragma: no cover - exercised only where openpyxl is installed
-    import openpyxl  # type: ignore
-
-    HAS_OPENPYXL = True
-except ImportError:
-    openpyxl = None
-    HAS_OPENPYXL = False
-
-try:  # pragma: no cover - exercised only where xlrd is installed
-    import xlrd  # type: ignore
-
-    HAS_XLRD = True
-except ImportError:
-    xlrd = None
-    HAS_XLRD = False
-
 
 _XLSX_NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -47,7 +32,10 @@ _CELL_COL_RE = re.compile(r"([A-Z]+)\d+$")
 
 def _col_index(cell_ref: str) -> int:
     """'C7' → 2 (zero-based column)."""
-    letters = _CELL_COL_RE.match(cell_ref).group(1)
+    m = _CELL_COL_RE.match(cell_ref)
+    if m is None:
+        raise ValueError(f"malformed cell reference {cell_ref!r}")
+    letters = m.group(1)
     n = 0
     for ch in letters:
         n = n * 26 + (ord(ch) - 64)
@@ -166,33 +154,17 @@ def _iter_excel_rows_impl(
 ):
     lower = f".{fmt}" if fmt else path.lower()
     if lower.endswith(".xlsx"):
-        if HAS_OPENPYXL:
-            wb = openpyxl.load_workbook(path, read_only=True, data_only=True)
-            ws = wb[sheet_name] if sheet_name else wb.active
-            rows = (list(row) for row in ws.iter_rows(values_only=True))
-        else:
-            rows = iter_xlsx_rows_stdlib(path, sheet_name=sheet_name)
-        for i, row in enumerate(rows):
+        for i, row in enumerate(iter_xlsx_rows_stdlib(path, sheet_name=sheet_name)):
             if i < header_row_idx:
                 continue
             yield list(row)
     elif lower.endswith(".xls"):
-        if HAS_XLRD:
-            book = xlrd.open_workbook(path)
-            sheet = (
-                book.sheet_by_name(sheet_name) if sheet_name else book.sheet_by_index(0)
-            )
-            for i in range(header_row_idx, sheet.nrows):
-                yield sheet.row_values(i)
-        else:
-            from udata_datalake_service_spark.sources.biff import (
-                iter_xls_rows_stdlib,
-            )
+        from udata_datalake_service_spark.sources.biff import iter_xls_rows_stdlib
 
-            for i, row in enumerate(iter_xls_rows_stdlib(path, sheet_name=sheet_name)):
-                if i < header_row_idx:
-                    continue
-                yield list(row)
+        for i, row in enumerate(iter_xls_rows_stdlib(path, sheet_name=sheet_name)):
+            if i < header_row_idx:
+                continue
+            yield list(row)
     elif lower.endswith(".ods"):
         from udata_datalake_service_spark.sources.ods_reader import (
             iter_ods_rows_stdlib,
@@ -214,11 +186,19 @@ def read_excel(
     fmt: str | None = None,
 ) -> DataFrame:
     """Workbook → all-strings DataFrame (header = first yielded row), ready
-    for the same infer_types/apply_types pipeline the CSV path uses."""
+    for the same infer_types/apply_types pipeline the CSV path uses.
+    A sheet with no row at or after ``header_row_idx`` has no header and
+    raises ValueError."""
     rows = iter_excel_rows(
         path, sheet_name=sheet_name, header_row_idx=header_row_idx, fmt=fmt
     )
-    header = [str(c) if c is not None else f"col_{i}" for i, c in enumerate(next(rows))]
+    first = next(rows, None)
+    if first is None:
+        raise ValueError(
+            f"no header row in {path!r} (sheet {sheet_name!r}): "
+            f"no row at or after header_row_idx={header_row_idx}"
+        )
+    header = [str(c) if c is not None else f"col_{i}" for i, c in enumerate(first)]
     w = len(header)
     data = [
         tuple(None if c is None else str(c) for c in (list(row) + [None] * w)[:w])

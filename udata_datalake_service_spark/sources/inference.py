@@ -365,11 +365,7 @@ def inspect_excel(
     """Workbook → same inference pipeline as CSV (the reference routes
     xls/xlsx through csv_detective with an ``engine`` field —
     analysis/csv.py:152-154, utils/reader.py:31-41)."""
-    from udata_datalake_service_spark.sources.excel_reader import (
-        HAS_OPENPYXL,
-        HAS_XLRD,
-        read_excel,
-    )
+    from udata_datalake_service_spark.sources.excel_reader import read_excel
 
     low = path.lower()
     fmt = fmt or ("xls" if low.endswith(".xls") else "ods" if low.endswith(".ods") else "xlsx")
@@ -391,13 +387,7 @@ def inspect_excel(
             }
             for c in raw.columns
         },
-        engine=(
-            ("xlrd" if HAS_XLRD else "stdlib-biff")
-            if fmt == "xls"
-            else "stdlib-ods"
-            if fmt == "ods"
-            else ("openpyxl" if HAS_OPENPYXL else "stdlib-xlsx")
-        ),
+        engine={"xls": "stdlib-biff", "ods": "stdlib-ods"}.get(fmt, "stdlib-xlsx"),
         sheet_name=sheet_name,
     )
     return typed, insp
