@@ -618,5 +618,21 @@ def test_excel_reader_fails_typed_on_corrupt_downloads(tmp_path):
             )
         with _pytest.raises(ValueError, match=f"malformed cell reference '{re.escape(ref)}'"):
             list(iter_excel_rows(str(p)))
+    # well-formed zip, structurally broken workbook: a shared-string cell
+    # with no <v> index, and a workbook.xml without <sheets>
+    for name, wb_xml, sheet_xml, match in (
+        ("novalue", _WB_XML, _SHEET2_XML.replace(
+            '<c r="A1" t="inlineStr"><is><t>autre</t></is></c>', '<c r="A1" t="s"/>'
+        ), "shared-string cell 'A1' has no <v> index"),
+        ("nosheets", "<workbook xmlns=\"http://schemas.openxmlformats.org/"
+         "spreadsheetml/2006/main\"/>", _SHEET2_XML, "no <sheets> element"),
+    ):
+        p = tmp_path / f"{name}.xlsx"
+        with _zf.ZipFile(p, "w") as z:
+            z.writestr("xl/workbook.xml", wb_xml)
+            z.writestr("xl/_rels/workbook.xml.rels", _RELS_XML)
+            z.writestr("xl/worksheets/sheet1.xml", sheet_xml)
+        with _pytest.raises(ValueError, match=match):
+            list(iter_excel_rows(str(p)))
     with _pytest.raises(FileNotFoundError):
         list(iter_excel_rows(str(tmp_path / "missing.xlsx")))

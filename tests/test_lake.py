@@ -584,6 +584,94 @@ def test_compact_and_exactly_once_preserve_partition_layout(spark, tmp_path):
     assert lake.read_app_table("evts").count() == 44
 
 
+def test_compact_table_reports_committed_files_on_partitioned_table(spark, tmp_path):
+    """Coalesce bounds the write tasks, not the files: one task writes a
+    file per partition dir it holds rows for, so ``files_after`` is the
+    committed version's data-file count, not the coalesce target."""
+    from pathlib import Path
+
+    lake = Lake(spark, str(tmp_path / "lake"))
+    df = spark.range(200).select(
+        F.col("id"),
+        F.concat(F.lit("2024-01-0"), (F.col("id") % 5 + 1).cast("string")).alias("day"),
+    )
+    lake.write_app_table(df.repartition(8), "evts", partition_by=["day"])
+    stats = lake.compact_table("evts", target_bytes=10**9, app_table=True)
+    cur = lake._current_dir(Path(lake.app_table_path("evts")))
+    assert len(lake._data_files(cur)) == 5
+    assert stats["files_before"] > 5
+    assert stats["files_after"] == 5
+    assert lake.read_app_table("evts").count() == 200
+
+
+def test_rewrite_keeps_partition_layout_so_later_appends_read_back(spark, tmp_path):
+    """A rewrite with no layout (``purge_checks``) used to flatten a
+    ``check_date``-partitioned table; the next partitioned append then
+    landed in partition dirs next to root-level files, and a read saw
+    only the appended rows."""
+    from udata_datalake_service_spark import cli
+
+    lake = Lake(spark, str(tmp_path / "lake"))
+    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    rows = [
+        (i, f"r{i}", now - datetime.timedelta(days=i % 100)) for i in range(200)
+    ]
+    checks = spark.createDataFrame(
+        rows, "id long, resource_id string, created_at timestamp"
+    ).withColumn("check_date", F.to_date("created_at"))
+    lake.write_app_table(checks, "checks", partition_by=["check_date"])
+    purged = cli.purge_checks(spark, lake, retention_days=60)
+    kept = 200 - purged
+    assert 0 < purged < 200
+    new = spark.createDataFrame(
+        [(1000 + i, f"n{i}", now) for i in range(3)],
+        "id long, resource_id string, created_at timestamp",
+    ).withColumn("check_date", F.to_date("created_at"))
+    lake.append_app_table(new, "checks", partition_by=["check_date"])
+    assert lake.read_app_table("checks").count() == kept + 3
+
+
+def test_append_partition_by_must_match_the_table_layout(spark, tmp_path):
+    import pytest as _pytest
+
+    lake = Lake(spark, str(tmp_path / "lake"))
+    df = spark.createDataFrame([(1, "2024-01-01")], "id long, day string")
+    lake.write_app_table(df, "parted", partition_by=["day"])
+    lake.write_app_table(df, "flat")
+    with _pytest.raises(ValueError, match="partition layout"):
+        lake.append_app_table(df, "parted")
+    with _pytest.raises(ValueError, match="partition layout"):
+        lake.append_app_table(df, "flat", partition_by=["day"])
+    assert lake.read_app_table("parted").count() == 1
+    assert lake.read_app_table("flat").count() == 1
+
+
+def test_lake_writes_leave_no_success_marker(spark, tmp_path):
+    """The MANIFEST is the commit point: no write path leaves Spark's
+    ``_SUCCESS`` marker (or its checksum) in a table directory."""
+    lake = Lake(spark, str(tmp_path / "lake"))
+    df = spark.createDataFrame([(1, "2024-01-01")], "id long, day string")
+    lake.write_app_table(df, "parted", partition_by=["day"])
+    lake.append_app_table(df, "parted", partition_by=["day"])
+    lake.write_app_table(df, "flat")
+    lake.append_app_table(df, "flat")
+    lake.rewrite_app_table(lake.read_app_table("flat"), "flat")
+    lake.append_app_table_exactly_once(df, "once", "b0")
+    lake.append_app_table_exactly_once(df, "once", "b1")
+    lake.append_log_table_exactly_once(df, "log", "b0")
+    lake.compact_log_table("log")
+    lake.write_table(df, "converted")
+    lake.compact_table("parted", app_table=True)
+    markers = [
+        p for p in (tmp_path / "lake").rglob("*") if "_SUCCESS" in p.name
+    ]
+    assert markers == []
+    assert lake.read_app_table("parted").count() == 2
+    assert lake.read_app_table("flat").count() == 2
+    assert lake.read_app_table("once").count() == 2
+    assert lake.read_log_table("log").count() == 1
+
+
 def test_write_bucketed_table_refuses_versioned_target(spark, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
@@ -797,6 +885,25 @@ class TestCommitProtocolAcrossBackends:
         lake.write_table(spark.createDataFrame([(2,)], "id long"), "t")
         assert [r["id"] for r in lake.read_table("t").collect()] == [2]
         # no stale-claim leftovers either (enumerated through the store)
+        assert not lake.store.claim_leftovers(base)
+
+    def test_stale_empty_commit_lock_is_reclaimed(self, spark, tmp_path, proto_store):
+        """The lock is not fsynced, so a crash can leave it empty. A live
+        lock is never empty (``try_create_lock``), so a stale empty lock
+        is an orphan and is broken within the timeout, like one that
+        still holds its token."""
+        import time as _time
+        from pathlib import Path
+
+        lake = Lake(spark, str(tmp_path / "lakelock"), store=proto_store)
+        lake.write_table(spark.createDataFrame([(1,)], "id long"), "t")
+        base = Path(lake.table_path("t"))
+        assert lake.store.try_create_exclusive(base / "_COMMIT_LOCK", b"")
+        _time.sleep(2.2)  # whole-second Last-Modified on the S3 backends
+        with lake._commit_lock(base, timeout=10.0, stale_after=1.0):
+            pass
+        lake.write_table(spark.createDataFrame([(2,)], "id long"), "t")
+        assert [r["id"] for r in lake.read_table("t").collect()] == [2]
         assert not lake.store.claim_leftovers(base)
 
     def test_live_commit_lock_is_not_stolen(self, spark, tmp_path, proto_store):
@@ -1794,13 +1901,17 @@ class TestSchemaMemo:
         assert n >= 1 and back.columns == ["id", "v", "w"]
         lake.read_app_table("t")  # memoize the new version
 
-        # a removed data file
+        # a removed data file: its survivor's Spark footer vouches for
+        # the memo, so the read infers nothing and has the fresh schema
+        # (test_unvouched_changes_re_infer removes one whose survivor
+        # carries no footer)
         cur = lake._current_dir(base)
         parts = sorted(cur.glob("part-*.parquet"))
         assert len(parts) == 2
         parts[0].unlink()
         back, n = count_jobs(lambda: lake.read_app_table("t"))
-        assert n >= 1 and back.count() == 1
+        assert n == 0 and back.count() == 1
+        assert back.schema == self._fresh_merge_read(spark, lake, "t").schema
         lake.read_app_table("t")
 
         # a same-name file of a different size (and schema); its Hadoop
@@ -1842,3 +1953,90 @@ class TestSchemaMemo:
             lake.rewrite_app_table(spark.createDataFrame([(i,)], "n long"), "t")
             assert lake.read_app_table("t").collect()[0]["n"] == i
         assert sorted(p.name for p in lake._schema_memo) == ["other", "t"]
+
+    def _parted(self, spark, lake, days=3):
+        df = spark.createDataFrame(
+            [(i, f"v{i}", datetime.date(2024, 1, 1 + i % days)) for i in range(9)],
+            "id long, v string, check_date date",
+        )
+        lake.write_app_table(df, "t", partition_by=["check_date"])
+        lake.read_app_table("t")  # memoize
+
+    def test_own_rewrite_and_append_keep_the_memo(
+        self, spark, tmp_path, memo_store, count_jobs
+    ):
+        """Files the lake's own writers add carry Spark's footer schema;
+        when it equals the memo's data columns and the partition dirs are
+        unchanged, the read after a rewrite or an append infers nothing
+        and has the schema a fresh ``mergeSchema`` read infers."""
+        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+        self._parted(spark, lake)
+        lake.rewrite_app_table(
+            lake.read_app_table("t").filter(F.col("id") != 0), "t"
+        )
+        back, n = count_jobs(lambda: lake.read_app_table("t"))
+        assert n == 0
+        assert back.schema == self._fresh_merge_read(spark, lake, "t").schema
+        assert back.count() == 8
+
+        more = spark.createDataFrame(
+            [(20, "w", datetime.date(2024, 1, 2))], "id long, v string, check_date date"
+        )
+        lake.append_app_table(more, "t", partition_by=["check_date"])
+        back, n = count_jobs(lambda: lake.read_app_table("t"))
+        assert n == 0
+        fresh = self._fresh_merge_read(spark, lake, "t")
+        assert back.schema == fresh.schema
+        assert sorted(back.collect()) == sorted(fresh.collect())
+
+    def test_unvouched_changes_re_infer(
+        self, spark, tmp_path, memo_store, count_jobs
+    ):
+        """Each change the footers cannot vouch for re-infers: a file
+        without Spark's footer (pyarrow-written), a differing footer
+        schema, a new partition dir, and a removed file whose survivors
+        are not all vouched for."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pathlib import Path
+
+        def read_back():
+            back, n = count_jobs(lambda: lake.read_app_table("t"))
+            assert n >= 1
+            assert back.schema == self._fresh_merge_read(spark, lake, "t").schema
+            return back
+
+        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+        self._parted(spark, lake)
+        cur = lake._current_dir(Path(lake.app_table_path("t")))
+        day1 = cur / "check_date=2024-01-01"
+
+        # a pyarrow-written file with the same columns
+        pq.write_table(pa.table({"id": [30], "v": ["p"]}), day1 / "part-pyarrow.parquet")
+        assert read_back().count() == 10
+
+        # a differing footer schema (a widening append)
+        wider = spark.createDataFrame(
+            [(40, "x", 1.5, datetime.date(2024, 1, 2))],
+            "id long, v string, score double, check_date date",
+        )
+        lake.append_app_table(
+            wider, "t", partition_by=["check_date"], allow_schema_evolution=True
+        )
+        assert "score" in read_back().columns
+
+        # a new partition dir, same footer schema
+        newday = spark.createDataFrame(
+            [(50, "y", 2.5, datetime.date(2024, 2, 1))],
+            "id long, v string, score double, check_date date",
+        )
+        lake.append_app_table(newday, "t", partition_by=["check_date"])
+        assert read_back().count() == 12
+
+        # a removed Spark file: the pyarrow survivor carries no footer
+        spark_files = sorted(day1.glob("part-0*.parquet"))
+        assert spark_files
+        for f in spark_files:
+            f.unlink()
+        back = read_back()
+        assert 30 in {r["id"] for r in back.collect()}

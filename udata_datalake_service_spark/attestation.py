@@ -38,7 +38,10 @@ NEW_OR_CHANGED: frozenset[str] = frozenset({
     # round-15 changes (populated as queries are added/edited this round)
     "tx_text_metrics",  # STOPWORDS guard raises instead of asserting
     # select_batch.EXCLUDED_PATTERNS now holds the reference pair the
-    # service already used: one more NOT LIKE in the executed plan
+    # service already used: one more NOT LIKE in the executed plan; and
+    # select_batch runs in one pass: one catalog scan left-joined to
+    # checks, a CASE tier rank and one TakeOrderedAndProject, instead of
+    # three sampled tier scans, a union and a second top-k
     "j3_u7_batch_select_claim",
     # the persisted shingle frame carries the xxhash64 index key, so the
     # exact side's three index reads scan the cache instead of re-hashing

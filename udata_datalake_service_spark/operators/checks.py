@@ -46,8 +46,12 @@ def aggregate_for_date(checks: DataFrame, group_by: str, day) -> DataFrame:
     """A1 — `/api/checks/aggregate?group_by=<expr>&created_at=<date>`
     (db/check.py:87-98). ``group_by`` is an *expression* (the reference
     interpolates it into SQL; e.g. ``headers['content-type']``). The
-    ``to_date(created_at) == day`` predicate prunes to one date partition
-    when checks is date-partitioned.
+    ``to_date(created_at) == day`` predicate does not prune partitions: on
+    a ``check_date``-partitioned table the executed plan shows
+    ``PartitionFilters: []``, so every date is scanned and filtered row by
+    row. Pruning would need a ``check_date`` predicate, which rests on the
+    writer's rule ``check_date = to_date(created_at)``; this module does
+    not own that rule, so it does not add one.
     """
     day_rows = checks.filter(F.to_date("created_at") == F.lit(day))
     return top_k_groups(day_rows, group_by, k=20)

@@ -9,10 +9,14 @@ each ``ORDER BY random() LIMIT BATCH_SIZE``, stopping once the batch is
 full, all behind the EXCLUDED_PATTERNS clause (db/resource.py:116-129).
 The temp-table + FOR UPDATE claim (:9-31) serializes competing crawlers.
 
-Spark form: the three tiers are disjoint filtered frames over one catalog
-scan, sampled with the deterministic md5 order (reproducible; executed as
-TakeOrderedAndProject so no full sort), unioned and limited. The claim
-step is a driver-side status update — Spark's single-writer driver replaces
+Spark form, one pass: every tier samples by the same key,
+``md5(seed|resource_id)``, so filling priority first, then never-checked,
+then outdated is exactly the top ``batch_size`` rows ordered by
+(tier rank, sample key). One scan of the live catalog, left-joined to
+``checks(id, next_check_at)`` for the outdated tier, gets a ``CASE`` tier
+rank (NULL = in no tier); one ``orderBy(rank, key).limit(n)`` executes as
+a single TakeOrderedAndProject (no full sort). The claim step is a
+driver-side status update — Spark's single-writer driver replaces
 Postgres' pessimistic lock (SURVEY §4.1).
 """
 
@@ -20,8 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from udata_datalake_service_spark.operators.core import deterministic_sample, union_tiers
 
 BATCH_SIZE = 40
 EXCLUDED_PATTERNS = ("http%geo.data.gouv.fr%", "%?format=shp%")  # config_default.toml:24-28
@@ -48,42 +50,43 @@ def select_batch(
 ) -> DataFrame:
     """Returns up to ``batch_size`` catalog rows to check, tier-tagged.
 
-    Tiers are made disjoint by their predicates; the tie-broken sample keys
-    make the whole selection reproducible for a given seed (the reference's
-    ORDER BY random() is deliberately replaced — see deterministic_sample).
+    The tiers are disjoint by their predicates, and the sample key breaks
+    ties, so the selection is reproducible for a given seed (the
+    reference's ORDER BY random() is deliberately replaced — see
+    ``operators.core.deterministic_sample``). ``checks.id`` is the checks
+    key: the left join adds no rows.
     """
     now = now if now is not None else F.current_timestamp()
     live = catalog.filter(excluded_clause(excluded_patterns))
-
-    t1 = live.filter(F.col("priority")).withColumn("tier", F.lit("priority"))
-    t2 = (
-        live.filter(~F.col("priority") & F.col("last_check").isNull())
-        .withColumn("tier", F.lit("never_checked"))
-    )
     # outdated tier: J3 — join on last_check to read next_check_at
     chk = checks.select(F.col("id").alias("__chk_id"), "next_check_at")
-    t3 = (
-        live.filter(~F.col("priority") & F.col("last_check").isNotNull())
-        .join(chk, F.col("last_check") == F.col("__chk_id"), "inner")
-        .filter(F.col("next_check_at").isNull() | (F.col("next_check_at") <= now))
-        .drop("__chk_id", "next_check_at")
-        .withColumn("tier", F.lit("outdated"))
+    prio, nca = F.col("priority"), F.col("next_check_at")
+    rank = (
+        F.when(prio, 0)
+        .when(~prio & F.col("last_check").isNull(), 1)
+        # an outdated row needs a MATCHING check; a NULL priority is in no tier
+        .when(
+            ~prio & F.col("__chk_id").isNotNull() & (nca.isNull() | (nca <= now)),
+            2,
+        )
     )
-
-    sampled = [
-        deterministic_sample(t, batch_size, salt_cols=["resource_id"], seed=seed)
-        .withColumn("__tier_rank", F.lit(rank))
-        for rank, t in enumerate((t1, t2, t3))
-    ]
-    # the final cut fills priority first, then never-checked, then outdated —
-    # the reference's tier fill order (crawl/select_batch.py:56-89) — with
+    r = F.col("__tier_rank")
+    # the reference's tier fill order (crawl/select_batch.py:56-89), with
     # the sample key as tie-break so the batch is fully deterministic
     rk = F.md5(F.concat_ws("|", F.lit(seed), F.col("resource_id").cast("string")))
     return (
-        union_tiers(*sampled)
-        .orderBy(F.asc("__tier_rank"), rk.asc())
+        live.join(chk, F.col("last_check") == F.col("__chk_id"), "left")
+        .withColumn("__tier_rank", rank)
+        .filter(r.isNotNull())
+        .orderBy(r.asc(), rk.asc())
         .limit(batch_size)
-        .drop("__tier_rank")
+        .select(
+            *live.columns,
+            F.when(r == 0, "priority")
+            .when(r == 1, "never_checked")
+            .otherwise("outdated")
+            .alias("tier"),
+        )
     )
 
 

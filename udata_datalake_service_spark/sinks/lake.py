@@ -31,11 +31,46 @@ from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from udata_datalake_service_spark.schemas import TABLES_INDEX_SCHEMA
 from udata_datalake_service_spark.sinks.store import PosixStore
 
 _UNSET = object()
+# the footer key under which Spark's parquet writer records the written
+# frame's schema (Spark's ParquetReadSupport.SPARK_METADATA_KEY)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the schema a
+    file-source read reports for data written as ``dt``."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The data schema Spark wrote into a parquet file's footer, as a
+    file-source read reports it; None for a file Spark did not write
+    (pyarrow, say) or cannot be read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_METADATA)
+    except (OSError, pa.ArrowException):
+        return None
+    if raw is None:
+        return None
+    return _as_nullable(StructType.fromJson(json.loads(raw)))
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -63,7 +98,16 @@ class Lake:
     rename into place inside the lock; read-modify-writes can pass the
     `table_version` snapshot for compare-and-swap semantics (losers get
     `ConcurrentWriteError` and retry) — the optimistic-concurrency
-    protocol Delta/Iceberg implement on their commit logs.
+    protocol Delta/Iceberg implement on their commit logs. The lock file
+    is not fsynced: it only coordinates live processes, and a crash that
+    empties it leaves an orphan the stale takeover breaks. The MANIFEST
+    replace and the exactly-once and log commit markers stay fsynced.
+
+    Write path: every parquet write goes through `_write_parquet`, which
+    turns off Spark's ``_SUCCESS`` marker. The MANIFEST is the commit
+    point and readers skip ``_`` names, so the marker was one more file
+    per write (one more PUT on an object store), rewritten inside the
+    committed version by every in-place append.
 
     Read path: a parquet read without a schema makes Spark infer one, and
     inference is an eager, footer-reading Spark job. Every
@@ -71,12 +115,20 @@ class Lake:
     append schema check, compaction, exactly-once appends) goes through
     `_read_parquet_dir`, which remembers, per table base path, the schema
     Spark inferred and the data files it was inferred from, each as
-    (path, size, mtime_ns). When a later read walks the same files it
-    passes that schema to the reader, and keeps the result only if the
-    DataFrame's ``inputFiles()`` is exactly that file set, so an append
-    landing between the walk and Spark's own listing cannot be read
-    under a stale schema. Any other read infers as before and replaces
-    the entry: one entry per table, however many versions it has had."""
+    (path, size, mtime_ns). A later read reuses that schema when it walks
+    the same files, or, for a ``mergeSchema`` read, when the footers
+    vouch for the change: the partition dirs are the same, and every
+    file the memo did not see (every file, once one of the memo's files
+    is gone) carries Spark's row-metadata footer schema equal to the
+    memo's data columns, so inference would return the memo. That keeps
+    the memo across the lake's own appends and rewrites, and a
+    concurrent appender's, while a pyarrow-written file, a new partition
+    value or a different footer schema still re-infers. A reused schema
+    is kept only if the DataFrame's ``inputFiles()`` is exactly the
+    walked file set, so an append landing between the walk and Spark's
+    own listing cannot be read under a stale schema. Any other read
+    infers as before and replaces the entry: one entry per table,
+    however many versions it has had."""
 
     def __init__(self, spark: SparkSession, root: str, store=None):
         self.spark = spark
@@ -121,8 +173,12 @@ class Lake:
     @contextmanager
     def _commit_lock(self, base: Path, timeout: float = 30.0, stale_after: float = 120.0):
         """Serialize manifest flips per table with an exclusive-create
-        lock file (POSIX: O_EXCL; object store: conditional PUT
-        If-None-Match — ``store.try_create_exclusive`` either way).
+        lock file (POSIX: a hard link, which fails if the name exists;
+        object store: conditional PUT If-None-Match —
+        ``store.try_create_lock`` either way). The lock is not fsynced: it
+        only coordinates live processes, and a crash that loses its
+        content leaves an empty lock, which the stale takeover breaks
+        like any orphan.
 
         Readers never take it (they see old-or-new via the manifest);
         writers hold it only across the CAS check + rename + manifest
@@ -134,7 +190,7 @@ class Lake:
         token = uuid.uuid4().hex
         deadline = time.monotonic() + timeout
         while True:
-            if st.try_create_exclusive(lock, token.encode()):
+            if st.try_create_lock(lock, token.encode()):
                 break
             if time.monotonic() > deadline:
                 raise TimeoutError(f"commit lock busy: {lock}")
@@ -168,11 +224,13 @@ class Lake:
                 except (FileNotFoundError, OSError):
                     time.sleep(0.02)
                     continue
+                # an empty token is an orphan too: a live lock is never
+                # seen empty (try_create_lock), a crashed one can be
                 try:
                     claim_token = st.read_text(claim)
                 except OSError:
-                    claim_token = ""
-                if claim_token and claim_token == stale_token:
+                    claim_token = None
+                if claim_token == stale_token:
                     st.delete(claim)  # orphan broken
                     continue
                 # we stole a LIVE lock: give it back (copy-if-absent),
@@ -332,13 +390,12 @@ class Lake:
         (from `table_version`) for optimistic-concurrency semantics.
         ``ledger`` (a committed-batch-id list) is written into the new
         version as ``_batches.json`` so the exactly-once append protocol
-        survives a rewrite that preserves the appended data (compaction)."""
+        survives a rewrite that preserves the appended data (compaction).
+        Returns the number of data files committed."""
         ver = self._new_version()
         staging = base / f"_staging-{ver}"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(staging))
+        self._write_parquet(df, staging, "overwrite", partition_by)
+        n_files = len(self._data_files(staging))
         if ledger is not None:
             import json as _json
 
@@ -350,6 +407,23 @@ class Lake:
             finally:
                 os.close(fd)
         self._commit_version(base, ver, expect=expect, staging=staging)
+        return n_files
+
+    @staticmethod
+    def _write_parquet(
+        df: DataFrame, path: Path, mode: str, partition_by: list[str] | None = None
+    ) -> None:
+        """Every lake parquet write. Spark's ``_SUCCESS`` marker is not
+        written: the MANIFEST is the commit point and readers skip ``_``
+        names, so the marker was one more file per write (an extra PUT on
+        an object store) that an in-place append rewrote inside the
+        committed version."""
+        w = df.write.mode(mode).option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        )
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(str(path))
 
     def table_version(self, name: str, app: bool = False) -> str | None:
         """The manifest's current version string (None = no versioned
@@ -427,9 +501,13 @@ class Lake:
             return {unquote(urlsplit(u).path) for u in df.inputFiles()}
 
         memo = self._schema_memo.get(base)
-        if memo is not None and memo[0] == (merge_schema, files):
+        if memo is not None and memo[0][0] == merge_schema and (
+            memo[0][1] == files
+            or (merge_schema and self._footers_vouch(base, memo, files))
+        ):
             df = self.spark.read.schema(memo[1]).parquet(str(cur))
             if input_paths(df) == paths:
+                self._schema_memo[base] = ((merge_schema, files), memo[1])
                 return df
         reader = self.spark.read
         if merge_schema:
@@ -440,6 +518,33 @@ class Lake:
         else:
             self._schema_memo.pop(base, None)
         return df
+
+    @staticmethod
+    def _part_dirs(base: Path, files: frozenset) -> frozenset:
+        """The directories holding ``files``, as path segments relative
+        to their version dir under ``base``: the partition values Spark's
+        discovery sees."""
+        top = os.path.abspath(base)
+        out = set()
+        for p, _, _ in files:
+            segs = Path(os.path.relpath(os.path.dirname(p), top)).parts
+            out.add(segs[1:] if segs and segs[0].startswith("v-") else segs)
+        return frozenset(out)
+
+    def _footers_vouch(self, base: Path, memo: tuple, files: frozenset) -> bool:
+        """Whether a ``mergeSchema`` read of ``files`` infers exactly the
+        memoized schema, though the files differ from the memo's: the
+        partition dirs are the same, and every file the memo did not see
+        (every file, once one of the memo's files is gone) carries
+        Spark's row-metadata footer equal to the memo's data columns."""
+        (_, memo_files), schema = memo
+        parts = self._part_dirs(base, files)
+        if not files or parts != self._part_dirs(base, memo_files):
+            return False
+        pcols = {seg.split("=", 1)[0] for d in parts for seg in d if "=" in seg}
+        data_cols = StructType([f for f in schema.fields if f.name not in pcols])
+        unseen = files if memo_files - files else files - memo_files
+        return all(_footer_schema(p) == data_cols for p, _, _ in unseen)
 
     # ---------------------------------------------------------- tables ----
     def table_path(self, name: str) -> str:
@@ -768,6 +873,15 @@ class Lake:
             self._replace_write(df, base, partition_by=partition_by)
             return
         cur = self.store.materialize_dir(cur)
+        # files partitioned differently from the table's layout would not
+        # read back: Spark's discovery sees only one layout's files. A
+        # table with no data file yet (an empty write) has no layout.
+        layout = self._detect_partition_cols(cur)
+        if list(partition_by or []) != layout and self._data_files(cur):
+            raise ValueError(
+                f"append partition_by={partition_by!r} disagrees with the "
+                f"table's partition layout {layout!r}: {base}"
+            )
         self._check_append_schema(df, cur, allow_schema_evolution)
         # versioned or legacy-plain: add files in place — Spark stages the
         # new files under _temporary, so a torn append is never visible
@@ -787,10 +901,7 @@ class Lake:
                 RuntimeWarning,
                 stacklevel=3,
             )
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(cur))
+        self._write_parquet(df, cur, "append", partition_by)
         self.store.upload_dir_delta(cur)
 
     # ------------------------------------------------------- app tables ----
@@ -834,7 +945,8 @@ class Lake:
         """Read-modify-write of an app table. ``df`` may (and usually does)
         read from the table's current version; that version is untouched
         while the new one is written, then the MANIFEST pointer flips
-        atomically — readers see old-or-new, never a half-swapped dir.
+        atomically — readers see old-or-new, never a half-swapped dir. The
+        new version keeps the current one's partition layout.
 
         Concurrent read-modify-writers silently clobber each other (last
         manifest flip wins); pass ``expected_version`` (the
@@ -860,11 +972,19 @@ class Lake:
         an epoch whose rows survived the rewrite, double-counting it. The
         ledger is read from the ``expected_version`` snapshot, so the CAS
         guarantees ledger and data were read from the same version."""
+        base = Path(self.app_table_path(name))
+        # as compaction and exactly-once appends do: a flattened rewrite
+        # would leave the next partitioned append's files unread
+        cur = self._current_dir(base)
+        pcols = (
+            self._detect_partition_cols(self.store.materialize_dir(cur))
+            if cur is not None
+            else []
+        )
         ledger: list[str] | None = None
         if carry_exactly_once_ledger:
             import json as _json
 
-            base = Path(self.app_table_path(name))
             snap = (
                 expected_version
                 if expected_version is not _UNSET
@@ -881,10 +1001,7 @@ class Lake:
                 if (cur / "_batches.json").exists():
                     ledger = _json.loads((cur / "_batches.json").read_text())
         self._replace_write(
-            df,
-            Path(self.app_table_path(name)),
-            expect=expected_version,
-            ledger=ledger,
+            df, base, partition_by=pcols or None, expect=expected_version, ledger=ledger
         )
 
     # --------------------------------------------------- training shards ----
@@ -1011,13 +1128,15 @@ class Lake:
         # compaction was reading raises ConcurrentWriteError instead of
         # being clobbered (in-place appends remain invisible to the CAS —
         # the documented rewrite_app_table hazard)
-        self._replace_write(
+        # coalesce bounds the write tasks, not the files: each task
+        # writes one file per partition dir it holds rows for
+        files_after = self._replace_write(
             df.coalesce(int(n_out)), base, partition_by=pcols or None,
             expect=snapshot, ledger=ledger,
         )
         return {
             "files_before": len(data_files),
-            "files_after": int(n_out),
+            "files_after": files_after,
             "bytes": int(total),
         }
 
@@ -1087,10 +1206,7 @@ class Lake:
         # the partition columns when the table is partitioned so each
         # dir gets coherent files (AQE still splits skewed keys).
         new = new.hint("rebalance", *pcols) if pcols else new.hint("rebalance")
-        w = new.write.mode("overwrite")
-        if pcols:
-            w = w.partitionBy(*pcols)
-        w.parquet(str(staging))
+        self._write_parquet(new, staging, "overwrite", pcols)
         lf = staging / "_batches.json"
         lf.write_text(_json.dumps(ledger + [batch_id]))
         fd = os.open(lf, os.O_RDONLY)
@@ -1186,7 +1302,7 @@ class Lake:
         # producer's shuffle ceiling — a micro-batch cached at 64
         # near-empty partitions was landing as 64 near-empty part files
         # that every read_log_table mergeSchema pass re-paid per epoch.
-        df.hint("rebalance").write.mode("overwrite").parquet(str(bdir))
+        self._write_parquet(df.hint("rebalance"), bdir, "overwrite")
         # O(batch): push only this batch's prefix, not the table dir
         self.store.upload_dir_delta(bdir)
         (cur / "_commits").mkdir(exist_ok=True)
@@ -1381,10 +1497,10 @@ class Lake:
         fold_safe = self._log_safe(fold_id)
         ver = self._new_version()
         staging = base / f"_staging-{ver}"
-        rows.write.mode("overwrite").parquet(str(staging / f"batch={fold_safe}"))
+        self._write_parquet(rows, staging / f"batch={fold_safe}", "overwrite")
         # bootstrap root schema file so an empty-commit read still works
-        rows.limit(0).coalesce(1).write.mode("overwrite").parquet(
-            str(staging / "_schema_tmp")
+        self._write_parquet(
+            rows.limit(0).coalesce(1), staging / "_schema_tmp", "overwrite"
         )
         for p in (staging / "_schema_tmp").glob("*.parquet"):
             os.replace(p, staging / p.name)

@@ -63,6 +63,26 @@ class PosixStore:
             os.close(fd)
         return True
 
+    def try_create_lock(self, path: Path, data: bytes) -> bool:
+        """`try_create_exclusive` without the fsync, for locks: a lock
+        only coordinates live processes, and unlinking a freshly fsynced
+        file costs milliseconds (tens of them on some hosts), paid at
+        every release. The
+        content is written under a private name and hard-linked into
+        place, so a live lock is never seen empty; only a crash can leave
+        an empty one, which the stale takeover treats as an orphan."""
+        path = Path(path)
+        tmp = path.parent / f"_lock-{uuid.uuid4().hex[:8]}.tmp"
+        with open(tmp, "wb") as f:
+            f.write(data)
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            return False
+        finally:
+            os.unlink(tmp)
+        return True
+
     def read_text(self, path: Path) -> str:
         return Path(path).read_text()
 
@@ -341,6 +361,10 @@ class S3ObjectStore(PosixStore):
                 return False
             raise
 
+    def try_create_lock(self, path: Path, data: bytes) -> bool:
+        """A conditional PUT, as for any exclusive create."""
+        return self.try_create_exclusive(path, data)
+
     def read_text(self, path: Path) -> str:
         from botocore.exceptions import ClientError
 
@@ -570,7 +594,7 @@ class S3ObjectStore(PosixStore):
         for src in sorted(p for p in path.rglob("*") if p.is_file()):
             rel = src.relative_to(path).as_posix()
             if rel.startswith(("_", ".")) or "/_" in rel or "/." in rel:
-                continue  # Spark _temporary/_SUCCESS debris stays local
+                continue  # Spark _temporary debris stays local
             if have.get(rel) == src.stat().st_size:
                 continue
             self.c.put_object(

@@ -55,8 +55,11 @@ def iter_xlsx_rows_stdlib(path: str, sheet_name: str | None = None):
         wb = ET.fromstring(z.read("xl/workbook.xml"))
         rels = ET.fromstring(z.read("xl/_rels/workbook.xml.rels"))
         rel_target = {r.get("Id"): r.get("Target") for r in rels}
+        sheets = wb.find(f"{_XLSX_NS}sheets")
+        if sheets is None:
+            raise ValueError(f"workbook.xml has no <sheets> element: {path}")
         target = None
-        for s in wb.find(f"{_XLSX_NS}sheets"):
+        for s in sheets:
             t = rel_target[s.get(f"{_REL_NS}id")]
             t = t if t.startswith("xl/") else f"xl/{t.lstrip('/')}"
             if sheet_name is None or s.get("name") == sheet_name:
@@ -84,6 +87,10 @@ def iter_xlsx_rows_stdlib(path: str, sheet_name: str | None = None):
                 ctype = c.get("t", "n")
                 v = c.find(f"{_XLSX_NS}v")
                 if ctype == "s":
+                    if v is None or v.text is None:
+                        raise ValueError(
+                            f"shared-string cell {ref!r} has no <v> index: {path}"
+                        )
                     cells[idx] = shared[int(v.text)]
                 elif ctype == "inlineStr":
                     cells[idx] = "".join(t.text or "" for t in c.iter(f"{_XLSX_NS}t"))
