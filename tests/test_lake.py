@@ -140,13 +140,12 @@ def test_versioned_commit_readers_see_old_or_new(spark, tmp_path):
 
     # simulate the crash window: a fully-written but uncommitted version
     ver = lake._new_version()
-    spark.createDataFrame([(9, "z")], "id long, v string").write.parquet(
-        str(base / ver)
-    )
+    new = spark.createDataFrame([(9, "z")], "id long, v string")
+    new.write.parquet(str(base / ver))
     assert sorted(r["id"] for r in lake.read_app_table("catalog").collect()) == [1, 2]
 
     # commit completes → readers flip to the new version atomically
-    lake._commit_version(base, ver)
+    lake._commit_version(base, ver, layout=lake._layout(new.schema, None))
     assert [r["id"] for r in lake.read_app_table("catalog").collect()] == [9]
 
 
@@ -537,7 +536,7 @@ def test_registry_first_write_is_versioned(spark, tmp_path):
     lake.register("tbl_v", {"n": 1}, resource_id="r", url="https://x/v.csv")
     base = Path(lake.registry_path)
     assert (base / "MANIFEST").exists()
-    ver = (base / "MANIFEST").read_text().strip()
+    ver = lake.table_version("tables_index", app=True)
     assert (base / ver).is_dir()
     # appends keep landing INSIDE the versioned dir, not the base
     lake.register("tbl_w", {"n": 2}, resource_id="r2", url="https://x/w.csv")
@@ -851,7 +850,10 @@ class TestCommitProtocolAcrossBackends:
         staging = base / f"_staging-{ver}"
         df.write.mode("overwrite").parquet(str(staging))
         with pytest.raises(ConcurrentWriteError):
-            lake._commit_version(base, ver, expect=snapshot, staging=staging)
+            lake._commit_version(
+                base, ver, expect=snapshot, staging=staging,
+                layout=lake._layout(df.schema, None),
+            )
         # loser's staging discarded, winner's data intact
         assert not staging.exists()
         assert [r["id"] for r in lake.read_table("t").collect()] == [2]
@@ -1699,7 +1701,7 @@ def test_compact_adopts_straggler_between_relist_and_flip(
     real_commit = lake._commit_version
     fired = {"done": False}
 
-    def commit_with_straggler(base, ver, expect=None, staging=None):
+    def commit_with_straggler(base, ver, expect=None, staging=None, **kw):
         # lands AFTER the re-list (which runs before _commit_version),
         # BEFORE the flip — the exact formerly-lost window
         if not fired["done"]:
@@ -1707,7 +1709,7 @@ def test_compact_adopts_straggler_between_relist_and_flip(
             assert lake.append_log_table_exactly_once(
                 spark.createDataFrame([(99,)], "id long"), "t", "ep-strag"
             ) is True
-        return real_commit(base, ver, expect=expect, staging=staging)
+        return real_commit(base, ver, expect=expect, staging=staging, **kw)
 
     lake._commit_version = commit_with_straggler
     try:
@@ -1782,13 +1784,13 @@ def test_recover_log_table_after_sweep_crash(spark, tmp_path, proto_store):
     real_commit = lake._commit_version
     fired = {"done": False}
 
-    def commit_with_straggler(base, ver, expect=None, staging=None):
+    def commit_with_straggler(base, ver, expect=None, staging=None, **kw):
         if not fired["done"]:
             fired["done"] = True
             assert lake.append_log_table_exactly_once(
                 spark.createDataFrame([(99,)], "id long"), "t", "ep-strag"
             ) is True
-        return real_commit(base, ver, expect=expect, staging=staging)
+        return real_commit(base, ver, expect=expect, staging=staging, **kw)
 
     real_sweep = lake._adopt_log_stragglers
 
@@ -1816,227 +1818,214 @@ def test_recover_log_table_after_sweep_crash(spark, tmp_path, proto_store):
     ) is False
 
 
-# ------------------------------------------------------- schema memo ----
+# ----------------------------------------------------- commit record ----
 @pytest.fixture(params=["posix", "s3-semantics"])
-def memo_store(request):
+def record_store(request):
     return _make_store(request.param, request)
 
 
-class TestSchemaMemo:
-    """Repeated reads of an unchanged table reuse the schema Spark
-    inferred, with no inference job; any change to the table's data files
-    re-infers, so a read never returns a stale schema."""
+class TestCommitRecord:
+    """The MANIFEST records each table's schema and partition layout, so
+    a read runs no schema-inference job, for a fresh `Lake` as for a
+    warm one, and has the schema a fresh ``mergeSchema`` read infers."""
 
-    def _fresh_merge_read(self, spark, lake, name):
-        from pathlib import Path
-
-        cur = lake._current_dir(Path(lake.app_table_path(name)))
+    @staticmethod
+    def _fresh_merge_read(spark, lake, base):
+        cur = lake.store.materialize_dir(lake._current_dir(base))
         return spark.read.option("mergeSchema", "true").parquet(str(cur))
 
-    def test_repeat_read_of_unchanged_table_runs_no_job(
-        self, spark, tmp_path, memo_store, count_jobs
+    def _assert_reads_as_inferred(self, spark, lake, base, read, count_jobs):
+        back, n = count_jobs(read)
+        assert n == 0
+        fresh = self._fresh_merge_read(spark, lake, base)
+        assert back.schema == fresh.schema
+        assert sorted(back.collect()) == sorted(fresh.collect())
+
+    def test_read_after_each_writer_runs_no_job(
+        self, spark, tmp_path, record_store, count_jobs
     ):
-        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+        from pathlib import Path
+
+        lake = Lake(spark, str(tmp_path / "lake"), store=record_store)
+        base = Path(lake.app_table_path("t"))
+
+        def check():
+            self._assert_reads_as_inferred(
+                spark, lake, base, lambda: lake.read_app_table("t"), count_jobs
+            )
+
+        row = "id long, v string, check_date date"
+        lake.write_app_table(
+            spark.createDataFrame(
+                [(i, f"v{i}", datetime.date(2024, 1, 1 + i % 3)) for i in range(9)], row
+            ),
+            "t", partition_by=["check_date"],
+        )
+        check()
+        lake.append_app_table(
+            spark.createDataFrame([(20, "w", datetime.date(2024, 1, 2))], row),
+            "t", partition_by=["check_date"],
+        )
+        check()
+        lake.append_app_table(
+            spark.createDataFrame(
+                [(30, "x", 1.5, datetime.date(2024, 1, 5))],
+                "id long, v string, score double, check_date date",
+            ),
+            "t", partition_by=["check_date"], allow_schema_evolution=True,
+        )
+        check()
+        lake.rewrite_app_table(lake.read_app_table("t").filter(F.col("id") != 0), "t")
+        check()
+        lake.compact_table("t", app_table=True)
+        check()
+        assert lake.append_app_table_exactly_once(
+            spark.createDataFrame([(40, "y", datetime.date(2024, 1, 3))], row), "t", "b0"
+        )
+        check()
+        assert lake.read_app_table("t").count() == 11
+
+        lake.register("tbl_a", {"n": 1}, resource_id="r1", url="https://x/a.csv")
+        lake.register("tbl_b", {"n": 2}, resource_id="r2", url="https://x/b.csv")
+        self._assert_reads_as_inferred(
+            spark, lake, Path(lake.registry_path), lake.registry, count_jobs
+        )
+
+    def test_fresh_lake_reads_with_no_job(
+        self, spark, tmp_path, record_store, count_jobs
+    ):
+        root = str(tmp_path / "lake")
         df = spark.createDataFrame(
             [(i, f"v{i}", datetime.date(2024, 1, 1 + i % 3)) for i in range(9)],
             "id long, v string, check_date date",
         )
-        lake.write_app_table(df, "t", partition_by=["check_date"])
-        first, n_first = count_jobs(lambda: lake.read_app_table("t"))
-        again, n_again = count_jobs(lambda: lake.read_app_table("t"))
-        assert n_first >= 1  # the inference job the memo saves
-        assert n_again == 0
-        fresh = self._fresh_merge_read(spark, lake, "t")
-        assert again.schema == fresh.schema == first.schema
-        assert sorted(again.collect()) == sorted(fresh.collect())
+        Lake(spark, root, store=record_store).write_app_table(
+            df, "t", partition_by=["check_date"]
+        )
+        back, n = count_jobs(lambda: Lake(spark, root, store=record_store).read_app_table("t"))
+        assert n == 0
+        assert back.columns == ["id", "v", "check_date"]
+        assert sorted(back.collect()) == sorted(df.collect())
 
-    def test_relative_lake_root_is_memoized(
-        self, spark, tmp_path, memo_store, count_jobs
+    def test_relative_lake_root_reads_with_no_job(
+        self, spark, tmp_path, record_store, count_jobs
     ):
-        """Spark lists absolute paths; the walk must compare equal to
-        them when the lake root is given relative to the cwd (as a
-        ``--lake-root`` argument may be)."""
-        lake = Lake(spark, os.path.relpath(tmp_path / "lake"), store=memo_store)
+        """A lake root given relative to the cwd (as a ``--lake-root``
+        argument may be) reads as an absolute one does."""
+        lake = Lake(spark, os.path.relpath(tmp_path / "lake"), store=record_store)
         lake.write_app_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
-        lake.read_app_table("t")
         again, n = count_jobs(lambda: lake.read_app_table("t"))
         assert n == 0 and again.collect()[0]["v"] == "a"
 
-    def test_widening_append_after_memoized_read(self, spark, tmp_path, memo_store):
-        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
+    def test_widening_append_reads_null_on_old_rows(
+        self, spark, tmp_path, record_store
+    ):
+        lake = Lake(spark, str(tmp_path / "lake"), store=record_store)
         lake.write_app_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
-        lake.read_app_table("t")
-        lake.read_app_table("t")  # served from the memo
         wider = spark.createDataFrame([(2, "b", 9.5)], "id long, v string, score double")
         lake.append_app_table(wider, "t", allow_schema_evolution=True)
         back = lake.read_app_table("t")
         assert back.columns == ["id", "v", "score"]
-        assert back.schema == self._fresh_merge_read(spark, lake, "t").schema
         got = {r["id"]: (r["v"], r["score"]) for r in back.collect()}
         assert got == {1: ("a", None), 2: ("b", 9.5)}
-
-    def test_rewrite_removed_file_and_resized_file_each_re_infer(
-        self, spark, tmp_path, memo_store, count_jobs
-    ):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pathlib import Path
-
-        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
-        base = Path(lake.app_table_path("t"))
-        two_files = spark.createDataFrame(
-            [(i, f"v{i}") for i in range(6)], "id long, v string"
-        ).repartition(2)
-        lake.write_app_table(two_files, "t")
-        lake.read_app_table("t")
-
-        # a rewrite commits a new version dir
-        lake.rewrite_app_table(
-            spark.createDataFrame([(7, "w", 1.0)], "id long, v string, w double")
-            .union(spark.createDataFrame([(8, "x", 2.0)], "id long, v string, w double"))
-            .repartition(2),
-            "t",
-        )
-        back, n = count_jobs(lambda: lake.read_app_table("t"))
-        assert n >= 1 and back.columns == ["id", "v", "w"]
-        lake.read_app_table("t")  # memoize the new version
-
-        # a removed data file: its survivor's Spark footer vouches for
-        # the memo, so the read infers nothing and has the fresh schema
-        # (test_unvouched_changes_re_infer removes one whose survivor
-        # carries no footer)
-        cur = lake._current_dir(base)
-        parts = sorted(cur.glob("part-*.parquet"))
-        assert len(parts) == 2
-        parts[0].unlink()
-        back, n = count_jobs(lambda: lake.read_app_table("t"))
-        assert n == 0 and back.count() == 1
-        assert back.schema == self._fresh_merge_read(spark, lake, "t").schema
-        lake.read_app_table("t")
-
-        # a same-name file of a different size (and schema); its Hadoop
-        # checksum sidecar no longer matches and goes with the old bytes
-        parts[1].with_name(f".{parts[1].name}.crc").unlink(missing_ok=True)
-        pq.write_table(
-            pa.table({"id": [9, 10], "v": ["y", "z"], "w": [3.0, 4.0], "extra": ["e", "f"]}),
-            parts[1],
-        )
-        back, n = count_jobs(lambda: lake.read_app_table("t"))
-        assert n >= 1 and back.columns == ["id", "v", "w", "extra"]
-        assert sorted(r["id"] for r in back.collect()) == [9, 10]
-
-    def test_stale_walk_is_caught_by_the_input_files_check(
-        self, spark, tmp_path, memo_store, monkeypatch
-    ):
-        """An append that lands between the memo's walk and Spark's own
-        listing: the walk still matches the memo, but the DataFrame lists
-        one more file, so the read re-infers instead of using the old
-        schema."""
-        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
-        lake.write_app_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
-        lake.read_app_table("t")
-        (_, walked), _ = next(iter(lake._schema_memo.values()))
-        wider = spark.createDataFrame([(2, "b", 9.5)], "id long, v string, score double")
-        lake.append_app_table(wider, "t", allow_schema_evolution=True)
-        monkeypatch.setattr(lake, "_data_files", lambda cur: walked)
-        back = lake.read_app_table("t")
-        assert back.columns == ["id", "v", "score"]
-        assert sorted(back.collect()) == sorted(
-            self._fresh_merge_read(spark, lake, "t").collect()
-        )
-
-    def test_memo_holds_one_entry_per_table(self, spark, tmp_path, memo_store):
-        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
-        lake.write_app_table(spark.createDataFrame([(0,)], "n long"), "other")
-        lake.read_app_table("other")
-        for i in range(20):
-            lake.rewrite_app_table(spark.createDataFrame([(i,)], "n long"), "t")
-            assert lake.read_app_table("t").collect()[0]["n"] == i
-        assert sorted(p.name for p in lake._schema_memo) == ["other", "t"]
-
-    def _parted(self, spark, lake, days=3):
-        df = spark.createDataFrame(
-            [(i, f"v{i}", datetime.date(2024, 1, 1 + i % days)) for i in range(9)],
-            "id long, v string, check_date date",
-        )
-        lake.write_app_table(df, "t", partition_by=["check_date"])
-        lake.read_app_table("t")  # memoize
-
-    def test_own_rewrite_and_append_keep_the_memo(
-        self, spark, tmp_path, memo_store, count_jobs
-    ):
-        """Files the lake's own writers add carry Spark's footer schema;
-        when it equals the memo's data columns and the partition dirs are
-        unchanged, the read after a rewrite or an append infers nothing
-        and has the schema a fresh ``mergeSchema`` read infers."""
-        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
-        self._parted(spark, lake)
-        lake.rewrite_app_table(
-            lake.read_app_table("t").filter(F.col("id") != 0), "t"
-        )
-        back, n = count_jobs(lambda: lake.read_app_table("t"))
-        assert n == 0
-        assert back.schema == self._fresh_merge_read(spark, lake, "t").schema
-        assert back.count() == 8
-
-        more = spark.createDataFrame(
-            [(20, "w", datetime.date(2024, 1, 2))], "id long, v string, check_date date"
-        )
-        lake.append_app_table(more, "t", partition_by=["check_date"])
-        back, n = count_jobs(lambda: lake.read_app_table("t"))
-        assert n == 0
-        fresh = self._fresh_merge_read(spark, lake, "t")
-        assert back.schema == fresh.schema
-        assert sorted(back.collect()) == sorted(fresh.collect())
-
-    def test_unvouched_changes_re_infer(
-        self, spark, tmp_path, memo_store, count_jobs
-    ):
-        """Each change the footers cannot vouch for re-infers: a file
-        without Spark's footer (pyarrow-written), a differing footer
-        schema, a new partition dir, and a removed file whose survivors
-        are not all vouched for."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pathlib import Path
-
-        def read_back():
-            back, n = count_jobs(lambda: lake.read_app_table("t"))
-            assert n >= 1
-            assert back.schema == self._fresh_merge_read(spark, lake, "t").schema
-            return back
-
-        lake = Lake(spark, str(tmp_path / "lake"), store=memo_store)
-        self._parted(spark, lake)
-        cur = lake._current_dir(Path(lake.app_table_path("t")))
-        day1 = cur / "check_date=2024-01-01"
-
-        # a pyarrow-written file with the same columns
-        pq.write_table(pa.table({"id": [30], "v": ["p"]}), day1 / "part-pyarrow.parquet")
-        assert read_back().count() == 10
-
-        # a differing footer schema (a widening append)
-        wider = spark.createDataFrame(
-            [(40, "x", 1.5, datetime.date(2024, 1, 2))],
-            "id long, v string, score double, check_date date",
-        )
+        # an append that omits a column leaves the record as wide as it was
         lake.append_app_table(
-            wider, "t", partition_by=["check_date"], allow_schema_evolution=True
+            spark.createDataFrame([(3,)], "id long"), "t", allow_schema_evolution=True
         )
-        assert "score" in read_back().columns
+        assert lake.read_app_table("t").columns == ["id", "v", "score"]
 
-        # a new partition dir, same footer schema
-        newday = spark.createDataFrame(
-            [(50, "y", 2.5, datetime.date(2024, 2, 1))],
-            "id long, v string, score double, check_date date",
+    def test_empty_partitioned_table_round_trips(self, spark, tmp_path, proto_store):
+        """An empty partitioned write leaves no data file (on a bucket
+        store, no object under the version prefix); the record still
+        knows the table's schema and layout."""
+        lake = Lake(spark, str(tmp_path / "lake"), store=proto_store)
+        df = spark.createDataFrame(
+            [(1, "a", datetime.date(2024, 1, 1))], "id long, v string, day date"
         )
-        lake.append_app_table(newday, "t", partition_by=["check_date"])
-        assert read_back().count() == 12
+        lake.write_app_table(df.limit(0), "t", partition_by=["day"])
+        empty = lake.read_app_table("t")
+        assert empty.count() == 0
+        assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+            ("id", "bigint"), ("v", "string"), ("day", "date"),
+        ]
+        with pytest.raises(ValueError, match="partition layout"):
+            lake.append_app_table(df, "t")
+        lake.append_app_table(df, "t", partition_by=["day"])
+        assert lake.read_app_table("t").collect() == df.collect()
+        assert lake.append_app_table_exactly_once(df, "t", "b0")
+        assert lake.read_app_table("t").count() == 2
 
-        # a removed Spark file: the pyarrow survivor carries no footer
-        spark_files = sorted(day1.glob("part-0*.parquet"))
-        assert spark_files
-        for f in spark_files:
-            f.unlink()
-        back = read_back()
-        assert 30 in {r["id"] for r in back.collect()}
+    def test_append_must_match_partition_column_types(
+        self, spark, tmp_path, record_store
+    ):
+        """A ``day date`` table refuses a ``day string`` append: its
+        values would turn the table's partition type into string."""
+        lake = Lake(spark, str(tmp_path / "lake"), store=record_store)
+        lake.write_app_table(
+            spark.createDataFrame([(1, datetime.date(2024, 1, 1))], "id long, day date"),
+            "t", partition_by=["day"],
+        )
+        bad = spark.createDataFrame([(2, "not-a-date")], "id long, day string")
+        with pytest.raises(ValueError, match="type conflict"):
+            lake.append_app_table(bad, "t", partition_by=["day"])
+        with pytest.raises(ValueError, match="type conflict"):
+            lake.append_app_table_exactly_once(bad, "t", "b0")
+        back = lake.read_app_table("t")
+        assert back.schema["day"].dataType.simpleString() == "date"
+        assert back.collect()[0]["id"] == 1
+
+    def test_tables_without_a_record_infer_their_layout(
+        self, spark, tmp_path, record_store
+    ):
+        """A plain dir with no MANIFEST, and a one-line MANIFEST from an
+        older lake, read and take appends through inference."""
+        from pathlib import Path
+
+        lake = Lake(spark, str(tmp_path / "lake"), store=record_store)
+        df = spark.createDataFrame(
+            [(1, "a", datetime.date(2024, 1, 1))], "id long, v string, day date"
+        )
+        df.write.partitionBy("day").parquet(lake.app_table_path("plain"))
+        lake.write_app_table(df, "old", partition_by=["day"])
+        base = Path(lake.app_table_path("old"))
+        record_store.put_text(base / "MANIFEST", lake.table_version("old", app=True))
+        for name in ("plain", "old"):
+            lake.append_app_table(df, name, partition_by=["day"])
+            back = lake.read_app_table(name)
+            assert back.columns == ["id", "v", "day"]
+            assert back.count() == 2
+        lake.append_app_table(
+            spark.createDataFrame([(3, "c", 2.5, datetime.date(2024, 1, 2))],
+                                  "id long, v string, w double, day date"),
+            "old", partition_by=["day"], allow_schema_evolution=True,
+        )
+        assert lake.read_app_table("old").columns == ["id", "v", "w", "day"]
+        assert lake.read_app_table("old").count() == 3
+
+    def test_widening_append_that_raises_leaves_record_and_rows(
+        self, spark, tmp_path, proto_store
+    ):
+        """Crash law: the widened record is committed before the files;
+        a write that raises puts the previous record back, so the table
+        reads as it did before the append."""
+        from pathlib import Path
+
+        lake = Lake(spark, str(tmp_path / "lake"), store=proto_store)
+        lake.write_app_table(
+            spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), "t"
+        )
+        base = Path(lake.app_table_path("t"))
+        before_record = lake._record(base)
+        before_rows = sorted(lake.read_app_table("t").collect())
+        wider = spark.createDataFrame(
+            [(3, "c", 1.5)], "id long, v string, score double"
+        ).withColumn(
+            "score", F.when(F.col("id") == 3, F.raise_error(F.lit("injected")))
+            .otherwise(F.col("score")).cast("double"),
+        )
+        with pytest.raises(Exception, match="injected"):
+            lake.append_app_table(wider, "t", allow_schema_evolution=True)
+        assert lake._record(base) == before_record
+        back = lake.read_app_table("t")
+        assert back.columns == ["id", "v"]
+        assert sorted(back.collect()) == before_rows

@@ -36,17 +36,24 @@ def _request(svc: HydraService, route: str):
 
 
 @pytest.fixture()
-def warm_service(spark, tmp_path, catalog_df, checks_df):
-    """catalog and checks (partitioned by check_date, as the crawl
-    writes it), with every route called once."""
-    lake = Lake(spark, str(tmp_path / "lake"))
+def lake_root(spark, tmp_path, catalog_df, checks_df):
+    """A lake holding catalog and checks (partitioned by check_date, as
+    the crawl writes it)."""
+    root = str(tmp_path / "lake")
+    lake = Lake(spark, root)
     lake.write_app_table(catalog_df, "catalog")
     lake.write_app_table(
         checks_df.withColumn("check_date", F.to_date("created_at")),
         "checks",
         partition_by=["check_date"],
     )
-    svc = HydraService(spark, lake)
+    return root
+
+
+@pytest.fixture()
+def warm_service(spark, lake_root):
+    """A service with every route called once."""
+    svc = HydraService(spark, Lake(spark, lake_root))
     for route in ROUTE_JOBS:
         _request(svc, route)
     return svc
@@ -55,6 +62,19 @@ def warm_service(spark, tmp_path, catalog_df, checks_df):
 def test_warm_route_job_budget(warm_service, count_jobs):
     got = {
         route: count_jobs(lambda: _request(warm_service, route))[1]
+        for route in ROUTE_JOBS
+    }
+    assert got == ROUTE_JOBS
+
+
+def test_cold_route_job_budget(spark, lake_root, count_jobs):
+    """A fresh service over an already-written lake (a CLI verb, a
+    restarted service) meets the same budget on the first request of each
+    route: the lake's commit records spare it every schema inference."""
+    got = {
+        route: count_jobs(
+            lambda: _request(HydraService(spark, Lake(spark, lake_root)), route)
+        )[1]
         for route in ROUTE_JOBS
     }
     assert got == ROUTE_JOBS

@@ -27,7 +27,6 @@ import uuid
 from contextlib import contextmanager
 from datetime import datetime, timezone
 from pathlib import Path
-from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,9 +36,6 @@ from udata_datalake_service_spark.schemas import TABLES_INDEX_SCHEMA
 from udata_datalake_service_spark.sinks.store import PosixStore
 
 _UNSET = object()
-# the footer key under which Spark's parquet writer records the written
-# frame's schema (Spark's ParquetReadSupport.SPARK_METADATA_KEY)
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _as_nullable(dt: DataType) -> DataType:
@@ -57,22 +53,6 @@ def _as_nullable(dt: DataType) -> DataType:
     return dt
 
 
-def _footer_schema(path: str) -> StructType | None:
-    """The data schema Spark wrote into a parquet file's footer, as a
-    file-source read reports it; None for a file Spark did not write
-    (pyarrow, say) or cannot be read."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_METADATA)
-    except (OSError, pa.ArrowException):
-        return None
-    if raw is None:
-        return None
-    return _as_nullable(StructType.fromJson(json.loads(raw)))
-
-
 class ConcurrentWriteError(RuntimeError):
     """A CAS commit lost the race: the manifest moved between the caller's
     snapshot and its commit. Re-read the table and retry the write."""
@@ -81,8 +61,8 @@ class ConcurrentWriteError(RuntimeError):
 class Lake:
     """Crash-safety model (the vanilla-parquet stand-in for a Delta/Iceberg
     commit log): every REPLACE-style write lands in a fresh ``v-*``
-    directory under the logical table path, then a one-line ``MANIFEST``
-    file is fsynced and atomically ``os.replace``d to point at it. A crash
+    directory under the logical table path, then the ``MANIFEST`` commit
+    record is fsynced and atomically ``os.replace``d to point at it. A crash
     at ANY step leaves readers on the previous manifest — old-or-new, never
     a half-deleted directory (the old rmtree+rename swap had exactly that
     window). The previous version is retained one commit for in-flight
@@ -109,26 +89,32 @@ class Lake:
     per write (one more PUT on an object store), rewritten inside the
     committed version by every in-place append.
 
-    Read path: a parquet read without a schema makes Spark infer one, and
-    inference is an eager, footer-reading Spark job. Every
-    single-directory read (`read_app_table`, `read_table`, `registry`, the
-    append schema check, compaction, exactly-once appends) goes through
-    `_read_parquet_dir`, which remembers, per table base path, the schema
-    Spark inferred and the data files it was inferred from, each as
-    (path, size, mtime_ns). A later read reuses that schema when it walks
-    the same files, or, for a ``mergeSchema`` read, when the footers
-    vouch for the change: the partition dirs are the same, and every
-    file the memo did not see (every file, once one of the memo's files
-    is gone) carries Spark's row-metadata footer schema equal to the
-    memo's data columns, so inference would return the memo. That keeps
-    the memo across the lake's own appends and rewrites, and a
-    concurrent appender's, while a pyarrow-written file, a new partition
-    value or a different footer schema still re-infers. A reused schema
-    is kept only if the DataFrame's ``inputFiles()`` is exactly the
-    walked file set, so an append landing between the walk and Spark's
-    own listing cannot be read under a stale schema. Any other read
-    infers as before and replaces the entry: one entry per table,
-    however many versions it has had."""
+    Commit record: the MANIFEST is a small JSON record ``{"version",
+    "schema", "partition_by"}``: the current version dir, the table's
+    Spark schema as a file-source read reports it (every field nullable,
+    partition columns last) and its partition columns. Every commit
+    writes it from the frame its writer already holds, so every
+    single-directory read (`read_app_table`, `read_table`, `registry`,
+    compaction, exactly-once appends) is ``spark.read.schema(record)``
+    over the version dir: no schema-inference job and no footer read,
+    for a fresh `Lake` as for a warm one. Partition values read back as
+    the written type, and an append must match every column's type,
+    partition columns included. The data files are not recorded: the
+    directory read lists them, and an explicit list of more than 32
+    paths makes Spark run a parallel-listing job.
+
+    A same-schema in-place append leaves the record alone. A widening
+    append (``allow_schema_evolution`` with new columns) commits the
+    widened record under the commit lock BEFORE it writes its files: a
+    read in between sees the new columns as NULL on old rows, and never
+    a new row without its new columns. If the write raises, the append
+    puts the previous record back, if the record is still the one it
+    wrote. A record is only ever widened in place, never narrowed.
+
+    A table with no record (a plain dir with no MANIFEST, or a one-line
+    MANIFEST from an older lake) has its schema inferred with
+    ``mergeSchema`` and its layout read from its ``col=value`` dirs, on
+    every use (`_table_schema`)."""
 
     def __init__(self, spark: SparkSession, root: str, store=None):
         self.spark = spark
@@ -138,8 +124,6 @@ class Lake:
         # default; S3SemanticsStore exercises the protocol against
         # object-store rename/visibility semantics (tests/test_lake.py)
         self.store = store if store is not None else PosixStore()
-        # table base path -> ((merge_schema, data files), inferred schema)
-        self._schema_memo: dict[Path, tuple] = {}
 
     # ------------------------------------------------- versioned commits ----
     @staticmethod
@@ -147,28 +131,95 @@ class Lake:
         ts = datetime.now(timezone.utc).strftime("%Y%m%d%H%M%S%f")
         return f"v-{ts}-{uuid.uuid4().hex[:8]}"
 
-    def _manifest_version(self, base: Path) -> str | None:
-        """Read the MANIFEST pointer THROUGH the store backend — on
-        PosixStore this is a local file read; on S3ObjectStore the
-        pointer is a real object GET, so the whole control plane
-        (locks + manifest) round-trips the object store."""
+    def _record(self, base: Path) -> dict:
+        """The MANIFEST commit record, read THROUGH the store backend —
+        on PosixStore this is a local file read; on S3ObjectStore it is a
+        real object GET, so the whole control plane (locks + manifest)
+        round-trips the object store. A one-line MANIFEST from an older
+        lake reads as ``{"version": <line>}``; no MANIFEST as ``{}``."""
         try:
-            return self.store.read_text(base / "MANIFEST").strip()
+            text = self.store.read_text(base / "MANIFEST").strip()
         except OSError:
-            return None
+            return {}
+        return json.loads(text) if text.startswith("{") else {"version": text}
 
-    def _current_dir(self, base: Path) -> Path | None:
-        """Resolve a logical table path to its current data directory:
-        MANIFEST-pointed version dir, or the base itself for legacy/plain
-        layouts (pre-versioning data, externally-written dirs)."""
-        ver = self._manifest_version(base)
-        if ver is None:
+    def _put_record(self, base: Path, record: dict) -> None:
+        """Replace the MANIFEST with ``record``: one atomic object PUT
+        (POSIX: fsync + rename + dir fsync)."""
+        self.store.put_text(base / "MANIFEST", json.dumps(record))
+        self.store.sync_dir(base)
+
+    def _manifest_version(self, base: Path) -> str | None:
+        return self._record(base).get("version")
+
+    def _version_dir(self, base: Path, record: dict) -> Path | None:
+        """The data directory ``record`` names: its version dir, or the
+        base itself for legacy/plain layouts (pre-versioning data,
+        externally-written dirs)."""
+        if not record:
             return base if base.exists() else None
-        p = base / ver
+        p = base / record["version"]
         # data-dir existence goes THROUGH the backend: on S3ObjectStore a
         # committed version is a bucket prefix with no local footprint
         # until a read materializes it
         return p if self.store.data_dir_exists(p) else None
+
+    def _current_dir(self, base: Path) -> Path | None:
+        """Resolve a logical table path to its current data directory."""
+        return self._version_dir(base, self._record(base))
+
+    def _snapshot(self, base: Path) -> tuple[dict, Path | None]:
+        """The commit record and its data dir from ONE MANIFEST read (two
+        reads would let a commit in between pair one version's record
+        with another's files), the dir materialized: backends holding
+        data server-side fetch the version prefix into the local cache."""
+        record = self._record(base)
+        cur = self._version_dir(base, record)
+        return record, None if cur is None else self.store.materialize_dir(cur)
+
+    @staticmethod
+    def _layout(schema: StructType, partition_by: list[str] | None) -> dict:
+        """The schema half of a commit record for a frame of ``schema``
+        written with ``partition_by``: the schema a file-source read
+        reports for it (every field nullable, partition columns last)
+        and the partition columns."""
+        pcols = list(partition_by or [])
+        fields = [f for f in schema.fields if f.name not in pcols]
+        fields += [schema[c] for c in pcols]
+        return {
+            "schema": _as_nullable(StructType(fields)).jsonValue(),
+            "partition_by": pcols,
+        }
+
+    def _table_schema(
+        self, record: dict, cur: Path | None
+    ) -> tuple[StructType | None, list[str]]:
+        """(schema, partition columns) of a table: its record's, or, for
+        a table with no record, inferred from the files in ``cur`` (a
+        ``mergeSchema`` read and the ``col=value`` dir chain). (None, [])
+        for a table with neither a record nor a data file."""
+        if "schema" in record:
+            return StructType.fromJson(record["schema"]), record["partition_by"]
+        if not self._has_data(cur):
+            return None, []
+        inferred = self.spark.read.option("mergeSchema", "true").parquet(str(cur))
+        return inferred.schema, self._detect_partition_cols(cur)
+
+    @staticmethod
+    def _has_data(cur: Path | None) -> bool:
+        """Whether ``cur`` holds a data file or partition dir (``_``/``.``
+        names are skipped, as Spark's file listing skips them)."""
+        return cur is not None and any(
+            not f.name.startswith(("_", ".")) for f in cur.iterdir()
+        )
+
+    def _scan(self, cur: Path | None, schema: StructType) -> DataFrame:
+        """The rows of ``cur`` read as ``schema``: no inference job, and
+        an empty frame for a table with no data file (an empty
+        partitioned write leaves none)."""
+        if not self._has_data(cur):
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(str(cur))
 
     @contextmanager
     def _commit_lock(self, base: Path, timeout: float = 30.0, stale_after: float = 120.0):
@@ -271,9 +322,12 @@ class Lake:
         ver: str,
         expect: object = _UNSET,
         staging: Path | None = None,
+        *,
+        layout: dict,
     ) -> None:
-        """Atomically repoint MANIFEST at ``ver``; keep the immediately
-        previous version for in-flight readers, GC anything older.
+        """Atomically repoint MANIFEST at ``ver``, recording ``layout``
+        (`_layout`) as its schema; keep the immediately previous version
+        for in-flight readers, GC anything older.
 
         Optimistic concurrency: when ``expect`` is given (a version string
         or None for "table did not exist"), the flip only happens if the
@@ -285,7 +339,9 @@ class Lake:
         dirs are never eligible for GC, so a slow writer's data can't be
         reclaimed by a faster committer."""
         with self._commit_lock(base):
-            self._commit_version_locked(base, ver, expect=expect, staging=staging)
+            self._commit_version_locked(
+                base, ver, expect=expect, staging=staging, layout=layout
+            )
 
     def _commit_version_locked(
         self,
@@ -293,6 +349,8 @@ class Lake:
         ver: str,
         expect: object = _UNSET,
         staging: Path | None = None,
+        *,
+        layout: dict,
     ) -> None:
         """`_commit_version` body for callers ALREADY holding the commit
         lock (the O_EXCL lock is non-reentrant) — lets a caller serialize
@@ -312,9 +370,7 @@ class Lake:
             # below, and a crash mid-copy leaves readers on `prev` with
             # the partial dir reclaimed by vacuum/next-commit GC.
             self.store.publish_dir(staging, base / ver)
-        # manifest flip = one atomic object PUT (POSIX: fsync+rename)
-        self.store.put_text(base / "MANIFEST", ver)
-        self.store.sync_dir(base)
+        self._put_record(base, {"version": ver, **layout})
         for name in self.store.list_subdirs(base):
             if name.startswith("v-") and name not in (ver, prev):
                 self.store.delete_dir(base / name)
@@ -397,16 +453,17 @@ class Lake:
         self._write_parquet(df, staging, "overwrite", partition_by)
         n_files = len(self._data_files(staging))
         if ledger is not None:
-            import json as _json
-
             lf = staging / "_batches.json"
-            lf.write_text(_json.dumps(ledger))
+            lf.write_text(json.dumps(ledger))
             fd = os.open(lf, os.O_RDONLY)
             try:
                 os.fsync(fd)
             finally:
                 os.close(fd)
-        self._commit_version(base, ver, expect=expect, staging=staging)
+        self._commit_version(
+            base, ver, expect=expect, staging=staging,
+            layout=self._layout(df.schema, partition_by),
+        )
         return n_files
 
     @staticmethod
@@ -434,8 +491,7 @@ class Lake:
     @staticmethod
     def _detect_partition_cols(cur: Path) -> list[str]:
         """Partition columns of an on-disk dir, from its ``col=value``
-        subdirectory chain — lets rewrite-style maintenance (compaction,
-        exactly-once appends) preserve the physical layout it read."""
+        subdirectory chain: the layout of a table with no commit record."""
         cols: list[str] = []
         d = cur
         while True:
@@ -449,30 +505,22 @@ class Lake:
             cols.append(subs[0].name.split("=", 1)[0])
             d = subs[0]
 
-    def _read_dir(self, base: Path, schema=None, merge_schema: bool = False) -> DataFrame:
-        cur = self._current_dir(base)
-        if cur is not None:
-            # backends holding data server-side fetch the version prefix
-            # (list-after-write + per-object GET) into the local cache
-            cur = self.store.materialize_dir(cur)
-        if cur is None or not any(
-            f for f in cur.iterdir() if not f.name.startswith(("_", "."))
-        ):
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
+    def _read_dir(self, base: Path, schema: StructType | None = None) -> DataFrame:
+        """The table's current rows, read as its recorded schema (or
+        ``schema`` for a table with neither a record nor data)."""
+        record, cur = self._snapshot(base)
+        recorded, _ = self._table_schema(record, cur)
+        if recorded is not None:
+            schema = recorded
+        if schema is None:
             raise FileNotFoundError(f"lake table has no data: {base}")
-        # app tables accept widening appends (allow_schema_evolution):
-        # merge footers so evolved files contribute their columns and
-        # older files read NULLs — instead of whichever single file's
-        # schema Spark happens to pick
-        return self._read_parquet_dir(cur, merge_schema)
+        return self._scan(cur, schema)
 
     @staticmethod
-    def _data_files(cur: Path) -> frozenset:
-        """(path, size, mtime_ns) of every data file under ``cur``,
-        skipping ``_``/``.`` names as Spark's file listing does. An entry
-        that vanishes mid-walk is left out: the set then differs from
-        Spark's listing, which only costs a schema inference."""
+    def _data_files(cur: Path) -> list[tuple[str, int]]:
+        """(path, size) of every data file under ``cur``, skipping
+        ``_``/``.`` names as Spark's file listing does. An entry that
+        vanishes mid-walk is left out."""
         out, todo = [], [os.path.abspath(cur)]
         while todo:
             try:
@@ -483,68 +531,10 @@ class Lake:
                         if e.is_dir():
                             todo.append(e.path)
                         else:
-                            st = e.stat()
-                            out.append((e.path, st.st_size, st.st_mtime_ns))
+                            out.append((e.path, e.stat().st_size))
             except FileNotFoundError:
                 continue
-        return frozenset(out)
-
-    def _read_parquet_dir(self, cur: Path, merge_schema: bool = False) -> DataFrame:
-        """``spark.read.parquet(cur)``, with the schema inference job
-        skipped while the table's data files are the ones the memoized
-        schema was inferred from (see the class docstring)."""
-        base = cur.parent if cur.name.startswith("v-") else cur
-        files = self._data_files(cur)
-        paths = {p for p, _, _ in files}
-
-        def input_paths(df: DataFrame) -> set[str]:
-            return {unquote(urlsplit(u).path) for u in df.inputFiles()}
-
-        memo = self._schema_memo.get(base)
-        if memo is not None and memo[0][0] == merge_schema and (
-            memo[0][1] == files
-            or (merge_schema and self._footers_vouch(base, memo, files))
-        ):
-            df = self.spark.read.schema(memo[1]).parquet(str(cur))
-            if input_paths(df) == paths:
-                self._schema_memo[base] = ((merge_schema, files), memo[1])
-                return df
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(str(cur))
-        if input_paths(df) == paths:
-            self._schema_memo[base] = ((merge_schema, files), df.schema)
-        else:
-            self._schema_memo.pop(base, None)
-        return df
-
-    @staticmethod
-    def _part_dirs(base: Path, files: frozenset) -> frozenset:
-        """The directories holding ``files``, as path segments relative
-        to their version dir under ``base``: the partition values Spark's
-        discovery sees."""
-        top = os.path.abspath(base)
-        out = set()
-        for p, _, _ in files:
-            segs = Path(os.path.relpath(os.path.dirname(p), top)).parts
-            out.add(segs[1:] if segs and segs[0].startswith("v-") else segs)
-        return frozenset(out)
-
-    def _footers_vouch(self, base: Path, memo: tuple, files: frozenset) -> bool:
-        """Whether a ``mergeSchema`` read of ``files`` infers exactly the
-        memoized schema, though the files differ from the memo's: the
-        partition dirs are the same, and every file the memo did not see
-        (every file, once one of the memo's files is gone) carries
-        Spark's row-metadata footer equal to the memo's data columns."""
-        (_, memo_files), schema = memo
-        parts = self._part_dirs(base, files)
-        if not files or parts != self._part_dirs(base, memo_files):
-            return False
-        pcols = {seg.split("=", 1)[0] for d in parts for seg in d if "=" in seg}
-        data_cols = StructType([f for f in schema.fields if f.name not in pcols])
-        unseen = files if memo_files - files else files - memo_files
-        return all(_footer_schema(p) == data_cols for p, _, _ in unseen)
+        return out
 
     # ---------------------------------------------------------- tables ----
     def table_path(self, name: str) -> str:
@@ -679,7 +669,6 @@ class Lake:
         never a registry row pointing at deleted data."""
         self._delete_registry_rows(name)
         p = Path(self.table_path(name))
-        self._schema_memo.pop(p, None)
         # existence through the backend: a fresh process has no local
         # footprint for a bucket-resident table, and a local-only check
         # would strand its keys (and MANIFEST) forever
@@ -752,23 +741,21 @@ class Lake:
         # supersede (the drop holds the same lock across its read+flip —
         # the transaction Postgres gave the reference for free)
         with self._commit_lock(base):
-            cur = self._current_dir(base)
-            if cur is not None:
-                cur = self.store.materialize_dir(cur)
+            _, cur = self._snapshot(base)
             # first write ⇔ no data files yet: the mkdir above makes the
             # bare base dir "exist", so `cur is None` alone would misread
             # a fresh registry as a legacy-plain table and skip the
             # versioned-manifest branch (leaving table_version None and
             # stranding plain part files under later flips)
-            has_data = cur is not None and any(
-                f for f in cur.iterdir() if not f.name.startswith(("_", "."))
-            )
-            if not has_data:
+            if not self._has_data(cur):
                 ver = self._new_version()
                 staging = base / f"_staging-{ver}"
                 staging.mkdir(parents=True, exist_ok=True)
                 pq.write_table(table, staging / fname)
-                self._commit_version_locked(base, ver, staging=staging)
+                self._commit_version_locked(
+                    base, ver, staging=staging,
+                    layout=self._layout(TABLES_INDEX_SCHEMA, None),
+                )
                 return
             tmp = cur / f"_tmp-{fname}"
             pq.write_table(table, tmp)
@@ -794,12 +781,8 @@ class Lake:
         # from `remaining` (the lost-append race `register` guards the
         # other side of)
         with self._commit_lock(base):
-            cur = self._current_dir(base)
-            if cur is not None:
-                cur = self.store.materialize_dir(cur)
-            if cur is None or not any(
-                f for f in cur.iterdir() if not f.name.startswith(("_", "."))
-            ):
+            _, cur = self._snapshot(base)
+            if not self._has_data(cur):
                 remaining = schema.empty_table()
             else:
                 reg = pq.read_table(cur)  # ignores _/.-prefixed files
@@ -812,36 +795,29 @@ class Lake:
             pq.write_table(
                 remaining.cast(schema), staging / f"part-{uuid.uuid4().hex}.parquet"
             )
-            self._commit_version_locked(base, ver, staging=staging)
+            self._commit_version_locked(
+                base, ver, staging=staging,
+                layout=self._layout(TABLES_INDEX_SCHEMA, None),
+            )
 
+    @staticmethod
     def _check_append_schema(
-        self, df: DataFrame, cur: Path, allow_schema_evolution: bool
-    ) -> None:
-        """Appends must not lose columns silently: a parquet dir whose
-        files disagree on schema reads as ONE file's schema by default,
-        so an appended extra column would simply vanish (and a missing
-        one would poison reads). Default: the incoming frame must carry
-        exactly the table's column set with identical types — loud
-        ValueError otherwise. With ``allow_schema_evolution`` the
-        Delta/Iceberg widening rules apply: NEW columns may be added and
-        existing ones omitted (reads merge footers and yield NULLs);
-        a same-name TYPE conflict is always an error."""
-        existing = {
-            f.name: f.dataType
-            # mergeSchema: after a prior widening append the dir's files
-            # disagree; the check must compare against the UNION schema,
-            # not whichever single footer Spark happens to pick
-            for f in self._read_parquet_dir(cur, merge_schema=True).schema
-        }
-        incoming = {f.name: f.dataType for f in df.schema}
-        # partition columns are excluded from the type-equality check
-        # (ADVICE r8): their read-back types come from Spark's partition
-        # VALUE inference (a date-looking string partition reads as date),
-        # so a legitimate append would trip a spurious conflict
-        pcols = set(self._detect_partition_cols(cur))
+        df: DataFrame, schema: StructType, allow_schema_evolution: bool
+    ) -> list[StructField]:
+        """Appends must not lose columns silently: the table reads as its
+        recorded ``schema``, so an appended extra column would simply
+        vanish (and a missing one would poison reads). Default: the
+        incoming frame must carry exactly the table's column set with
+        identical types, partition columns included — loud ValueError
+        otherwise. With ``allow_schema_evolution`` the Delta/Iceberg
+        widening rules apply: NEW columns may be added and existing ones
+        omitted (they read as NULL); a same-name TYPE conflict is always
+        an error. Returns the added columns' fields."""
+        existing = {f.name: f.dataType for f in schema}
+        incoming = {f.name: _as_nullable(f.dataType) for f in df.schema}
         conflicts = {
             n: (str(existing[n]), str(incoming[n]))
-            for n in (incoming.keys() & existing.keys()) - pcols
+            for n in incoming.keys() & existing.keys()
             if existing[n] != incoming[n]
         }
         if conflicts:
@@ -859,6 +835,7 @@ class Lake:
                 "frame. Without the flag this would have silently "
                 "dropped/corrupted columns at read time."
             )
+        return [f for f in df.schema.fields if f.name in added]
 
     def _append_write(
         self,
@@ -867,22 +844,24 @@ class Lake:
         partition_by: list[str] | None = None,
         allow_schema_evolution: bool = False,
     ) -> None:
-        cur = self._current_dir(base)
-        if cur is None:
-            # first write: land in a version dir, commit the pointer
+        record, cur = self._snapshot(base)
+        schema, pcols = self._table_schema(record, cur)
+        if schema is None:
+            # first write: land in a version dir, commit the record
             self._replace_write(df, base, partition_by=partition_by)
             return
-        cur = self.store.materialize_dir(cur)
         # files partitioned differently from the table's layout would not
-        # read back: Spark's discovery sees only one layout's files. A
-        # table with no data file yet (an empty write) has no layout.
-        layout = self._detect_partition_cols(cur)
-        if list(partition_by or []) != layout and self._data_files(cur):
+        # read back: Spark's discovery sees only one layout's files
+        if list(partition_by or []) != pcols:
             raise ValueError(
                 f"append partition_by={partition_by!r} disagrees with the "
-                f"table's partition layout {layout!r}: {base}"
+                f"table's partition layout {pcols!r}: {base}"
             )
-        self._check_append_schema(df, cur, allow_schema_evolution)
+        added = self._check_append_schema(df, schema, allow_schema_evolution)
+        if cur is None:
+            # a recorded empty table on a bucket store: its version
+            # prefix holds no object yet
+            cur = base / record["version"]
         # versioned or legacy-plain: add files in place — Spark stages the
         # new files under _temporary, so a torn append is never visible
         # LOCALLY; on a remote data plane the per-object upload below has
@@ -901,8 +880,37 @@ class Lake:
                 RuntimeWarning,
                 stacklevel=3,
             )
-        self._write_parquet(df, cur, "append", partition_by)
-        self.store.upload_dir_delta(cur)
+        widened = None
+        if added and record:
+            # widen the record BEFORE the files land (see the class
+            # docstring); a record that moved since the snapshot belongs
+            # to another commit, so this append must not overwrite it
+            widened = {
+                **record,
+                **self._layout(StructType(schema.fields + added), pcols),
+            }
+            if not self._swap_record(base, record, widened):
+                raise ConcurrentWriteError(
+                    f"{base}: the commit record changed during a widening "
+                    "append; re-read the table and retry"
+                )
+        try:
+            self._write_parquet(df, cur, "append", partition_by)
+            self.store.upload_dir_delta(cur)
+        except BaseException:
+            if widened is not None:
+                self._swap_record(base, widened, record)
+            raise
+
+    def _swap_record(self, base: Path, old: dict, new: dict) -> bool:
+        """Replace the commit record ``old`` with ``new`` under the commit
+        lock; False, with nothing written, when the MANIFEST no longer
+        holds ``old``."""
+        with self._commit_lock(base):
+            if self._record(base) != old:
+                return False
+            self._put_record(base, new)
+            return True
 
     # ------------------------------------------------------- app tables ----
     def app_table_path(self, name: str) -> str:
@@ -933,7 +941,7 @@ class Lake:
         )
 
     def read_app_table(self, name: str) -> DataFrame:
-        return self._read_dir(Path(self.app_table_path(name)), merge_schema=True)
+        return self._read_dir(Path(self.app_table_path(name)))
 
     def rewrite_app_table(
         self,
@@ -975,31 +983,18 @@ class Lake:
         base = Path(self.app_table_path(name))
         # as compaction and exactly-once appends do: a flattened rewrite
         # would leave the next partitioned append's files unread
-        cur = self._current_dir(base)
-        pcols = (
-            self._detect_partition_cols(self.store.materialize_dir(cur))
-            if cur is not None
-            else []
-        )
+        record, cur = self._snapshot(base)
+        _, pcols = self._table_schema(record, cur)
         ledger: list[str] | None = None
         if carry_exactly_once_ledger:
-            import json as _json
-
-            snap = (
-                expected_version
-                if expected_version is not _UNSET
-                else self._manifest_version(base)
-            )
-            if snap is None:
-                cur = base if base.exists() else None  # legacy-plain or absent
-            else:
-                p = base / str(snap)
-                cur = p if self.store.data_dir_exists(p) else None
+            if expected_version is not _UNSET:
+                snap = {"version": expected_version} if expected_version else {}
+                cur = self._version_dir(base, snap)
+                if cur is not None:
+                    cur = self.store.materialize_dir(cur)
             ledger = []
-            if cur is not None:
-                cur = self.store.materialize_dir(cur)
-                if (cur / "_batches.json").exists():
-                    ledger = _json.loads((cur / "_batches.json").read_text())
+            if cur is not None and (cur / "_batches.json").exists():
+                ledger = json.loads((cur / "_batches.json").read_text())
         self._replace_write(
             df, base, partition_by=pcols or None, expect=expected_version, ledger=ledger
         )
@@ -1095,35 +1090,23 @@ class Lake:
         Returns {files_before, files_after, bytes}.
         """
         base = Path(self.app_table_path(name) if app_table else self.table_path(name))
-        snapshot = self._manifest_version(base)
-        cur = self._current_dir(base)
+        record, cur = self._snapshot(base)
         if cur is None:
             raise FileNotFoundError(f"no committed version to compact: {base}")
-        cur = self.store.materialize_dir(cur)
-        data_files = [
-            p for p in cur.rglob("*") if p.is_file() and not p.name.startswith(("_", "."))
-        ]
-        total = sum(p.stat().st_size for p in data_files)
+        data_files = self._data_files(cur)
+        total = sum(size for _, size in data_files)
         n_out = max(1, -(-total // int(target_bytes)))
         # preserve the physical partition layout (check_date/shard dirs):
         # a bare rewrite would flatten it, breaking partition-drop
-        # retention and pruning. Partition-column TYPES re-infer through
-        # Spark partition discovery, as on any partitioned read.
-        pcols = self._detect_partition_cols(cur)
-        # mergeSchema: after a widening in-place append the version holds
-        # mixed-schema files — a plain read picks one arbitrary footer
-        # and the compaction would silently DROP the widened column's
-        # data (same bug class as the ADVICE-r8 exactly-once-append fix;
-        # reproduced: wide write + narrow evolved append + compact lost
-        # the wide column entirely)
-        df = self._read_parquet_dir(cur, merge_schema=True)
+        # retention and pruning. The recorded schema carries a widening
+        # append's columns, so the rewrite keeps their data.
+        schema, pcols = self._table_schema(record, cur)
+        df = self._scan(cur, schema)
         # carry the exactly-once ledger: compaction preserves the data, so
         # committed epoch ids must stay committed (replays keep no-opping)
         ledger = None
         if (cur / "_batches.json").exists():
-            import json as _json
-
-            ledger = _json.loads((cur / "_batches.json").read_text())
+            ledger = json.loads((cur / "_batches.json").read_text())
         # CAS on the manifest read above: a rewrite committed while the
         # compaction was reading raises ConcurrentWriteError instead of
         # being clobbered (in-place appends remain invisible to the CAS —
@@ -1132,7 +1115,7 @@ class Lake:
         # writes one file per partition dir it holds rows for
         files_after = self._replace_write(
             df.coalesce(int(n_out)), base, partition_by=pcols or None,
-            expect=snapshot, ledger=ledger,
+            expect=record.get("version"), ledger=ledger,
         )
         return {
             "files_before": len(data_files),
@@ -1163,52 +1146,39 @@ class Lake:
         mirrors, implemented in-repo for exactly the cases the ingest /
         near-dup / BM25 streams need).
         """
-        import json as _json
-
         base = Path(self.app_table_path(name))
-        # snapshot FIRST, then resolve the data dir FROM the snapshot: a
-        # commit landing between two independent manifest reads would let
+        # the CAS snapshot, the ledger's dir and the schema all come from
+        # one MANIFEST read: a commit landing between two reads would let
         # the CAS pass against stale data (TOCTOU lost update)
-        snapshot = self._manifest_version(base)
-        if snapshot is None:
-            cur = base if base.exists() else None  # legacy-plain or absent
-        else:
-            p = base / snapshot
-            cur = p if self.store.data_dir_exists(p) else None
-        if cur is not None:
-            cur = self.store.materialize_dir(cur)
+        record, cur = self._snapshot(base)
         ledger: list[str] = []
         if cur is not None and (cur / "_batches.json").exists():
-            ledger = _json.loads((cur / "_batches.json").read_text())
+            ledger = json.loads((cur / "_batches.json").read_text())
         if batch_id in ledger:
             return False
-        # mergeSchema + allowMissingColumns (ADVICE r8): after a widening
-        # append the current version holds mixed-schema files — a plain
-        # read picks one arbitrary footer and the rewrite would silently
-        # drop the widened column's data
-        if cur is None:
+        # the current version's partition layout is kept (a bare rewrite
+        # would flatten e.g. checks' check_date dirs on the first
+        # idempotent append); allowMissingColumns: a widening append adds
+        # columns and an omitted one reads as NULL
+        schema, pcols = self._table_schema(record, cur)
+        if schema is None:
             new = df
         else:
-            existing = self._read_parquet_dir(cur, merge_schema=True)
-            self._check_append_schema(df, cur, allow_schema_evolution=True)
-            new = existing.unionByName(df, allowMissingColumns=True)
+            self._check_append_schema(df, schema, allow_schema_evolution=True)
+            new = self._scan(cur, schema).unionByName(df, allowMissingColumns=True)
         ver = self._new_version()
         staging = base / f"_staging-{ver}"
-        # preserve the current version's partition layout (a bare rewrite
-        # would flatten e.g. checks' check_date dirs on the first
-        # idempotent append)
-        pcols = self._detect_partition_cols(cur) if cur is not None else []
         # r13 opt (guide §6): AQE-rebalance before the write so output
         # files track advisoryPartitionSizeInBytes instead of however
         # many partitions the union arrived with — each epoch's rewrite
         # was accumulating near-empty part files that every read-back
-        # (mergeSchema footers) and the next rewrite re-paid. Keyed by
+        # and the next rewrite re-paid. Keyed by
         # the partition columns when the table is partitioned so each
         # dir gets coherent files (AQE still splits skewed keys).
         new = new.hint("rebalance", *pcols) if pcols else new.hint("rebalance")
         self._write_parquet(new, staging, "overwrite", pcols)
         lf = staging / "_batches.json"
-        lf.write_text(_json.dumps(ledger + [batch_id]))
+        lf.write_text(json.dumps(ledger + [batch_id]))
         fd = os.open(lf, os.O_RDONLY)
         try:
             os.fsync(fd)
@@ -1217,7 +1187,10 @@ class Lake:
         # CAS on the snapshot the ledger was read from: a concurrent
         # committer (possibly retrying the SAME batch) can't be silently
         # overwritten — the loser raises and re-runs against fresh state
-        self._commit_version(base, ver, expect=snapshot, staging=staging)
+        self._commit_version(
+            base, ver, expect=record.get("version"), staging=staging,
+            layout=self._layout(new.schema, pcols),
+        )
         return True
 
     # --------------------------------------------------- commit-log tables ----
@@ -1532,7 +1505,10 @@ class Lake:
                 f"log table gained {len(unfolded)} commit(s) during "
                 "compaction; aborting the flip — retry to fold them"
             )
-        self._commit_version(base, ver, expect=snapshot, staging=staging)
+        self._commit_version(
+            base, ver, expect=snapshot, staging=staging,
+            layout=self._layout(rows.schema, None),
+        )
         # post-flip straggler sweep: markers that landed between the
         # re-list above and the flip are adopted into the new version
         adopted = self._adopt_log_stragglers(base, cur, carried)
