@@ -28,7 +28,7 @@ def test_ingest_dedups_within_and_across_batches(spark, tmp_path):
     assert r1["n_new_content"] == 2 and r1["committed"]
     assert r1["n_corpus_total"] == 2
     # smallest id won the within-batch race
-    ids = {r["doc_id"] for r in lake.read_log_table("corpus_docs").collect()}
+    ids = {r["doc_id"] for r in lake.read_app_table("corpus_docs").collect()}
     assert ids == {1, 2}
 
     # overlapping second batch: only the genuinely new content lands
@@ -72,7 +72,7 @@ def test_ingest_gopher_gate_counts(spark, tmp_path):
     assert r["n_new_content"] == 2
     assert r["n_after_gate"] == 1
     assert r["n_corpus_total"] == 1
-    kept = lake.read_log_table("corpus_docs").select("doc_id").collect()
+    kept = lake.read_app_table("corpus_docs").select("doc_id").collect()
     assert [r["doc_id"] for r in kept] == [1]
 
 
@@ -82,7 +82,7 @@ def test_ingest_preserves_extra_columns_and_fp(spark, tmp_path):
         [(1, "hello world", "web")], "doc_id long, text string, source string"
     )
     ingest_documents(lake, df, batch_id="c1")
-    row = lake.read_log_table("corpus_docs").collect()[0]
+    row = lake.read_app_table("corpus_docs").collect()[0]
     assert row["source"] == "web"
     assert len(row["fp"]) == 32  # md5 hex of the canonical token stream
 
@@ -112,6 +112,6 @@ def test_ingest_keeps_seeing_legacy_rewrite_corpus(spark, tmp_path):
     assert r["n_new_content"] == 1, "legacy fingerprints must still gate"
     assert r["n_corpus_total"] == 3  # 2 legacy + 1 genuinely new
     got = sorted(
-        r["doc_id"] for r in lake.read_log_table("corpus_docs").collect()
+        r["doc_id"] for r in lake.read_app_table("corpus_docs").collect()
     )
     assert got == [1, 2, 11]

@@ -11,6 +11,11 @@ from pyspark.sql import functions as F
 from udata_datalake_service_spark.sinks.lake import Lake
 
 
+def _version_dir(lake, base):
+    """The version dir a table's commit record names."""
+    return base / lake._record(base)["version"]
+
+
 def test_write_read_register_drop(spark, tmp_path):
     lake = Lake(spark, str(tmp_path / "lake"))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
@@ -160,7 +165,7 @@ def test_rewrite_app_table_never_leaves_gap(spark, tmp_path):
         spark.createDataFrame([(i,) for i in range(10)], "id long"), "t"
     )
     base = Path(lake.app_table_path("t"))
-    v1 = lake._current_dir(base)
+    v1 = _version_dir(lake, base)
     kept = lake.read_app_table("t").filter(F.col("id") % 2 == 0)
     lake.rewrite_app_table(kept, "t")
     assert lake.read_app_table("t").count() == 5
@@ -210,11 +215,11 @@ def test_vacuum_reclaims_unreferenced_versions(spark, tmp_path):
     lake = Lake(spark, str(tmp_path / "lake"))
     lake.write_app_table(spark.createDataFrame([(1,)], "id long"), "t")
     base = Path(lake.app_table_path("t"))
-    live = lake._current_dir(base)
+    live = _version_dir(lake, base)
 
     # a rewrite retains the previous version (for in-flight readers)...
     lake.rewrite_app_table(lake.read_app_table("t"), "t")
-    live2 = lake._current_dir(base)
+    live2 = _version_dir(lake, base)
     # ...and a crash leftover: fully-written version, manifest never flipped
     # (made AFTER the rewrite — commit-time GC would have swept it already)
     orphan = base / lake._new_version()
@@ -563,7 +568,7 @@ def test_compact_and_exactly_once_preserve_partition_layout(spark, tmp_path):
     lake.append_app_table(df, "evts", partition_by=["day"])
 
     def partition_dirs():
-        cur = lake._current_dir(Path(lake.app_table_path("evts")))
+        cur = _version_dir(lake, Path(lake.app_table_path("evts")))
         return sorted(
             d.name for d in cur.iterdir() if d.is_dir() and d.name.startswith("day=")
         )
@@ -596,7 +601,7 @@ def test_compact_table_reports_committed_files_on_partitioned_table(spark, tmp_p
     )
     lake.write_app_table(df.repartition(8), "evts", partition_by=["day"])
     stats = lake.compact_table("evts", target_bytes=10**9, app_table=True)
-    cur = lake._current_dir(Path(lake.app_table_path("evts")))
+    cur = _version_dir(lake, Path(lake.app_table_path("evts")))
     assert len(lake._data_files(cur)) == 5
     assert stats["files_before"] > 5
     assert stats["files_after"] == 5
@@ -658,7 +663,7 @@ def test_lake_writes_leave_no_success_marker(spark, tmp_path):
     lake.append_app_table_exactly_once(df, "once", "b0")
     lake.append_app_table_exactly_once(df, "once", "b1")
     lake.append_log_table_exactly_once(df, "log", "b0")
-    lake.compact_log_table("log")
+    lake.compact_table("log", app_table=True)
     lake.write_table(df, "converted")
     lake.compact_table("parted", app_table=True)
     markers = [
@@ -668,7 +673,7 @@ def test_lake_writes_leave_no_success_marker(spark, tmp_path):
     assert lake.read_app_table("parted").count() == 2
     assert lake.read_app_table("flat").count() == 2
     assert lake.read_app_table("once").count() == 2
-    assert lake.read_log_table("log").count() == 1
+    assert lake.read_app_table("log").count() == 1
 
 
 def test_write_bucketed_table_refuses_versioned_target(spark, tmp_path):
@@ -789,11 +794,10 @@ class TestCommitProtocolAcrossBackends:
     def test_log_table_commit_log_laws_across_backends(
         self, spark, tmp_path, proto_store
     ):
-        """The commit-log append (marker-file exactly-once, O(batch))
-        must hold its laws on every backend: commit/replay, torn-append
-        invisibility is covered by the posix law test; here the full
-        append → read → fold → replay → append cycle runs against each
-        store, including the real S3 API."""
+        """The log append (one batch dir per commit, the ledger in the
+        record) holds its laws on every backend: the full append → read
+        → fold → replay → append cycle runs against each store,
+        including the real S3 API."""
         lake = Lake(spark, str(tmp_path / "lake"), store=proto_store)
         b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
         b1 = spark.createDataFrame([(3, "c")], "id long, v string")
@@ -801,14 +805,14 @@ class TestCommitProtocolAcrossBackends:
         assert lake.append_log_table_exactly_once(b0, "t", "ep-0") is False
         assert lake.append_log_table_exactly_once(b1, "t", "ep-1") is True
         want = [(1, "a"), (2, "b"), (3, "c")]
-        assert sorted(map(tuple, lake.read_log_table("t").collect())) == want
-        stats = lake.compact_log_table("t")
-        assert stats["batches_folded"] == 2
-        assert sorted(map(tuple, lake.read_log_table("t").collect())) == want
+        assert sorted(map(tuple, lake.read_app_table("t").collect())) == want
+        stats = lake.compact_table("t", app_table=True)
+        assert stats["files_before"] >= 2 and stats["files_after"] == 1
+        assert sorted(map(tuple, lake.read_app_table("t").collect())) == want
         assert lake.append_log_table_exactly_once(b0, "t", "ep-0") is False
         assert lake.append_log_table_exactly_once(b1, "t", "ep-2") is True
         assert (
-            sorted(map(tuple, lake.read_log_table("t").collect()))
+            sorted(map(tuple, lake.read_app_table("t").collect()))
             == want + [(3, "c")]
         )
 
@@ -947,7 +951,7 @@ class TestCommitProtocolAcrossBackends:
         self, spark, tmp_path, proto_store
     ):
         """ADVICE r10 (medium): a rewrite that PRESERVES exactly-once-
-        appended data (compaction) must carry the _batches.json ledger —
+        appended data (compaction) must carry the record's ledger —
         otherwise a crash-replayed epoch re-commits after compaction and
         double-counts rows the stream checkpoint considers durable."""
         lake = Lake(spark, str(tmp_path / "lakelg"), store=proto_store)
@@ -965,12 +969,10 @@ class TestCommitProtocolAcrossBackends:
         assert lake.append_app_table_exactly_once(df, "t", "epoch-2") is True
         assert lake.read_app_table("t").count() == 6
 
-        # same contract through rewrite_app_table(carry_exactly_once_ledger)
+        # same contract through rewrite_app_table
         snap = lake.table_version("t", app=True)
         merged = lake.read_app_table("t").distinct()
-        lake.rewrite_app_table(
-            merged, "t", expected_version=snap, carry_exactly_once_ledger=True
-        )
+        lake.rewrite_app_table(merged, "t", expected_version=snap)
         assert lake.append_app_table_exactly_once(df, "t", "epoch-2") is False
         assert lake.read_app_table("t").count() == 2  # distinct() kept ids 1,2
 
@@ -1007,9 +1009,7 @@ class TestCommitProtocolAcrossBackends:
         # racing producer commits e1 after the compactor snapshotted
         lake.append_app_table_exactly_once(df, "t", "e1")
         with pytest.raises(ConcurrentWriteError):
-            lake.rewrite_app_table(
-                merged, "t", expected_version=snap, carry_exactly_once_ledger=True
-            )
+            lake.rewrite_app_table(merged, "t", expected_version=snap)
         # the raced epoch survived; ledger intact (replay no-ops)
         assert lake.read_app_table("t").count() == 2
         assert lake.append_app_table_exactly_once(df, "t", "e1") is False
@@ -1311,305 +1311,214 @@ def test_moto_fresh_process_reads_and_drops_bucket_resident_table(spark, tmp_pat
     assert list(store._iter_keys(store._key(base) + "/")) == []
 
 
-# ------------------------------------------------------ commit-log tables ----
-def test_log_table_exactly_once_laws(spark, tmp_path):
-    """append_log_table_exactly_once: O(batch) commits with marker-file
-    atomicity. Laws: commit True / replay False off the marker alone;
-    distinct batches commit independently; a torn append (data dir, no
-    marker) is INVISIBLE to readers and healed in place by the replay;
-    zero-commit reads return the bootstrap schema, empty."""
-    from udata_datalake_service_spark.sinks.lake import Lake
+# ------------------------------------------------------ log tables ----
+def _stores(request):
+    """One fresh store per backend: posix, s3-semantics and, when moto
+    is available, moto-s3."""
+    names = ["posix", "s3-semantics"] + (["moto-s3"] if _S3_TESTS else [])
+    return [(n, _make_store(n, request)) for n in names]
 
-    lake = Lake(spark, str(tmp_path / "lake"))
-    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    b1 = spark.createDataFrame([(3, "c")], "id long, v string")
 
-    assert lake.append_log_table_exactly_once(b0, "t", "ep-0") is True
-    assert lake.append_log_table_exactly_once(b0, "t", "ep-0") is False  # replay
-    assert lake.append_log_table_exactly_once(b1, "t", "ep-1") is True
-    got = sorted(map(tuple, lake.read_log_table("t").collect()))
-    assert got == [(1, "a"), (2, "b"), (3, "c")]
-
-    # torn append: data dir lands, crash before the marker — invisible
+def _table_entries(lake, name):
+    """Every path under a table: local files and dirs, plus its bucket
+    keys on the moto backend."""
     from pathlib import Path
 
-    base = Path(lake.app_table_path("t"))
-    cur = lake._current_dir(base)
-    torn = spark.createDataFrame([(9, "torn")], "id long, v string")
-    torn.write.mode("overwrite").parquet(str(cur / f"batch={lake._log_safe('ep-2')}"))
-    assert sorted(map(tuple, lake.read_log_table("t").collect())) == got
-    # the replay overwrites the torn dir and commits — exactly one copy
-    assert lake.append_log_table_exactly_once(torn, "t", "ep-2") is True
-    got2 = sorted(map(tuple, lake.read_log_table("t").collect()))
-    assert got2 == [(1, "a"), (2, "b"), (3, "c"), (9, "torn")]
-
-    # zero-commit table: bootstrap schema, no rows
-    empty = spark.createDataFrame([], "id long, v string")
-    assert lake.append_log_table_exactly_once(empty, "e", "ep-0") is True
-    r = lake.read_log_table("e")
-    assert r.count() == 0 and set(r.columns) == {"id", "v"}
+    base = Path(lake.app_table_path(name))
+    out = [str(p) for p in base.rglob("*")]
+    if hasattr(lake.store, "_iter_keys"):
+        out += [o["Key"] for o in lake.store._iter_keys(lake.store._key(base) + "/")]
+    return out
 
 
-def test_log_table_compaction_folds_and_markers_survive(spark, tmp_path):
-    """compact_log_table: rows identical before/after (manifest-flip
-    atomic), batch dirs folded to one, and every pre-fold marker
-    survives — a crash-replayed producer keeps no-opping after its rows
-    were folded; post-fold appends land and read normally."""
+def _batch_dirs(lake, name):
+    """The log batch dirs the table's commit record lists."""
     from pathlib import Path
 
-    from udata_datalake_service_spark.sinks.lake import Lake
+    return lake._record(Path(lake.app_table_path(name))).get("dirs", [])[1:]
 
-    lake = Lake(spark, str(tmp_path / "lake"))
-    for ep in range(4):
-        lake.append_log_table_exactly_once(
-            spark.createDataFrame([(ep, f"v{ep}")], "id long, v string"), "t", f"ep-{ep}"
-        )
-    before = sorted(map(tuple, lake.read_log_table("t").collect()))
-    stats = lake.compact_log_table("t")
-    assert stats["batches_folded"] == 4 and stats["markers_carried"] == 4
-    assert sorted(map(tuple, lake.read_log_table("t").collect())) == before
-    base = Path(lake.app_table_path("t"))
-    cur = lake._current_dir(base)
-    assert sum(1 for d in cur.iterdir() if d.name.startswith("batch=")) == 1
 
-    # replays of folded epochs still no-op
-    for ep in range(4):
-        assert (
+def _crash_before_commit(lake, df, name, batch_id):
+    """Run a log append that dies after writing its batch dir, before it
+    takes the commit lock."""
+    real = lake._commit_lock
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before the commit")
+
+    lake._commit_lock = crash
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            lake.append_log_table_exactly_once(df, name, batch_id)
+    finally:
+        lake._commit_lock = real
+
+
+def test_log_table_exactly_once_laws(spark, tmp_path, request):
+    """On every backend: a replay returns False and adds no row; a
+    crashed attempt's unrecorded batch dir is invisible and its replay
+    lands exactly one copy; an empty log table reads 0 rows with its
+    schema and holds no parquet file."""
+    for backend, store in _stores(request):
+        lake = Lake(spark, str(tmp_path / backend), store=store)
+        b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+        b1 = spark.createDataFrame([(3, "c")], "id long, v string")
+        assert lake.append_log_table_exactly_once(b0, "t", "ep-0") is True
+        assert lake.append_log_table_exactly_once(b0, "t", "ep-0") is False
+        assert lake.append_log_table_exactly_once(b1, "t", "ep-1") is True
+        got = sorted(map(tuple, lake.read_app_table("t").collect()))
+        assert got == [(1, "a"), (2, "b"), (3, "c")], backend
+
+        torn = spark.createDataFrame([(9, "torn")], "id long, v string")
+        _crash_before_commit(lake, torn, "t", "ep-2")
+        assert sorted(map(tuple, lake.read_app_table("t").collect())) == got
+        assert lake.append_log_table_exactly_once(torn, "t", "ep-2") is True
+        got2 = sorted(map(tuple, lake.read_app_table("t").collect()))
+        assert got2 == got + [(9, "torn")], backend
+
+        empty = spark.createDataFrame([], "id long, v string")
+        assert lake.append_log_table_exactly_once(empty, "e", "ep-0") is True
+        r = lake.read_app_table("e")
+        assert r.count() == 0 and r.columns == ["id", "v"]
+        assert not [p for p in _table_entries(lake, "e") if p.endswith(".parquet")]
+
+
+def test_log_table_compaction_folds_and_markers_survive(spark, tmp_path, request):
+    """On every backend, compaction keeps the rows and the ledger: its
+    batch dirs fold into one version, every pre-fold id still no-ops,
+    and post-fold appends land and read normally."""
+    for backend, store in _stores(request):
+        lake = Lake(spark, str(tmp_path / backend), store=store)
+        for ep in range(4):
             lake.append_log_table_exactly_once(
-                spark.createDataFrame([(ep, "dup")], "id long, v string"), "t", f"ep-{ep}"
+                spark.createDataFrame([(ep, f"v{ep}")], "id long, v string"),
+                "t", f"ep-{ep}",
             )
-            is False
-        )
-    # and new epochs keep landing
-    assert lake.append_log_table_exactly_once(
-        spark.createDataFrame([(99, "new")], "id long, v string"), "t", "ep-99"
-    ) is True
-    assert sorted(map(tuple, lake.read_log_table("t").collect())) == before + [(99, "new")]
+        before = sorted(map(tuple, lake.read_app_table("t").collect()))
+        stats = lake.compact_table("t", app_table=True)
+        assert stats["files_before"] >= 4 and stats["files_after"] == 1
+        assert sorted(map(tuple, lake.read_app_table("t").collect())) == before
+        assert _batch_dirs(lake, "t") == []
+        for ep in range(4):
+            assert lake.append_log_table_exactly_once(
+                spark.createDataFrame([(ep, "dup")], "id long, v string"),
+                "t", f"ep-{ep}",
+            ) is False, backend
+        assert lake.append_log_table_exactly_once(
+            spark.createDataFrame([(99, "new")], "id long, v string"), "t", "ep-99"
+        ) is True
+        got = sorted(map(tuple, lake.read_app_table("t").collect()))
+        assert got == before + [(99, "new")], backend
 
 
-def test_log_table_append_cost_is_batch_sized(spark, tmp_path):
+def test_log_table_append_cost_is_batch_sized(spark, tmp_path, request):
     """The reason this verb exists: committing epoch N must not rewrite
-    epochs 0..N-1. Pinned structurally (no wall-clock): after each
-    append, every PRIOR batch dir's data files are bit-identical (same
-    paths, sizes, mtimes) — an O(table) rewrite would recreate them."""
+    epochs 0..N-1. Pinned structurally (no wall-clock), on every
+    backend: after each append, every PRIOR batch's data files are
+    bit-identical (same paths, sizes, mtimes)."""
     from pathlib import Path
 
-    from udata_datalake_service_spark.sinks.lake import Lake
-
-    lake = Lake(spark, str(tmp_path / "lake"))
-    seen: dict[str, tuple] = {}
-    for ep in range(5):
-        lake.append_log_table_exactly_once(
-            spark.createDataFrame([(ep,)], "id long"), "t", f"ep-{ep}"
-        )
+    for backend, store in _stores(request):
+        lake = Lake(spark, str(tmp_path / backend), store=store)
         base = Path(lake.app_table_path("t"))
-        cur = lake._current_dir(base)
-        for d in cur.iterdir():
-            if not d.name.startswith("batch="):
-                continue
-            for p in d.glob("*.parquet"):
-                sig = (p.stat().st_size, p.stat().st_mtime_ns)
-                if str(p) in seen:
-                    assert seen[str(p)] == sig, f"prior batch file rewritten: {p}"
-                seen[str(p)] = sig
-    assert len(seen) >= 5
+        seen: dict[str, tuple] = {}
+        for ep in range(5):
+            lake.append_log_table_exactly_once(
+                spark.createDataFrame([(ep,)], "id long"), "t", f"ep-{ep}"
+            )
+            for d in _batch_dirs(lake, "t"):
+                for p in (base / d).glob("*.parquet"):
+                    sig = (p.stat().st_size, p.stat().st_mtime_ns)
+                    if str(p) in seen:
+                        assert seen[str(p)] == sig, f"prior batch file rewritten: {p}"
+                    seen[str(p)] = sig
+        assert len(seen) >= 5, backend
 
 
-def test_log_table_concurrent_distinct_batches_all_commit(spark, tmp_path):
-    """The no-shared-read-modify-write claim, exercised for real: four
-    distinct batches committed from four threads at once must all land
-    exactly once (the rewrite-ledger path would CAS-conflict here; the
-    marker protocol has nothing to conflict on)."""
+def test_log_table_concurrent_distinct_batches_all_commit(spark, tmp_path, request):
+    """Four distinct batches committed from four threads at once, the
+    first ones creating the table, all land exactly once on every
+    backend: each writes its own dir, and the commit lock serializes
+    only the record PUTs."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from udata_datalake_service_spark.sinks.lake import Lake
+    for backend, store in _stores(request):
+        lake = Lake(spark, str(tmp_path / backend), store=store)
 
-    lake = Lake(spark, str(tmp_path / "lake"))
-    # bootstrap serially so the racing appends all land in one version
-    lake.append_log_table_exactly_once(
-        spark.createDataFrame([(0,)], "id long"), "t", "ep-0"
-    )
+        def commit(ep: int) -> bool:
+            return lake.append_log_table_exactly_once(
+                spark.createDataFrame([(ep * 10 + j,) for j in range(3)], "id long"),
+                "t",
+                f"ep-{ep}",
+            )
 
-    def commit(ep: int) -> bool:
-        return lake.append_log_table_exactly_once(
-            spark.createDataFrame([(ep * 10 + j,) for j in range(3)], "id long"),
-            "t",
-            f"ep-{ep}",
-        )
-
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        results = list(ex.map(commit, [1, 2, 3, 4]))
-    assert results == [True, True, True, True]
-    got = sorted(r["id"] for r in lake.read_log_table("t").collect())
-    assert got == sorted([0] + [e * 10 + j for e in (1, 2, 3, 4) for j in range(3)])
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            results = list(ex.map(commit, [1, 2, 3, 4]))
+        assert results == [True, True, True, True], backend
+        got = sorted(r["id"] for r in lake.read_app_table("t").collect())
+        assert got == sorted(e * 10 + j for e in (1, 2, 3, 4) for j in range(3))
 
 
 def test_moto_log_replay_after_partial_upload_no_duplicates(spark, tmp_path, request):
-    """ADVICE r11 (high): on the S3 backend a crash AFTER some batch part
-    files were uploaded but BEFORE the marker PUT must not poison the
-    batch — the replay's Spark job picks different part-file names, and
-    the delta upload is add-only, so without the pre-write prefix clear
-    the marker would commit BOTH attempts' files (duplicate rows).
-
-    Simulated by planting a stale first-attempt part file directly under
-    the batch prefix in the bucket (markerless, so invisible), then
-    replaying the append and asserting the read holds exactly one copy
-    and the stale key is gone."""
-    from pathlib import Path
-
+    """On the S3 backend a crash AFTER some of a batch's part files were
+    uploaded leaves objects under a prefix no record lists: they stay
+    invisible, and the replay, which writes a new dir, lands exactly one
+    copy of the batch."""
     store = _make_store("moto-s3", request)
     lake = Lake(spark, str(tmp_path / "lakedup"), store=store)
     b0 = spark.createDataFrame([(1, "a")], "id long, v string")
     b1 = spark.createDataFrame([(2, "b")], "id long, v string")
     assert lake.append_log_table_exactly_once(b0, "t", "ep-0") is True
-
-    base = Path(lake.app_table_path("t"))
-    cur = lake._current_dir(base)
-    bdir = cur / f"batch={lake._log_safe('ep-1')}"
-    # first attempt's upload: same rows, a part-file name the replay's
-    # job will never reuse
-    stale_local = tmp_path / "stale"
-    b1.coalesce(1).write.mode("overwrite").parquet(str(stale_local))
-    (src,) = stale_local.glob("*.parquet")
-    stale_key = (
-        store._key(bdir) + "/part-00000-stale-attempt.c000.snappy.parquet"
-    )
-    store.c.put_object(Bucket=store.bucket, Key=stale_key, Body=src.read_bytes())
-    # markerless ⇒ the torn attempt is invisible
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [1]
-
-    # replay: must clear the prefix before re-uploading, then commit
+    _crash_before_commit(lake, b1, "t", "ep-1")
+    assert sorted(r["id"] for r in lake.read_app_table("t").collect()) == [1]
     assert lake.append_log_table_exactly_once(b1, "t", "ep-1") is True
-    got = sorted(map(tuple, lake.read_log_table("t").collect()))
+    got = sorted(map(tuple, lake.read_app_table("t").collect()))
     assert got == [(1, "a"), (2, "b")], f"duplicate rows from stale attempt: {got}"
-    keys = [o["Key"] for o in store._iter_keys(store._key(bdir) + "/")]
-    assert stale_key not in keys
 
 
 def test_log_append_migrates_legacy_rewrite_rows(spark, tmp_path, proto_store):
-    """ADVICE r11 (medium): the first commit-log append to a table built
-    by the REWRITE path (rows as root-level part files) must not hide the
-    pre-existing rows — they are folded into a marker-committed legacy
-    batch, once, on every backend."""
+    """A log append to a table built by the rewriting exactly-once
+    append keeps the table's rows visible: its batch dir is recorded
+    beside the version dir, on every backend."""
     lake = Lake(spark, str(tmp_path / "lakemig"), store=proto_store)
     legacy = spark.createDataFrame([(1, "old"), (2, "old")], "id long, v string")
     assert lake.append_app_table_exactly_once(legacy, "t", "rw-0") is True
-    # pre-migration read already works via the zero-marker root fallback
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [1, 2]
-
     new = spark.createDataFrame([(3, "new")], "id long, v string")
     assert lake.append_log_table_exactly_once(new, "t", "ep-0") is True
-    got = sorted(map(tuple, lake.read_log_table("t").collect()))
-    assert got == [(1, "old"), (2, "old"), (3, "new")]
-    # idempotent: further appends do not re-fold the legacy rows
     assert lake.append_log_table_exactly_once(
         spark.createDataFrame([(4, "new")], "id long, v string"), "t", "ep-1"
     ) is True
-    got = sorted(map(tuple, lake.read_log_table("t").collect()))
+    got = sorted(map(tuple, lake.read_app_table("t").collect()))
     assert got == [(1, "old"), (2, "old"), (3, "new"), (4, "new")]
-    # and the fingerprint-shaped anti-join keeps seeing legacy rows
-    assert lake.read_log_table("t").where("v = 'old'").count() == 2
+    # one ledger: each verb refuses the other's ids
+    assert lake.append_log_table_exactly_once(legacy, "t", "rw-0") is False
+    assert lake.append_app_table_exactly_once(new, "t", "ep-0") is False
 
 
 def test_log_append_refuses_partitioned_legacy_table(spark, tmp_path):
-    """Partitioned rewrite-path rows live under col=value/ dirs the root
-    fold cannot carry — the append must refuse loudly instead of hiding
-    them (partial migration would be the silent-loss bug in disguise)."""
-    import pytest as _pytest
-
+    """Typed refusals naming the table: a log append to a partitioned
+    table (Spark refuses several partitioned roots in one read) or to a
+    table with data but no commit record raises ValueError before it
+    writes anything."""
     lake = Lake(spark, str(tmp_path / "lakepart"))
     legacy = spark.createDataFrame(
         [(1, "a", "d1"), (2, "b", "d2")], "id long, v string, day string"
     )
     lake.write_app_table(legacy, "t", partition_by=["day"])
-    with _pytest.raises(ValueError, match="partitioned rewrite-path data"):
-        lake.append_log_table_exactly_once(
-            spark.createDataFrame([(3, "c", "d3")], "id long, v string, day string"),
-            "t",
-            "ep-0",
-        )
-
-
-def test_compact_log_table_aborts_on_concurrent_append(spark, tmp_path):
-    """ADVICE r11: an append committing between the fold's read and its
-    manifest flip would be dropped (its marker carried ⇒ replay no-ops ⇒
-    rows silently lost forever). The post-staging marker re-list must
-    abort the flip; a retry folds everything."""
-    import pytest as _pytest
-
-    from udata_datalake_service_spark.sinks.lake import ConcurrentWriteError
-
-    lake = Lake(spark, str(tmp_path / "lakeca"))
-    for ep in range(2):
-        lake.append_log_table_exactly_once(
-            spark.createDataFrame([(ep,)], "id long"), "t", f"ep-{ep}"
-        )
-
-    real_read = lake.read_log_table
-    fired = {"done": False}
-
-    def read_with_concurrent_append(name):
-        # lands AFTER compact listed its fold set, BEFORE the flip
-        if not fired["done"]:
-            fired["done"] = True
-            assert lake.append_log_table_exactly_once(
-                spark.createDataFrame([(99,)], "id long"), "t", "ep-late"
-            ) is True
-        return real_read(name)
-
-    lake.read_log_table = read_with_concurrent_append
-    try:
-        with _pytest.raises(ConcurrentWriteError, match="gained 1 commit"):
-            lake.compact_log_table("t")
-    finally:
-        lake.read_log_table = real_read
-    # nothing lost: the late append is visible, and a retry folds it too
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [0, 1, 99]
-    stats = lake.compact_log_table("t")
-    assert stats["batches_folded"] == 3
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [0, 1, 99]
-    # the late producer's replay still no-ops after the fold
-    assert lake.append_log_table_exactly_once(
-        spark.createDataFrame([(99,)], "id long"), "t", "ep-late"
-    ) is False
-
-
-def test_log_bootstrap_cas_loser_adopts_winner(spark, tmp_path):
-    """ADVICE r11: two concurrent FIRST appends to a brand-new log table
-    both take the schema-bootstrap path; the manifest-CAS loser must
-    adopt the winner's (identical, schema-only) bootstrap and commit its
-    batch instead of raising. Deterministic loser simulation: the
-    bootstrap write races a winner that publishes first."""
-    from udata_datalake_service_spark.sinks.lake import ConcurrentWriteError
-
-    lake = Lake(spark, str(tmp_path / "lakeboot"))
-    winner = Lake(spark, str(tmp_path / "lakeboot"))
-    real_replace = lake._replace_write
-
-    def losing_replace(df, base, **kw):
-        # the winner bootstraps + commits its batch while the loser's
-        # bootstrap is in flight; the loser's CAS then fails
-        winner.append_log_table_exactly_once(
-            spark.createDataFrame([(1,)], "id long"), "t", "ep-w"
-        )
-        raise ConcurrentWriteError("manifest moved: simulated lost bootstrap race")
-
-    lake._replace_write = losing_replace
-    try:
-        assert lake.append_log_table_exactly_once(
-            spark.createDataFrame([(2,)], "id long"), "t", "ep-l"
-        ) is True
-    finally:
-        lake._replace_write = real_replace
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [1, 2]
+    with pytest.raises(ValueError, match="'t'.*partitioned by"):
+        lake.append_log_table_exactly_once(legacy, "t", "ep-0")
+    legacy.write.parquet(lake.app_table_path("plain"))
+    with pytest.raises(ValueError, match="'plain'.*no commit record"):
+        lake.append_log_table_exactly_once(legacy, "plain", "ep-0")
+    assert lake.read_app_table("t").count() == 2
+    assert lake.read_app_table("plain").count() == 2
+    assert _batch_dirs(lake, "t") == []
 
 
 def test_moto_log_append_is_o_batch_no_data_download(spark, tmp_path, request):
-    """The commit-log append on the bucket backend must stay O(batch):
-    committing epoch N from a fresh host (empty local cache) must NOT
-    download the other batches' data bytes — only the control surface
-    (markers + root schema files). Before r12 the append materialized
-    the WHOLE version prefix, silently making every commit O(table)."""
+    """The log append on the bucket backend stays O(batch): committing
+    epoch N from a fresh host (empty local cache) downloads no other
+    batch's data, and neither does a replay."""
     import shutil as _shutil
     from pathlib import Path
 
@@ -1620,50 +1529,27 @@ def test_moto_log_append_is_o_batch_no_data_download(spark, tmp_path, request):
         assert lake_a.append_log_table_exactly_once(
             spark.createDataFrame([(ep,)], "id long"), "t", f"ep-{ep}"
         )
-    # fresh host: no local cache at all
-    _shutil.rmtree(root)
+    _shutil.rmtree(root)  # fresh host: no local cache at all
     lake_b = Lake(spark, root, store=store)
+    base = Path(lake_b.app_table_path("t"))
     assert lake_b.append_log_table_exactly_once(
         spark.createDataFrame([(99,)], "id long"), "t", "ep-99"
     ) is True
-    cur = lake_b._current_dir(Path(lake_b.app_table_path("t")))
-    cached_batches = {
-        d.name for d in cur.iterdir() if d.name.startswith("batch=")
-    }
-    # only the batch this host committed is in its local cache
-    assert cached_batches == {f"batch={lake_b._log_safe('ep-99')}"}, cached_batches
-    # markers for all PRIOR epochs were fetched (replay checks work);
-    # this host's own marker is a bucket-side conditional PUT
-    assert len(list((cur / "_commits").glob("*.json"))) == 3
-    marker_keys = [
-        o["Key"]
-        for o in store._iter_keys(store._key(cur / "_commits") + "/")
-    ]
-    assert len(marker_keys) == 4
-    # and a replay of an old epoch still no-ops without data downloads
+    mine = {d.name for d in base.iterdir() if d.name.startswith("b-")}
+    assert len(mine) == 1 and mine <= set(_batch_dirs(lake_b, "t"))
     assert lake_b.append_log_table_exactly_once(
         spark.createDataFrame([(0,)], "id long"), "t", "ep-0"
     ) is False
-    cached_batches = {
-        d.name for d in cur.iterdir() if d.name.startswith("batch=")
-    }
-    assert cached_batches == {f"batch={lake_b._log_safe('ep-99')}"}
-    # full read still sees every committed row (materialize_dir path)
-    assert sorted(r["id"] for r in lake_b.read_log_table("t").collect()) == [
+    assert {d.name for d in base.iterdir() if d.name.startswith("b-")} == mine
+    assert sorted(r["id"] for r in lake_b.read_app_table("t").collect()) == [
         0, 1, 2, 99,
     ]
 
 
 def test_moto_partitioned_legacy_guard_survives_fresh_host(spark, tmp_path, request):
-    """ADVICE r12 (medium): the partitioned-legacy refusal in
-    _migrate_legacy_log_roots used local iterdir, but materialize_control
-    deliberately skips col=value/ data keys on the bucket backend — on a
-    FRESH host the guard silently passed and the first commit-log marker
-    hid the partitioned legacy rows. The guard must detect partition dirs
-    from the backend listing."""
+    """The partitioned-table refusal reads the commit record, so it holds
+    on a fresh host whose local cache has none of the table's dirs."""
     import shutil as _shutil
-
-    import pytest as _pytest
 
     store = _make_store("moto-s3", request)
     root = str(tmp_path / "lakepartmoto")
@@ -1672,14 +1558,11 @@ def test_moto_partitioned_legacy_guard_survives_fresh_host(spark, tmp_path, requ
         [(1, "a", "d1"), (2, "b", "d2")], "id long, v string, day string"
     )
     lake_a.write_app_table(legacy, "t", partition_by=["day"])
-    # fresh host: empty local cache, rows live only in the bucket
     _shutil.rmtree(root)
     lake_b = Lake(spark, root, store=store)
-    with _pytest.raises(ValueError, match="partitioned rewrite-path data"):
+    with pytest.raises(ValueError, match="partitioned by"):
         lake_b.append_log_table_exactly_once(
-            spark.createDataFrame(
-                [(3, "c", "d3")], "id long, v string, day string"
-            ),
+            spark.createDataFrame([(3, "c", "d3")], "id long, v string, day string"),
             "t",
             "ep-0",
         )
@@ -1688,10 +1571,11 @@ def test_moto_partitioned_legacy_guard_survives_fresh_host(spark, tmp_path, requ
 def test_compact_adopts_straggler_between_relist_and_flip(
     spark, tmp_path, proto_store
 ):
-    """ADVICE r12 (medium): a marker landing AFTER the fold's re-list but
-    BEFORE the manifest flip was silently lost (its producer already
-    returned True, so no replay ever comes). The post-flip straggler
-    sweep must adopt it into the new version."""
+    """An append that commits while a compaction runs (after its read,
+    before its flip) is kept: the compaction's flip keeps every batch
+    dir recorded after its snapshot, so the append's rows are readable
+    as soon as it returns True, with no recovery step, and its replay
+    returns False."""
     lake = Lake(spark, str(tmp_path / "lakestrag"), store=proto_store)
     for ep in range(2):
         assert lake.append_log_table_exactly_once(
@@ -1702,120 +1586,193 @@ def test_compact_adopts_straggler_between_relist_and_flip(
     fired = {"done": False}
 
     def commit_with_straggler(base, ver, expect=None, staging=None, **kw):
-        # lands AFTER the re-list (which runs before _commit_version),
-        # BEFORE the flip — the exact formerly-lost window
         if not fired["done"]:
             fired["done"] = True
             assert lake.append_log_table_exactly_once(
                 spark.createDataFrame([(99,)], "id long"), "t", "ep-strag"
             ) is True
+            assert sorted(r["id"] for r in lake.read_app_table("t").collect()) == [
+                0, 1, 99,
+            ]
         return real_commit(base, ver, expect=expect, staging=staging, **kw)
 
     lake._commit_version = commit_with_straggler
     try:
-        stats = lake.compact_log_table("t")
+        lake.compact_table("t", app_table=True)
     finally:
         lake._commit_version = real_commit
-    assert stats["stragglers_adopted"] == 1
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [0, 1, 99]
-    # the straggler's producer replay still no-ops (marker adopted)
+    assert fired["done"]
+    assert sorted(r["id"] for r in lake.read_app_table("t").collect()) == [0, 1, 99]
+    assert len(_batch_dirs(lake, "t")) == 1
     assert lake.append_log_table_exactly_once(
         spark.createDataFrame([(99,)], "id long"), "t", "ep-strag"
     ) is False
-    # a further compaction folds the adopted dir like any other batch
-    stats2 = lake.compact_log_table("t")
-    assert stats2["batches_folded"] == 2  # fold dir + adopt dir
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [0, 1, 99]
+    # a further compaction folds the kept dir like any other batch
+    lake.compact_table("t", app_table=True)
+    assert _batch_dirs(lake, "t") == []
+    assert sorted(r["id"] for r in lake.read_app_table("t").collect()) == [0, 1, 99]
 
 
 def test_append_post_verify_survives_concurrent_compaction_flip(
     spark, tmp_path, proto_store
 ):
-    """Producer side of the lost-append fence: when the compaction's
-    re-list AND sweep both ran before this append's marker landed, the
-    append must notice the manifest moved and re-append into the new
-    version instead of reporting success for invisible rows."""
-    from pathlib import Path as _P
-
+    """A compaction that flips while an append is writing its batch
+    (after the append's ledger check, before its commit) does not hide
+    the append: the append records its dir in the compacted record."""
     lake = Lake(spark, str(tmp_path / "lakefence"), store=proto_store)
     assert lake.append_log_table_exactly_once(
         spark.createDataFrame([(0,)], "id long"), "t", "ep-0"
     ) is True
 
-    target = f"{lake._log_safe('ep-late')}.json"
-    real_tce = proto_store.try_create_exclusive
+    real_lock = lake._commit_lock
     fired = {"done": False}
 
-    def tce_with_flip(path, data):
-        # compaction completes (flip + sweep) just before the producer's
-        # marker becomes durable in the OLD version dir
-        if _P(path).name == target and not fired["done"]:
+    def lock_after_compaction(base, *a, **k):
+        if not fired["done"]:
             fired["done"] = True
-            lake.compact_log_table("t")
-        return real_tce(path, data)
+            lake.compact_table("t", app_table=True)
+        return real_lock(base, *a, **k)
 
-    proto_store.try_create_exclusive = tce_with_flip
+    lake._commit_lock = lock_after_compaction
     try:
         assert lake.append_log_table_exactly_once(
             spark.createDataFrame([(7,)], "id long"), "t", "ep-late"
         ) is True
     finally:
-        proto_store.try_create_exclusive = real_tce
-    rows = [r["id"] for r in lake.read_log_table("t").collect()]
+        lake._commit_lock = real_lock
+    assert fired["done"]
+    rows = [r["id"] for r in lake.read_app_table("t").collect()]
     assert sorted(rows) == [0, 7]  # exactly once: no loss, no duplicate
     assert lake.append_log_table_exactly_once(
         spark.createDataFrame([(7,)], "id long"), "t", "ep-late"
     ) is False
 
 
-def test_recover_log_table_after_sweep_crash(spark, tmp_path, proto_store):
-    """The one residual window: compactor crashes between its flip and
-    its straggler sweep. recover_log_table (run automatically at the
-    next compaction) must adopt the stragglers from the swept-from
-    breadcrumb."""
-    import pytest as _pytest
+def test_vacuum_reclaims_unrecorded_batch_dir_after_grace(
+    spark, tmp_path, proto_store
+):
+    """A crashed append's batch dir is reclaimed by vacuum only once it
+    is older than the staging grace (a younger one may be an in-flight
+    append); recorded batch dirs are never reclaimed."""
+    from pathlib import Path
 
-    lake = Lake(spark, str(tmp_path / "lakerec"), store=proto_store)
-    for ep in range(2):
-        assert lake.append_log_table_exactly_once(
-            spark.createDataFrame([(ep,)], "id long"), "t", f"ep-{ep}"
-        ) is True
+    lake = Lake(spark, str(tmp_path / "lakevac"), store=proto_store)
+    base = Path(lake.app_table_path("t"))
+    df = spark.createDataFrame([(1,)], "id long")
+    assert lake.append_log_table_exactly_once(df, "t", "ep-0") is True
+    _crash_before_commit(lake, df, "t", "ep-1")
+    recorded = set(_batch_dirs(lake, "t"))
 
-    real_commit = lake._commit_version
-    fired = {"done": False}
+    def on_disk():
+        return {n for n in lake.store.list_subdirs(base) if n.startswith("b-")}
 
-    def commit_with_straggler(base, ver, expect=None, staging=None, **kw):
-        if not fired["done"]:
-            fired["done"] = True
-            assert lake.append_log_table_exactly_once(
-                spark.createDataFrame([(99,)], "id long"), "t", "ep-strag"
-            ) is True
-        return real_commit(base, ver, expect=expect, staging=staging, **kw)
+    (orphan,) = on_disk() - recorded
+    assert not [r for r in lake.vacuum(staging_grace_s=3600.0) if "b-" in r]
+    assert orphan in on_disk()
+    removed = lake.vacuum(staging_grace_s=0.0)
+    assert [r for r in removed if "b-" in r] == [str(base / orphan)]
+    assert on_disk() == recorded
+    assert [r["id"] for r in lake.read_app_table("t").collect()] == [1]
 
-    real_sweep = lake._adopt_log_stragglers
 
-    def crashing_sweep(*a, **k):
-        raise RuntimeError("injected crash between flip and sweep")
+def test_every_verb_keeps_a_log_tables_rows(spark, tmp_path, proto_store):
+    """Verb mixing: after two log appends, `read_app_table`,
+    `rewrite_app_table`, `compact_table` and
+    `append_app_table_exactly_once` each return or keep exactly the
+    committed rows, with the table's own columns, and a replay of every
+    committed id through either exactly-once verb returns False."""
+    lake = Lake(spark, str(tmp_path / "lakemix"), store=proto_store)
+    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    b1 = spark.createDataFrame([(3, "c")], "id long, v string")
+    b2 = spark.createDataFrame([(4, "d")], "id long, v string")
+    want = [(1, "a"), (2, "b"), (3, "c")]
 
-    lake._commit_version = commit_with_straggler
-    lake._adopt_log_stragglers = crashing_sweep
-    try:
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            lake.compact_log_table("t")
-    finally:
-        lake._commit_version = real_commit
-        lake._adopt_log_stragglers = real_sweep
-    # honest intermediate state: the flip happened, the straggler is
-    # invisible until recovery runs
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [0, 1]
-    out = lake.recover_log_table("t")
-    assert out["stragglers_adopted"] == 1
-    assert sorted(r["id"] for r in lake.read_log_table("t").collect()) == [0, 1, 99]
-    # recovery is idempotent
-    assert lake.recover_log_table("t")["stragglers_adopted"] == 0
-    assert lake.append_log_table_exactly_once(
-        spark.createDataFrame([(99,)], "id long"), "t", "ep-strag"
-    ) is False
+    def appended(name):
+        assert lake.append_log_table_exactly_once(b0, name, "ep-0") is True
+        assert lake.append_log_table_exactly_once(b1, name, "ep-1") is True
+
+    def check(name, rows, ids):
+        back = lake.read_app_table(name)
+        assert back.columns == ["id", "v"], name
+        assert sorted(map(tuple, back.collect())) == rows, name
+        for i in ids:
+            assert lake.append_log_table_exactly_once(b2, name, i) is False, (name, i)
+            assert lake.append_app_table_exactly_once(b2, name, i) is False, (name, i)
+        assert sorted(map(tuple, lake.read_app_table(name).collect())) == rows
+
+    appended("read")
+    check("read", want, ["ep-0", "ep-1"])
+    appended("rewrite")
+    lake.rewrite_app_table(lake.read_app_table("rewrite"), "rewrite")
+    check("rewrite", want, ["ep-0", "ep-1"])
+    appended("compact")
+    lake.compact_table("compact", app_table=True)
+    check("compact", want, ["ep-0", "ep-1"])
+    appended("once")
+    assert lake.append_app_table_exactly_once(b2, "once", "ep-2") is True
+    check("once", want + [(4, "d")], ["ep-0", "ep-1", "ep-2"])
+
+
+def test_log_table_reads_with_no_job(spark, tmp_path, count_jobs):
+    """A log table with 32 batch dirs reads with no Spark job, from a
+    fresh `Lake` as from a warm one (the record holds the schema and
+    Spark lists up to 32 root paths on the driver), and a replay runs
+    no job either."""
+    root = str(tmp_path / "lake")
+    lake = Lake(spark, root)
+    for ep in range(32):
+        lake.append_log_table_exactly_once(
+            spark.createDataFrame([(ep, f"v{ep}")], "id long, v string"), "t", f"ep-{ep}"
+        )
+    assert len(_batch_dirs(lake, "t")) == 32
+    for reader in (lake, Lake(spark, root)):
+        back, n = count_jobs(lambda: reader.read_app_table("t"))
+        assert n == 0
+        assert sorted(r["id"] for r in back.collect()) == list(range(32))
+    replay, n = count_jobs(
+        lambda: lake.append_log_table_exactly_once(
+            spark.createDataFrame([(0, "v0")], "id long, v string"), "t", "ep-0"
+        )
+    )
+    assert replay is False and n == 0
+
+
+def test_every_verb_leaves_one_commit_point(spark, tmp_path, proto_store):
+    """The MANIFEST record is the lake's only commit point: after every
+    verb, no table holds a marker dir, a ledger file, a recovery
+    breadcrumb or an adoption dir, and an empty log table holds no
+    parquet file."""
+    lake = Lake(spark, str(tmp_path / "lakeone"), store=proto_store)
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    names = ["app", "once", "log", "empty", "tables/conv", "tables_index"]
+
+    def walk():
+        for name in names:
+            for p in _table_entries(lake, name):
+                parts = p.split("/")
+                assert not {"_commits", "_batches.json", "swept-from.json"} & set(parts), p
+                assert not any(x.endswith("-adopt") for x in parts), p
+        assert not [p for p in _table_entries(lake, "empty") if p.endswith(".parquet")]
+
+    for verb in (
+        lambda: lake.write_app_table(df, "app"),
+        lambda: lake.append_app_table(df, "app"),
+        lambda: lake.append_app_table_exactly_once(df, "once", "b0"),
+        lambda: lake.append_log_table_exactly_once(df, "log", "b0"),
+        lambda: lake.append_log_table_exactly_once(df.limit(0), "empty", "b0"),
+        lambda: lake.append_log_table_exactly_once(df, "log", "b0"),
+        lambda: lake.append_app_table_exactly_once(df, "once", "b0"),
+        lambda: lake.rewrite_app_table(lake.read_app_table("log"), "log"),
+        lambda: lake.append_log_table_exactly_once(df, "log", "b1"),
+        lambda: lake.compact_table("log", app_table=True),
+        lambda: lake.write_table(df, "conv"),
+        lambda: lake.register("conv", {}, "r1", "https://x/conv.csv"),
+        lambda: lake.vacuum(staging_grace_s=0.0),
+    ):
+        verb()
+        walk()
+    assert lake.read_app_table("log").count() == 2
+    assert lake.read_app_table("empty").count() == 0
 
 
 # ----------------------------------------------------- commit record ----
@@ -1831,7 +1788,7 @@ class TestCommitRecord:
 
     @staticmethod
     def _fresh_merge_read(spark, lake, base):
-        cur = lake.store.materialize_dir(lake._current_dir(base))
+        cur = lake.store.materialize_dir(_version_dir(lake, base))
         return spark.read.option("mergeSchema", "true").parquet(str(cur))
 
     def _assert_reads_as_inferred(self, spark, lake, base, read, count_jobs):
@@ -2001,6 +1958,24 @@ class TestCommitRecord:
         )
         assert lake.read_app_table("old").columns == ["id", "v", "w", "day"]
         assert lake.read_app_table("old").count() == 3
+
+        # a plain dir's partition types come from its directory values:
+        # date-looking strings read as date, and an append must cast
+        text = spark.createDataFrame([(1, "2024-01-01")], "id long, day string")
+        text.write.partitionBy("day").parquet(lake.app_table_path("texts"))
+        with pytest.raises(
+            ValueError,
+            match=r"partition column 'day'.*no commit record.*directory "
+            r"values, which read as date.*Cast 'day' to date",
+        ):
+            lake.append_app_table(text, "texts", partition_by=["day"])
+        lake.append_app_table(
+            text.withColumn("day", F.to_date("day")), "texts", partition_by=["day"]
+        )
+        back = lake.read_app_table("texts")
+        assert sorted((r["id"], str(r["day"])) for r in back.collect()) == [
+            (1, "2024-01-01"), (1, "2024-01-01"),
+        ]
 
     def test_widening_append_that_raises_leaves_record_and_rows(
         self, spark, tmp_path, proto_store

@@ -78,3 +78,22 @@ def test_cold_route_job_budget(spark, lake_root, count_jobs):
         for route in ROUTE_JOBS
     }
     assert got == ROUTE_JOBS
+
+
+def test_crawl_cycle_lake_call_job_budget(spark, lake_root, count_jobs):
+    """The lake calls a crawl cycle makes, each pinned to its jobs: a
+    read builds its frame with none (the record holds the schema), and a
+    rewrite of the unpartitioned catalog or a partitioned append of
+    checks runs only its write."""
+    lake = Lake(spark, lake_root)
+    assert count_jobs(lambda: lake.read_app_table("catalog"))[1] == 0
+    assert count_jobs(lambda: lake.read_app_table("checks"))[1] == 0
+    claimed = lake.read_app_table("catalog").withColumn("status", F.lit("CRAWLING_URL"))
+    assert count_jobs(lambda: lake.rewrite_app_table(claimed, "catalog"))[1] == 1
+    old = lake.read_app_table("checks")
+    checks = spark.createDataFrame(old.take(2), old.schema)
+    _, n = count_jobs(
+        lambda: lake.append_app_table(checks, "checks", partition_by=["check_date"])
+    )
+    assert n == 1
+    assert lake.read_app_table("checks").count() == 8

@@ -509,18 +509,18 @@ def test_streaming_corpus_ingest_exactly_once(spark, tmp_path):
     shard([(1, "alpha beta", "en", "web", 10), (2, "gamma delta", "en", "web", 11)], "s1")
     q = corpus_ingest_stream(spark, src, lake, ckpt)
     q.awaitTermination(120)
-    assert lake.read_log_table("corpus_docs").count() == 2
+    assert lake.read_app_table("corpus_docs").count() == 2
 
     # restart on the same checkpoint with nothing new: no duplicates
     q = corpus_ingest_stream(spark, src, lake, ckpt)
     q.awaitTermination(120)
-    assert lake.read_log_table("corpus_docs").count() == 2
+    assert lake.read_app_table("corpus_docs").count() == 2
 
     # overlapping shard: state store drops the re-crawled doc 1 content
     shard([(3, "alpha  BETA!", "en", "web", 12), (4, "epsilon zeta", "en", "web", 13)], "s2")
     q = corpus_ingest_stream(spark, src, lake, ckpt)
     q.awaitTermination(120)
-    got = lake.read_log_table("corpus_docs")
+    got = lake.read_app_table("corpus_docs")
     assert got.count() == 3
     assert {r["doc_id"] for r in got.select("doc_id").collect()} == {1, 2, 4}
 
@@ -532,7 +532,7 @@ def test_streaming_corpus_ingest_exactly_once(spark, tmp_path):
         [(9, "nu xi", "en", "web", 9)], DOCUMENTS_SCHEMA
     ).withColumn("fp", _fp(F.col("text")))
     assert lake.append_log_table_exactly_once(replay, "corpus_docs", f"{prefix}-0") is False
-    assert lake.read_log_table("corpus_docs").count() == 3
+    assert lake.read_app_table("corpus_docs").count() == 3
 
 
 def test_streaming_kmv_sketch_rollup_matches_whole_build(spark, tmp_path):
@@ -831,25 +831,25 @@ def test_neardup_stream_verified_dedup_across_epochs(spark, tmp_path):
     q = near_dup_ingest_stream(spark, src, lake, ckpt)
     q.awaitTermination(300)
 
-    got = {r["doc_id"] for r in lake.read_log_table("corpus_docs").collect()}
+    got = {r["doc_id"] for r in lake.read_app_table("corpus_docs").collect()}
     want = {i for i in range(30)} | {110 + i for i in range(10)} | {150}
     assert got == want, (sorted(got - want), sorted(want - got))
 
     # three epoch-stamped state tables, queryable like any lake table
-    idx = lake.read_log_table("lsh_band_index")
-    sg = lake.read_log_table("minhash_sigs")
+    idx = lake.read_app_table("lsh_band_index")
+    sg = lake.read_app_table("minhash_sigs")
     assert {r["id"] for r in sg.select("id").distinct().collect()} == want
     assert set(idx.columns) >= {"id", "band", "bkey", "batch_epoch"}
 
     # restart with nothing new: no growth anywhere
     q = near_dup_ingest_stream(spark, src, lake, ckpt)
     q.awaitTermination(300)
-    assert {r["doc_id"] for r in lake.read_log_table("corpus_docs").collect()} == want
-    assert lake.read_log_table("minhash_sigs").count() == len(want)
+    assert {r["doc_id"] for r in lake.read_app_table("corpus_docs").collect()} == want
+    assert lake.read_app_table("minhash_sigs").count() == len(want)
 
     # manual replay of an already-committed epoch: every ledger no-ops
     prefix = "stream-neardup-" + _h.md5(ckpt.encode()).hexdigest()[:8]
-    some = lake.read_log_table("corpus_docs").limit(1)
+    some = lake.read_app_table("corpus_docs").limit(1)
     for t, tag in (("corpus_docs", "docs"), ("lsh_band_index", "index"),
                    ("minhash_sigs", "sigs")):
         assert (
@@ -909,7 +909,7 @@ def test_neardup_stream_crash_replay_heals(spark, tmp_path):
     shard([(i, words(i), "en", "web", 60) for i in range(10)], "s0")
     q = near_dup_ingest_stream(spark, src, lake, ckpt)
     q.awaitTermination(300)
-    assert lake.read_log_table("corpus_docs").count() == 10
+    assert lake.read_app_table("corpus_docs").count() == 10
 
     # epoch 1's docs: pre-commit their index rows under the sink's OWN
     # ledger id for epoch 1 — the torn-commit state a crash between the
@@ -928,14 +928,14 @@ def test_neardup_stream_crash_replay_heals(spark, tmp_path):
     q = near_dup_ingest_stream(spark, src, lake, ckpt)
     q.awaitTermination(300)
 
-    got = {r["doc_id"] for r in lake.read_log_table("corpus_docs").collect()}
+    got = {r["doc_id"] for r in lake.read_app_table("corpus_docs").collect()}
     assert got == set(range(10)) | {100 + i for i in range(10)}, sorted(got)
     # the torn index append was healed by the ledger (no duplicate rows)
-    idx = lake.read_log_table("lsh_band_index").filter(F.col("batch_epoch") == 1)
+    idx = lake.read_app_table("lsh_band_index").filter(F.col("batch_epoch") == 1)
     assert idx.count() == idx.distinct().count()
     # and sigs for epoch 1 are present (the append that "crashed" ran on replay)
     assert (
-        lake.read_log_table("minhash_sigs").filter(F.col("batch_epoch") == 1).count()
+        lake.read_app_table("minhash_sigs").filter(F.col("batch_epoch") == 1).count()
         == 10
     )
 
@@ -980,7 +980,7 @@ def test_streaming_bm25_index_matches_whole_corpus(spark, tmp_path):
 
     q = bm25_index_stream(spark, src, lake, ckpt)
     q.awaitTermination(120)
-    postings = lake.read_log_table("bm25_postings")
+    postings = lake.read_app_table("bm25_postings")
     assert postings.select("batch_epoch").distinct().count() == 2
     assert lake.read_app_table("bm25_stats").count() == 2
 
@@ -1003,7 +1003,7 @@ def test_streaming_bm25_index_matches_whole_corpus(spark, tmp_path):
     # restart on the same checkpoint with nothing new: no new epochs
     q = bm25_index_stream(spark, src, lake, ckpt)
     q.awaitTermination(120)
-    assert lake.read_log_table("bm25_postings").count() == postings.count()
+    assert lake.read_app_table("bm25_postings").count() == postings.count()
 
     # manual replay of epoch 0 (same checkpoint-derived ledger keys): no-op
     import hashlib as _h
@@ -1043,7 +1043,7 @@ def test_streaming_bm25_index_matches_whole_corpus(spark, tmp_path):
     assert got81 == want81
 
     # compaction is row-preserving: the ranking is bit-identical after
-    lake.compact_log_table("bm25_postings")
+    lake.compact_table("bm25_postings", app_table=True)
     got_c = sorted(map(tuple, bm25_from_lake(lake, queries, k=5).collect()))
     assert got_c == want81
 

@@ -116,7 +116,7 @@ def main() -> int:
     q.awaitTermination(3600)
     wall = time.monotonic() - t0
 
-    corpus = lake.read_log_table("corpus_docs")
+    corpus = lake.read_app_table("corpus_docs")
     n_rows = corpus.count()
     n_fp = corpus.select("fp").distinct().count()
     assert n_rows == n_fp, (n_rows, n_fp)
@@ -125,8 +125,8 @@ def main() -> int:
         .orderBy("batch_epoch")
         .collect()
     )
-    n_index = lake.read_log_table("lsh_band_index").count()
-    n_sigs = lake.read_log_table("minhash_sigs").count()
+    n_index = lake.read_app_table("lsh_band_index").count()
+    n_sigs = lake.read_app_table("minhash_sigs").count()
     assert n_sigs == n_rows, (n_sigs, n_rows)
 
     print(f"\n{scale * n0} docs in, {n_rows} survivors "

@@ -1,7 +1,7 @@
 """Measured soak for streaming BM25 index maintenance
 (streaming/retrieval_stream.py) — per-epoch commit wall at ×N of sf0.1.
 
-The claim under test is the commit-log cost model: committing epoch N
+The claim under test is the log-append cost model: committing epoch N
 must NOT rewrite epochs 0..N-1 (`append_log_table_exactly_once` is
 O(batch)), so per-epoch wall stays FLAT as the postings table grows
 ×N. The rewrite-based ledger path would show linearly growing epochs
@@ -133,14 +133,14 @@ def main() -> int:
     qlen = max(1, scale // 4)
     head = sum(r[1] for r in rows[:qlen]) / qlen
     tail = sum(r[1] for r in rows[-qlen:]) / qlen
-    n_post = lake.read_log_table("bm25_postings").count()
+    n_post = lake.read_app_table("bm25_postings").count()
 
     # replay with nothing new: no epoch commits
     t0 = time.monotonic()
     q = bm25_index_stream(spark, shards_dir, lake, f"{root}/ckpt")
     q.awaitTermination(3600)
     replay_s = time.monotonic() - t0
-    assert lake.read_log_table("bm25_postings").count() == n_post
+    assert lake.read_app_table("bm25_postings").count() == n_post
 
     # lake probe == whole-corpus batch build, value for value
     whole = spark.read.parquet(shards_dir)
@@ -148,8 +148,8 @@ def main() -> int:
     got = sorted(map(tuple, bm25_from_lake(lake, probes, k=10).collect()))
     assert got == want, "lake index diverged from whole-corpus build"
 
-    # fold compaction: identical ranking, one batch dir
-    stats = lake.compact_log_table("bm25_postings")
+    # fold compaction: identical ranking, the batch dirs folded
+    stats = lake.compact_table("bm25_postings", app_table=True)
     got_c = sorted(map(tuple, bm25_from_lake(lake, probes, k=10).collect()))
     assert got_c == want
     t0 = time.monotonic()
@@ -168,7 +168,7 @@ def main() -> int:
     # overclaiming either way.
     part_path = f"{root}/postings_by_bucket"
     write_bm25_postings_partitioned(
-        lake.read_log_table("bm25_postings").select("term", "doc_id", "tf", "dl"),
+        lake.read_app_table("bm25_postings").select("term", "doc_id", "tf", "dl"),
         part_path,
         num_buckets=64,
     )
@@ -203,7 +203,7 @@ def main() -> int:
             None,
             qdf,
             k=10,
-            postings=lake.read_log_table("bm25_postings").select(
+            postings=lake.read_app_table("bm25_postings").select(
                 "term", "doc_id", "tf", "dl"
             ),
             stats=stats_df,
@@ -233,8 +233,8 @@ def main() -> int:
     print(f"\n{scale}×{n0} docs → {n_post} posting rows; "
           f"epoch wall first-quarter mean {head:.2f}s vs last-quarter mean "
           f"{tail:.2f}s (flat-commit ratio {tail / head:.2f}); replay "
-          f"{replay_s:.1f}s, 0 new commits; fold: {stats['batches_folded']} "
-          f"dirs → 1, ranking identical (compacted-lake probe "
+          f"{replay_s:.1f}s, 0 new commits; fold: {stats['files_before']} "
+          f"files → {stats['files_after']}, ranking identical (compacted-lake probe "
           f"{probe_compacted_s:.2f}s); probe walls full-scan vs pruned — "
           f"whole-doc queries {dense_full_s:.2f}s vs {dense_pruned_s:.2f}s "
           f"({n_buckets(probes)}/64 buckets), sparse queries "

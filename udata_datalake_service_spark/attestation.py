@@ -49,6 +49,12 @@ NEW_OR_CHANGED: frozenset[str] = frozenset({
     # the decode ladder lost its Pillow rung: 'decoded' is the vendored
     # rung alone instead of isin('pillow', 'vendored')
     "mm_jpeg_meta",
+    # q_st4_change_detection builds its cascade with
+    # plans.change_detection.cascade, the builder with_change_detection
+    # uses, instead of its own nested copy; st45_change_trigger is the
+    # registry entry that runs it
+    "st4_change_detection",
+    "st45_change_trigger",
 })
 
 # Rounds whose driver window did NOT advance the rotation: the round-12

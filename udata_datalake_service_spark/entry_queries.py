@@ -63,7 +63,7 @@ from udata_datalake_service_spark.operators.core import (
     upsert,
 )
 from udata_datalake_service_spark.operators.profile import profile_df
-from udata_datalake_service_spark.plans.change_detection import _verdict
+from udata_datalake_service_spark.plans.change_detection import _verdict, cascade
 from udata_datalake_service_spark.plans.next_check import CHECK_DELAYS_HOURS
 
 
@@ -589,14 +589,10 @@ def q_st4_change_detection(spark, sf_dir):
     ev = ev.withColumn("__k", k)
     prev_k = F.lag("__k").over(w)
     prev_v = F.lag("value").over(w)
-    v1 = _verdict(F.col("__k"), prev_k)
-    v2 = _verdict(F.col("value"), prev_v)
-    status = F.when(v1 != "NO_GUESS", v1).otherwise(
-        F.when(v2 != "NO_GUESS", v2).otherwise(F.lit("NO_GUESS"))
-    )
-    method = F.when(v1 != "NO_GUESS", F.lit("payload")).otherwise(
-        F.when(v2 != "NO_GUESS", F.lit("value"))
-    )
+    status, method = cascade([
+        ("payload", _verdict(F.col("__k"), prev_k)),
+        ("value", _verdict(F.col("value"), prev_v)),
+    ])
     return ev.select(
         "event_id", status.alias("change_status"), method.alias("change_method")
     )

@@ -13,7 +13,8 @@ growing corpus table with:
 * **crash-safe idempotence** — the only mutation is ONE
   ``append_log_table_exactly_once`` call keyed by the caller's
   ``batch_id``: a crashed/retried ingest either already committed (the
-  ledger no-ops it) or left the previous version visible. No separate
+  ledger in the table's MANIFEST record no-ops it) or left nothing
+  visible. No separate
   index table to drift out of sync — the fingerprint column lives IN the
   corpus table, so dedup state and data commit atomically together.
 
@@ -56,11 +57,10 @@ def ingest_documents(
     batch_id over overlapping content lands only the genuinely new
     fingerprints.
 
-    A corpus table created by the pre-r11 REWRITE path keeps its rows
-    visible: the first commit-log append folds root-level legacy rows
-    into a marker-committed batch (``Lake._migrate_legacy_log_roots``,
-    ADVICE r11 medium), so the fingerprint anti-join above keeps seeing
-    previously-ingested content instead of re-admitting it.
+    A corpus table created by the rewriting exactly-once append keeps
+    its rows visible: a log batch dir is recorded beside its version
+    dir, so the fingerprint anti-join keeps seeing previously-ingested
+    content instead of re-admitting it.
     """
     from udata_datalake_service_spark.caching import cached_plan_aqe
 
@@ -107,7 +107,7 @@ def _ingest_inner(
     batch = batch_all.filter(F.col("__rn") == 1).drop("__rn")
 
     try:
-        existing_fp = lake.read_log_table(table).select("fp").distinct()
+        existing_fp = lake.read_app_table(table).select("fp").distinct()
         fresh = batch.join(existing_fp, on="fp", how="left_anti")
     except FileNotFoundError:
         fresh = batch
@@ -128,7 +128,7 @@ def _ingest_inner(
         n_gated = fresh.count()
 
     committed = lake.append_log_table_exactly_once(fresh, table, batch_id)
-    n_total = lake.read_log_table(table).count()
+    n_total = lake.read_app_table(table).count()
     fresh_cached.unpersist()
     batch_all.unpersist()
     return {

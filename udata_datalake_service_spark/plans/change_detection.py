@@ -33,6 +33,20 @@ def _verdict(cur: Column, prev: Column) -> Column:
     )
 
 
+def cascade(verdicts: list[tuple[str, Column]]) -> tuple[Column, Column]:
+    """(``change_status``, ``change_method``) of an ordered short-circuit
+    cascade over (method name, tri-state verdict) pairs: the first
+    conclusive verdict and the name of the method that gave it, or
+    NO_GUESS and null when every method abstains."""
+    status: Column = F.lit(NO_GUESS)
+    method: Column = F.lit(None).cast("string")
+    # build the short-circuit from the lowest priority up
+    for name, verdict in reversed(verdicts):
+        status = F.when(verdict != NO_GUESS, verdict).otherwise(status)
+        method = F.when(verdict != NO_GUESS, F.lit(name)).otherwise(method)
+    return status, method
+
+
 def with_change_detection(
     checks: DataFrame,
     key: str = "resource_id",
@@ -63,17 +77,11 @@ def with_change_detection(
         .withColumn("chg_content_length", _verdict(cl, F.col("__prev_cl")))
         .withColumn("chg_checksum", _verdict(ck, F.col("__prev_ck")))
     )
-    cascade = [
+    status, method = cascade([
         ("last_modified", F.col("chg_last_modified")),
         ("content_length", F.col("chg_content_length")),
         ("checksum", F.col("chg_checksum")),
-    ]
-    status: Column = F.lit(NO_GUESS)
-    method: Column = F.lit(None).cast("string")
-    # build the short-circuit from the lowest priority up
-    for name, verdict in reversed(cascade):
-        status = F.when(verdict != NO_GUESS, verdict).otherwise(status)
-        method = F.when(verdict != NO_GUESS, F.lit(name)).otherwise(method)
+    ])
     return (
         out.withColumn("change_status", status)
         .withColumn("change_method", method)

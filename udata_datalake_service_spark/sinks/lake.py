@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from contextlib import contextmanager
@@ -81,7 +80,7 @@ class Lake:
     protocol Delta/Iceberg implement on their commit logs. The lock file
     is not fsynced: it only coordinates live processes, and a crash that
     empties it leaves an orphan the stale takeover breaks. The MANIFEST
-    replace and the exactly-once and log commit markers stay fsynced.
+    replace stays fsynced.
 
     Write path: every parquet write goes through `_write_parquet`, which
     turns off Spark's ``_SUCCESS`` marker. The MANIFEST is the commit
@@ -89,19 +88,33 @@ class Lake:
     per write (one more PUT on an object store), rewritten inside the
     committed version by every in-place append.
 
-    Commit record: the MANIFEST is a small JSON record ``{"version",
-    "schema", "partition_by"}``: the current version dir, the table's
-    Spark schema as a file-source read reports it (every field nullable,
-    partition columns last) and its partition columns. Every commit
-    writes it from the frame its writer already holds, so every
-    single-directory read (`read_app_table`, `read_table`, `registry`,
-    compaction, exactly-once appends) is ``spark.read.schema(record)``
-    over the version dir: no schema-inference job and no footer read,
-    for a fresh `Lake` as for a warm one. Partition values read back as
-    the written type, and an append must match every column's type,
-    partition columns included. The data files are not recorded: the
-    directory read lists them, and an explicit list of more than 32
-    paths makes Spark run a parallel-listing job.
+    Commit record: the MANIFEST is the table's one commit point, a small
+    JSON record ``{"version", "schema", "partition_by", "dirs",
+    "batches"}``: the current version dir; the table's Spark schema as a
+    file-source read reports it (every field nullable, partition columns
+    last); its partition columns; its data dirs (the version dir, then
+    one ``b-*`` dir per committed log batch); and its exactly-once
+    ledger, the committed batch ids. Every commit writes it from the
+    frame its writer already holds, so every read (`read_app_table`,
+    `read_table`, `registry`, compaction, exactly-once appends) is
+    ``spark.read.schema(record)`` over the recorded dirs: no
+    schema-inference job and no footer read, for a fresh `Lake` as for
+    a warm one (Spark lists up to 32 root paths without a job). Partition
+    values read back as the written type, and an append must match every
+    column's type, partition columns included. The data files are not
+    recorded: the directory read lists them.
+
+    Exactly-once appends come in two cost models over the one ledger:
+    `append_app_table_exactly_once` rewrites the table (O(table), for
+    small control tables) and `append_log_table_exactly_once` adds one
+    batch dir (O(batch), for data-plane logs). Every rewrite
+    (`rewrite_app_table`, `compact_table`, the rewriting append) carries
+    the ledger of the snapshot it read and keeps, under the commit lock,
+    any batch dir recorded after that snapshot, so an append that
+    returned True is never lost or hidden by a concurrent rewrite. A
+    replace-write (`write_app_table`, `write_table`) starts a fresh
+    ledger. Batch dirs a rewrite drops, and those of appends that never
+    committed, are reclaimed by `vacuum` once older than its grace.
 
     A same-schema in-place append leaves the record alone. A widening
     append (``allow_schema_evolution`` with new columns) commits the
@@ -152,30 +165,27 @@ class Lake:
     def _manifest_version(self, base: Path) -> str | None:
         return self._record(base).get("version")
 
-    def _version_dir(self, base: Path, record: dict) -> Path | None:
-        """The data directory ``record`` names: its version dir, or the
-        base itself for legacy/plain layouts (pre-versioning data,
-        externally-written dirs)."""
-        if not record:
-            return base if base.exists() else None
-        p = base / record["version"]
-        # data-dir existence goes THROUGH the backend: on S3ObjectStore a
-        # committed version is a bucket prefix with no local footprint
-        # until a read materializes it
-        return p if self.store.data_dir_exists(p) else None
+    @staticmethod
+    def _dir_names(record: dict) -> list[str]:
+        """The data dirs ``record`` lists, version dir first. A record
+        that lists no dirs (a one-line MANIFEST) has its version only."""
+        if "dirs" in record:
+            return record["dirs"]
+        return [record["version"]] if record else []
 
-    def _current_dir(self, base: Path) -> Path | None:
-        """Resolve a logical table path to its current data directory."""
-        return self._version_dir(base, self._record(base))
-
-    def _snapshot(self, base: Path) -> tuple[dict, Path | None]:
-        """The commit record and its data dir from ONE MANIFEST read (two
-        reads would let a commit in between pair one version's record
-        with another's files), the dir materialized: backends holding
-        data server-side fetch the version prefix into the local cache."""
+    def _snapshot(self, base: Path) -> tuple[dict, list[Path]]:
+        """The commit record and those of its data dirs that hold data,
+        from ONE MANIFEST read (two reads would let a commit in between
+        pair one record with another's files), each dir materialized:
+        backends holding data server-side fetch its prefix into the
+        local cache. A table with no record has one dir, the base."""
         record = self._record(base)
-        cur = self._version_dir(base, record)
-        return record, None if cur is None else self.store.materialize_dir(cur)
+        if record:
+            dirs = [base / n for n in self._dir_names(record)]
+        else:
+            dirs = [base] if base.exists() else []
+        dirs = [self.store.materialize_dir(d) for d in dirs]
+        return record, [d for d in dirs if self._has_data(d)]
 
     @staticmethod
     def _layout(schema: StructType, partition_by: list[str] | None) -> dict:
@@ -192,34 +202,37 @@ class Lake:
         }
 
     def _table_schema(
-        self, record: dict, cur: Path | None
+        self, record: dict, dirs: list[Path]
     ) -> tuple[StructType | None, list[str]]:
         """(schema, partition columns) of a table: its record's, or, for
-        a table with no record, inferred from the files in ``cur`` (a
-        ``mergeSchema`` read and the ``col=value`` dir chain). (None, [])
-        for a table with neither a record nor a data file."""
+        a table with no record, inferred from the files in its one dir
+        (a ``mergeSchema`` read and the ``col=value`` dir chain).
+        (None, []) for a table with neither a record nor a data file."""
         if "schema" in record:
             return StructType.fromJson(record["schema"]), record["partition_by"]
-        if not self._has_data(cur):
+        if not dirs:
             return None, []
-        inferred = self.spark.read.option("mergeSchema", "true").parquet(str(cur))
-        return inferred.schema, self._detect_partition_cols(cur)
+        inferred = self.spark.read.option("mergeSchema", "true").parquet(str(dirs[0]))
+        return inferred.schema, self._detect_partition_cols(dirs[0])
 
     @staticmethod
-    def _has_data(cur: Path | None) -> bool:
-        """Whether ``cur`` holds a data file or partition dir (``_``/``.``
-        names are skipped, as Spark's file listing skips them)."""
-        return cur is not None and any(
-            not f.name.startswith(("_", ".")) for f in cur.iterdir()
-        )
+    def _has_data(d: Path) -> bool:
+        """Whether ``d`` holds a data file or partition dir. ``_``/``.``
+        names are skipped, as Spark's file listing skips them, and so
+        are log batch dirs (``b-*``): only a record makes one part of a
+        table."""
+        try:
+            return any(not f.name.startswith(("_", ".", "b-")) for f in d.iterdir())
+        except FileNotFoundError:
+            return False
 
-    def _scan(self, cur: Path | None, schema: StructType) -> DataFrame:
-        """The rows of ``cur`` read as ``schema``: no inference job, and
+    def _scan(self, dirs: list[Path], schema: StructType) -> DataFrame:
+        """The rows of ``dirs`` read as ``schema``: no inference job, and
         an empty frame for a table with no data file (an empty
         partitioned write leaves none)."""
-        if not self._has_data(cur):
+        if not dirs:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(str(cur))
+        return self.spark.read.schema(schema).parquet(*map(str, dirs))
 
     @contextmanager
     def _commit_lock(self, base: Path, timeout: float = 30.0, stale_after: float = 120.0):
@@ -324,7 +337,9 @@ class Lake:
         staging: Path | None = None,
         *,
         layout: dict,
-    ) -> None:
+        snap: dict | None = None,
+        batch_id: str | None = None,
+    ) -> bool:
         """Atomically repoint MANIFEST at ``ver``, recording ``layout``
         (`_layout`) as its schema; keep the immediately previous version
         for in-flight readers, GC anything older.
@@ -337,10 +352,18 @@ class Lake:
         instead of silent). ``staging`` is the written-but-invisible
         ``_staging-*`` dir to rename into place under the lock — staged
         dirs are never eligible for GC, so a slow writer's data can't be
-        reclaimed by a faster committer."""
+        reclaimed by a faster committer.
+
+        ``snap`` is the record the new version's rows were read from
+        (None for a replace-write, which starts a fresh ledger): its
+        ledger is carried, and any log batch dir recorded after it is
+        kept, with its id. ``batch_id`` is added to the ledger, unless
+        it is already there: then nothing is committed and the result is
+        False."""
         with self._commit_lock(base):
-            self._commit_version_locked(
-                base, ver, expect=expect, staging=staging, layout=layout
+            return self._commit_version_locked(
+                base, ver, expect=expect, staging=staging, layout=layout,
+                snap=snap, batch_id=batch_id,
             )
 
     def _commit_version_locked(
@@ -351,18 +374,46 @@ class Lake:
         staging: Path | None = None,
         *,
         layout: dict,
-    ) -> None:
+        snap: dict | None = None,
+        batch_id: str | None = None,
+    ) -> bool:
         """`_commit_version` body for callers ALREADY holding the commit
         lock (the O_EXCL lock is non-reentrant) — lets a caller serialize
         a read-modify-write or an in-place append against the flip in one
         critical section (see `register` / `_delete_registry_rows`)."""
-        prev = self._manifest_version(base)
+        cur = self._record(base)
+        prev = cur.get("version")
         if expect is not _UNSET and prev != expect:
             if staging is not None:
                 self.store.delete_dir(staging)
             raise ConcurrentWriteError(
                 f"{base}: expected version {expect!r}, found {prev!r}"
             )
+        dirs, ledger = [ver], []
+        if snap is not None:
+            read = set(self._dir_names(snap))
+            kept = [d for d in self._dir_names(cur)[1:] if d not in read]
+            ledger = list(snap.get("batches", []))
+            done = set(ledger)
+            ledger += [b for b in cur.get("batches", []) if b not in done]
+            if batch_id is not None:
+                if batch_id in ledger:
+                    if staging is not None:
+                        self.store.delete_dir(staging)
+                    return False
+                ledger.append(batch_id)
+            if kept:
+                # a kept batch may have widened the record after the snapshot
+                schema = StructType.fromJson(layout["schema"])
+                have = set(schema.fieldNames())
+                wider = [
+                    f for f in StructType.fromJson(cur["schema"]).fields
+                    if f.name not in have
+                ]
+                layout = self._layout(
+                    StructType(schema.fields + wider), layout["partition_by"]
+                )
+            dirs += kept
         if staging is not None:
             # POSIX: atomic directory rename. Object store: per-object
             # copy + delete — NON-atomic, but invisible either way: the
@@ -370,21 +421,25 @@ class Lake:
             # below, and a crash mid-copy leaves readers on `prev` with
             # the partial dir reclaimed by vacuum/next-commit GC.
             self.store.publish_dir(staging, base / ver)
-        self._put_record(base, {"version": ver, **layout})
+        self._put_record(
+            base, {"version": ver, **layout, "dirs": dirs, "batches": ledger}
+        )
         for name in self.store.list_subdirs(base):
             if name.startswith("v-") and name not in (ver, prev):
                 self.store.delete_dir(base / name)
+        return True
 
     def vacuum(self, staging_grace_s: float = 3600.0) -> list[str]:
         """Reclaim version dirs no MANIFEST points at — crash leftovers
         (a fully-written but uncommitted version) and previous versions of
         tables that were never rewritten again. Normal commits already GC
         older versions; this sweeps tables the write path won't revisit.
-        ``_staging-*`` dirs are removed only once older than
-        ``staging_grace_s`` — a fresh one may be an IN-FLIGHT writer's
-        parquet write (the slow phase runs outside the commit lock), and
-        reclaiming it would break that writer's rename-into-place.
-        Returns the removed paths (ST7-style maintenance verb)."""
+        ``_staging-*`` dirs, and log batch dirs (``b-*``) the record does
+        not list, are removed only once older than ``staging_grace_s`` —
+        a fresh one may be an IN-FLIGHT writer's parquet write (the slow
+        phase runs outside the commit lock), and reclaiming it would
+        break that writer's commit. Returns the removed paths (ST7-style
+        maintenance verb)."""
         removed: list[str] = []
         # discovery goes through the backend: a table whose committed
         # bytes live only server-side has no local v-* dir to rglob
@@ -401,7 +456,10 @@ class Lake:
             except (TimeoutError, OSError):
                 continue
             try:
-                current = self._manifest_version(base)
+                record = self._record(base)
+                # batch dirs only under a recorded table: elsewhere a
+                # ``b-*`` dir is a table or data this lake did not write
+                recorded = set(self._dir_names(record)) if "schema" in record else None
                 # crashed takeover leftovers next to MANIFEST — control
                 # objects, so enumerated THROUGH the store (on an object
                 # store they are keys, not local files)
@@ -411,19 +469,21 @@ class Lake:
                         removed.append(str(claim))
                 for name in self.store.list_subdirs(base):
                     d = base / name
-                    try:
-                        # staging dirs are always written locally (Spark
-                        # scratch), so their in-flight grace check stats
-                        # the local dir; committed v-* dirs may be
-                        # bucket-only and carry no local mtime
-                        stale_staging = name.startswith("_staging-") and (
-                            time.time() - d.stat().st_mtime > staging_grace_s
-                        )
-                    except OSError:
-                        continue  # renamed into place / released concurrently
-                    if stale_staging or (
-                        name.startswith("v-") and name != current
+                    if name.startswith("v-"):
+                        stale = name != record.get("version")
+                    elif name.startswith("_staging-") or (
+                        recorded is not None
+                        and name.startswith("b-")
+                        and name not in recorded
                     ):
+                        try:
+                            age = time.time() - self.store.dir_mtime(d)
+                        except OSError:
+                            continue  # renamed into place / released concurrently
+                        stale = age > staging_grace_s
+                    else:
+                        continue
+                    if stale:
                         self.store.delete_dir(d)
                         removed.append(str(d))
             finally:
@@ -436,35 +496,28 @@ class Lake:
         base: Path,
         partition_by: list[str] | None = None,
         expect: object = _UNSET,
-        ledger: list[str] | None = None,
-    ) -> None:
+        snap: dict | None = None,
+        batch_id: str | None = None,
+    ) -> int | None:
         """Replace-write ``df`` as a new committed version of ``base``.
         The input may read from the table's current version — it is never
         touched until the manifest flips. The parquet write lands in an
         invisible ``_staging-*`` dir (GC-proof under concurrent commits)
         and renames into place inside the commit lock; pass ``expect``
-        (from `table_version`) for optimistic-concurrency semantics.
-        ``ledger`` (a committed-batch-id list) is written into the new
-        version as ``_batches.json`` so the exactly-once append protocol
-        survives a rewrite that preserves the appended data (compaction).
-        Returns the number of data files committed."""
+        (from `table_version`) for optimistic-concurrency semantics, and
+        ``snap``/``batch_id`` as `_commit_version` takes them. Returns
+        the number of data files committed, None if ``batch_id`` was
+        already committed."""
         ver = self._new_version()
         staging = base / f"_staging-{ver}"
         self._write_parquet(df, staging, "overwrite", partition_by)
         n_files = len(self._data_files(staging))
-        if ledger is not None:
-            lf = staging / "_batches.json"
-            lf.write_text(json.dumps(ledger))
-            fd = os.open(lf, os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        self._commit_version(
+        committed = self._commit_version(
             base, ver, expect=expect, staging=staging,
             layout=self._layout(df.schema, partition_by),
+            snap=snap, batch_id=batch_id,
         )
-        return n_files
+        return n_files if committed else None
 
     @staticmethod
     def _write_parquet(
@@ -508,13 +561,13 @@ class Lake:
     def _read_dir(self, base: Path, schema: StructType | None = None) -> DataFrame:
         """The table's current rows, read as its recorded schema (or
         ``schema`` for a table with neither a record nor data)."""
-        record, cur = self._snapshot(base)
-        recorded, _ = self._table_schema(record, cur)
+        record, dirs = self._snapshot(base)
+        recorded, _ = self._table_schema(record, dirs)
         if recorded is not None:
             schema = recorded
         if schema is None:
             raise FileNotFoundError(f"lake table has no data: {base}")
-        return self._scan(cur, schema)
+        return self._scan(dirs, schema)
 
     @staticmethod
     def _data_files(cur: Path) -> list[tuple[str, int]]:
@@ -741,13 +794,13 @@ class Lake:
         # supersede (the drop holds the same lock across its read+flip —
         # the transaction Postgres gave the reference for free)
         with self._commit_lock(base):
-            _, cur = self._snapshot(base)
+            _, dirs = self._snapshot(base)
             # first write ⇔ no data files yet: the mkdir above makes the
-            # bare base dir "exist", so `cur is None` alone would misread
-            # a fresh registry as a legacy-plain table and skip the
-            # versioned-manifest branch (leaving table_version None and
-            # stranding plain part files under later flips)
-            if not self._has_data(cur):
+            # bare base dir "exist", so an existence check alone would
+            # misread a fresh registry as a legacy-plain table and skip
+            # the versioned-manifest branch (leaving table_version None
+            # and stranding plain part files under later flips)
+            if not dirs:
                 ver = self._new_version()
                 staging = base / f"_staging-{ver}"
                 staging.mkdir(parents=True, exist_ok=True)
@@ -757,6 +810,7 @@ class Lake:
                     layout=self._layout(TABLES_INDEX_SCHEMA, None),
                 )
                 return
+            cur = dirs[0]
             tmp = cur / f"_tmp-{fname}"
             pq.write_table(table, tmp)
             # durability before visibility: a crash can't leave a visible
@@ -781,11 +835,11 @@ class Lake:
         # from `remaining` (the lost-append race `register` guards the
         # other side of)
         with self._commit_lock(base):
-            _, cur = self._snapshot(base)
-            if not self._has_data(cur):
+            _, dirs = self._snapshot(base)
+            if not dirs:
                 remaining = schema.empty_table()
             else:
-                reg = pq.read_table(cur)  # ignores _/.-prefixed files
+                reg = pq.read_table(dirs[0])  # ignores _/.-prefixed files
                 remaining = reg.filter(
                     pc.not_equal(pc.field("parsing_table"), parsing_table)
                 )
@@ -802,7 +856,10 @@ class Lake:
 
     @staticmethod
     def _check_append_schema(
-        df: DataFrame, schema: StructType, allow_schema_evolution: bool
+        df: DataFrame,
+        schema: StructType,
+        allow_schema_evolution: bool,
+        inferred_pcols: list[str] = (),
     ) -> list[StructField]:
         """Appends must not lose columns silently: the table reads as its
         recorded ``schema``, so an appended extra column would simply
@@ -812,7 +869,10 @@ class Lake:
         otherwise. With ``allow_schema_evolution`` the Delta/Iceberg
         widening rules apply: NEW columns may be added and existing ones
         omitted (they read as NULL); a same-name TYPE conflict is always
-        an error. Returns the added columns' fields."""
+        an error. ``inferred_pcols`` are partition columns whose type was
+        inferred from directory values (a table with no commit record);
+        a conflict on one asks the caller to cast. Returns the added
+        columns' fields."""
         existing = {f.name: f.dataType for f in schema}
         incoming = {f.name: _as_nullable(f.dataType) for f in df.schema}
         conflicts = {
@@ -820,6 +880,14 @@ class Lake:
             for n in incoming.keys() & existing.keys()
             if existing[n] != incoming[n]
         }
+        for n in sorted(conflicts.keys() & set(inferred_pcols)):
+            want = existing[n].simpleString()
+            raise ValueError(
+                f"append type conflict on partition column {n!r}: the table "
+                "has no commit record, so its partition types come from its "
+                f"directory values, which read as {want}; the frame has "
+                f"{incoming[n].simpleString()}. Cast {n!r} to {want} to append."
+            )
         if conflicts:
             raise ValueError(
                 f"append schema type conflict (never allowed): {conflicts}"
@@ -844,8 +912,8 @@ class Lake:
         partition_by: list[str] | None = None,
         allow_schema_evolution: bool = False,
     ) -> None:
-        record, cur = self._snapshot(base)
-        schema, pcols = self._table_schema(record, cur)
+        record, dirs = self._snapshot(base)
+        schema, pcols = self._table_schema(record, dirs)
         if schema is None:
             # first write: land in a version dir, commit the record
             self._replace_write(df, base, partition_by=partition_by)
@@ -857,11 +925,13 @@ class Lake:
                 f"append partition_by={partition_by!r} disagrees with the "
                 f"table's partition layout {pcols!r}: {base}"
             )
-        added = self._check_append_schema(df, schema, allow_schema_evolution)
-        if cur is None:
-            # a recorded empty table on a bucket store: its version
-            # prefix holds no object yet
-            cur = base / record["version"]
+        added = self._check_append_schema(
+            df, schema, allow_schema_evolution,
+            inferred_pcols=[] if "schema" in record else pcols,
+        )
+        # the version dir (on a bucket store it may hold no object yet),
+        # or the plain base of a table with no MANIFEST
+        cur = base / record["version"] if record else base
         # versioned or legacy-plain: add files in place — Spark stages the
         # new files under _temporary, so a torn append is never visible
         # LOCALLY; on a remote data plane the per-object upload below has
@@ -948,55 +1018,39 @@ class Lake:
         df: DataFrame,
         name: str,
         expected_version: object = _UNSET,
-        carry_exactly_once_ledger: bool = False,
     ) -> None:
         """Read-modify-write of an app table. ``df`` may (and usually does)
         read from the table's current version; that version is untouched
         while the new one is written, then the MANIFEST pointer flips
         atomically — readers see old-or-new, never a half-swapped dir. The
-        new version keeps the current one's partition layout.
+        new version keeps the current one's partition layout, and carries
+        the exactly-once ledger, so a replay of a batch whose rows the
+        rewrite kept still no-ops.
 
         Concurrent read-modify-writers silently clobber each other (last
         manifest flip wins); pass ``expected_version`` (the
         `table_version(name, app=True)` snapshot taken before reading) to
         turn that lost update into a `ConcurrentWriteError` to retry.
 
-        Known hazard (documented, not closed): a concurrent IN-PLACE
-        append (`append_app_table`) landing between this rewrite's read
-        and its flip is absent from the rewritten table, and CAS can't
-        see it because appends don't bump the manifest version. The
-        registry closes the same race by serializing its (tiny, fast)
-        mutations under the commit lock; app-table appends are
-        Spark-sized writes that can't reasonably hold it. Run appenders
-        and rewriters of one table single-writer (the reference's daemon
-        does), or front the lake with Delta/Iceberg, whose commit log
-        versions appends too.
-
-        ``carry_exactly_once_ledger=True`` copies the current version's
-        ``_batches.json`` (the `append_app_table_exactly_once` committed-
-        batch ledger) into the rewritten version. A rewrite that PRESERVES
-        the appended data (compaction, re-clustering) must carry it —
-        dropping the ledger would let a crash-replayed producer re-commit
-        an epoch whose rows survived the rewrite, double-counting it. The
-        ledger is read from the ``expected_version`` snapshot, so the CAS
-        guarantees ledger and data were read from the same version."""
+        A log batch recorded after this call's snapshot is kept beside the
+        new version. Known hazards (documented, not closed): a concurrent
+        IN-PLACE append (`append_app_table`) landing between this rewrite's
+        read and its flip, or a log batch recorded between the caller's
+        read of ``df`` and this call, is absent from the rewritten table,
+        and CAS can't see either because neither bumps the manifest
+        version. The registry closes the same race by serializing its
+        (tiny, fast) mutations under the commit lock; `compact_table`
+        (with ``transform=``) reads and commits from one snapshot. Run
+        appenders and rewriters of one table single-writer (the
+        reference's daemon does), or front the lake with Delta/Iceberg,
+        whose commit log versions appends too."""
         base = Path(self.app_table_path(name))
         # as compaction and exactly-once appends do: a flattened rewrite
         # would leave the next partitioned append's files unread
-        record, cur = self._snapshot(base)
-        _, pcols = self._table_schema(record, cur)
-        ledger: list[str] | None = None
-        if carry_exactly_once_ledger:
-            if expected_version is not _UNSET:
-                snap = {"version": expected_version} if expected_version else {}
-                cur = self._version_dir(base, snap)
-                if cur is not None:
-                    cur = self.store.materialize_dir(cur)
-            ledger = []
-            if cur is not None and (cur / "_batches.json").exists():
-                ledger = json.loads((cur / "_batches.json").read_text())
+        record, dirs = self._snapshot(base)
+        _, pcols = self._table_schema(record, dirs)
         self._replace_write(
-            df, base, partition_by=pcols or None, expect=expected_version, ledger=ledger
+            df, base, partition_by=pcols or None, expect=expected_version, snap=record
         )
 
     # --------------------------------------------------- training shards ----
@@ -1030,6 +1084,7 @@ class Lake:
         key = F.concat_ws(
             "|", F.lit(seed), *[F.col(c).cast("string") for c in key_cols]
         )
+        # one expression, applied to the input and to the committed rows
         h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
         sharded = df.withColumn("shard", F.pmod(h, F.lit(n_shards)))
         self._replace_write(
@@ -1040,28 +1095,11 @@ class Lake:
         # written (non-deterministic upstream, source changed between the
         # two jobs) — the manifest must certify what is on disk
         committed = self.read_app_table(name)
-        h2 = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.lit(seed),
-                            *[F.col(c).cast("string") for c in key_cols],
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-        )
         manifest = (
             committed.groupBy(F.col("shard").cast("long").alias("shard"))
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                F.sum(h2).alias("content_checksum"),
+                F.sum(h).alias("content_checksum"),
             )
             .orderBy("shard")
         )
@@ -1070,52 +1108,65 @@ class Lake:
 
     # --------------------------------------------------------- compaction ----
     def compact_table(
-        self, name: str, target_bytes: int = 128 * 1024 * 1024, app_table: bool = False
+        self,
+        name: str,
+        target_bytes: int = 128 * 1024 * 1024,
+        app_table: bool = False,
+        transform=None,
     ) -> dict:
-        """Compact a table's current version into ~``target_bytes`` files —
-        the small-files maintenance verb (the OPTIMIZE analogue for the
-        vanilla-parquet lake). An append-heavy table accumulates one file
-        per micro-batch; scans then pay an open/footer cost per tiny file
+        """Compact a table's recorded dirs (its version dir and its log
+        batch dirs) into ~``target_bytes`` files — the small-files
+        maintenance verb (the OPTIMIZE analogue for the vanilla-parquet
+        lake). An append-heavy table accumulates one file per
+        micro-batch; scans then pay an open/footer cost per tiny file
         that dwarfs the read at 100 TB.
 
-        Reads the current committed version, coalesces to
-        ceil(bytes/target) output files, and commits as a NEW version
-        behind the same crash-safe MANIFEST flip — readers see the
-        pre-compaction or post-compaction version, never a mix, and time
-        travel keeps the pre-compaction version until vacuum. Row data is
-        byte-identical (coalesce moves whole partitions; no shuffle, no
-        re-sort — sortWithinPartitions clustering from the original write
-        survives inside each surviving partition).
+        Reads one committed snapshot, coalesces to ceil(bytes/target)
+        output files, and commits as a NEW version behind the same
+        crash-safe MANIFEST flip — readers see the pre-compaction or
+        post-compaction record, never a mix, and time travel keeps the
+        pre-compaction version until vacuum. Row data is byte-identical
+        (coalesce moves whole partitions; no shuffle, no re-sort —
+        sortWithinPartitions clustering from the original write survives
+        inside each surviving partition). The exactly-once ledger is
+        carried, and a log batch recorded while the compaction ran is
+        kept beside the new version (`_commit_version`), so an append
+        that returned True is never lost.
+
+        ``transform`` (optional, DataFrame -> DataFrame, keeping the
+        table's columns) rewrites the folded rows — the hook
+        domain-specific compactions use to fold semantics, not just
+        files (e.g. `compact_bm25_index` keeps each doc's latest epoch).
+        Batches kept beside the fold are untransformed until the next
+        compaction, so a transform must be idempotent and
+        order-insensitive across repeated folds.
 
         Returns {files_before, files_after, bytes}.
         """
         base = Path(self.app_table_path(name) if app_table else self.table_path(name))
-        record, cur = self._snapshot(base)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version to compact: {base}")
-        data_files = self._data_files(cur)
-        total = sum(size for _, size in data_files)
-        n_out = max(1, -(-total // int(target_bytes)))
+        record, dirs = self._snapshot(base)
         # preserve the physical partition layout (check_date/shard dirs):
         # a bare rewrite would flatten it, breaking partition-drop
         # retention and pruning. The recorded schema carries a widening
         # append's columns, so the rewrite keeps their data.
-        schema, pcols = self._table_schema(record, cur)
-        df = self._scan(cur, schema)
-        # carry the exactly-once ledger: compaction preserves the data, so
-        # committed epoch ids must stay committed (replays keep no-opping)
-        ledger = None
-        if (cur / "_batches.json").exists():
-            ledger = json.loads((cur / "_batches.json").read_text())
-        # CAS on the manifest read above: a rewrite committed while the
+        schema, pcols = self._table_schema(record, dirs)
+        if schema is None:
+            raise FileNotFoundError(f"no committed version to compact: {base}")
+        data_files = [f for d in dirs for f in self._data_files(d)]
+        total = sum(size for _, size in data_files)
+        n_out = max(1, -(-total // int(target_bytes)))
+        df = self._scan(dirs, schema)
+        if transform is not None:
+            df = transform(df)
+        # CAS on the record read above: a rewrite committed while the
         # compaction was reading raises ConcurrentWriteError instead of
         # being clobbered (in-place appends remain invisible to the CAS —
-        # the documented rewrite_app_table hazard)
-        # coalesce bounds the write tasks, not the files: each task
-        # writes one file per partition dir it holds rows for
+        # the documented rewrite_app_table hazard). Coalesce bounds the
+        # write tasks, not the files: each task writes one file per
+        # partition dir it holds rows for.
         files_after = self._replace_write(
             df.coalesce(int(n_out)), base, partition_by=pcols or None,
-            expect=record.get("version"), ledger=ledger,
+            expect=record.get("version"), snap=record,
         )
         return {
             "files_before": len(data_files),
@@ -1130,44 +1181,38 @@ class Lake:
         the caller retries after crashes or lost acks (the failure mode
         plain ``append_app_table`` double-writes on).
 
-        The committed-batch ledger (``_batches.json``) lives INSIDE each
-        version dir, so ledger and data flip together under the one atomic
-        MANIFEST replace: a crash at any point leaves the previous version
-        (without the batch) and a retry re-runs cleanly; after the flip,
-        retries see the id in the ledger and no-op. Returns True if this
-        call committed the batch, False if it was already committed.
+        The ledger of committed batch ids lives in the commit record, so
+        ledger and data flip together under the one atomic MANIFEST
+        replace: a crash at any point leaves the previous record (without
+        the batch) and a retry re-runs cleanly; after the flip, retries
+        see the id in the ledger and no-op. Returns True if this call
+        committed the batch, False if it was already committed.
 
         Cost model: each append rewrites the table (read current ∪ new →
         new version) — right for the modest CONTROL tables this lake
         serves (catalog/checks, per-epoch stats rows). A data-plane
         table fed by a stream must NOT pay this (O(epochs²) cumulative):
-        use `append_log_table_exactly_once` — the O(batch) commit-log
-        twin (the Delta/Iceberg transaction-id surface this method
-        mirrors, implemented in-repo for exactly the cases the ingest /
-        near-dup / BM25 streams need).
+        use `append_log_table_exactly_once`, the O(batch) twin over the
+        same ledger (the Delta/Iceberg transaction-id surface both
+        mirror).
         """
         base = Path(self.app_table_path(name))
-        # the CAS snapshot, the ledger's dir and the schema all come from
-        # one MANIFEST read: a commit landing between two reads would let
-        # the CAS pass against stale data (TOCTOU lost update)
-        record, cur = self._snapshot(base)
-        ledger: list[str] = []
-        if cur is not None and (cur / "_batches.json").exists():
-            ledger = json.loads((cur / "_batches.json").read_text())
-        if batch_id in ledger:
+        # the CAS snapshot, the ledger and the rows all come from one
+        # MANIFEST read: a commit landing between two reads would let the
+        # CAS pass against stale data (TOCTOU lost update)
+        record, dirs = self._snapshot(base)
+        if batch_id in record.get("batches", []):
             return False
         # the current version's partition layout is kept (a bare rewrite
         # would flatten e.g. checks' check_date dirs on the first
         # idempotent append); allowMissingColumns: a widening append adds
         # columns and an omitted one reads as NULL
-        schema, pcols = self._table_schema(record, cur)
+        schema, pcols = self._table_schema(record, dirs)
         if schema is None:
             new = df
         else:
             self._check_append_schema(df, schema, allow_schema_evolution=True)
-            new = self._scan(cur, schema).unionByName(df, allowMissingColumns=True)
-        ver = self._new_version()
-        staging = base / f"_staging-{ver}"
+            new = self._scan(dirs, schema).unionByName(df, allowMissingColumns=True)
         # r13 opt (guide §6): AQE-rebalance before the write so output
         # files track advisoryPartitionSizeInBytes instead of however
         # many partitions the union arrived with — each epoch's rewrite
@@ -1176,420 +1221,86 @@ class Lake:
         # the partition columns when the table is partitioned so each
         # dir gets coherent files (AQE still splits skewed keys).
         new = new.hint("rebalance", *pcols) if pcols else new.hint("rebalance")
-        self._write_parquet(new, staging, "overwrite", pcols)
-        lf = staging / "_batches.json"
-        lf.write_text(json.dumps(ledger + [batch_id]))
-        fd = os.open(lf, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
         # CAS on the snapshot the ledger was read from: a concurrent
-        # committer (possibly retrying the SAME batch) can't be silently
+        # rewrite (possibly retrying the SAME batch) can't be silently
         # overwritten — the loser raises and re-runs against fresh state
-        self._commit_version(
-            base, ver, expect=record.get("version"), staging=staging,
-            layout=self._layout(new.schema, pcols),
-        )
-        return True
-
-    # --------------------------------------------------- commit-log tables ----
-    @staticmethod
-    def _log_safe(batch_id: str) -> str:
-        import hashlib
-
-        return hashlib.sha1(str(batch_id).encode()).hexdigest()[:16]
+        return self._replace_write(
+            new, base, partition_by=pcols, expect=record.get("version"),
+            snap=record, batch_id=batch_id,
+        ) is not None
 
     def append_log_table_exactly_once(
         self, df: DataFrame, name: str, batch_id: str
     ) -> bool:
         """O(batch) exactly-once append — the DATA-PLANE twin of
-        `append_app_table_exactly_once`, whose rewrite (read current ∪
-        new → new version) is right for small control tables but makes a
-        stream of N epochs cost O(N²) on an append-heavy table (a
-        streaming posting index, per-epoch document shards).
+        `append_app_table_exactly_once`, whose rewrite is right for small
+        control tables but makes a stream of N epochs cost O(N²) on an
+        append-heavy table (a streaming posting index, per-epoch document
+        shards). Both share the record's ledger.
 
-        Commit-log layout inside the current version dir: each batch
-        lands as its own ``batch=<sha1(id)>/`` subdir, and the commit
-        point is a marker file ``_commits/<sha1>.json`` created
-        atomically (O_EXCL) AFTER the data dir completes.
-        `read_log_table` lists markers and reads exactly the committed
-        dirs, so:
+        The batch is written outside the lock to a new ``b-*`` dir that
+        no record lists (its name has no ``=``, so Spark reads no
+        partition column from it); under the commit lock the append
+        checks the ledger and PUTs a record with the dir and the id
+        added. So a crashed attempt's dir is invisible (vacuum reclaims
+        it), a replay returns False having made nothing visible, distinct
+        batches commit concurrently, and committing batch N touches no
+        other batch's files. A batch with no rows commits its id alone.
 
-        * a torn append (data dir, no marker) is INVISIBLE to readers,
-          and the crash-replay clears the batch prefix — local files AND
-          backend objects — before rewriting, so once the marker finally
-          lands the dir holds exactly ONE attempt's part files (a delta
-          upload is add-only; without the clear, an S3 replay whose
-          Spark job picked different part-file names would leave both
-          attempts' files under ``batch=<sha>/`` and the reader would
-          return duplicate rows — ADVICE r11 high);
-        * a replay after the marker no-ops off the marker alone (returns
-          False) — no table read, no rewrite;
-        * DISTINCT batches may commit concurrently — there is no shared
-          read-modify-write anywhere (unlike the ledger-list protocol);
-          concurrent FIRST appends race only on the schema-bootstrap
-          version, where the CAS loser adopts the winner's bootstrap.
+        Log tables are unpartitioned: Spark refuses several partitioned
+        roots in one read. A table that is partitioned, or that has data
+        but no commit record, raises ValueError."""
+        import pyarrow.parquet as pq
 
-        This is the mini commit-log the rewrite docstring defers to
-        Delta/Iceberg, scoped to exactly the surface the engine needs.
-        Writer contract: one writer per batch_id at a time (Spark
-        structured streaming's epoch serialization provides this).
-        First log append to a table holding legacy rewrite-path rows
-        folds those root-level part files into a committed batch first
-        (`_migrate_legacy_log_roots`), so pre-existing rows stay visible
-        once markers start gating reads. Do NOT mix protocols after
-        that: a rewrite append publishes a new version dir and would
-        orphan every batch dir and marker.
-        """
         base = Path(self.app_table_path(name))
-        safe = self._log_safe(batch_id)
-        cur = self._current_dir(base)
-        if cur is None:
-            # schema-only bootstrap version (staged publish + manifest
-            # flip) so appends always have a committed dir to land in.
-            # Two concurrent first-appenders both land here; the CAS
-            # loser adopts the winner's (identical, schema-only)
-            # bootstrap instead of surfacing the conflict (ADVICE r11).
-            try:
-                self._replace_write(df.limit(0).coalesce(1), base)
-            except ConcurrentWriteError:
-                pass
-            cur = self._current_dir(base)
-        # control surface only (markers + root files): materializing the
-        # batch data bytes too would make this O(table) per commit on a
-        # bucket backend — the exact cost model this verb exists to avoid
-        cur = self.store.materialize_control(cur)
-        self._migrate_legacy_log_roots(cur)
-        marker = cur / "_commits" / f"{safe}.json"
-        if marker.exists():
+        record = self._record(base)
+        if batch_id in record.get("batches", []):
             return False
-        bdir = cur / f"batch={safe}"
-        # Replay hygiene: a prior attempt may have pushed SOME part
-        # files to the backend before crashing; clear the batch prefix
-        # (markerless ⇒ invisible ⇒ safe to drop at any point) so the
-        # add-only delta upload below cannot accumulate two attempts.
-        self.store.delete_dir(bdir)
+        self._log_record(base, record, df, batch_id, None)  # refuse early
+        bdir = base / f"b-{self._new_version()[2:]}"
         # r13 opt (guide §6): size the batch dir's files by bytes (AQE
         # rebalance → advisory partition size) rather than by the
-        # producer's shuffle ceiling — a micro-batch cached at 64
-        # near-empty partitions was landing as 64 near-empty part files
-        # that every read_log_table mergeSchema pass re-paid per epoch.
+        # producer's shuffle ceiling
         self._write_parquet(df.hint("rebalance"), bdir, "overwrite")
-        # O(batch): push only this batch's prefix, not the table dir
-        self.store.upload_dir_delta(bdir)
-        (cur / "_commits").mkdir(exist_ok=True)
-        committed = self.store.try_create_exclusive(
-            marker, json.dumps({"batch_id": str(batch_id)}).encode()
-        )
-        if not committed:
-            return False
-        # Lost-append fence, producer side (ADVICE r12 medium): a
-        # compaction whose marker re-list ran BEFORE this marker landed
-        # may flip the manifest without carrying it — the fold has
-        # neither the rows nor the marker, and without this check the
-        # producer would report success for rows no reader can see.
-        # Re-read the manifest AFTER the marker is durable: if the
-        # version moved and the new version does not hold this batch's
-        # marker, re-append into the new version (the recursion's
-        # exclusive marker create races fairly with the compactor's
-        # post-flip straggler sweep — whichever wins, the rows are in).
-        # Ordering proof sketch (M = marker time, T1 = compactor's
-        # pre-flip re-list, T2 = flip, T3 = post-flip sweep list):
-        #   M < T1            -> re-list sees the marker, compactor aborts
-        #   T1 < M < T3       -> the sweep adopts the batch
-        #   M > T3 (=> M > T2)-> the manifest read below sees the flip
-        #                        and the recursion re-appends
-        # so every window is covered by at least one side.
-        if self._current_dir(base) != Path(cur):
-            new_cur = self.store.materialize_control(self._current_dir(base))
-            if not (new_cur / "_commits" / f"{safe}.json").exists():
-                self.append_log_table_exactly_once(df, name, batch_id)
-        return True
+        if any(pq.ParquetFile(p).metadata.num_rows for p, _ in self._data_files(bdir)):
+            self.store.upload_dir_delta(bdir)
+        else:
+            self.store.delete_dir(bdir)  # Spark's schema-only file
+            bdir = None
+        with self._commit_lock(base):
+            record = self._record(base)
+            replay = batch_id in record.get("batches", [])
+            if not replay:
+                self._put_record(
+                    base, self._log_record(base, record, df, batch_id, bdir)
+                )
+        if replay and bdir is not None:
+            self.store.delete_dir(bdir)
+        return not replay
 
-    def _migrate_legacy_log_roots(self, cur: Path) -> None:
-        """Fold legacy rewrite-path rows into the commit log (ADVICE r11
-        medium): a table created by `append_app_table_exactly_once` /
-        `write_app_table` keeps its rows as ROOT-level part files of the
-        version dir — which `read_log_table` only reads while ZERO
-        markers exist. Without this fold, the first commit-log append
-        would make every pre-existing row invisible (silent loss) and
-        the downstream fingerprint anti-joins would re-admit previously
-        ingested content. Copying the root files into a marker-committed
-        ``batch=`` dir keeps them visible forever; the root copies stay
-        behind as the empty-table schema fallback (never double-read:
-        the root fallback only fires when no batch dir exists). A
-        schema-only bootstrap (0-row root files, the normal fresh-table
-        path) has nothing to lose and is skipped via the parquet footer
-        row counts — no Spark job on either path."""
-        cdir = cur / "_commits"
-        if cdir.exists() and any(cdir.glob("*.json")):
-            return  # already a commit-log table
-        # Partition detection must go THROUGH the backend (ADVICE r12
-        # medium): materialize_control deliberately skips col=value/ data
-        # keys, so on a bucket backend a fresh process has no local dirs
-        # to iterdir — list_subdirs merges local dirs with the bucket's
-        # CommonPrefixes, so server-side-only partitioned layouts are
-        # seen too.
-        part_dirs = sorted(
-            d for d in self.store.list_subdirs(cur)
-            if "=" in d and not d.startswith("batch=")
-        )
-        if part_dirs:
-            # Hive-partitioned legacy layout: rows live under col=value/
-            # dirs the root fold below cannot carry (a batch dir read
-            # would re-derive partition columns from the wrong path
-            # depth). Refuse loudly rather than migrate partially.
+    def _log_record(
+        self, base: Path, record: dict, df: DataFrame, batch_id: str, bdir: Path | None
+    ) -> dict:
+        """``record`` with the log batch dir ``bdir`` (None for a batch
+        with no rows) and ``batch_id`` added, widened by any new column
+        of ``df``; a new record for a table that does not exist yet."""
+        if not record and not self._has_data(base):
+            record = {"version": self._new_version(), **self._layout(df.schema, None)}
+        if "schema" not in record:
             raise ValueError(
-                "table holds partitioned rewrite-path data "
-                f"({part_dirs[0]}, …); commit-log appends would hide "
-                "it — compact/rewrite it unpartitioned first, or keep "
-                "using append_app_table_exactly_once for this table"
+                f"log append to {base.name!r}: the table has data but no "
+                "commit record; rewrite it with write_app_table first"
             )
-        roots = sorted(p for p in cur.glob("*.parquet"))
-        if not roots:
-            return
-        import pyarrow.parquet as _pq
-
-        if sum(_pq.ParquetFile(p).metadata.num_rows for p in roots) == 0:
-            return  # schema-only bootstrap, not legacy data
-        legacy_id = "legacy-root"
-        lsafe = self._log_safe(legacy_id)
-        ldir = cur / f"batch={lsafe}"
-        self.store.delete_dir(ldir)
-        ldir.mkdir(parents=True, exist_ok=True)
-        for p in roots:
-            shutil.copy2(p, ldir / p.name)
-        self.store.upload_dir_delta(ldir)
-        cdir.mkdir(exist_ok=True)
-        self.store.try_create_exclusive(
-            cdir / f"{lsafe}.json", json.dumps({"batch_id": legacy_id}).encode()
-        )
-
-    @staticmethod
-    def _marker_dir(marker: Path) -> str:
-        """Data-dir name a commit marker points at. Markers written by
-        the normal append carry no ``dir`` field and resolve to
-        ``batch=<stem>``; markers written by the straggler sweep point
-        at their ``-adopt`` dir (the adoption copies into a DISTINCT dir
-        so a racing producer re-append can never interleave part files
-        with it — the marker's exclusive create picks exactly one
-        winner, and the marker says whose dir holds the rows)."""
-        try:
-            d = json.loads(marker.read_text()).get("dir")
-        except (OSError, ValueError):
-            d = None
-        return d or f"batch={marker.stem}"
-
-    def read_log_table(self, name: str) -> DataFrame:
-        """Exactly the committed batches — marker-listed dirs only, so
-        torn appends never surface. Markers whose dir was folded away by
-        `compact_log_table` contribute no files (the rows live in the
-        fold dir) but keep refusing replays."""
-        base = Path(self.app_table_path(name))
-        cur = self._current_dir(base)
-        if cur is None:
-            raise FileNotFoundError(f"log table {name!r} does not exist")
-        cur = self.store.materialize_dir(cur)
-        cdir = cur / "_commits"
-        markers = sorted(cdir.glob("*.json")) if cdir.exists() else []
-        dirs = [cur / self._marker_dir(m) for m in markers]
-        dirs = [d for d in dirs if d.exists()]
-        if not dirs:
-            # bootstrap schema: the version dir's root part files
-            roots = sorted(str(p) for p in cur.glob("*.parquet"))
-            return self.spark.read.parquet(*roots)
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[str(d) for d in dirs]
-        )
-
-    def compact_log_table(self, name: str, transform=None) -> dict:
-        """Fold every committed batch dir into ONE, as a new version
-        behind the atomic manifest flip — readers see pre- or post-fold,
-        never both — CARRYING every marker, so crash-replayed producers
-        keep no-opping after their rows were folded (the
-        `carry_exactly_once_ledger` discipline, marker-file form).
-
-        Log appends don't bump the manifest, so the version CAS alone
-        cannot see an append that commits during the fold. Three layers
-        close the lost-append race (ADVICE r11 high → r12 medium):
-
-        1. pre-flip re-list — after staging is fully written, re-list
-           the live ``_commits`` and abort with `ConcurrentWriteError`
-           if any marker appeared that the fold didn't carry;
-        2. post-flip straggler sweep — markers that landed between the
-           re-list and the flip are adopted into the new version
-           (`_adopt_log_stragglers`: data copied under a distinct
-           ``batch=<safe>-adopt`` dir, committed by the same exclusive
-           marker key the producer would race for, so exactly one side
-           wins and no part files ever interleave);
-        3. producer post-verify — `append_log_table_exactly_once`
-           re-reads the manifest after its marker lands and re-appends
-           into the new version when neither the carry nor the sweep
-           covered it.
-
-        Every window is covered by at least one layer (see the ordering
-        proof in the append). The one residual dependency: if THIS
-        process crashes between the flip and the sweep, the stragglers
-        whose producers already returned True are recovered by
-        `recover_log_table` — which runs automatically at the start of
-        the next compaction, reading the ``swept-from.json`` breadcrumb
-        staged with the fold — so vacuum retention of the previous
-        version dir must outlast that recovery (the default retention
-        does). Operationally, quiescing producers during compaction
-        remains the zero-moving-parts posture; the protocol above is
-        for when you can't.
-
-        ``transform`` (optional, DataFrame -> DataFrame) rewrites the
-        folded rows — the hook domain-specific compactions use to fold
-        semantics, not just files (e.g. `compact_bm25_index` drops
-        superseded re-crawl postings by keeping each doc's latest
-        epoch). The transform applies to the FOLDED rows only; batches
-        committed after this fold (including adopted stragglers) are
-        untransformed until the next compaction, so a transform must be
-        idempotent and order-insensitive across repeated folds."""
-        base = Path(self.app_table_path(name))
-        # recover any stragglers a previously-crashed sweep left behind
-        # BEFORE folding, so this fold's read includes them
-        self.recover_log_table(name)
-        snapshot = self._manifest_version(base)
-        cur = self._current_dir(base)
-        if cur is None:
-            raise FileNotFoundError(f"log table {name!r} does not exist")
-        cur = self.store.materialize_dir(cur)
-        cdir = cur / "_commits"
-        safes = sorted(p.stem for p in cdir.glob("*.json")) if cdir.exists() else []
-        rows = self.read_log_table(name)
-        if transform is not None:
-            rows = transform(rows)
-        n_dirs_before = sum(
-            1 for p in (cdir.glob("*.json") if cdir.exists() else [])
-            if (cur / self._marker_dir(p)).exists()
-        )
-        fold_id = "fold-" + self._log_safe("|".join(safes))
-        fold_safe = self._log_safe(fold_id)
-        ver = self._new_version()
-        staging = base / f"_staging-{ver}"
-        self._write_parquet(rows, staging / f"batch={fold_safe}", "overwrite")
-        # bootstrap root schema file so an empty-commit read still works
-        self._write_parquet(
-            rows.limit(0).coalesce(1), staging / "_schema_tmp", "overwrite"
-        )
-        for p in (staging / "_schema_tmp").glob("*.parquet"):
-            os.replace(p, staging / p.name)
-        shutil.rmtree(staging / "_schema_tmp")
-        sc = staging / "_commits"
-        sc.mkdir(parents=True, exist_ok=True)
-        carried: set[str] = set()
-        if cdir.exists():
-            for p in cdir.glob("*.json"):
-                shutil.copy2(p, sc / p.name)
-                carried.add(p.stem)
-        (sc / f"{fold_safe}.json").write_text(json.dumps({"batch_id": fold_id}))
-        carried.add(fold_safe)
-        # breadcrumb for crash recovery: if this process dies between
-        # the flip below and the straggler sweep, recover_log_table can
-        # re-run the sweep from the previous version dir
-        (staging / "swept-from.json").write_text(
-            json.dumps({"prev": cur.name, "carried": sorted(carried)})
-        )
-        # lost-append check: a marker that landed while the fold was
-        # staging has rows NOT in the fold but a marker that WOULD be
-        # carried — flipping now loses them forever (replay no-ops).
-        self.store.materialize_control(cur)
-        live = {p.stem for p in cdir.glob("*.json")} if cdir.exists() else set()
-        unfolded = live - set(safes)
-        if unfolded:
-            self.store.delete_dir(staging)
-            raise ConcurrentWriteError(
-                f"log table gained {len(unfolded)} commit(s) during "
-                "compaction; aborting the flip — retry to fold them"
+        if record["partition_by"]:
+            raise ValueError(
+                f"log append to {base.name!r}: the table is partitioned by "
+                f"{record['partition_by']}, and log batch dirs are unpartitioned"
             )
-        self._commit_version(
-            base, ver, expect=snapshot, staging=staging,
-            layout=self._layout(rows.schema, None),
-        )
-        # post-flip straggler sweep: markers that landed between the
-        # re-list above and the flip are adopted into the new version
-        adopted = self._adopt_log_stragglers(base, cur, carried)
+        schema = StructType.fromJson(record["schema"])
+        added = self._check_append_schema(df, schema, allow_schema_evolution=True)
         return {
-            "batches_folded": int(n_dirs_before),
-            "markers_carried": len(safes),
-            "stragglers_adopted": adopted,
-            "fold_id": fold_id,
+            **record,
+            **self._layout(StructType(schema.fields + added), None),
+            "dirs": self._dir_names(record) + ([bdir.name] if bdir else []),
+            "batches": record.get("batches", []) + [batch_id],
         }
-
-    def _adopt_log_stragglers(
-        self, base: Path, old_cur: Path, carried: set[str]
-    ) -> int:
-        """Adopt committed batches whose markers landed in ``old_cur``
-        after the fold's re-list (so they were neither folded nor
-        carried) into the CURRENT version. The adoption copies the
-        batch's part files under ``batch=<safe>-adopt`` — a dir no
-        producer ever writes — then races the producer's own re-append
-        on the single exclusive marker key; the loser deletes its dir,
-        so the committed marker always names exactly one complete
-        attempt's files. Idempotent: re-running after a crash re-copies
-        and loses the marker race to its own earlier success (or wins
-        if the earlier attempt died pre-marker)."""
-        ocdir = Path(old_cur) / "_commits"
-        self.store.materialize_control(Path(old_cur))
-        if not ocdir.exists():
-            return 0
-        stragglers = [p for p in ocdir.glob("*.json") if p.stem not in carried]
-        if not stragglers:
-            return 0
-        new_cur = self._current_dir(base)
-        new_cur = self.store.materialize_control(new_cur)
-        adopted = 0
-        for m in stragglers:
-            s = m.stem
-            if (new_cur / "_commits" / f"{s}.json").exists():
-                continue  # producer's post-verify re-append beat us
-            src = Path(old_cur) / self._marker_dir(m)
-            self.store.materialize_dir(src)
-            if not src.is_dir():
-                continue  # marker without data cannot happen post-commit
-            adir = new_cur / f"batch={s}-adopt"
-            self.store.delete_dir(adir)
-            adir.mkdir(parents=True, exist_ok=True)
-            for f in sorted(src.glob("*.parquet")):
-                shutil.copy2(f, adir / f.name)
-            self.store.upload_dir_delta(adir)
-            (new_cur / "_commits").mkdir(exist_ok=True)
-            try:
-                payload = json.loads(m.read_text())
-            except (OSError, ValueError):
-                payload = {}
-            payload["dir"] = f"batch={s}-adopt"
-            payload["adopted_from"] = Path(old_cur).name
-            won = self.store.try_create_exclusive(
-                new_cur / "_commits" / f"{s}.json", json.dumps(payload).encode()
-            )
-            if won:
-                adopted += 1
-            else:
-                self.store.delete_dir(adir)
-        return adopted
-
-    def recover_log_table(self, name: str) -> dict:
-        """Re-run the post-flip straggler sweep from the ``swept-from``
-        breadcrumb — the recovery path for a compactor that crashed
-        between its manifest flip and its sweep. Safe to call any time
-        (idempotent, no-op when the previous version dir is gone or had
-        no stragglers); `compact_log_table` calls it automatically
-        before folding."""
-        base = Path(self.app_table_path(name))
-        cur = self._current_dir(base)
-        if cur is None:
-            raise FileNotFoundError(f"log table {name!r} does not exist")
-        cur = self.store.materialize_control(cur)
-        crumb = cur / "swept-from.json"
-        if not crumb.exists():
-            return {"stragglers_adopted": 0}
-        info = json.loads(crumb.read_text())
-        old = base / info["prev"]
-        if not self.store.data_dir_exists(old):
-            return {"stragglers_adopted": 0}
-        n = self._adopt_log_stragglers(base, old, set(info["carried"]))
-        return {"stragglers_adopted": n}

@@ -176,14 +176,10 @@ class PosixStore:
         not hold yet (the in-place-append data path). POSIX: no-op — the
         local write IS the store."""
 
-    def materialize_control(self, path: Path) -> Path:
-        """Make only the CONTROL surface of a data dir locally readable:
-        commit markers (``_commits/``) and root-level files (ledger,
-        schema-bootstrap part files) — NOT the ``batch=*/`` data bytes.
-        The commit-log append needs exactly this surface (marker check,
-        legacy-root migration), and fetching the data too would make an
-        O(batch) commit O(table) on a bucket backend. POSIX: identity."""
-        return Path(path)
+    def dir_mtime(self, path: Path) -> float:
+        """When a data directory was last written (vacuum's grace check
+        on uncommitted dirs)."""
+        return Path(path).stat().st_mtime
 
     def list_subdirs(self, base: Path) -> set[str]:
         """Immediate child directory names of ``base`` that hold data
@@ -194,11 +190,11 @@ class PosixStore:
         return {d.name for d in base.iterdir() if d.is_dir()}
 
     def discover_bases(self, root: Path) -> set[Path]:
-        """Table base dirs under ``root`` that contain version/staging
-        dirs — vacuum's sweep set."""
+        """Table base dirs under ``root`` that contain version, staging
+        or log batch dirs — vacuum's sweep set."""
         return {
             p.parent
-            for pat in ("v-*", "_staging-*")
+            for pat in ("v-*", "_staging-*", "b-*")
             for p in Path(root).rglob(pat)
             if p.is_dir()
         }
@@ -555,28 +551,12 @@ class S3ObjectStore(PosixStore):
             os.replace(tmp, dst)
         return path
 
-    def materialize_control(self, path: Path) -> Path:
-        """GET only the control keys under the prefix: ``_commits/*``
-        and root-level objects (no ``/`` in the relative key — the
-        rewrite ledger and the schema-bootstrap/legacy root files).
-        ``batch=*/`` data bytes stay server-side, keeping the commit-log
-        append O(batch) however many batches the table holds."""
-        path = Path(path)
+    def dir_mtime(self, path: Path) -> float:
+        """The newest Last-Modified under the prefix: a dir uploaded from
+        another host has no local footprint to stat."""
         prefix = self._key(path) + "/"
-        for o in self._iter_keys(prefix):
-            rel = o["Key"][len(prefix):]
-            if "/" in rel and not rel.startswith("_commits/"):
-                continue
-            dst = path / rel
-            if dst.is_file() and dst.stat().st_size == o["Size"]:
-                continue
-            dst.parent.mkdir(parents=True, exist_ok=True)
-            body = self.c.get_object(Bucket=self.bucket, Key=o["Key"])["Body"]
-            tmp = dst.parent / f"_get-{uuid.uuid4().hex[:8]}.tmp"
-            with open(tmp, "wb") as f:
-                shutil.copyfileobj(body, f)
-            os.replace(tmp, dst)
-        return path
+        stamps = [o["LastModified"].timestamp() for o in self._iter_keys(prefix)]
+        return max(stamps) if stamps else super().dir_mtime(path)
 
     def upload_dir_delta(self, path: Path) -> None:
         """Push local files under ``path`` the bucket does not hold (the
@@ -616,7 +596,7 @@ class S3ObjectStore(PosixStore):
 
     def discover_bases(self, root: Path) -> set[Path]:
         """Vacuum sweep set: local staging parents PLUS every bucket key
-        under the root prefix whose path contains a v-*/_staging-*
+        under the root prefix whose path contains a v-*/_staging-*/b-*
         segment — a table whose data lives only server-side has no local
         footprint to rglob."""
         out = super().discover_bases(root)
@@ -624,7 +604,7 @@ class S3ObjectStore(PosixStore):
         for o in self._iter_keys(prefix):
             parts = o["Key"].split("/")
             for i, seg in enumerate(parts[:-1]):
-                if seg.startswith(("v-", "_staging-")):
+                if seg.startswith(("v-", "_staging-", "b-")):
                     out.add(Path("/" + "/".join(parts[:i])))
                     break
         return out

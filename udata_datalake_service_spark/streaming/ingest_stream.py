@@ -9,8 +9,8 @@ document shards becomes a continuously-growing corpus table with
 * END-TO-END exactly-once delivery via the canonical Structured
   Streaming pattern: ``foreachBatch`` + an idempotent sink keyed by the
   epoch id. Spark replays a failed epoch with the SAME id after restart;
-  ``Lake.append_log_table_exactly_once`` consults its per-batch marker
-  ledger and no-ops the duplicate, so source-replay ∘ idempotent-sink =
+  ``Lake.append_log_table_exactly_once`` finds the epoch id in the
+  ledger of the table's MANIFEST record and no-ops the duplicate, so source-replay ∘ idempotent-sink =
   exactly-once (the composition Delta's ``txnAppId``/``txnVersion``
   implements; here it is the lake's own ledger).
 

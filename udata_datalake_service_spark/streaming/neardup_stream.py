@@ -39,7 +39,8 @@ At 100 TB: per epoch the probe is one equi-join on (band, bkey) whose
 batch side is micro-batch-sized; the index side is a plain lake table
 here (one shuffle per epoch) — a production deployment buckets the
 index by band key (`Lake.write_bucketed_table`) and compacts it
-(`Lake.compact_table`, which carries the exactly-once ledger), after
+(`Lake.compact_table`, which folds the log batch dirs and carries the
+exactly-once ledger of the table's MANIFEST record), after
 which the probe shuffle moves only the batch. ``max_bucket`` caps
 template-family buckets at probe time (drops enumerable, same
 contract as `lsh_candidate_pairs`).
@@ -178,7 +179,7 @@ def near_dup_ingest_stream(
         # epoch's own index/sigs append already committed before the crash
         def _earlier(name: str) -> DataFrame | None:
             try:
-                t = lake.read_log_table(name)
+                t = lake.read_app_table(name)
             except Exception:  # noqa: BLE001  (first epoch: table absent)
                 return None
             return t.filter(F.col("batch_epoch") < ep)

@@ -14,22 +14,21 @@ in `tests/test_llm.py`, re-pinned end-to-end through the real
 streaming engine in `tests/test_streaming.py`).
 
 Each epoch commits TWO exactly-once appends keyed by the same epoch
-id — postings through ``Lake.append_log_table_exactly_once`` (the
-O(batch) commit-log path: a data-plane table must never pay a rewrite
-of epochs 0..N-1 to commit epoch N) and the 1-row stats through the
-rewrite-ledger ``append_app_table_exactly_once`` (a control table):
-Spark replays a failed epoch with the SAME id, the per-table ledgers
-no-op the second delivery, and a crash between the two appends heals
+id — postings through ``Lake.append_log_table_exactly_once`` (one
+batch dir per epoch: a data-plane table must never pay a rewrite of
+epochs 0..N-1 to commit epoch N) and the 1-row stats through the
+rewriting ``append_app_table_exactly_once`` (a control table): Spark
+replays a failed epoch with the SAME id, each table's ledger (in its
+MANIFEST record) no-ops the second delivery, and a crash between the two appends heals
 on replay (the committed one no-ops, the missing one lands) — the
 torn-commit discipline `streaming/neardup_stream.py` established.
 
 State/size at scale: the stream itself is STATELESS beyond source
 offsets (no dedup store, no watermark — postings are per-(doc, term)
 facts). The postings table grows with the corpus, as an index must;
-compact batch-dir counts with ``Lake.compact_log_table``
-(row-preserving and marker-carrying, so retrieval and replay-no-ops
-are unaffected); the stats table grows 1 row per epoch and sums at
-probe time.
+compact batch-dir counts with ``Lake.compact_table`` (row-preserving
+and ledger-carrying, so retrieval and replay-no-ops are unaffected);
+the stats table grows 1 row per epoch and sums at probe time.
 """
 
 from __future__ import annotations
@@ -98,8 +97,8 @@ def bm25_index_stream(
             # two tables, one epoch id: a crash between the appends heals
             # on replay — the committed table no-ops, the missing one
             # lands. Postings are DATA-PLANE (they grow with the corpus)
-            # → the O(batch) commit-log append; stats are a 1-row-per-
-            # epoch control table → the rewrite-ledger append is fine.
+            # → the O(batch) log append; stats are a 1-row-per-epoch
+            # control table → the rewriting append is fine.
             lake.append_log_table_exactly_once(
                 p, postings_table, f"{ledger_prefix}-{ep}"
             )
@@ -152,21 +151,22 @@ def compact_bm25_index(
 ) -> dict:
     """Fold the streamed BM25 index, enforcing the unique-doc contract:
     postings keep each doc's latest epoch (`latest_crawl_postings` as
-    `compact_log_table`'s transform — idempotent, so repeated folds and
+    `Lake.compact_table`'s transform — idempotent, so repeated folds and
     post-fold re-crawls converge on the next run), and the stats table
     is REWRITTEN to the exact post-dedup counters (ledger carried, so a
     crash-replayed stats epoch still no-ops). After this, a plain
     ``bm25_from_lake`` scores a re-crawled corpus identically to a
     single-ingest index of the latest versions."""
-    res = lake.compact_log_table(
-        postings_table, transform=lambda rows: latest_crawl_postings(rows, id_col)
+    res = lake.compact_table(
+        postings_table, app_table=True,
+        transform=lambda rows: latest_crawl_postings(rows, id_col),
     )
-    folded = lake.read_log_table(postings_table)
+    folded = lake.read_app_table(postings_table)
     max_ep = folded.agg(F.max("batch_epoch")).collect()[0][0]
     corrected = stats_from_postings(folded, id_col).withColumn(
         "batch_epoch", F.lit(-1 if max_ep is None else int(max_ep))
     )
-    lake.rewrite_app_table(corrected, stats_table, carry_exactly_once_ledger=True)
+    lake.rewrite_app_table(corrected, stats_table)
     return res
 
 
@@ -194,7 +194,7 @@ def bm25_from_lake(
     — exact even when re-crawls landed after the last
     `compact_bm25_index`, at the cost of a doc-partitioned window over
     the matched index scan."""
-    raw = lake.read_log_table(postings_table)
+    raw = lake.read_app_table(postings_table)
     if dedup_recrawls:
         folded = latest_crawl_postings(raw, id_col)
         postings = folded.select("term", id_col, "tf", "dl")

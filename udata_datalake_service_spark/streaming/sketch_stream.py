@@ -7,8 +7,8 @@ distinct X per group so far?" without ever rescanning history. Each
 micro-batch contributes a k-row-per-group KMV sketch
 (`operators/sketch.kmv_build`) appended through
 ``Lake.append_app_table_exactly_once`` keyed by the epoch id — Spark
-replays a failed epoch with the SAME id, the ledger no-ops the second
-delivery, so the sketch table is exactly-once end to end. Any NDV
+replays a failed epoch with the SAME id, the ledger in the table's
+MANIFEST record no-ops the second delivery, so the sketch table is exactly-once end to end. Any NDV
 question then reads ONLY the sketch table: min-k(∪ min-k) = min-k(∪),
 so the lake rollup is hash-for-hash the sketch of everything ever
 streamed.
@@ -126,9 +126,10 @@ def kmv_compact_lake_sketches(
       checkpoint already considers durable.
     * **The exactly-once ledger is CARRIED, not dropped.** Compaction
       preserves every committed epoch's *data* (merged), so the epoch
-      ids must stay committed too: a crash-replayed epoch keeps
-      no-opping against the compacted version. Dropping the ledger
-      would re-admit replayed epochs as duplicate ``batch_epoch`` rows.
+      ids must stay committed too: `rewrite_app_table` carries the
+      ledger, so a crash-replayed epoch keeps no-opping against the
+      compacted version. Dropping it would re-admit replayed epochs as
+      duplicate ``batch_epoch`` rows.
 
     Raises `ConcurrentWriteError` if a commit raced; the caller retries.
     Returns {"rows_before", "rows_after"}."""
@@ -141,6 +142,6 @@ def kmv_compact_lake_sketches(
     )
     n_after = merged.count()
     lake.rewrite_app_table(
-        merged, table, expected_version=snapshot, carry_exactly_once_ledger=True
+        merged, table, expected_version=snapshot
     )
     return {"rows_before": int(n_before), "rows_after": int(n_after)}
