@@ -19,9 +19,10 @@ batch dir per epoch: a data-plane table must never pay a rewrite of
 epochs 0..N-1 to commit epoch N) and the 1-row stats through the
 rewriting ``append_app_table_exactly_once`` (a control table): Spark
 replays a failed epoch with the SAME id, each table's ledger (in its
-MANIFEST record) no-ops the second delivery, and a crash between the two appends heals
-on replay (the committed one no-ops, the missing one lands) — the
-torn-commit discipline `streaming/neardup_stream.py` established.
+MANIFEST record) no-ops the second delivery, and a crash between the
+two appends heals on replay (the committed one no-ops, the missing one
+lands) — the torn-commit discipline `streaming/neardup_stream.py`
+established.
 
 State/size at scale: the stream itself is STATELESS beyond source
 offsets (no dedup store, no watermark — postings are per-(doc, term)
