@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import threading
 import uuid
 
 import pytest
@@ -37,6 +38,36 @@ def count_jobs(spark):
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture()
+def count_py4j():
+    """``count_py4j(fn)`` runs ``fn`` and returns (its result, the number
+    of py4j commands the calling thread sent to the JVM). It wraps
+    ``GatewayClient.send_command``, restored in ``finally``. Commands
+    from other threads are not counted, so py4j's finalizer thread,
+    which releases garbage-collected Java references, cannot make the
+    count vary from run to run."""
+    from py4j.java_gateway import GatewayClient
+
+    send = GatewayClient.send_command
+
+    def run(fn):
+        caller, sent = threading.get_ident(), [0]
+
+        def counting(self, *args, **kwargs):
+            if threading.get_ident() == caller:
+                sent[0] += 1
+            return send(self, *args, **kwargs)
+
+        GatewayClient.send_command = counting
+        try:
+            out = fn()
+        finally:
+            GatewayClient.send_command = send
+        return out, sent[0]
 
     return run
 

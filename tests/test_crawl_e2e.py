@@ -2,7 +2,7 @@
 
 Every stage here is individually driver/pytest-attested; this test proves
 the COMPOSITION: select_batch (O3/U1/J3, tiered deterministic sampling)
-→ claim_batch (U7) → check_batch (S1, mock transport over mapInPandas)
+→ claim_batch (U7) → check_batch (S1, mock transport on driver threads)
 → checks-row construction → change-detection cascade (ST4) + webhook
 events (ST5) + next-check ladder (ST3), with the final appended checks
 rows asserted cell-for-cell against a DuckDB restatement of the whole
@@ -109,8 +109,8 @@ def _run_pipeline(spark, fixtures):
     def mock_transport(url: str, method: str):
         # Deterministic fake HTTP: everything derives from md5(url) so the
         # DuckDB oracle replays it exactly. Method-independent, so the
-        # HEAD->GET fallback changes only the recorded verb. Nested (not
-        # module-level) so cloudpickle ships it by value to executors.
+        # HEAD->GET fallback changes only the recorded verb. Stateless,
+        # so check_batch's fetch threads may call it at once.
         h = int(hashlib.md5(url.encode()).hexdigest()[:8], 16)
         status = (200, 200, 304, 404, 500)[h % 5]
         headers = {}

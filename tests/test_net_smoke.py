@@ -259,9 +259,9 @@ def test_real_transport_timeout_branch(base_url):
 
 
 def test_check_batch_distributed_real_sockets(spark, base_url):
-    """The full S1 path on executors: claimed batch -> mapInPandas ->
-    REAL urllib sockets from Python workers back to the fixture server —
-    connection handling, HEAD/GET verbs and header lowering all live."""
+    """The full S1 path: claimed batch -> check_batch's driver threads ->
+    REAL urllib sockets back to the fixture server — connection
+    handling, HEAD/GET verbs and header lowering all live."""
     batch = spark.createDataFrame(
         [
             ("r1", f"{base_url}/ok"),
@@ -323,10 +323,10 @@ def test_cross_host_http_to_https_redirect(plain_srv, base_url, tls_server):
 
 
 def test_check_batch_distributed_tls(spark, tls_server):
-    """The full S1 path on executors over TLS: the cafile-carrying
-    transport closure ships to Python workers, each of which performs a
-    real handshake back to the fixture — plus one row whose default-trust
-    verification fails and lands as an error row, not a task failure."""
+    """The full S1 path over TLS: check_batch's threads share the
+    cafile-carrying transport closure, each performing a real handshake
+    back to the fixture — plus one row whose default-trust verification
+    fails and lands as an error row, not an exception."""
     from udata_datalake_service_spark.plans.fetch import make_urllib_transport
 
     url, ca = tls_server
@@ -343,7 +343,7 @@ def test_check_batch_distributed_tls(spark, tls_server):
     assert rows["r1"]["status"] == 200 and rows["r1"]["method"] == "head"
     assert rows["r2"]["status"] == 404
     # same batch through the DEFAULT trust store: every row is an error
-    # row with the verify failure recorded, and the job still succeeds
+    # row with the verify failure recorded, and the fetch still returns
     rows = check_batch(batch, fan_out=2).collect()
     assert all(r["status"] is None for r in rows)
     assert all("CERTIFICATE_VERIFY_FAILED" in (r["error"] or "") for r in rows)

@@ -5,15 +5,27 @@ golden tests (SURVEY §5 taxonomy 3)."""
 from __future__ import annotations
 
 import datetime as dt
+import threading
+import time
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from udata_datalake_service_spark.plans.backoff import domain_backoff_table
 from udata_datalake_service_spark.plans.change_detection import (
     check_events,
     with_change_detection,
 )
-from udata_datalake_service_spark.plans.next_check import next_check_at
+from udata_datalake_service_spark.plans.fetch import (
+    CHECK_RESULT_SCHEMA,
+    check_batch,
+    local_relation,
+)
+from udata_datalake_service_spark.plans.next_check import (
+    next_check_at,
+    with_next_check,
+)
 from udata_datalake_service_spark.plans.select_batch import (
     claim_batch,
     excluded_clause,
@@ -186,9 +198,7 @@ def test_next_check_ladder(spark):
         [(i, c, lm) for i, (c, lm, _) in enumerate(rows)],
         "i long, changed boolean, lm timestamp",
     ).withColumn("created_at", F.lit(created))
-    out = df.withColumn(
-        "nca", next_check_at(F.col("created_at"), F.col("changed"), F.col("lm"))
-    )
+    out = df.withColumn("nca", F.expr(next_check_at("created_at", "changed", "lm")))
     got = {r["i"]: (r["nca"] - created).total_seconds() / 3600 for r in out.collect()}
     for i, (_, _, expect) in enumerate(rows):
         assert got[i] == expect, f"row {i}"
@@ -221,9 +231,7 @@ def test_check_events_triggers(spark, checks_df):
 
 # ----------------------------------------------------------------- fetch --
 def test_check_batch_head_get_fallback_and_errors(spark):
-    from udata_datalake_service_spark.plans.fetch import check_batch
-
-    # closure, not module-level: cloudpickle ships it by value to executors
+    # stateless, so check_batch's fetch threads may call it at once
     def _fake_transport(url, method):
         if "timeout" in url:
             raise TimeoutError
@@ -255,6 +263,144 @@ def test_check_batch_head_get_fallback_and_errors(spark):
     # (crawl/helpers.py:47-53): 404 HEADs are re-tried as GET
     assert rows["r5"]["status"] == 404 and rows["r5"]["method"] == "get"
     assert rows["r1"]["domain"] == "a.org"
+
+
+BATCH_SCHEMA = T.StructType(
+    [T.StructField("resource_id", T.StringType()), T.StructField("url", T.StringType())]
+)
+
+
+def _nice(url, method):
+    return 200, {"Content-Length": "1"}, None
+
+
+class _CountingTransport:
+    """A HEAD-nice transport that counts its calls and the most calls in
+    flight at once, under a lock; each call sleeps ``delay_s``."""
+
+    def __init__(self, delay_s=0.0):
+        self.delay_s, self.lock = delay_s, threading.Lock()
+        self.calls = self.in_flight = self.peak = 0
+
+    def __call__(self, url, method):
+        with self.lock:
+            self.calls += 1
+            self.in_flight += 1
+            self.peak = max(self.peak, self.in_flight)
+        try:
+            time.sleep(self.delay_s)
+            return _nice(url, method)
+        finally:
+            with self.lock:
+                self.in_flight -= 1
+
+
+def _urls(spark, n):
+    return local_relation(
+        spark,
+        [{"resource_id": f"r{i}", "url": f"https://a.org/{i}.csv"} for i in range(n)],
+        BATCH_SCHEMA,
+    )
+
+
+def test_check_batch_empty_batch_makes_no_call(spark):
+    transport = _CountingTransport()
+    out = check_batch(spark.createDataFrame([], BATCH_SCHEMA), transport, fan_out=4)
+    assert out.schema == CHECK_RESULT_SCHEMA
+    assert out.collect() == []
+    assert transport.calls == 0
+
+
+@pytest.mark.parametrize("fan_out", [0, -1])
+def test_check_batch_rejects_fan_out_below_one(spark, fan_out):
+    transport = _CountingTransport()
+    with pytest.raises(ValueError, match="fan_out"):
+        check_batch(_urls(spark, 2), transport, fan_out=fan_out)
+    assert transport.calls == 0
+
+
+def test_check_batch_transport_error_propagates_with_threads_joined(spark):
+    """A non-timeout exception from the transport is not a check row: it
+    leaves check_batch, and only after the pool has joined its threads."""
+    started = []
+
+    def transport(url, method):
+        started.append(threading.current_thread().name)
+        if url.endswith("/3.csv"):
+            raise ConnectionResetError("peer reset")
+        return _nice(url, method)
+
+    with pytest.raises(ConnectionResetError, match="peer reset"):
+        check_batch(_urls(spark, 8), transport, fan_out=4)
+    assert started and all(n.startswith("fetch_") for n in started)
+    assert not [t for t in threading.enumerate() if t.name.startswith("fetch_")]
+
+
+def test_check_batch_fan_out_bounds_concurrent_fetches(spark):
+    """``fan_out`` is the number of fetches in flight: 8 slow URLs on 4
+    threads peak at exactly 4."""
+    transport = _CountingTransport(delay_s=0.2)
+    rows = check_batch(_urls(spark, 8), transport, fan_out=4).collect()
+    assert sorted(r["resource_id"] for r in rows) == [f"r{i}" for i in range(8)]
+    assert transport.calls == 8  # HEAD-nice: no GET fallback
+    assert transport.peak == 4
+
+
+def test_check_batch_is_eager_into_a_local_relation(spark, count_jobs):
+    """The fetch is check_batch's own action: the result is a
+    LocalTableScan, collecting it twice makes no further transport call,
+    and over a local-relation batch nothing runs a Spark job."""
+    transport = _CountingTransport()
+    out, jobs = count_jobs(lambda: check_batch(_urls(spark, 5), transport, fan_out=2))
+    assert jobs == 0 and transport.calls == 5
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "MapInPandas" not in plan and "ExistingRDD" not in plan
+    (first, second), jobs = count_jobs(lambda: (out.collect(), out.collect()))
+    assert jobs == 0 and first == second and len(first) == 5
+    assert transport.calls == 5
+
+
+def test_cli_check_urls_runs_no_job(spark, count_jobs):
+    from udata_datalake_service_spark.cli import check_urls
+
+    transport = _CountingTransport()
+    rows, jobs = count_jobs(
+        lambda: check_urls(spark, ["https://a.org/x", "https://b.org/y"], transport).collect()
+    )
+    assert jobs == 0 and transport.calls == 2
+    assert sorted((r["resource_id"], r["domain"]) for r in rows) == [
+        ("0", "a.org"), ("1", "b.org")
+    ]
+
+
+# the Column-tree builders the SQL-text ones replaced sent 1,553 py4j
+# commands for a warm with_next_check(check_events(with_change_detection(
+# checks_df)))
+PARENT_PY4J_COMMANDS = 1553
+
+
+def test_change_detection_build_is_sql_text(spark, checks_df, count_py4j):
+    """Building the three change-detection layers costs a few py4j
+    commands per projection, not one per Column node, computes one lag
+    per signal (three for the cascade, three for the events), and emits
+    only the documented columns."""
+
+    def build():
+        return with_next_check(check_events(with_change_detection(checks_df)))
+
+    build()  # warm
+    out, sent = count_py4j(build)
+    assert sent <= PARENT_PY4J_COMMANDS // 4, sent
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("lag(") == 6
+    added = [c for c in out.columns if c not in checks_df.columns]
+    assert added == [
+        "chg_last_modified", "chg_content_length", "chg_checksum",
+        "change_status", "change_method", "evt_first_check",
+        "evt_status_changed", "evt_availability_lost",
+        "evt_availability_regained", "evt_timeout_changed", "any_trigger",
+    ]
+    assert out.columns[: len(checks_df.columns)] == checks_df.columns
 
 
 def test_wrong_url_repairs_and_apply(spark):

@@ -56,6 +56,7 @@ def test_stream_matches_batch_change_detection(spark, checks_df, tmp_path):
     cascade (both model analysis/resource.py:216-267: compare against the
     previous check row; a missing signal is NO_GUESS for that method)."""
     from udata_datalake_service_spark.plans.change_detection import (
+        check_events,
         with_change_detection,
     )
 
@@ -78,8 +79,8 @@ def test_stream_matches_batch_change_detection(spark, checks_df, tmp_path):
         for r in spark.sql("SELECT * FROM chg_eq").collect()
     }
     batch_rows = {
-        r["id"]: (r["change_status"], r["change_method"], r["__is_first"])
-        for r in with_change_detection(spark.read.parquet(src)).collect()
+        r["id"]: (r["change_status"], r["change_method"], r["evt_first_check"])
+        for r in check_events(with_change_detection(spark.read.parquet(src))).collect()
     }
     assert stream_rows == batch_rows
 

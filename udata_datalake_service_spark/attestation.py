@@ -51,10 +51,13 @@ NEW_OR_CHANGED: frozenset[str] = frozenset({
     "mm_jpeg_meta",
     # q_st4_change_detection builds its cascade with
     # plans.change_detection.cascade, the builder with_change_detection
-    # uses, instead of its own nested copy; st45_change_trigger is the
-    # registry entry that runs it
+    # uses, instead of its own nested copy, now as SQL text with one lag
+    # per signal; st45_change_trigger is the registry entry that runs it
     "st4_change_detection",
     "st45_change_trigger",
+    # check_batch fetches on driver threads into a local relation instead
+    # of through mapInPandas; the docstring says so
+    "s1_live_fetch",
 })
 
 # Rounds whose driver window did NOT advance the rotation: the round-12

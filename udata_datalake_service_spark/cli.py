@@ -61,11 +61,21 @@ def load_catalog(spark: SparkSession, lake: Lake, csv_path: str) -> int:
 
 def check_urls(spark: SparkSession, urls: list[str], transport=None):
     """cli.py:120-139 check-resource / crawl-url — run the fetch plane on
-    explicit URLs; returns the check rows DataFrame."""
-    from udata_datalake_service_spark.plans.fetch import check_batch, urllib_transport
+    explicit URLs; returns the check rows DataFrame. The batch is a local
+    relation, so collecting it for the fetch runs no Spark job."""
+    from pyspark.sql import types as T
 
-    batch = spark.createDataFrame(
-        [(str(i), u) for i, u in enumerate(urls)], "resource_id string, url string"
+    from udata_datalake_service_spark.plans.fetch import (
+        check_batch,
+        local_relation,
+        urllib_transport,
+    )
+
+    batch = local_relation(
+        spark,
+        [{"resource_id": str(i), "url": u} for i, u in enumerate(urls)],
+        T.StructType([T.StructField("resource_id", T.StringType()),
+                      T.StructField("url", T.StringType())]),
     )
     return check_batch(batch, transport or urllib_transport)
 

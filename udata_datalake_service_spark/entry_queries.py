@@ -63,7 +63,7 @@ from udata_datalake_service_spark.operators.core import (
     upsert,
 )
 from udata_datalake_service_spark.operators.profile import profile_df
-from udata_datalake_service_spark.plans.change_detection import _verdict, cascade
+from udata_datalake_service_spark.plans.change_detection import cascade, verdict
 from udata_datalake_service_spark.plans.next_check import CHECK_DELAYS_HOURS
 
 
@@ -582,19 +582,22 @@ FROM y
 def q_st4_change_detection(spark, sf_dir):
     """ST4 — the change-detection cascade as a lag window over events:
     method 1 = JSON payload delta, method 2 = value delta; first conclusive
-    verdict wins (analysis/resource.py:216-267 re-expressed set-oriented)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    k = F.get_json_object("props", "$.k").cast("long")
-    ev = ev.withColumn("__k", k)
-    prev_k = F.lag("__k").over(w)
-    prev_v = F.lag("value").over(w)
+    verdict wins (analysis/resource.py:216-267 re-expressed set-oriented).
+    Built as SQL text by the cascade builder ``with_change_detection``
+    uses."""
+    over = "OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)"
     status, method = cascade([
-        ("payload", _verdict(F.col("__k"), prev_k)),
-        ("value", _verdict(F.col("value"), prev_v)),
+        ("payload", verdict("__k", "__prev_k")),
+        ("value", verdict("value", "__prev_v")),
     ])
-    return ev.select(
-        "event_id", status.alias("change_status"), method.alias("change_method")
+    return (
+        _t(spark, sf_dir, "events")
+        .selectExpr("event_id", "user_id", "ts", "value",
+                    "CAST(get_json_object(props, '$.k') AS BIGINT) AS __k")
+        .selectExpr("event_id", "__k", "value", f"lag(__k) {over} AS __prev_k",
+                    f"lag(value) {over} AS __prev_v")
+        .selectExpr("event_id", f"{status} AS change_status",
+                    f"{method} AS change_method")
     )
 
 
@@ -6305,8 +6308,8 @@ def q_s1_live_fetch(spark, sf_dir):
     """S1 with a value-hash oracle over REAL sockets (upgraded from
     pytest-only in r7): a localhost fixture server with the reference's
     behavior matrix (crawl/check_resources.py:56-206 / helpers.py:47-53)
-    is fetched by the REAL urllib transport from executor Python workers
-    through check_batch's mapInPandas — connection handling, HEAD/GET
+    is fetched by the REAL urllib transport on check_batch's driver
+    threads into a local relation — connection handling, HEAD/GET
     verbs, header lowering, all live. One check per doc_id%7==0 document,
     endpoint cycling by doc_id%4: nice-HEAD kept (/ok), metadata-free
     HEAD forcing the GET fallback (/no-meta), 404 recorded as data

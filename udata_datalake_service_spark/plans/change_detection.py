@@ -12,39 +12,65 @@ Spark design: instead of a per-resource point query, ONE window pass
 cascade for *every* check row simultaneously — the set-oriented form of the
 reference's row-at-a-time probe. Scale: single shuffle on resource_id; with
 the checks table bucketed by resource_id even that shuffle disappears.
+
+The columns are built as SQL text, one ``selectExpr`` per layer, instead
+of Column trees: every ``F.when``/``F.lit``/``F.col`` is a py4j round trip
+on the driver, and the three builders made about 1,600 of them per crawl
+cycle. Each signal's ``lag`` is projected once beneath the columns that
+compare against it, however often they reference it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 HAS_CHANGED = "HAS_CHANGED"
 HAS_NOT_CHANGED = "HAS_NOT_CHANGED"
 NO_GUESS = "NO_GUESS"
 
 
-def _verdict(cur: Column, prev: Column) -> Column:
-    """Tri-state comparison of one signal across consecutive checks."""
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def with_sql_columns(
+    df: DataFrame, cols: dict[str, str], lags: dict[str, str] | None = None
+) -> DataFrame:
+    """``df`` with ``cols`` (name → SQL text) added, or replaced in place
+    as ``withColumn`` does, in one projection. ``lags`` (name → SQL text,
+    typically a ``lag(…) OVER (…)``) are projected beneath it, so each is
+    computed once however often ``cols`` reference it by name; they are
+    not in the output."""
+    names = df.columns
+    src = df.selectExpr("*", *(f"{e} AS {_q(n)}" for n, e in lags.items())) if lags else df
+    exprs = [f"{cols[c]} AS {_q(c)}" if c in cols else _q(c) for c in names]
+    exprs += [f"{e} AS {_q(n)}" for n, e in cols.items() if n not in names]
+    return src.selectExpr(*exprs)
+
+
+def verdict(cur: str, prev: str) -> str:
+    """SQL text of the tri-state comparison of one signal across
+    consecutive checks."""
     return (
-        F.when(cur.isNull() | prev.isNull(), F.lit(NO_GUESS))
-        .when(cur != prev, F.lit(HAS_CHANGED))
-        .otherwise(F.lit(HAS_NOT_CHANGED))
+        f"CASE WHEN ({cur}) IS NULL OR ({prev}) IS NULL THEN '{NO_GUESS}' "
+        f"WHEN ({cur}) <> ({prev}) THEN '{HAS_CHANGED}' "
+        f"ELSE '{HAS_NOT_CHANGED}' END"
     )
 
 
-def cascade(verdicts: list[tuple[str, Column]]) -> tuple[Column, Column]:
-    """(``change_status``, ``change_method``) of an ordered short-circuit
-    cascade over (method name, tri-state verdict) pairs: the first
-    conclusive verdict and the name of the method that gave it, or
-    NO_GUESS and null when every method abstains."""
-    status: Column = F.lit(NO_GUESS)
-    method: Column = F.lit(None).cast("string")
-    # build the short-circuit from the lowest priority up
-    for name, verdict in reversed(verdicts):
-        status = F.when(verdict != NO_GUESS, verdict).otherwise(status)
-        method = F.when(verdict != NO_GUESS, F.lit(name)).otherwise(method)
-    return status, method
+def cascade(verdicts: list[tuple[str, str]]) -> tuple[str, str]:
+    """SQL text of (``change_status``, ``change_method``) of an ordered
+    short-circuit cascade over (method name, tri-state verdict text)
+    pairs: the first conclusive verdict and the name of the method that
+    gave it, or NO_GUESS and null when every method abstains."""
+    hits = [(name, f"({v}) <> '{NO_GUESS}'", v) for name, v in verdicts]
+    status = " ".join(f"WHEN {hit} THEN {v}" for _, hit, v in hits)
+    method = " ".join(f"WHEN {hit} THEN '{name}'" for name, hit, _ in hits)
+    return f"CASE {status} ELSE '{NO_GUESS}' END", f"CASE {method} END"
+
+
+def _over(key: str, order: str, id_col: str) -> str:
+    return f"OVER (PARTITION BY {_q(key)} ORDER BY {_q(order)} ASC, {_q(id_col)} ASC)"
 
 
 def with_change_detection(
@@ -60,32 +86,22 @@ def with_change_detection(
     conclusive verdict in the reference's priority order, plus
     ``change_method`` naming the method that decided.
     """
-    w = Window.partitionBy(key).orderBy(F.col(order).asc(), F.col(id_col).asc())
-
-    lm = F.col("detected_last_modified_at")
-    cl = F.col("headers")["content-length"].cast("long")
-    ck = F.col("checksum")
-
-    out = (
-        checks.withColumn("__prev_lm", F.lag(lm).over(w))
-        .withColumn("__prev_cl", F.lag(cl).over(w))
-        .withColumn("__prev_ck", F.lag(ck).over(w))
-        .withColumn("__is_first", F.lag(F.col(id_col)).over(w).isNull())
-    )
-    out = (
-        out.withColumn("chg_last_modified", _verdict(lm, F.col("__prev_lm")))
-        .withColumn("chg_content_length", _verdict(cl, F.col("__prev_cl")))
-        .withColumn("chg_checksum", _verdict(ck, F.col("__prev_ck")))
-    )
-    status, method = cascade([
-        ("last_modified", F.col("chg_last_modified")),
-        ("content_length", F.col("chg_content_length")),
-        ("checksum", F.col("chg_checksum")),
-    ])
-    return (
-        out.withColumn("change_status", status)
-        .withColumn("change_method", method)
-        .drop("__prev_lm", "__prev_cl", "__prev_ck")
+    over = _over(key, order, id_col)
+    signals = {
+        "last_modified": "detected_last_modified_at",
+        "content_length": "CAST(headers['content-length'] AS BIGINT)",
+        "checksum": "checksum",
+    }
+    verdicts = {name: verdict(cur, f"__prev_{name}") for name, cur in signals.items()}
+    status, method = cascade(list(verdicts.items()))
+    return with_sql_columns(
+        checks,
+        {
+            **{f"chg_{name}": v for name, v in verdicts.items()},
+            "change_status": status,
+            "change_method": method,
+        },
+        lags={f"__prev_{name}": f"lag({cur}) {over}" for name, cur in signals.items()},
     )
 
 
@@ -96,32 +112,23 @@ def check_events(checks: DataFrame, key: str = "resource_id") -> DataFrame:
     changed, availability lost/regained, timeout flipped. The downstream
     notification sink filters ``any_trigger``.
     """
-    w = Window.partitionBy(key).orderBy(F.col("created_at").asc(), F.col("id").asc())
-    prev_status = F.lag("status").over(w)
-    prev_timeout = F.lag("timeout").over(w)
-    first = prev_status.isNull() & F.lag("id").over(w).isNull()
-
-    ok = (F.col("status") >= 200) & (F.col("status") < 400)
-    prev_ok = (prev_status >= 200) & (prev_status < 400)
-
-    out = (
-        checks.withColumn("evt_first_check", first)
-        .withColumn(
-            "evt_status_changed",
-            (~first) & ~(F.col("status").eqNullSafe(prev_status)),
-        )
-        .withColumn("evt_availability_lost", (~first) & prev_ok & ~ok)
-        .withColumn("evt_availability_regained", (~first) & ~prev_ok & ok)
-        .withColumn(
-            "evt_timeout_changed",
-            (~first) & ~(F.col("timeout").eqNullSafe(prev_timeout)),
-        )
-    )
-    return out.withColumn(
-        "any_trigger",
-        F.col("evt_first_check")
-        | F.col("evt_status_changed")
-        | F.col("evt_availability_lost")
-        | F.col("evt_availability_regained")
-        | F.col("evt_timeout_changed"),
+    over = _over(key, "created_at", "id")
+    first = "(__prev_status IS NULL AND __prev_id IS NULL)"
+    ok = "(status >= 200 AND status < 400)"
+    prev_ok = "(__prev_status >= 200 AND __prev_status < 400)"
+    flags = {
+        "evt_first_check": first,
+        "evt_status_changed": f"NOT {first} AND NOT (status <=> __prev_status)",
+        "evt_availability_lost": f"NOT {first} AND {prev_ok} AND NOT {ok}",
+        "evt_availability_regained": f"NOT {first} AND NOT {prev_ok} AND {ok}",
+        "evt_timeout_changed": f"NOT {first} AND NOT (timeout <=> __prev_timeout)",
+    }
+    return with_sql_columns(
+        checks,
+        {**flags, "any_trigger": " OR ".join(f"({f})" for f in flags.values())},
+        lags={
+            "__prev_status": f"lag(status) {over}",
+            "__prev_timeout": f"lag(timeout) {over}",
+            "__prev_id": f"lag(id) {over}",
+        },
     )
