@@ -115,6 +115,17 @@ def test_all_checks_by_url(spark, catalog_df, checks_df):
     assert ids == [3, 2, 1]  # newest first
 
 
+@pytest.mark.parametrize("route", [latest_check, all_checks])
+@pytest.mark.parametrize(
+    "key",
+    [{}, {"url": "https://a.org/f.csv", "resource_id": "r1"}, {"dataset_id": "d1"}],
+    ids=["no-key", "two-keys", "unknown-key"],
+)
+def test_check_routes_refuse_a_bad_key(spark, catalog_df, checks_df, route, key):
+    with pytest.raises(ValueError, match="url= or resource_id="):
+        route(catalog_df, checks_df, **key)
+
+
 def test_aggregate_for_date(spark, checks_df):
     out = aggregate_for_date(checks_df, "domain", "2024-01-02")
     got = {r["value"]: r["count"] for r in out.collect()}

@@ -52,14 +52,17 @@ def lake_root(spark, tmp_path, catalog_df, checks_df):
 
 @pytest.fixture()
 def warm_service(spark, lake_root):
-    """A service with every route called once."""
+    """A service with every route called once: it holds a persisted
+    snapshot of both tables."""
     svc = HydraService(spark, Lake(spark, lake_root))
     for route in ROUTE_JOBS:
         _request(svc, route)
-    return svc
+    yield svc
+    svc.close()
 
 
 def test_warm_route_job_budget(warm_service, count_jobs):
+    assert all(df.is_cached for _, df in warm_service._snapshots.values())
     got = {
         route: count_jobs(lambda: _request(warm_service, route))[1]
         for route in ROUTE_JOBS

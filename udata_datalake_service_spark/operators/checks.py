@@ -13,16 +13,27 @@ from pyspark.sql.functions import broadcast
 from udata_datalake_service_spark.operators.core import top_k_groups
 
 
+def _route_key(key: dict) -> tuple[str, object]:
+    """The one ``url=`` or ``resource_id=`` a check route is called with;
+    `ValueError` for none, two, or another name."""
+    if len(key) != 1 or not set(key) <= {"url", "resource_id"}:
+        raise ValueError(
+            f"pass exactly one of url= or resource_id=, got {sorted(key) or 'none'}"
+        )
+    (col, val), = key.items()
+    return col, val
+
+
 def latest_check(catalog: DataFrame, checks: DataFrame, **key) -> DataFrame:
     """J1 — `/api/checks/latest?url|resource_id` (db/check.py:20-42).
 
     ``catalog JOIN checks ON catalog.last_check = checks.id`` with the key
-    filter applied to *catalog first* so the join's left side is one row —
-    Catalyst broadcast-joins it against the big checks table, turning the
-    lookup into a broadcast-hash probe with the filter pushed to the
-    parquet scan on both sides.
+    filter applied to *catalog first* so the join's left side is one row,
+    which Catalyst broadcasts. The key filter is pushed to the catalog
+    scan only: the checks scan gets just ``IsNotNull(id)``, so every
+    checks row is read and probed against the broadcast row.
     """
-    (col, val), = key.items()
+    col, val = _route_key(key)
     side = broadcast(catalog.filter(F.col(col) == val))
     return side.join(checks, side.last_check == checks.id, "inner")
 
@@ -31,7 +42,7 @@ def all_checks(catalog: DataFrame, checks: DataFrame, **key) -> DataFrame:
     """J2 — `/api/checks/all` (db/check.py:76-84): full probe history of a
     resource, newest first. The url equi-join shuffles only the filtered
     (broadcast) side."""
-    (col, val), = key.items()
+    col, val = _route_key(key)
     side = broadcast(
         catalog.filter(F.col(col) == val).select(F.col("url").alias("__cat_url"))
     )

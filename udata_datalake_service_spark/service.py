@@ -23,6 +23,9 @@ registered temp views through Spark Connect / Thrift).
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +38,20 @@ class HydraService:
     """Route-shaped facade over a :class:`Lake` holding the ``catalog`` and
     ``checks`` app tables. ``config`` mirrors the reference's
     config_default.toml knobs (see :mod:`config`); defaults match the
-    reference's shipped values."""
+    reference's shipped values.
+
+    Snapshots: every read of an app table (`catalog`, `checks`, the
+    views of `sql`) goes through one memo per table, keyed by the
+    table's snapshot identity (`Lake.app_table_snapshot`: its commit
+    record and the path, size and mtime of each data file). The first
+    read of an identity returns the lazy lake read; the second persists
+    that frame, and later reads return it until the identity changes,
+    when it is unpersisted before the new read. A table read once per
+    commit (a crawl loop's status call) is never persisted; a table
+    served unchanged keeps one in-memory copy of every column while the
+    service lives. `close` releases every held copy, as does the
+    service's garbage collection. The persisted frames are tagged with
+    their identity, so they never serve a plain `Lake` read."""
 
     def __init__(
         self, spark: SparkSession, lake: Lake, config: Config | None = None
@@ -43,6 +59,31 @@ class HydraService:
         self.spark = spark
         self.lake = lake
         self.config = config or Config()
+        # app table name -> (snapshot identity, frame) of its last read
+        self._snapshots: dict[str, tuple[str, DataFrame]] = {}
+        self._lock = threading.Lock()
+        weakref.finalize(self, _release, self._snapshots, self._lock).atexit = False
+
+    def _table(self, name: str) -> DataFrame:
+        """The app table ``name`` through the snapshot memo."""
+        ident, read = self.lake.app_table_snapshot(name)
+        with self._lock:
+            held = self._snapshots.get(name)
+            if held is not None and held[0] == ident:
+                if not held[1].is_cached:
+                    held[1].persist()
+                return held[1]
+            if held is not None:
+                del self._snapshots[name]
+                if held[1].is_cached:
+                    held[1].unpersist()
+            df = read()
+            self._snapshots[name] = (ident, df)
+            return df
+
+    def close(self) -> None:
+        """Unpersist every held snapshot. The service stays usable."""
+        _release(self._snapshots, self._lock)
 
     def sql(self, query: str, extra_views: dict[str, DataFrame] | None = None) -> DataFrame:
         """Ad-hoc SQL over the lake: registers the app tables (catalog,
@@ -60,7 +101,7 @@ class HydraService:
 
         for name in ("catalog", "checks"):
             try:
-                self.lake.read_app_table(name).createOrReplaceTempView(name)
+                self._table(name).createOrReplaceTempView(name)
             except FileNotFoundError:
                 pass
         try:
@@ -79,11 +120,11 @@ class HydraService:
     # -------------------------------------------------------------- tables --
     @property
     def catalog(self) -> DataFrame:
-        return self.lake.read_app_table("catalog")
+        return self._table("catalog")
 
     @property
     def checks(self) -> DataFrame:
-        return self.lake.read_app_table("checks")
+        return self._table("checks")
 
     # --------------------------------------------------------------- checks --
     def latest_check(self, **key) -> DataFrame:
@@ -241,3 +282,13 @@ class HydraService:
                 ),
             )
         )
+
+
+def _release(snapshots: dict, lock: threading.Lock) -> None:
+    """Unpersist and forget every snapshot a service holds. A module
+    function, so the service's finalizer does not keep it alive."""
+    with lock:
+        for _, df in snapshots.values():
+            if df.is_cached:
+                df.unpersist()
+        snapshots.clear()

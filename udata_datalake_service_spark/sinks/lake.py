@@ -19,6 +19,7 @@ On a real deployment this class fronts Delta/Iceberg; the public surface
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -26,6 +27,7 @@ import uuid
 from contextlib import contextmanager
 from datetime import datetime, timezone
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -187,6 +189,18 @@ class Lake:
         dirs = [self.store.materialize_dir(d) for d in dirs]
         return record, [d for d in dirs if self._has_data(d)]
 
+    def _snapshot_id(self, record: dict, dirs: list[Path]) -> str:
+        """The identity of a `_snapshot`: a digest of its commit record
+        and of the ``(path, size, mtime_ns)`` of every data file in its
+        dirs (for a table with no record, its base dir walked whole). A
+        commit changes the record, an in-place append adds files, and a
+        file rewritten on disk changes its size or mtime; a rewrite that
+        keeps both (same size within one tick of the filesystem's clock)
+        does not change it."""
+        files = sorted(f for d in dirs for f in self._data_files(d))
+        blob = json.dumps([record, files], sort_keys=True)
+        return hashlib.sha1(blob.encode()).hexdigest()
+
     @staticmethod
     def _layout(schema: StructType, partition_by: list[str] | None) -> dict:
         """The schema half of a commit record for a frame of ``schema``
@@ -226,13 +240,23 @@ class Lake:
         except FileNotFoundError:
             return False
 
-    def _scan(self, dirs: list[Path], schema: StructType) -> DataFrame:
+    def _scan(
+        self, dirs: list[Path], schema: StructType, tag: str | None = None
+    ) -> DataFrame:
         """The rows of ``dirs`` read as ``schema``: no inference job, and
         an empty frame for a table with no data file (an empty
-        partitioned write leaves none)."""
+        partitioned write leaves none). A ``tag`` becomes the scan option
+        ``lake.snapshot``, which the parquet reader ignores and Spark's
+        cache manager compares: a persisted tagged frame serves only
+        scans with the same tag. Untagged scans match by their dir paths
+        alone, so a persisted untagged frame would serve a plain read of
+        a table whose files changed in place."""
         if not dirs:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*map(str, dirs))
+        reader = self.spark.read.schema(schema)
+        if tag is not None:
+            reader = reader.option("lake.snapshot", tag)
+        return reader.parquet(*map(str, dirs))
 
     @contextmanager
     def _commit_lock(self, base: Path, timeout: float = 30.0, stale_after: float = 120.0):
@@ -561,19 +585,29 @@ class Lake:
     def _read_dir(self, base: Path, schema: StructType | None = None) -> DataFrame:
         """The table's current rows, read as its recorded schema (or
         ``schema`` for a table with neither a record nor data)."""
-        record, dirs = self._snapshot(base)
+        return self._frame(base, *self._snapshot(base), schema=schema)
+
+    def _frame(
+        self,
+        base: Path,
+        record: dict,
+        dirs: list[Path],
+        schema: StructType | None = None,
+        tag: str | None = None,
+    ) -> DataFrame:
+        """The rows of the snapshot ``(record, dirs)`` of ``base``."""
         recorded, _ = self._table_schema(record, dirs)
         if recorded is not None:
             schema = recorded
         if schema is None:
             raise FileNotFoundError(f"lake table has no data: {base}")
-        return self._scan(dirs, schema)
+        return self._scan(dirs, schema, tag)
 
     @staticmethod
-    def _data_files(cur: Path) -> list[tuple[str, int]]:
-        """(path, size) of every data file under ``cur``, skipping
-        ``_``/``.`` names as Spark's file listing does. An entry that
-        vanishes mid-walk is left out."""
+    def _data_files(cur: Path) -> list[tuple[str, int, int]]:
+        """(path, size, mtime_ns) of every data file under ``cur``,
+        skipping ``_``/``.`` names as Spark's file listing does. An entry
+        that vanishes mid-walk is left out."""
         out, todo = [], [os.path.abspath(cur)]
         while todo:
             try:
@@ -584,7 +618,8 @@ class Lake:
                         if e.is_dir():
                             todo.append(e.path)
                         else:
-                            out.append((e.path, e.stat().st_size))
+                            st = e.stat()
+                            out.append((e.path, st.st_size, st.st_mtime_ns))
             except FileNotFoundError:
                 continue
         return out
@@ -1013,6 +1048,18 @@ class Lake:
     def read_app_table(self, name: str) -> DataFrame:
         return self._read_dir(Path(self.app_table_path(name)))
 
+    def app_table_snapshot(self, name: str) -> tuple[str, Callable[[], DataFrame]]:
+        """``(identity, read)`` of an app table's current snapshot, both
+        from one MANIFEST read: ``read()`` builds the frame
+        `read_app_table` would have built at that read, raising
+        `FileNotFoundError` for a table with no data. The frame is tagged
+        with the identity (see `_scan`), so persisting it never changes
+        what a plain read or a read of another snapshot returns."""
+        base = Path(self.app_table_path(name))
+        record, dirs = self._snapshot(base)
+        ident = self._snapshot_id(record, dirs)
+        return ident, lambda: self._frame(base, record, dirs, tag=ident)
+
     def rewrite_app_table(
         self,
         df: DataFrame,
@@ -1153,7 +1200,7 @@ class Lake:
         if schema is None:
             raise FileNotFoundError(f"no committed version to compact: {base}")
         data_files = [f for d in dirs for f in self._data_files(d)]
-        total = sum(size for _, size in data_files)
+        total = sum(size for _, size, _ in data_files)
         n_out = max(1, -(-total // int(target_bytes)))
         df = self._scan(dirs, schema)
         if transform is not None:
@@ -1262,7 +1309,7 @@ class Lake:
         # rebalance → advisory partition size) rather than by the
         # producer's shuffle ceiling
         self._write_parquet(df.hint("rebalance"), bdir, "overwrite")
-        if any(pq.ParquetFile(p).metadata.num_rows for p, _ in self._data_files(bdir)):
+        if any(pq.ParquetFile(p).metadata.num_rows for p, _, _ in self._data_files(bdir)):
             self.store.upload_dir_delta(bdir)
         else:
             self.store.delete_dir(bdir)  # Spark's schema-only file
