@@ -977,22 +977,28 @@ class TestCommitProtocolAcrossBackends:
         assert lake.read_app_table("t").count() == 2  # distinct() kept ids 1,2
 
     def test_compact_preserves_widened_schema(self, spark, tmp_path, proto_store):
-        """r11 find: compacting a version holding MIXED-schema files
-        (wide write + narrow schema-evolved in-place append) must keep
-        the widened column and its data — the plain-footer read dropped
-        both silently (same class as the ADVICE-r8 exactly-once fix)."""
+        """r11 find: compacting a table whose files have MIXED schemas
+        (a wide write, a log batch that omits a column, a log batch that
+        widens the table) must keep every recorded column and its data —
+        a plain-footer read dropped them silently (same class as the
+        ADVICE-r8 exactly-once fix)."""
         lake = Lake(spark, str(tmp_path / "lakews"), store=proto_store)
         wide = spark.createDataFrame([(1, "a", 9.5)], "id long, v string, extra double")
         lake.write_app_table(wide, "t")
         narrow = spark.createDataFrame([(2, "b")], "id long, v string")
-        lake.append_app_table(narrow, "t", allow_schema_evolution=True)
+        assert lake.append_log_table_exactly_once(narrow, "t", "narrow")
+        wider = spark.createDataFrame(
+            [(3, "c", 1.5, 7)], "id long, v string, extra double, more int"
+        )
+        assert lake.append_log_table_exactly_once(wider, "t", "wider")
 
         lake.compact_table("t", app_table=True)
         t = lake.read_app_table("t")
         rows = {r["id"]: r for r in t.collect()}
-        assert "extra" in t.columns
-        assert rows[1]["extra"] == 9.5
-        assert rows[2]["extra"] is None
+        assert t.columns == ["id", "v", "extra", "more"]
+        assert (rows[1]["extra"], rows[1]["more"]) == (9.5, None)
+        assert (rows[2]["extra"], rows[2]["more"]) == (None, None)
+        assert (rows[3]["extra"], rows[3]["more"]) == (1.5, 7)
 
     def test_rewrite_cas_catches_racing_exactly_once_append(
         self, spark, tmp_path, proto_store
@@ -1148,10 +1154,10 @@ def test_moto_store_primitive_semantics(tmp_path, request):
 
 def test_append_schema_drift_is_loud_and_evolution_widens(spark, tmp_path):
     """r8: an append whose schema drifts used to lose the new column
-    SILENTLY at read time (the dir reads as one file's schema). Now:
-    drift without the flag is a loud ValueError; with
-    allow_schema_evolution the table widens (old rows read NULL); a
-    same-name type conflict is refused either way."""
+    SILENTLY at read time (the dir reads as one file's schema). Now an
+    in-place append that drifts is a loud ValueError and leaves the
+    record alone; the exactly-once appends widen the table (old rows
+    read NULL); a same-name type conflict is refused by every append."""
     lake = Lake(spark, str(tmp_path / "lake_evo"))
     lake.write_app_table(
         spark.createDataFrame([(1, "a")], "id long, v string"), "t"
@@ -1159,29 +1165,38 @@ def test_append_schema_drift_is_loud_and_evolution_widens(spark, tmp_path):
 
     import pytest as _pytest
 
+    from pathlib import Path
+
+    base = Path(lake.app_table_path("t"))
+    record = lake._record(base)
     wider = spark.createDataFrame(
         [(2, "b", 9.5)], "id long, v string, score double"
     )
     with _pytest.raises(ValueError, match="schema drift"):
         lake.append_app_table(wider, "t")
+    conflict = spark.createDataFrame([(3, 4)], "id long, v long")
     with _pytest.raises(ValueError, match="type conflict"):
-        lake.append_app_table(
-            spark.createDataFrame([(3, 4)], "id long, v long"), "t"
-        )
-    # widening append with the flag: union schema on read, NULL backfill
-    lake.append_app_table(wider, "t", allow_schema_evolution=True)
+        lake.append_app_table(conflict, "t")
+    with _pytest.raises(ValueError, match="type conflict"):
+        lake.append_app_table_exactly_once(conflict, "t", "conflict")
+    with _pytest.raises(ValueError, match="type conflict"):
+        lake.append_log_table_exactly_once(conflict, "t", "conflict")
+    assert lake._record(base) == record
+    # the rewriting exactly-once append widens: NULL on the old rows
+    assert lake.append_app_table_exactly_once(wider, "t", "wider")
     back = lake.read_app_table("t")
     assert set(back.columns) == {"id", "v", "score"}
     got = {r["id"]: (r["v"], r["score"]) for r in back.collect()}
     assert got == {1: ("a", None), 2: ("b", 9.5)}
-    # narrowing append (subset of columns) also needs the flag
+    # a narrowing append (subset of columns) drifts in place too; the log
+    # append takes it, and the omitted columns read as NULL
     narrow = spark.createDataFrame([(4,)], "id long")
     with _pytest.raises(ValueError, match="schema drift"):
         lake.append_app_table(narrow, "t")
-    lake.append_app_table(narrow, "t", allow_schema_evolution=True)
+    assert lake.append_log_table_exactly_once(narrow, "t", "narrow")
     got = {r["id"]: (r["v"], r["score"]) for r in lake.read_app_table("t").collect()}
     assert got[4] == (None, None)
-    # matched-schema appends still need no flag
+    # a matched-schema append stays in place
     lake.append_app_table(
         spark.createDataFrame(
             [(5, "e", 1.0)], "id long, v string, score double"
@@ -1496,10 +1511,9 @@ def test_log_append_migrates_legacy_rewrite_rows(spark, tmp_path, proto_store):
 
 
 def test_log_append_refuses_partitioned_legacy_table(spark, tmp_path):
-    """Typed refusals naming the table: a log append to a partitioned
-    table (Spark refuses several partitioned roots in one read) or to a
-    table with data but no commit record raises ValueError before it
-    writes anything."""
+    """A typed refusal naming the table: a log append to a partitioned
+    table (Spark refuses several partitioned roots in one read) raises
+    ValueError before it writes anything."""
     lake = Lake(spark, str(tmp_path / "lakepart"))
     legacy = spark.createDataFrame(
         [(1, "a", "d1"), (2, "b", "d2")], "id long, v string, day string"
@@ -1507,11 +1521,7 @@ def test_log_append_refuses_partitioned_legacy_table(spark, tmp_path):
     lake.write_app_table(legacy, "t", partition_by=["day"])
     with pytest.raises(ValueError, match="'t'.*partitioned by"):
         lake.append_log_table_exactly_once(legacy, "t", "ep-0")
-    legacy.write.parquet(lake.app_table_path("plain"))
-    with pytest.raises(ValueError, match="'plain'.*no commit record"):
-        lake.append_log_table_exactly_once(legacy, "plain", "ep-0")
     assert lake.read_app_table("t").count() == 2
-    assert lake.read_app_table("plain").count() == 2
     assert _batch_dirs(lake, "t") == []
 
 
@@ -1824,12 +1834,12 @@ class TestCommitRecord:
             "t", partition_by=["check_date"],
         )
         check()
-        lake.append_app_table(
+        assert lake.append_app_table_exactly_once(
             spark.createDataFrame(
                 [(30, "x", 1.5, datetime.date(2024, 1, 5))],
                 "id long, v string, score double, check_date date",
             ),
-            "t", partition_by=["check_date"], allow_schema_evolution=True,
+            "t", "wider",
         )
         check()
         lake.rewrite_app_table(lake.read_app_table("t").filter(F.col("id") != 0), "t")
@@ -1877,19 +1887,35 @@ class TestCommitRecord:
     def test_widening_append_reads_null_on_old_rows(
         self, spark, tmp_path, record_store
     ):
+        """Both exactly-once appends widen the table; an in-place append
+        that drifts is refused and writes no record."""
+        from pathlib import Path
+
         lake = Lake(spark, str(tmp_path / "lake"), store=record_store)
-        lake.write_app_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
         wider = spark.createDataFrame([(2, "b", 9.5)], "id long, v string, score double")
-        lake.append_app_table(wider, "t", allow_schema_evolution=True)
-        back = lake.read_app_table("t")
-        assert back.columns == ["id", "v", "score"]
-        got = {r["id"]: (r["v"], r["score"]) for r in back.collect()}
-        assert got == {1: ("a", None), 2: ("b", 9.5)}
-        # an append that omits a column leaves the record as wide as it was
-        lake.append_app_table(
-            spark.createDataFrame([(3,)], "id long"), "t", allow_schema_evolution=True
-        )
-        assert lake.read_app_table("t").columns == ["id", "v", "score"]
+        for name, widen in [
+            ("rewrite", lake.append_app_table_exactly_once),
+            ("log", lake.append_log_table_exactly_once),
+        ]:
+            lake.write_app_table(
+                spark.createDataFrame([(1, "a")], "id long, v string"), name
+            )
+            assert widen(wider, name, "wider")
+            back = lake.read_app_table(name)
+            assert back.columns == ["id", "v", "score"]
+            got = {r["id"]: (r["v"], r["score"]) for r in back.collect()}
+            assert got == {1: ("a", None), 2: ("b", 9.5)}
+            # an append that omits a column leaves the record as wide as it was
+            assert widen(spark.createDataFrame([(3,)], "id long"), name, "narrow")
+            back = lake.read_app_table(name)
+            assert back.columns == ["id", "v", "score"]
+            assert sorted(back.collect()) == [
+                (1, "a", None), (2, "b", 9.5), (3, None, None),
+            ]
+            record = lake._record(Path(lake.app_table_path(name)))
+            with pytest.raises(ValueError, match="schema drift"):
+                lake.append_app_table(wider.drop("score"), name)
+            assert lake._record(Path(lake.app_table_path(name))) == record
 
     def test_empty_partitioned_table_round_trips(self, spark, tmp_path, proto_store):
         """An empty partitioned write leaves no data file (on a bucket
@@ -1931,11 +1957,23 @@ class TestCommitRecord:
         assert back.schema["day"].dataType.simpleString() == "date"
         assert back.collect()[0]["id"] == 1
 
-    def test_tables_without_a_record_infer_their_layout(
+    @staticmethod
+    def _files(base):
+        """(relative path, size, mtime_ns) of every file under ``base``."""
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), base),
+             os.stat(os.path.join(d, f)).st_size,
+             os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, fs in os.walk(base) for f in fs
+        )
+
+    def test_a_base_without_a_commit_record_is_refused(
         self, spark, tmp_path, record_store
     ):
-        """A plain dir with no MANIFEST, and a one-line MANIFEST from an
-        older lake, read and take appends through inference."""
+        """A plain parquet dir, and a one-line MANIFEST (the pointer an
+        older lake wrote), are not lake tables: every reader and writer
+        raises a ValueError naming the table and leaves its files as
+        they were."""
         from pathlib import Path
 
         lake = Lake(spark, str(tmp_path / "lake"), store=record_store)
@@ -1944,63 +1982,104 @@ class TestCommitRecord:
         )
         df.write.partitionBy("day").parquet(lake.app_table_path("plain"))
         lake.write_app_table(df, "old", partition_by=["day"])
-        base = Path(lake.app_table_path("old"))
-        record_store.put_text(base / "MANIFEST", lake.table_version("old", app=True))
+        old = Path(lake.app_table_path("old"))
+        record_store.put_text(old / "MANIFEST", lake.table_version("old", app=True))
+        verbs = {
+            "read_app_table": lambda n: lake.read_app_table(n),
+            "app_table_snapshot": lambda n: lake.app_table_snapshot(n),
+            "write_app_table": lambda n: lake.write_app_table(df, n),
+            "append_app_table": lambda n: lake.append_app_table(
+                df, n, partition_by=["day"]
+            ),
+            "append_app_table_exactly_once": lambda n: (
+                lake.append_app_table_exactly_once(df, n, "b0")
+            ),
+            "append_log_table_exactly_once": lambda n: (
+                lake.append_log_table_exactly_once(df.drop("day"), n, "b0")
+            ),
+            "rewrite_app_table": lambda n: lake.rewrite_app_table(df, n),
+            "compact_table": lambda n: lake.compact_table(n, app_table=True),
+        }
         for name in ("plain", "old"):
-            lake.append_app_table(df, name, partition_by=["day"])
-            back = lake.read_app_table(name)
-            assert back.columns == ["id", "v", "day"]
-            assert back.count() == 2
-        lake.append_app_table(
-            spark.createDataFrame([(3, "c", 2.5, datetime.date(2024, 1, 2))],
-                                  "id long, v string, w double, day date"),
-            "old", partition_by=["day"], allow_schema_evolution=True,
-        )
-        assert lake.read_app_table("old").columns == ["id", "v", "w", "day"]
-        assert lake.read_app_table("old").count() == 3
+            base = Path(lake.app_table_path(name))
+            before = self._files(base)
+            for verb, call in verbs.items():
+                with pytest.raises(ValueError, match=f"'{name}' is not a lake table"):
+                    call(name)
+                assert self._files(base) == before, (name, verb)
 
-        # a plain dir's partition types come from its directory values:
-        # date-looking strings read as date, and an append must cast
-        text = spark.createDataFrame([(1, "2024-01-01")], "id long, day string")
-        text.write.partitionBy("day").parquet(lake.app_table_path("texts"))
-        with pytest.raises(
-            ValueError,
-            match=r"partition column 'day'.*no commit record.*directory "
-            r"values, which read as date.*Cast 'day' to date",
-        ):
-            lake.append_app_table(text, "texts", partition_by=["day"])
-        lake.append_app_table(
-            text.withColumn("day", F.to_date("day")), "texts", partition_by=["day"]
-        )
-        back = lake.read_app_table("texts")
-        assert sorted((r["id"], str(r["day"])) for r in back.collect()) == [
-            (1, "2024-01-01"), (1, "2024-01-01"),
-        ]
-
-    def test_widening_append_that_raises_leaves_record_and_rows(
-        self, spark, tmp_path, proto_store
-    ):
-        """Crash law: the widened record is committed before the files;
-        a write that raises puts the previous record back, so the table
-        reads as it did before the append."""
+    def test_a_crashed_first_write_is_no_table(self, spark, tmp_path, record_store):
+        """A first write that crashed after publishing its version dir,
+        before its MANIFEST, leaves a base of lake leftovers only: reads
+        find no table, every writer commits over it and reads back its
+        own rows alone, and vacuum reclaims the leftover."""
         from pathlib import Path
 
-        lake = Lake(spark, str(tmp_path / "lake"), store=proto_store)
-        lake.write_app_table(
-            spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), "t"
-        )
-        base = Path(lake.app_table_path("t"))
-        before_record = lake._record(base)
-        before_rows = sorted(lake.read_app_table("t").collect())
-        wider = spark.createDataFrame(
-            [(3, "c", 1.5)], "id long, v string, score double"
-        ).withColumn(
-            "score", F.when(F.col("id") == 3, F.raise_error(F.lit("injected")))
-            .otherwise(F.col("score")).cast("double"),
-        )
-        with pytest.raises(Exception, match="injected"):
-            lake.append_app_table(wider, "t", allow_schema_evolution=True)
-        assert lake._record(base) == before_record
-        back = lake.read_app_table("t")
-        assert back.columns == ["id", "v"]
-        assert sorted(back.collect()) == before_rows
+        lake = Lake(spark, str(tmp_path / "lake"), store=record_store)
+        crashed = spark.createDataFrame([(9, "crashed")], "id long, v string")
+        mine = spark.createDataFrame([(1, "mine")], "id long, v string")
+
+        def plant(base):
+            leftover = base / lake._new_version()
+            crashed.write.parquet(str(leftover))
+            assert not (base / "MANIFEST").exists()
+            return leftover
+
+        writers = {
+            "append_app_table": lambda n: lake.append_app_table(mine, n),
+            "append_app_table_exactly_once": lambda n: (
+                lake.append_app_table_exactly_once(mine, n, "b0")
+            ),
+            "append_log_table_exactly_once": lambda n: (
+                lake.append_log_table_exactly_once(mine, n, "b0")
+            ),
+        }
+        for name, write in writers.items():
+            plant(Path(lake.app_table_path(name)))
+            with pytest.raises(FileNotFoundError):
+                lake.read_app_table(name)
+            write(name)
+            assert lake.read_app_table(name).collect() == mine.collect(), name
+
+        plant(Path(lake.registry_path))
+        lake.register("tbl_a", {"n": 1}, resource_id="r1", url="https://x/a.csv")
+        assert [r["parsing_table"] for r in lake.registry().collect()] == ["tbl_a"]
+
+        leftover = plant(Path(lake.app_table_path("idle")))
+        removed = lake.vacuum()
+        assert str(leftover) in removed and not leftover.exists()
+        with pytest.raises(FileNotFoundError):
+            lake.read_app_table("idle")
+        assert lake.read_app_table("append_log_table_exactly_once").count() == 1
+
+    def test_registry_schema_is_the_recorded_one(self, spark, tmp_path, record_store):
+        """The registry's parquet is written from ``TABLES_INDEX_SCHEMA``:
+        its files, its record and its read agree after a register and
+        after a drop."""
+        from pathlib import Path
+
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        from udata_datalake_service_spark.schemas import TABLES_INDEX_SCHEMA
+
+        lake = Lake(spark, str(tmp_path / "lake"), store=record_store)
+        base = Path(lake.registry_path)
+        want = to_arrow_schema(TABLES_INDEX_SCHEMA)
+
+        def check():
+            recorded = StructType.fromJson(lake._record(base)["schema"])
+            assert lake.registry().schema == recorded
+            cur = _version_dir(lake, base)
+            assert spark.read.parquet(str(cur)).schema == recorded
+            for f in cur.glob("part-*.parquet"):
+                assert pq.read_schema(f).remove_metadata() == want
+
+        lake.write_table(spark.createDataFrame([(1,)], "id long"), "t")
+        lake.register("t", {"n": 1}, resource_id="r1", url="https://x/t.csv")
+        lake.register("u", {"n": 2}, resource_id="r2", url="https://x/u.csv")
+        check()
+        lake.drop_table("t")
+        check()
+        assert [r["parsing_table"] for r in lake.registry().collect()] == ["u"]

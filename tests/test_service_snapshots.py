@@ -149,31 +149,31 @@ def test_warm_service_sees_every_commit(spark, tmp_path, tables, store, kind):
 
 @pytest.mark.parametrize("store", list(STORES))
 def test_plain_table_rewritten_on_disk(spark, tmp_path, tables, store):
-    """A table with no commit record, whose one file is replaced by a
-    file of the same name: its identity comes from the file's size and
-    mtime, not from a record."""
+    """An unpartitioned table whose one data file is replaced, in its
+    recorded version dir, by a file of the same name: the record does
+    not change, so the identity comes from the file's size and mtime."""
     root = tmp_path / "lake"
     lake = Lake(spark, str(root), STORES[store]())
     lake.write_app_table(tables["checks"], "checks", partition_by=["check_date"])
+    lake.write_app_table(tables["catalog"].coalesce(1), "catalog")
     base = root / "catalog"
-    part = base / "part-0.parquet"
-
-    def put_catalog(df, tag):
-        out = tmp_path / tag
-        df.coalesce(1).write.parquet(str(out))
-        (src,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
-        base.mkdir(exist_ok=True)
-        os.replace(out / src, part)
-        shutil.rmtree(out)
-
-    put_catalog(tables["catalog"], "v1")
+    record = lake._record(base)
+    (part,) = (base / record["version"]).glob("part-*.parquet")
     svc = HydraService(spark, lake)
     before = _warm(svc)
     pre_commit = _rows(lake.read_app_table("catalog"))
 
-    put_catalog(tables["catalog"].unionByName(tables["new_resource"]), "v2")
+    out = tmp_path / "v2"
+    tables["catalog"].unionByName(tables["new_resource"]).coalesce(1).write.parquet(
+        str(out)
+    )
+    (src,) = out.glob("part-*.parquet")
+    os.replace(src, part)
+    # the old file's Hadoop checksum would fail the new file's reads
+    part.with_name(f".{part.name}.crc").unlink(missing_ok=True)
+    shutil.rmtree(out)
 
-    assert not (base / "MANIFEST").exists()
+    assert lake._record(base) == record
     assert _rows(lake.read_app_table("catalog")) != pre_commit
     after = _answers(HydraService(spark, Lake(spark, str(root), STORES[store]())))
     assert after != before

@@ -31,12 +31,15 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from udata_datalake_service_spark.schemas import TABLES_INDEX_SCHEMA
 from udata_datalake_service_spark.sinks.store import PosixStore
 
 _UNSET = object()
+# the keys of every MANIFEST commit record (`Lake._commit_version_locked`)
+_RECORD_KEYS = frozenset({"version", "schema", "partition_by", "dirs", "batches"})
 
 
 def _as_nullable(dt: DataType) -> DataType:
@@ -118,18 +121,19 @@ class Lake:
     ledger. Batch dirs a rewrite drops, and those of appends that never
     committed, are reclaimed by `vacuum` once older than its grace.
 
-    A same-schema in-place append leaves the record alone. A widening
-    append (``allow_schema_evolution`` with new columns) commits the
-    widened record under the commit lock BEFORE it writes its files: a
-    read in between sees the new columns as NULL on old rows, and never
-    a new row without its new columns. If the write raises, the append
-    puts the previous record back, if the record is still the one it
-    wrote. A record is only ever widened in place, never narrowed.
+    Only the two exactly-once appends widen a table: each records the
+    wider schema in the same commit as its rows, so old rows read the
+    new columns as NULL and an omitted column reads as NULL on the new
+    rows. An in-place append (`append_app_table`) must match the record
+    exactly and never writes the MANIFEST. A record is never narrowed.
 
-    A table with no record (a plain dir with no MANIFEST, or a one-line
-    MANIFEST from an older lake) has its schema inferred with
-    ``mergeSchema`` and its layout read from its ``col=value`` dirs, on
-    every use (`_table_schema`)."""
+    A table exists once its MANIFEST does. A base with no MANIFEST whose
+    entries are all lake leftovers (``v-*``, ``b-*``, ``_``/``.`` names:
+    a first write that crashed before its commit) is no table yet, and
+    the next first write commits over it. Any other base with no
+    MANIFEST, and a MANIFEST that is not a JSON commit record, is not a
+    lake table: every reader and writer refuses it with a ValueError
+    before writing anything (`_record`)."""
 
     def __init__(self, spark: SparkSession, root: str, store=None):
         self.spark = spark
@@ -150,13 +154,38 @@ class Lake:
         """The MANIFEST commit record, read THROUGH the store backend —
         on PosixStore this is a local file read; on S3ObjectStore it is a
         real object GET, so the whole control plane (locks + manifest)
-        round-trips the object store. A one-line MANIFEST from an older
-        lake reads as ``{"version": <line>}``; no MANIFEST as ``{}``."""
+        round-trips the object store. A base with no MANIFEST reads as
+        ``{}`` (no table yet) if it holds only lake leftovers; one that
+        holds anything else, or whose MANIFEST is not a JSON commit
+        record, raises ValueError naming the table. The leftover check
+        lists the base only when there is no MANIFEST."""
         try:
-            text = self.store.read_text(base / "MANIFEST").strip()
+            text = self.store.read_text(base / "MANIFEST")
         except OSError:
+            try:
+                names = {p.name for p in base.iterdir()}
+            except OSError:
+                names = set()
+            foreign = sorted(
+                n for n in names | self.store.list_subdirs(base)
+                if not n.startswith(("v-", "b-", "_", "."))
+            )
+            if foreign:
+                raise ValueError(
+                    f"{base.name!r} is not a lake table: {base} has no "
+                    f"MANIFEST commit record but holds {foreign[:3]}"
+                ) from None
             return {}
-        return json.loads(text) if text.startswith("{") else {"version": text}
+        try:
+            record = json.loads(text)
+        except ValueError:
+            record = None
+        if not isinstance(record, dict) or not _RECORD_KEYS <= record.keys():
+            raise ValueError(
+                f"{base.name!r} is not a lake table: its MANIFEST is not a "
+                f"JSON commit record: {base}"
+            )
+        return record
 
     def _put_record(self, base: Path, record: dict) -> None:
         """Replace the MANIFEST with ``record``: one atomic object PUT
@@ -167,36 +196,24 @@ class Lake:
     def _manifest_version(self, base: Path) -> str | None:
         return self._record(base).get("version")
 
-    @staticmethod
-    def _dir_names(record: dict) -> list[str]:
-        """The data dirs ``record`` lists, version dir first. A record
-        that lists no dirs (a one-line MANIFEST) has its version only."""
-        if "dirs" in record:
-            return record["dirs"]
-        return [record["version"]] if record else []
-
     def _snapshot(self, base: Path) -> tuple[dict, list[Path]]:
-        """The commit record and those of its data dirs that hold data,
-        from ONE MANIFEST read (two reads would let a commit in between
-        pair one record with another's files), each dir materialized:
-        backends holding data server-side fetch its prefix into the
-        local cache. A table with no record has one dir, the base."""
+        """The commit record and those of its recorded dirs that hold
+        data, from ONE MANIFEST read (two reads would let a commit in
+        between pair one record with another's files), each dir
+        materialized: backends holding data server-side fetch its prefix
+        into the local cache. ``({}, [])`` for a table that does not
+        exist yet."""
         record = self._record(base)
-        if record:
-            dirs = [base / n for n in self._dir_names(record)]
-        else:
-            dirs = [base] if base.exists() else []
-        dirs = [self.store.materialize_dir(d) for d in dirs]
+        dirs = [self.store.materialize_dir(base / n) for n in record.get("dirs", [])]
         return record, [d for d in dirs if self._has_data(d)]
 
     def _snapshot_id(self, record: dict, dirs: list[Path]) -> str:
         """The identity of a `_snapshot`: a digest of its commit record
         and of the ``(path, size, mtime_ns)`` of every data file in its
-        dirs (for a table with no record, its base dir walked whole). A
-        commit changes the record, an in-place append adds files, and a
-        file rewritten on disk changes its size or mtime; a rewrite that
-        keeps both (same size within one tick of the filesystem's clock)
-        does not change it."""
+        recorded dirs. A commit changes the record, an in-place append
+        adds files, and a file rewritten on disk changes its size or
+        mtime; a rewrite that keeps both (same size within one tick of
+        the filesystem's clock) does not change it."""
         files = sorted(f for d in dirs for f in self._data_files(d))
         blob = json.dumps([record, files], sort_keys=True)
         return hashlib.sha1(blob.encode()).hexdigest()
@@ -215,28 +232,22 @@ class Lake:
             "partition_by": pcols,
         }
 
-    def _table_schema(
-        self, record: dict, dirs: list[Path]
-    ) -> tuple[StructType | None, list[str]]:
-        """(schema, partition columns) of a table: its record's, or, for
-        a table with no record, inferred from the files in its one dir
-        (a ``mergeSchema`` read and the ``col=value`` dir chain).
-        (None, []) for a table with neither a record nor a data file."""
-        if "schema" in record:
-            return StructType.fromJson(record["schema"]), record["partition_by"]
-        if not dirs:
+    @staticmethod
+    def _table_schema(record: dict) -> tuple[StructType | None, list[str]]:
+        """(schema, partition columns) a commit record holds; (None, [])
+        for a table that does not exist yet."""
+        if not record:
             return None, []
-        inferred = self.spark.read.option("mergeSchema", "true").parquet(str(dirs[0]))
-        return inferred.schema, self._detect_partition_cols(dirs[0])
+        return StructType.fromJson(record["schema"]), record["partition_by"]
 
     @staticmethod
     def _has_data(d: Path) -> bool:
-        """Whether ``d`` holds a data file or partition dir. ``_``/``.``
-        names are skipped, as Spark's file listing skips them, and so
-        are log batch dirs (``b-*``): only a record makes one part of a
-        table."""
+        """Whether the recorded dir ``d`` holds a data file or partition
+        dir, skipping ``_``/``.`` names as Spark's file listing does (an
+        empty partitioned write leaves none; a log-only table's version
+        dir is never written)."""
         try:
-            return any(not f.name.startswith(("_", ".", "b-")) for f in d.iterdir())
+            return any(not f.name.startswith(("_", ".")) for f in d.iterdir())
         except FileNotFoundError:
             return False
 
@@ -415,8 +426,8 @@ class Lake:
             )
         dirs, ledger = [ver], []
         if snap is not None:
-            read = set(self._dir_names(snap))
-            kept = [d for d in self._dir_names(cur)[1:] if d not in read]
+            read = set(snap.get("dirs", []))
+            kept = [d for d in cur.get("dirs", [])[1:] if d not in read]
             ledger = list(snap.get("batches", []))
             done = set(ledger)
             ledger += [b for b in cur.get("batches", []) if b not in done]
@@ -480,10 +491,11 @@ class Lake:
             except (TimeoutError, OSError):
                 continue
             try:
-                record = self._record(base)
-                # batch dirs only under a recorded table: elsewhere a
-                # ``b-*`` dir is a table or data this lake did not write
-                recorded = set(self._dir_names(record)) if "schema" in record else None
+                try:
+                    record = self._record(base)
+                except ValueError:
+                    continue  # not a lake table: nothing here is ours
+                recorded = set(record.get("dirs", []))
                 # crashed takeover leftovers next to MANIFEST — control
                 # objects, so enumerated THROUGH the store (on an object
                 # store they are keys, not local files)
@@ -496,9 +508,7 @@ class Lake:
                     if name.startswith("v-"):
                         stale = name != record.get("version")
                     elif name.startswith("_staging-") or (
-                        recorded is not None
-                        and name.startswith("b-")
-                        and name not in recorded
+                        name.startswith("b-") and name not in recorded
                     ):
                         try:
                             age = time.time() - self.store.dir_mtime(d)
@@ -532,6 +542,8 @@ class Lake:
         ``snap``/``batch_id`` as `_commit_version` takes them. Returns
         the number of data files committed, None if ``batch_id`` was
         already committed."""
+        if snap is None:
+            self._record(base)  # refuse a base that is not a lake table
         ver = self._new_version()
         staging = base / f"_staging-{ver}"
         self._write_parquet(df, staging, "overwrite", partition_by)
@@ -565,26 +577,9 @@ class Lake:
         base = Path(self.app_table_path(name) if app else self.table_path(name))
         return self._manifest_version(base)
 
-    @staticmethod
-    def _detect_partition_cols(cur: Path) -> list[str]:
-        """Partition columns of an on-disk dir, from its ``col=value``
-        subdirectory chain: the layout of a table with no commit record."""
-        cols: list[str] = []
-        d = cur
-        while True:
-            subs = [
-                x
-                for x in d.iterdir()
-                if x.is_dir() and "=" in x.name and not x.name.startswith(("_", "."))
-            ]
-            if not subs:
-                return cols
-            cols.append(subs[0].name.split("=", 1)[0])
-            d = subs[0]
-
     def _read_dir(self, base: Path, schema: StructType | None = None) -> DataFrame:
-        """The table's current rows, read as its recorded schema (or
-        ``schema`` for a table with neither a record nor data)."""
+        """The table's current rows, read as its recorded schema (or as
+        ``schema``, with no rows, for a table that does not exist yet)."""
         return self._frame(base, *self._snapshot(base), schema=schema)
 
     def _frame(
@@ -596,7 +591,7 @@ class Lake:
         tag: str | None = None,
     ) -> DataFrame:
         """The rows of the snapshot ``(record, dirs)`` of ``base``."""
-        recorded, _ = self._table_schema(record, dirs)
+        recorded, _ = self._table_schema(record)
         if recorded is not None:
             schema = recorded
         if schema is None:
@@ -771,24 +766,6 @@ class Lake:
     def registry(self) -> DataFrame:
         return self._read_dir(Path(self.registry_path), schema=TABLES_INDEX_SCHEMA)
 
-    @staticmethod
-    def _registry_arrow_schema():
-        import pyarrow as pa
-
-        # mirrors TABLES_INDEX_SCHEMA; timestamps µs/UTC so Spark reads
-        # TimestampType (isAdjustedToUTC=true), identical under the
-        # session's pinned UTC zone
-        return pa.schema(
-            [
-                ("parsing_table", pa.string()),
-                ("csv_detective", pa.string()),
-                ("resource_id", pa.string()),
-                ("url", pa.string()),
-                ("created_at", pa.timestamp("us", tz="UTC")),
-                ("indexes", pa.string()),
-            ]
-        )
-
     def register(
         self,
         parsing_table: str,
@@ -818,7 +795,7 @@ class Lake:
                 "created_at": [datetime.now(timezone.utc)],
                 "indexes": [json.dumps(indexes or {})],
             },
-            schema=self._registry_arrow_schema(),
+            schema=to_arrow_schema(TABLES_INDEX_SCHEMA),
         )
         base = Path(self.registry_path)
         base.mkdir(parents=True, exist_ok=True)
@@ -830,11 +807,8 @@ class Lake:
         # the transaction Postgres gave the reference for free)
         with self._commit_lock(base):
             _, dirs = self._snapshot(base)
-            # first write ⇔ no data files yet: the mkdir above makes the
-            # bare base dir "exist", so an existence check alone would
-            # misread a fresh registry as a legacy-plain table and skip
-            # the versioned-manifest branch (leaving table_version None
-            # and stranding plain part files under later flips)
+            # first write ⇔ no data files yet (the mkdir above makes the
+            # bare base dir exist, so existence says nothing)
             if not dirs:
                 ver = self._new_version()
                 staging = base / f"_staging-{ver}"
@@ -864,7 +838,7 @@ class Lake:
 
         base = Path(self.registry_path)
         base.mkdir(parents=True, exist_ok=True)
-        schema = self._registry_arrow_schema()
+        schema = to_arrow_schema(TABLES_INDEX_SCHEMA)
         # read + rewrite + flip in ONE critical section: an append landing
         # between an unlocked read and the flip would be silently dropped
         # from `remaining` (the lost-append race `register` guards the
@@ -890,24 +864,11 @@ class Lake:
             )
 
     @staticmethod
-    def _check_append_schema(
-        df: DataFrame,
-        schema: StructType,
-        allow_schema_evolution: bool,
-        inferred_pcols: list[str] = (),
-    ) -> list[StructField]:
-        """Appends must not lose columns silently: the table reads as its
-        recorded ``schema``, so an appended extra column would simply
-        vanish (and a missing one would poison reads). Default: the
-        incoming frame must carry exactly the table's column set with
-        identical types, partition columns included — loud ValueError
-        otherwise. With ``allow_schema_evolution`` the Delta/Iceberg
-        widening rules apply: NEW columns may be added and existing ones
-        omitted (they read as NULL); a same-name TYPE conflict is always
-        an error. ``inferred_pcols`` are partition columns whose type was
-        inferred from directory values (a table with no commit record);
-        a conflict on one asks the caller to cast. Returns the added
-        columns' fields."""
+    def _check_append_schema(df: DataFrame, schema: StructType) -> list[StructField]:
+        """Refuse an append whose frame gives a column of the table's
+        recorded ``schema`` another type, partition columns included (a
+        same-name type conflict is never allowed). Returns the fields of
+        the frame's columns the table does not have yet."""
         existing = {f.name: f.dataType for f in schema}
         incoming = {f.name: _as_nullable(f.dataType) for f in df.schema}
         conflicts = {
@@ -915,40 +876,17 @@ class Lake:
             for n in incoming.keys() & existing.keys()
             if existing[n] != incoming[n]
         }
-        for n in sorted(conflicts.keys() & set(inferred_pcols)):
-            want = existing[n].simpleString()
-            raise ValueError(
-                f"append type conflict on partition column {n!r}: the table "
-                "has no commit record, so its partition types come from its "
-                f"directory values, which read as {want}; the frame has "
-                f"{incoming[n].simpleString()}. Cast {n!r} to {want} to append."
-            )
         if conflicts:
             raise ValueError(
                 f"append schema type conflict (never allowed): {conflicts}"
             )
-        added = incoming.keys() - existing.keys()
-        missing = existing.keys() - incoming.keys()
-        if (added or missing) and not allow_schema_evolution:
-            raise ValueError(
-                "append schema drift: "
-                f"added={sorted(added)} missing={sorted(missing)} — pass "
-                "allow_schema_evolution=True to widen the table (new "
-                "columns added, omitted ones read as NULL), or align the "
-                "frame. Without the flag this would have silently "
-                "dropped/corrupted columns at read time."
-            )
-        return [f for f in df.schema.fields if f.name in added]
+        return [f for f in df.schema.fields if f.name not in existing]
 
     def _append_write(
-        self,
-        df: DataFrame,
-        base: Path,
-        partition_by: list[str] | None = None,
-        allow_schema_evolution: bool = False,
+        self, df: DataFrame, base: Path, partition_by: list[str] | None = None
     ) -> None:
-        record, dirs = self._snapshot(base)
-        schema, pcols = self._table_schema(record, dirs)
+        record, _ = self._snapshot(base)
+        schema, pcols = self._table_schema(record)
         if schema is None:
             # first write: land in a version dir, commit the record
             self._replace_write(df, base, partition_by=partition_by)
@@ -960,18 +898,26 @@ class Lake:
                 f"append partition_by={partition_by!r} disagrees with the "
                 f"table's partition layout {pcols!r}: {base}"
             )
-        added = self._check_append_schema(
-            df, schema, allow_schema_evolution,
-            inferred_pcols=[] if "schema" in record else pcols,
-        )
-        # the version dir (on a bucket store it may hold no object yet),
-        # or the plain base of a table with no MANIFEST
-        cur = base / record["version"] if record else base
-        # versioned or legacy-plain: add files in place — Spark stages the
-        # new files under _temporary, so a torn append is never visible
-        # LOCALLY; on a remote data plane the per-object upload below has
-        # the direct-write-committer partial-visibility window (use the
+        self._check_append_schema(df, schema)
+        # the table reads as its record, which this append does not
+        # write: an extra column would vanish, a missing one read NULL
+        added = sorted(set(df.columns) - set(schema.fieldNames()))
+        missing = sorted(set(schema.fieldNames()) - set(df.columns))
+        if added or missing:
+            raise ValueError(
+                f"append schema drift: added={added} missing={missing} — an "
+                "in-place append must match the table's recorded schema. "
+                "Align the frame, or widen the table with "
+                "append_app_table_exactly_once or append_log_table_exactly_once "
+                "(new columns added, omitted ones read as NULL)."
+            )
+        # the version dir (on a bucket store it may hold no object yet):
+        # add files in place — Spark stages the new files under
+        # _temporary, so a torn append is never visible LOCALLY; on a
+        # remote data plane the per-object upload below has the
+        # direct-write-committer partial-visibility window (use the
         # exactly-once staged path for append-heavy object-store tables)
+        cur = base / record["version"]
         if getattr(self.store, "partial_append_visible", False):
             import warnings
 
@@ -985,37 +931,8 @@ class Lake:
                 RuntimeWarning,
                 stacklevel=3,
             )
-        widened = None
-        if added and record:
-            # widen the record BEFORE the files land (see the class
-            # docstring); a record that moved since the snapshot belongs
-            # to another commit, so this append must not overwrite it
-            widened = {
-                **record,
-                **self._layout(StructType(schema.fields + added), pcols),
-            }
-            if not self._swap_record(base, record, widened):
-                raise ConcurrentWriteError(
-                    f"{base}: the commit record changed during a widening "
-                    "append; re-read the table and retry"
-                )
-        try:
-            self._write_parquet(df, cur, "append", partition_by)
-            self.store.upload_dir_delta(cur)
-        except BaseException:
-            if widened is not None:
-                self._swap_record(base, widened, record)
-            raise
-
-    def _swap_record(self, base: Path, old: dict, new: dict) -> bool:
-        """Replace the commit record ``old`` with ``new`` under the commit
-        lock; False, with nothing written, when the MANIFEST no longer
-        holds ``old``."""
-        with self._commit_lock(base):
-            if self._record(base) != old:
-                return False
-            self._put_record(base, new)
-            return True
+        self._write_parquet(df, cur, "append", partition_by)
+        self.store.upload_dir_delta(cur)
 
     # ------------------------------------------------------- app tables ----
     def app_table_path(self, name: str) -> str:
@@ -1032,17 +949,16 @@ class Lake:
         )
 
     def append_app_table(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_by: list[str] | None = None,
-        allow_schema_evolution: bool = False,
+        self, df: DataFrame, name: str, partition_by: list[str] | None = None
     ) -> None:
+        """In-place append: ``df``'s files land inside the table's current
+        version dir and the MANIFEST is not written. ``df`` must carry
+        exactly the table's recorded columns and types, and
+        ``partition_by`` its partition layout, or ValueError; only the
+        exactly-once appends widen a table. The first append to a table
+        that does not exist yet commits it, as `write_app_table` does."""
         self._append_write(
-            df,
-            Path(self.app_table_path(name)),
-            partition_by=partition_by,
-            allow_schema_evolution=allow_schema_evolution,
+            df, Path(self.app_table_path(name)), partition_by=partition_by
         )
 
     def read_app_table(self, name: str) -> DataFrame:
@@ -1094,8 +1010,8 @@ class Lake:
         base = Path(self.app_table_path(name))
         # as compaction and exactly-once appends do: a flattened rewrite
         # would leave the next partitioned append's files unread
-        record, dirs = self._snapshot(base)
-        _, pcols = self._table_schema(record, dirs)
+        record = self._record(base)
+        _, pcols = self._table_schema(record)
         self._replace_write(
             df, base, partition_by=pcols or None, expect=expected_version, snap=record
         )
@@ -1196,7 +1112,7 @@ class Lake:
         # a bare rewrite would flatten it, breaking partition-drop
         # retention and pruning. The recorded schema carries a widening
         # append's columns, so the rewrite keeps their data.
-        schema, pcols = self._table_schema(record, dirs)
+        schema, pcols = self._table_schema(record)
         if schema is None:
             raise FileNotFoundError(f"no committed version to compact: {base}")
         data_files = [f for d in dirs for f in self._data_files(d)]
@@ -1254,11 +1170,11 @@ class Lake:
         # would flatten e.g. checks' check_date dirs on the first
         # idempotent append); allowMissingColumns: a widening append adds
         # columns and an omitted one reads as NULL
-        schema, pcols = self._table_schema(record, dirs)
+        schema, pcols = self._table_schema(record)
         if schema is None:
             new = df
         else:
-            self._check_append_schema(df, schema, allow_schema_evolution=True)
+            self._check_append_schema(df, schema)
             new = self._scan(dirs, schema).unionByName(df, allowMissingColumns=True)
         # r13 opt (guide §6): AQE-rebalance before the write so output
         # files track advisoryPartitionSizeInBytes instead of however
@@ -1295,8 +1211,7 @@ class Lake:
         other batch's files. A batch with no rows commits its id alone.
 
         Log tables are unpartitioned: Spark refuses several partitioned
-        roots in one read. A table that is partitioned, or that has data
-        but no commit record, raises ValueError."""
+        roots in one read, so a partitioned table raises ValueError."""
         import pyarrow.parquet as pq
 
         base = Path(self.app_table_path(name))
@@ -1331,23 +1246,22 @@ class Lake:
         """``record`` with the log batch dir ``bdir`` (None for a batch
         with no rows) and ``batch_id`` added, widened by any new column
         of ``df``; a new record for a table that does not exist yet."""
-        if not record and not self._has_data(base):
-            record = {"version": self._new_version(), **self._layout(df.schema, None)}
-        if "schema" not in record:
-            raise ValueError(
-                f"log append to {base.name!r}: the table has data but no "
-                "commit record; rewrite it with write_app_table first"
-            )
+        if not record:
+            ver = self._new_version()
+            record = {
+                "version": ver, **self._layout(df.schema, None),
+                "dirs": [ver], "batches": [],
+            }
         if record["partition_by"]:
             raise ValueError(
                 f"log append to {base.name!r}: the table is partitioned by "
                 f"{record['partition_by']}, and log batch dirs are unpartitioned"
             )
         schema = StructType.fromJson(record["schema"])
-        added = self._check_append_schema(df, schema, allow_schema_evolution=True)
+        added = self._check_append_schema(df, schema)
         return {
             **record,
             **self._layout(StructType(schema.fields + added), None),
-            "dirs": self._dir_names(record) + ([bdir.name] if bdir else []),
-            "batches": record.get("batches", []) + [batch_id],
+            "dirs": record["dirs"] + ([bdir.name] if bdir else []),
+            "batches": record["batches"] + [batch_id],
         }
