@@ -43,6 +43,24 @@ def count_jobs(spark):
 
 
 @pytest.fixture()
+def count_compiles(spark):
+    """``count_compiles(fn)`` runs ``fn`` and returns (its result, the
+    number of classes Janino compiled meanwhile): the delta of Spark's
+    ``CodegenMetrics`` compilation-time histogram count, which grows once
+    per generated class that misses the codegen cache. The cache is
+    keyed by the generated source, so a plan that inlines a literal
+    differing per call compiles anew every call."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(fn):
+        before = metric.getCount()
+        out = fn()
+        return out, metric.getCount() - before
+
+    return run
+
+
+@pytest.fixture()
 def count_py4j():
     """``count_py4j(fn)`` runs ``fn`` and returns (its result, the number
     of py4j commands the calling thread sent to the JVM). It wraps

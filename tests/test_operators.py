@@ -10,6 +10,7 @@ from udata_datalake_service_spark.operators.checks import (
     aggregate_for_date,
     all_checks,
     crawler_status,
+    current_state,
     latest_check,
     stats,
     worker_status,
@@ -104,7 +105,7 @@ def test_snapshot_diff_load_marks_missing_deleted(spark, catalog_df):
 
 # ------------------------------------------------------- checks API plane --
 def test_latest_check_by_resource(spark, catalog_df, checks_df):
-    out = latest_check(catalog_df, checks_df, resource_id="r1")
+    out = latest_check(current_state(catalog_df, checks_df), resource_id="r1")
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["checksum"] == "bbb"
 
@@ -115,7 +116,14 @@ def test_all_checks_by_url(spark, catalog_df, checks_df):
     assert ids == [3, 2, 1]  # newest first
 
 
-@pytest.mark.parametrize("route", [latest_check, all_checks])
+@pytest.mark.parametrize(
+    "route",
+    [
+        lambda cat, chk, **k: latest_check(current_state(cat, chk), **k),
+        all_checks,
+    ],
+    ids=["latest_check", "all_checks"],
+)
 @pytest.mark.parametrize(
     "key",
     [{}, {"url": "https://a.org/f.csv", "resource_id": "r1"}, {"dataset_id": "d1"}],
@@ -133,7 +141,7 @@ def test_aggregate_for_date(spark, checks_df):
 
 
 def test_crawler_status(spark, catalog_df, checks_df):
-    row = crawler_status(catalog_df, checks_df).collect()[0]
+    row = crawler_status(current_state(catalog_df, checks_df)).collect()[0]
     # live catalog: r1, r2, r4, r5 (r3 deleted); r4/r5 never checked
     assert row["total"] == 4
     assert row["never_checked"] == 2
@@ -146,9 +154,104 @@ def test_worker_status_folds_null(spark, catalog_df):
 
 
 def test_stats_histogram(spark, catalog_df, checks_df):
-    rows = stats(catalog_df, checks_df).collect()
+    rows = stats(current_state(catalog_df, checks_df)).collect()
     got = {r["value"]: r["count"] for r in rows}
     assert got == {"200": 2}  # r1→check3 (200), r2→check5 (200); r3 deleted
+
+
+# The two-table forms the last-check routes had before they read
+# `current_state`: the parity reference for the degenerate inputs below.
+def _latest_check_two_tables(catalog, checks, col, val):
+    side = F.broadcast(catalog.filter(F.col(col) == val))
+    return side.join(checks, side.last_check == checks.id, "inner")
+
+
+def _crawler_status_two_tables(catalog, checks):
+    live = catalog.filter(~F.col("deleted"))
+    joined = live.join(
+        checks.select(F.col("id").alias("__chk_id"), "next_check_at"),
+        live.last_check == F.col("__chk_id"),
+        "left",
+    )
+    return joined.agg(
+        F.count(F.lit(1)).alias("total"),
+        F.count_if(F.col("last_check").isNull()).alias("never_checked"),
+        F.count_if(F.col("last_check").isNotNull()).alias("checked"),
+        F.count_if(
+            F.col("next_check_at").isNotNull()
+            & (F.col("next_check_at") <= F.current_timestamp())
+        ).alias("to_recheck"),
+    )
+
+
+def _stats_two_tables(catalog, checks):
+    live = catalog.filter(~F.col("deleted") & F.col("last_check").isNotNull())
+    cur = live.join(
+        checks.select(F.col("id").alias("__chk_id"), F.col("status").alias("__chk_status")),
+        live.last_check == F.col("__chk_id"),
+        "inner",
+    )
+    return pct_histogram(cur, F.col("__chk_status").cast("string"))
+
+
+def _relink(catalog, rid, check_id):
+    return catalog.withColumn(
+        "last_check",
+        F.when(F.col("resource_id") == rid, F.lit(check_id).cast("long")).otherwise(
+            F.col("last_check")
+        ),
+    )
+
+
+# input -> (catalog, checks) from the fixture pair; every variant gives
+# check 5 a past next_check_at and check 3 a future one, so to_recheck
+# counts a row
+DEGENERATE = {
+    "fixture": lambda cat, chk: (cat, chk),
+    "empty_checks": lambda cat, chk: (cat, chk.limit(0)),
+    "missing_check_id": lambda cat, chk: (_relink(cat, "r1", 99), chk),
+    "duplicate_check_ids": lambda cat, chk: (
+        cat,
+        chk.unionByName(
+            chk.filter("id IN (3, 5)").withColumn("status", F.lit(500))
+        ),
+    ),
+    "all_deleted": lambda cat, chk: (cat.withColumn("deleted", F.lit(True)), chk),
+}
+KEYS = [
+    ("resource_id", "r1"),
+    ("resource_id", "r2"),
+    ("resource_id", "r4"),
+    ("url", "https://a.org/f.csv"),
+    ("url", "https://nowhere.org/"),
+]
+
+
+def _sorted_rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+@pytest.mark.parametrize("shape", list(DEGENERATE))
+def test_last_check_routes_match_the_two_table_forms(spark, catalog_df, checks_df, shape):
+    checks = checks_df.withColumn(
+        "next_check_at",
+        F.when(F.col("id") == 5, F.lit("2024-01-05 00:00:00").cast("timestamp"))
+        .when(F.col("id") == 3, F.lit("2999-01-01 00:00:00").cast("timestamp")),
+    )
+    catalog, checks = DEGENERATE[shape](catalog_df, checks)
+    state = current_state(catalog, checks)
+    for col, val in KEYS:
+        got = latest_check(state, **{col: val})
+        want = _latest_check_two_tables(catalog, checks, col, val)
+        assert got.columns == want.columns, (col, val)
+        assert got.schema == want.schema, (col, val)
+        assert _sorted_rows(got) == _sorted_rows(want), (col, val)
+    for got, want in (
+        (crawler_status(state), _crawler_status_two_tables(catalog, checks)),
+        (stats(state), _stats_two_tables(catalog, checks)),
+    ):
+        assert got.columns == want.columns
+        assert _sorted_rows(got) == _sorted_rows(want)
 
 
 # ----------------------------------------------------------------- gc/ret --

@@ -11,7 +11,11 @@ from __future__ import annotations
 import gc
 import os
 import shutil
+import subprocess
+import sys
+import textwrap
 from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -211,18 +215,89 @@ def test_replaced_snapshot_is_unpersisted(spark, lake):
     held = _persistent_rdds(spark)
     svc = HydraService(spark, lake)
     _warm(svc)
-    assert len(_persistent_rdds(spark) - held) == 2
+    # catalog, checks and their current_state join
+    assert len(_persistent_rdds(spark) - held) == 3
     old = svc._snapshots["checks"][1]
+    old_state = svc._snapshots["current_state"][1]
     # a rewrite, not an in-place append: Spark's own write path re-caches
     # any cached scan of the dir an append writes into
     lake.rewrite_app_table(lake.read_app_table("checks").filter("id != 3"), "checks")
     svc.checks.count()
     assert not old.is_cached
     assert old.storageLevel.useMemory is False
+    # the join built from the old checks frame goes with it
+    assert not old_state.is_cached
+    assert "current_state" not in svc._snapshots
     # the catalog snapshot is still held; the new checks one is not yet
     assert len(_persistent_rdds(spark) - held) == 1
     svc.close()
     assert _persistent_rdds(spark) == held
+
+
+def _last_check_answers(svc: HydraService) -> dict:
+    """The rows of the routes that read the current_state join."""
+    calls = {
+        "latest_check_r1": lambda: svc.latest_check(resource_id="r1"),
+        "latest_check_r4": lambda: svc.latest_check(resource_id="r4"),
+        "latest_check_url": lambda: svc.latest_check(url=URL),
+        "crawler_status": svc.crawler_status,
+        "stats": svc.stats,
+    }
+    return {k: _rows(f()) for k, f in calls.items()}
+
+
+# commit kind -> a commit of one table that changes what the join returns:
+# r1's last check moves to check 2, or check 7, which r4's last_check
+# already names, arrives
+JOIN_COMMITS = {
+    "catalog_rewrite": lambda lake, t: lake.rewrite_app_table(
+        lake.read_app_table("catalog").withColumn(
+            "last_check",
+            F.when(F.col("resource_id") == "r1", F.lit(2).cast("long")).otherwise(
+                F.col("last_check")
+            ),
+        ),
+        "catalog",
+    ),
+    "checks_append": _append_check,
+}
+
+
+@pytest.mark.parametrize("store", list(STORES))
+@pytest.mark.parametrize("kind", list(JOIN_COMMITS))
+def test_held_join_follows_either_table(spark, tmp_path, tables, store, kind):
+    root = str(tmp_path / "lake")
+    lake = Lake(spark, root, STORES[store]())
+    lake.write_app_table(
+        tables["catalog"].withColumn(
+            "last_check",
+            F.when(F.col("resource_id") == "r4", F.lit(7).cast("long")).otherwise(
+                F.col("last_check")
+            ),
+        ),
+        "catalog",
+    )
+    lake.write_app_table(tables["checks"], "checks", partition_by=["check_date"])
+    svc = HydraService(spark, lake)
+    _warm(svc)
+    before = _last_check_answers(svc)
+    old = svc._snapshots["current_state"][1]
+    assert old.is_cached
+
+    JOIN_COMMITS[kind](lake, tables)
+
+    fresh = HydraService(spark, Lake(spark, root, STORES[store]()))
+    after = _last_check_answers(fresh)
+    assert after != before
+    assert _last_check_answers(svc) == after
+    assert not old.is_cached
+    # the new pair's join is persisted on its second read, and answers alike
+    assert _last_check_answers(svc) == after
+    new = svc._snapshots["current_state"][1]
+    assert new is not old and new.is_cached
+    svc.close()
+    fresh.close()
+    assert not new.is_cached
 
 
 def test_close_and_collection_release_every_snapshot(spark, lake):
@@ -230,6 +305,7 @@ def test_close_and_collection_release_every_snapshot(spark, lake):
     svc = HydraService(spark, lake)
     answers = _warm(svc)
     frames = [df for _, df in svc._snapshots.values()]
+    assert set(svc._snapshots) == {"catalog", "checks", "current_state"}
     svc.close()
     assert _persistent_rdds(spark) == held
     assert not any(df.is_cached for df in frames)
@@ -248,3 +324,45 @@ def test_threads_agree_with_a_fresh_service(spark, lake):
     expected = _answers(HydraService(spark, Lake(spark, str(lake.root))))
     assert all(g == expected for g in got)
     svc.close()
+
+
+def test_service_outliving_its_session_exits_quietly(tmp_path):
+    """A service collected after its session stopped (a process that
+    never calls `close`) forgets its frames instead of calling into the
+    stopped context: nothing is printed as an ignored exception."""
+    script = textwrap.dedent(
+        f"""
+        from pyspark.sql import functions as F
+        from udata_datalake_service_spark.service import HydraService
+        from udata_datalake_service_spark.session import get_spark
+        from udata_datalake_service_spark.sinks.lake import Lake
+
+
+        def main():
+            spark = get_spark(app_name="exit", master="local[1]", shuffle_partitions=1)
+            lake = Lake(spark, {str(tmp_path / "lake")!r})
+            lake.write_app_table(
+                spark.range(3).withColumn("last_check", F.col("id")), "catalog"
+            )
+            svc = HydraService(spark, lake)
+            svc.catalog.count()
+            svc.catalog.count()
+            assert svc.catalog.is_cached
+            spark.stop()
+
+
+        main()
+        print("exited main")
+        """
+    )
+    root = Path(__file__).resolve().parents[1]
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        [str(root), os.environ.get("PYTHONPATH", "")]
+    )}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr
+    assert "exited main" in out.stdout
+    assert "Exception ignored" not in out.stderr, out.stderr

@@ -1,16 +1,17 @@
 """The reference's query API over catalog/checks (SURVEY §2.4, §2.5, §2.11).
 
 Each function is the Spark plan for one aiohttp route / db helper of the
-reference; table arguments are DataFrames read from the lake.
+reference; table arguments are DataFrames read from the lake, and the
+last-check routes read the one join `current_state` builds from them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from udata_datalake_service_spark.operators.core import top_k_groups
+from udata_datalake_service_spark.operators.core import pct_histogram, top_k_groups
 
 
 def _route_key(key: dict) -> tuple[str, object]:
@@ -24,18 +25,44 @@ def _route_key(key: dict) -> tuple[str, object]:
     return col, val
 
 
-def latest_check(catalog: DataFrame, checks: DataFrame, **key) -> DataFrame:
-    """J1 — `/api/checks/latest?url|resource_id` (db/check.py:20-42).
+# Prefix of the checks columns in `current_state`: the two tables share
+# column names (id, url, resource_id, status).
+CHECK_PREFIX = "__chk_"
 
-    ``catalog JOIN checks ON catalog.last_check = checks.id`` with the key
-    filter applied to *catalog first* so the join's left side is one row,
-    which Catalyst broadcasts. The key filter is pushed to the catalog
-    scan only: the checks scan gets just ``IsNotNull(id)``, so every
-    checks row is read and probed against the broadcast row.
-    """
+
+def current_state(catalog: DataFrame, checks: DataFrame) -> DataFrame:
+    """Each resource's current state (PAPER §0 plane 4; SURVEY J1):
+    ``catalog LEFT JOIN checks ON catalog.last_check = checks.id``, every
+    catalog row once per matching check (once with NULL checks columns
+    when none matches), the checks columns renamed ``CHECK_PREFIX + name``.
+    `latest_check`, `crawler_status` and `stats` read this one frame, so a
+    service can hold it across requests instead of re-joining per call."""
+    chk = checks.toDF(*[CHECK_PREFIX + c for c in checks.columns])
+    return catalog.join(
+        chk, catalog["last_check"] == chk[CHECK_PREFIX + "id"], "left"
+    )
+
+
+def _matched() -> Column:
+    """A `current_state` row whose ``last_check`` found its check."""
+    return F.col(CHECK_PREFIX + "id").isNotNull()
+
+
+def latest_check(state: DataFrame, **key) -> DataFrame:
+    """J1 — `/api/checks/latest?url|resource_id` (db/check.py:20-42) over
+    `current_state`: the keyed resource's row with its current check, as
+    ``catalog JOIN checks ON last_check = id`` returns it (the catalog
+    columns, then the checks columns under their own names). A resource
+    with no matching check has no row. Over a lazy `current_state` the
+    key filter reaches the catalog scan and the outer join becomes inner;
+    over a persisted one it is one scan of the in-memory frame. The names
+    are restored by one positional `toDF`, not a Column per name, which
+    cost about 45 ms of py4j calls per request on a 4-vCPU host (`toDF`:
+    about 9 ms)."""
     col, val = _route_key(key)
-    side = broadcast(catalog.filter(F.col(col) == val))
-    return side.join(checks, side.last_check == checks.id, "inner")
+    return state.filter((F.col(col) == val) & _matched()).toDF(
+        *[c.removeprefix(CHECK_PREFIX) for c in state.columns]
+    )
 
 
 def all_checks(catalog: DataFrame, checks: DataFrame, **key) -> DataFrame:
@@ -68,23 +95,17 @@ def aggregate_for_date(checks: DataFrame, group_by: str, day) -> DataFrame:
     return top_k_groups(day_rows, group_by, k=20)
 
 
-def crawler_status(catalog: DataFrame, checks: DataFrame) -> DataFrame:
+def crawler_status(state: DataFrame) -> DataFrame:
     """A2 — `/api/status/crawler` (routes/status.py:10-45): counts of
-    never-checked / checked / to-recheck over the live catalog, one pass of
-    conditional aggregation (count_if), no join needed for the null split."""
-    live = catalog.filter(~F.col("deleted"))
-    joined = live.join(
-        checks.select(F.col("id").alias("__chk_id"), "next_check_at"),
-        live.last_check == F.col("__chk_id"),
-        "left",
-    )
-    return joined.agg(
+    never-checked / checked / to-recheck over the live rows of
+    `current_state`, one pass of conditional aggregation (count_if)."""
+    next_check = F.col(CHECK_PREFIX + "next_check_at")
+    return state.filter(~F.col("deleted")).agg(
         F.count(F.lit(1)).alias("total"),
         F.count_if(F.col("last_check").isNull()).alias("never_checked"),
         F.count_if(F.col("last_check").isNotNull()).alias("checked"),
         F.count_if(
-            F.col("next_check_at").isNotNull()
-            & (F.col("next_check_at") <= F.current_timestamp())
+            next_check.isNotNull() & (next_check <= F.current_timestamp())
         ).alias("to_recheck"),
     )
 
@@ -100,22 +121,10 @@ def worker_status(catalog: DataFrame) -> DataFrame:
     )
 
 
-def stats(catalog: DataFrame, checks: DataFrame) -> DataFrame:
+def stats(state: DataFrame) -> DataFrame:
     """A4 — `/api/stats` (routes/status.py:106-139): status-code histogram of
-    current checks with percentages. Join catalog→checks on last_check (the
-    current-state denormalization), then a two-level aggregate; the
-    percentage window runs over the tiny aggregated frame only."""
-    from udata_datalake_service_spark.operators.core import pct_histogram
-
-    live = catalog.filter(~F.col("deleted") & F.col("last_check").isNotNull())
-    cur = live.join(
-        checks.select(
-            F.col("id").alias("__chk_id"),
-            F.col("status").alias("__chk_status"),
-            "error",
-            "timeout",
-        ),
-        live.last_check == F.col("__chk_id"),
-        "inner",
-    )
-    return pct_histogram(cur, F.col("__chk_status").cast("string"))
+    the current checks of live resources, from `current_state`, with
+    percentages; the percentage window runs over the tiny aggregated frame
+    only."""
+    cur = state.filter(~F.col("deleted") & _matched())
+    return pct_histogram(cur, F.col(CHECK_PREFIX + "status").cast("string"))

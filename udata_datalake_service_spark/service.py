@@ -49,9 +49,17 @@ class HydraService:
     when it is unpersisted before the new read. A table read once per
     commit (a crawl loop's status call) is never persisted; a table
     served unchanged keeps one in-memory copy of every column while the
-    service lives. `close` releases every held copy, as does the
-    service's garbage collection. The persisted frames are tagged with
-    their identity, so they never serve a plain `Lake` read."""
+    service lives. The last-check routes (`latest_check`,
+    `crawler_status`, `stats`) read one more entry of the same memo:
+    `checks_ops.current_state`, the catalog⟕checks join, keyed by the
+    pair of table identities taken from the same two snapshot checks,
+    lazy on its first read and persisted on its second. A new identity of
+    either table unpersists it with that table's old frame, so a crawl
+    loop's status call plans the join afresh and persists nothing, and a
+    warm route reads one in-memory frame instead of re-joining. `close`
+    releases every held copy, as does the service's garbage collection.
+    The persisted frames are tagged with their identity, so they never
+    serve a plain `Lake` read."""
 
     def __init__(
         self, spark: SparkSession, lake: Lake, config: Config | None = None
@@ -59,27 +67,51 @@ class HydraService:
         self.spark = spark
         self.lake = lake
         self.config = config or Config()
-        # app table name -> (snapshot identity, frame) of its last read
-        self._snapshots: dict[str, tuple[str, DataFrame]] = {}
+        # app table name, or _STATE -> (snapshot identity, or the pair of
+        # them, frame) of its last read
+        self._snapshots: dict[str, tuple[object, DataFrame]] = {}
         self._lock = threading.Lock()
         weakref.finalize(self, _release, self._snapshots, self._lock).atexit = False
+
+    def _hold(self, key: str, ident, build) -> DataFrame:
+        """The memo entry ``key`` at ``ident``: the held frame, persisted
+        on its second read, or a new lazy ``build()`` that replaces (and
+        unpersists) the entry at another identity. Replacing a table's
+        entry also releases the `current_state` entry built from it.
+        Called under the lock."""
+        held = self._snapshots.get(key)
+        if held is not None and held[0] == ident:
+            if not held[1].is_cached:
+                held[1].persist()
+            return held[1]
+        if held is not None:
+            for k in {key, _STATE}:
+                old = self._snapshots.pop(k, None)
+                if old is not None and old[1].is_cached:
+                    old[1].unpersist()
+        df = build()
+        self._snapshots[key] = (ident, df)
+        return df
 
     def _table(self, name: str) -> DataFrame:
         """The app table ``name`` through the snapshot memo."""
         ident, read = self.lake.app_table_snapshot(name)
         with self._lock:
-            held = self._snapshots.get(name)
-            if held is not None and held[0] == ident:
-                if not held[1].is_cached:
-                    held[1].persist()
-                return held[1]
-            if held is not None:
-                del self._snapshots[name]
-                if held[1].is_cached:
-                    held[1].unpersist()
-            df = read()
-            self._snapshots[name] = (ident, df)
-            return df
+            return self._hold(name, ident, read)
+
+    def _current_state(self) -> DataFrame:
+        """`checks_ops.current_state` of the two app tables through the
+        snapshot memo, keyed by the pair of their identities."""
+        cat_ident, read_cat = self.lake.app_table_snapshot("catalog")
+        chk_ident, read_chk = self.lake.app_table_snapshot("checks")
+        with self._lock:
+            catalog = self._hold("catalog", cat_ident, read_cat)
+            checks = self._hold("checks", chk_ident, read_chk)
+            return self._hold(
+                _STATE,
+                (cat_ident, chk_ident),
+                lambda: checks_ops.current_state(catalog, checks),
+            )
 
     def close(self) -> None:
         """Unpersist every held snapshot. The service stays usable."""
@@ -128,8 +160,10 @@ class HydraService:
 
     # --------------------------------------------------------------- checks --
     def latest_check(self, **key) -> DataFrame:
-        """GET /api/checks/latest?url=… or ?resource_id=… (J1)."""
-        return checks_ops.latest_check(self.catalog, self.checks, **key)
+        """GET /api/checks/latest?url=… or ?resource_id=… (J1): the keyed
+        row of the held `current_state` join, so a warm request is one
+        scan of an in-memory frame."""
+        return checks_ops.latest_check(self._current_state(), **key)
 
     def all_checks(self, **key) -> DataFrame:
         """GET /api/checks/all (J2), newest first."""
@@ -217,7 +251,7 @@ class HydraService:
     # -------------------------------------------------------------- status --
     def crawler_status(self) -> DataFrame:
         """GET /api/status/crawler (A2)."""
-        return checks_ops.crawler_status(self.catalog, self.checks)
+        return checks_ops.crawler_status(self._current_state())
 
     def worker_status(self) -> DataFrame:
         """GET /api/status/worker (A3)."""
@@ -225,7 +259,7 @@ class HydraService:
 
     def stats(self) -> DataFrame:
         """GET /api/stats (A4)."""
-        return checks_ops.stats(self.catalog, self.checks)
+        return checks_ops.stats(self._current_state())
 
     def health(self) -> dict:
         """GET /api/health — storage reachable + spark alive."""
@@ -284,11 +318,18 @@ class HydraService:
         )
 
 
+# memo key of the held `checks_ops.current_state` join
+_STATE = "current_state"
+
+
 def _release(snapshots: dict, lock: threading.Lock) -> None:
     """Unpersist and forget every snapshot a service holds. A module
-    function, so the service's finalizer does not keep it alive."""
+    function, so the service's finalizer does not keep it alive. A frame
+    whose SparkContext is stopped is only forgotten: its cache went with
+    the context, and `unpersist` would raise from a service collected
+    after its session stopped (a process that never called `close`)."""
     with lock:
         for _, df in snapshots.values():
-            if df.is_cached:
+            if df.is_cached and df.sparkSession.sparkContext._jsc is not None:
                 df.unpersist()
         snapshots.clear()
